@@ -8,7 +8,8 @@ page_size_param?, page_size_default? }``.
 
 Defaults match ``Pagination::default`` (reference src/model.rs:48-59):
 start_page=1, end_page=10, page_size=10, page_param="page",
-page_size_param="limit", page_size_default=10.
+page_size_param="limit", page_size_default=10. An explicit
+``end_page: null`` makes the walk open-ended (until a null or empty page).
 
 Unlike the reference — whose binary path hard-wires pagination off
 (src/main.rs:41 passes None) and whose paginated-request builder is
@@ -37,15 +38,6 @@ class Pagination:
     page_size_param: str = "limit"
     page_size_default: int = 10
 
-    @classmethod
-    def from_dict(cls, raw: dict[str, Any]) -> Pagination:
-        known = {f.name for f in fields(cls)}
-        unknown = set(raw) - known
-        if unknown:
-            raise ConfigError(f"unknown pagination keys: {sorted(unknown)}")
-        kwargs = {k: v for k, v in raw.items() if v is not None}
-        return cls(**kwargs)
-
 
 @dataclass
 class CursorPagination:
@@ -72,15 +64,6 @@ class CursorPagination:
     page_size_param: str = "limit"
     max_pages: int = 1000
 
-    @classmethod
-    def from_dict(cls, raw: dict[str, Any]) -> CursorPagination:
-        known = {f.name for f in fields(cls)}
-        unknown = set(raw) - known
-        if unknown:
-            raise ConfigError(f"unknown cursor_pagination keys: {sorted(unknown)}")
-        kwargs = {k: v for k, v in raw.items() if v is not None}
-        return cls(**kwargs)
-
 
 @dataclass
 class LinkPagination:
@@ -93,14 +76,28 @@ class LinkPagination:
 
     max_pages: int = 10_000
 
-    @classmethod
-    def from_dict(cls, raw: dict[str, Any]) -> LinkPagination:
-        known = {f.name for f in fields(cls)}
-        unknown = set(raw) - known
-        if unknown:
-            raise ConfigError(f"unknown link_pagination keys: {sorted(unknown)}")
-        kwargs = {k: v for k, v in raw.items() if v is not None}
-        return cls(**kwargs)
+
+Paging = Pagination | CursorPagination | LinkPagination
+
+_PAGING_MODES = {
+    "pagination": Pagination,
+    "cursor_pagination": CursorPagination,
+    "link_pagination": LinkPagination,
+}
+
+
+def _paging_block(key: str, raw: dict[str, Any] | None) -> Paging | None:
+    """One pagination block from its config mapping. Unknown keys are an
+    error. A null value means None where the field admits None (so
+    ``end_page: null`` is open-ended) and the field's default elsewhere."""
+    if raw is None:
+        return None
+    cls = _PAGING_MODES[key]
+    nullable = {f.name: "None" in str(f.type) for f in fields(cls)}
+    unknown = set(raw) - set(nullable)
+    if unknown:
+        raise ConfigError(f"unknown {key} keys: {sorted(unknown)}")
+    return cls(**{k: v for k, v in raw.items() if v is not None or nullable[k]})
 
 
 def _expand_env(value: str, where: str) -> str:
@@ -139,15 +136,7 @@ class Source:
             raise ConfigError("source requires a non-empty 'name'")
         if not self.url:
             raise ConfigError(f"source {self.name!r} requires a 'url'")
-        modes = [
-            m
-            for m, v in (
-                ("pagination", self.pagination),
-                ("cursor_pagination", self.cursor_pagination),
-                ("link_pagination", self.link_pagination),
-            )
-            if v is not None
-        ]
+        modes = [m for m in _PAGING_MODES if getattr(self, m) is not None]
         if len(modes) > 1:
             raise ConfigError(
                 f"source {self.name!r}: pagination modes are mutually "
@@ -172,6 +161,11 @@ class Source:
         if self.body is not None and self.method != "POST":
             raise ConfigError(f"source {self.name!r}: 'body' requires method POST")
 
+    @property
+    def paging(self) -> Paging | None:
+        """The source's pagination mode, whichever of the three is set."""
+        return self.pagination or self.cursor_pagination or self.link_pagination
+
     @classmethod
     def from_dict(cls, raw: dict[str, Any]) -> Source:
         if not isinstance(raw, dict):
@@ -180,20 +174,11 @@ class Source:
         unknown = set(raw) - known
         if unknown:
             raise ConfigError(f"source has unknown keys: {sorted(unknown)}")
-        pag = raw.get("pagination")
-        cpag = raw.get("cursor_pagination")
-        lpag = raw.get("link_pagination")
         return cls(
             name=raw.get("name", ""),
             url=raw.get("url", ""),
             method=raw.get("method") or "GET",
-            pagination=Pagination.from_dict(pag) if pag is not None else None,
-            cursor_pagination=(
-                CursorPagination.from_dict(cpag) if cpag is not None else None
-            ),
-            link_pagination=(
-                LinkPagination.from_dict(lpag) if lpag is not None else None
-            ),
+            **{m: _paging_block(m, raw.get(m)) for m in _PAGING_MODES},
             sql=raw.get("sql"),
             headers=raw.get("headers"),
             body=raw.get("body"),

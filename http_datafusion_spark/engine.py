@@ -98,13 +98,10 @@ def run_source(
             url=source.url,
             method=source.method,
             table_name=source.name,
-            start_page=pag.start_page if pag else None,
-            pagination=pag,
+            paging=source.paging,
             max_rows=max_rows,
             headers=source.headers,
             json_body=source.body,
-            cursor_pagination=source.cursor_pagination,
-            link_pagination=source.link_pagination,
         )
     result: DataFrame | None = None
     if source.sql:

@@ -60,6 +60,7 @@ query's local checkpoint would kill it — lineage is severed).
 
 from __future__ import annotations
 
+import logging
 import threading
 from contextlib import contextmanager
 
@@ -70,6 +71,7 @@ PIN_MODE_KEY = "spark.http_datafusion.pin.mode"  # local | persist | reliable
 PIN_DIR_KEY = "spark.http_datafusion.pin.dir"  # reliable-mode checkpoint dir
 
 _SCOPES = threading.local()
+_log = logging.getLogger(__name__)
 
 
 def _scope_stack() -> list:
@@ -111,8 +113,9 @@ def pin_scope():
 
     Releasing is best-effort: the query's results are already out when
     the scope exits, so a failed unpersist (stopped session, lost
-    executor) logs nothing and raises nothing — the blocks fall back to
-    the pre-scope GC + ContextCleaner path. Reliable-mode pins
+    executor) logs a warning naming the exception and raises nothing —
+    the remaining releases still run, and the failed pin's blocks fall
+    back to the pre-scope GC + ContextCleaner path. Reliable-mode pins
     (``df.checkpoint()`` files) are not tracked: their storage is
     filesystem-managed (``spark.cleaner.referenceTracking.
     cleanCheckpoints`` reclaims on GC), and deleting files under a
@@ -127,8 +130,8 @@ def pin_scope():
         for release in reversed(entries):
             try:
                 release()
-            except Exception:  # noqa: BLE001 — best-effort cleanup only
-                pass
+            except Exception as e:  # noqa: BLE001 — best-effort cleanup only
+                _log.warning("pin_scope: releasing a pin failed: %r", e, exc_info=True)
 
 
 def pin(

@@ -40,7 +40,7 @@ from http_datafusion_spark.functions.veclib import fold_norms, fold_sqdist
 from http_datafusion_spark.functions.pinning import pin
 from http_datafusion_spark.operators.text import spread_docs
 from http_datafusion_spark.plans.registry import query
-from http_datafusion_spark.plans.tables import load_tables
+from http_datafusion_spark.plans.tables import fingerprint_tables, load_tables
 
 QUERY_VEC_ID = 0  # the "query" is the embedding of vec_id 0
 N_CENTROIDS = 8
@@ -64,15 +64,17 @@ def _norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
-_VEC_CACHE: dict[tuple[str, tuple[int, ...]], dict[int, np.ndarray]] = {}
+_VEC_CACHE: dict[tuple[str, str, tuple[int, ...]], dict[int, np.ndarray]] = {}
 
 
 def _fetch_vectors(spark: SparkSession, sf_dir: str, ids: tuple[int, ...]) -> dict[int, np.ndarray]:
     """Collect the named vectors (query + centroids) — one tiny job with
     the vec_id filter pushed to the parquet scan; O(len(ids)) driver
-    memory, never the table. Memoized per (sf_dir, ids): these are
-    index-time constants, so repeated queries skip the job."""
-    key = (sf_dir, tuple(ids))
+    memory, never the table. Memoized per (sf_dir, embeddings file
+    fingerprint, ids): these are index-time constants, so repeated
+    queries skip the job, and a rewritten embeddings file in a
+    long-lived session is re-read instead of served stale."""
+    key = (sf_dir, fingerprint_tables(sf_dir, "embeddings"), tuple(ids))
     if key not in _VEC_CACHE:
         e = load_tables(spark, sf_dir, "embeddings")["embeddings"]
         rows = e.filter(F.col("vec_id").isin(*ids)).select("vec_id", "embedding").collect()

@@ -72,14 +72,15 @@ def spread_docs(df: DataFrame, key: str = "doc_id") -> DataFrame:
     repartition on ``key`` spreads it; the explicit width (the
     session's shuffle-partition conf) stops AQE coalescing the small
     text exchange straight back to one partition. When the scan is
-    already at least core-wide (the many-file 100 TB layout), this is a
-    NO-OP — no exchange is added, so it is never a cluster-scale
-    pessimization. Pass only the columns the map work needs before
-    calling (the exchange carries every column given to it)."""
-    sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() >= sc.defaultParallelism:
-        return df
+    already at least core-wide (the many-file 100 TB layout), or at
+    least as wide as that target, this is a NO-OP — no exchange is
+    added, so it never pessimizes a parallel scan and never narrows one.
+    Pass only the columns the map work needs before calling (the
+    exchange carries every column given to it)."""
+    width = df.rdd.getNumPartitions()
     n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    if width >= df.sparkSession.sparkContext.defaultParallelism or width >= n_part:
+        return df
     return df.repartition(n_part, key)
 
 

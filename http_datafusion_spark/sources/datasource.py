@@ -57,24 +57,12 @@ class HttpJsonDataSource(DataSource):
         return "httpjson"
 
     def schema(self):  # noqa: D102 — inferred when the user gives none
-        from http_datafusion_spark.sources.http_json import fetch_json
-
         opts = _norm_options(self.options)
         url = opts.get("url")
         if not url:
             raise HttpError("httpjson source requires the 'url' option")
-        pag = _pagination_from_options(opts)
-        method = opts.get("method", "GET")
-        if opts.get("startpage") is not None:
-            from http_datafusion_spark.sources.http_json import build_page_url
-
-            probe = build_page_url(url, pag, int(opts["startpage"]))
-        else:
-            probe = url
-        body = fetch_json(
-            probe, method, headers=_headers_from_options(opts), json_body=_body_from_options(opts)
-        )
-        rows = body if isinstance(body, list) else ([body] if body is not None else [])
+        start = opts.get("startpage")
+        rows = _fetch_page_rows(opts, url, int(start) if start is not None else None)
         return _infer_schema_from_rows(rows)
 
     def reader(self, schema: StructType) -> DataSourceReader:
@@ -113,6 +101,27 @@ def _body_from_options(options: dict):
     return json.loads(raw) if raw else None
 
 
+def _fetch_page_rows(opts: dict, url: str, page: int | None) -> list:
+    """The rows of one request: page ``page`` of ``url``, or ``url``
+    itself when ``page`` is None."""
+    from http_datafusion_spark.sources.http_json import build_page_url, fetch_json, page_rows
+
+    if page is not None:
+        url = build_page_url(url, _pagination_from_options(opts), page)
+    body = fetch_json(
+        url,
+        opts.get("method", "GET"),
+        headers=_headers_from_options(opts),
+        json_body=_body_from_options(opts),
+    )
+    return page_rows(body)
+
+
+def _record(row) -> dict:
+    """A row as a record: a non-object JSON value becomes ``{"value": v}``."""
+    return row if isinstance(row, dict) else {"value": row}
+
+
 def _infer_schema_from_rows(rows: Sequence) -> StructType:
     """Plan-time schema inference without a SparkSession: build a tiny
     Arrow table from the staged rows and map its schema to Spark types."""
@@ -121,7 +130,7 @@ def _infer_schema_from_rows(rows: Sequence) -> StructType:
 
     if not rows:
         return StructType([])
-    arrow = pa.Table.from_pylist([r if isinstance(r, dict) else {"value": r} for r in rows])
+    arrow = pa.Table.from_pylist([_record(r) for r in rows])
     return from_arrow_schema(arrow.schema)
 
 
@@ -212,41 +221,24 @@ class HttpJsonReader(DataSourceReader):
 
     def read(self, partition: _PagePartition) -> Iterator[tuple]:
         # Runs on an executor: import inside so the worker re-resolves.
-        from http_datafusion_spark.sources.http_json import (
-            build_page_url,
-            fetch_json,
-            fetch_rows,
-        )
+        from http_datafusion_spark.sources.http_json import fetch_rows
 
         opts = self.options
         url = self._base_url()
-        method = opts.get("method", "GET")
-        pag = _pagination_from_options(opts)
-        hdrs = _headers_from_options(opts)
-        jbody = _body_from_options(opts)
         if partition.page is None:
-            start = opts.get("startpage")
             max_rows = int(opts["maxrows"]) if opts.get("maxrows") is not None else None
+            paging = _pagination_from_options(opts) if opts.get("startpage") is not None else None
             rows = fetch_rows(
-                url, method, start, pag if start is not None else None,
-                max_rows=max_rows, headers=hdrs, json_body=jbody,
+                url,
+                opts.get("method", "GET"),
+                paging,
+                max_rows=max_rows,
+                headers=_headers_from_options(opts),
+                json_body=_body_from_options(opts),
             )
         else:
-            body = fetch_json(
-                build_page_url(url, pag, partition.page), method, headers=hdrs, json_body=jbody
-            )
-            if body is None:
-                rows = []
-            elif isinstance(body, list):
-                rows = body
-            else:
-                rows = [body]
-
-        convs = _row_converters(self.schema)
-        for r in rows:
-            if not isinstance(r, dict):
-                r = {"value": r}
-            yield tuple(conv(r.get(name)) for name, conv in convs)
+            rows = _fetch_page_rows(opts, url, partition.page)
+        yield from map(_tuple_converter(self.schema), rows)
 
 
 class HttpJsonStreamReader(SimpleDataSourceStreamReader):
@@ -282,31 +274,14 @@ class HttpJsonStreamReader(SimpleDataSourceStreamReader):
         return {"page": int(self.options.get("startpage", 1))}
 
     def _fetch_page(self, page: int) -> list:
-        from http_datafusion_spark.sources.http_json import build_page_url, fetch_json
-
-        opts = self.options
-        body = fetch_json(
-            build_page_url(opts["url"], _pagination_from_options(opts), page),
-            opts.get("method", "GET"),
-            headers=_headers_from_options(opts),
-            json_body=_body_from_options(opts),
-        )
-        if body is None:
-            return []
-        return body if isinstance(body, list) else [body]
+        return _fetch_page_rows(self.options, self.options["url"], page)
 
     def _tuples(self, rows: list) -> Iterator[tuple]:
         # A LIST iterator, not a generator: Spark's simple-stream wrapper
         # calls next() on the result AND copy.copy()s it for replay —
         # generators aren't copyable, bare lists aren't iterators, but
         # CPython list iterators are both (picklable via __reduce__).
-        convs = _row_converters(self.schema)
-        out = []
-        for r in rows:
-            if not isinstance(r, dict):
-                r = {"value": r}
-            out.append(tuple(conv(r.get(name)) for name, conv in convs))
-        return iter(out)
+        return iter(list(map(_tuple_converter(self.schema), rows)))
 
     def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
         max_pages = int(self.options.get("maxpagespertrigger", 10))
@@ -389,8 +364,16 @@ def _coercer_for(dt):
     return _coerce
 
 
-def _row_converters(schema: StructType):
-    return [(f.name, _coercer_for(f.dataType)) for f in schema.fields]
+def _tuple_converter(schema: StructType):
+    """Row -> the schema-ordered tuple the reader yields, each field
+    through its type's coercer (built once per read)."""
+    convs = [(f.name, _coercer_for(f.dataType)) for f in schema.fields]
+
+    def to_tuple(row) -> tuple:
+        r = _record(row)
+        return tuple(conv(r.get(name)) for name, conv in convs)
+
+    return to_tuple
 
 
 def register(spark) -> None:

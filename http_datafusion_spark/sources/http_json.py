@@ -4,8 +4,9 @@ Reference behavior being re-created (for parity, with the bugs fixed):
 
 - fetch JSON from a REST endpoint with GET/POST only; non-2xx is an
   error (reference src/datasources.rs:212-268);
-- array body -> N rows, object body -> 1 row
-  (src/datasources.rs:177-190);
+- array body -> N rows, object body -> 1 row, null -> none
+  (src/datasources.rs:177-190) — ``page_rows``, the one rule both
+  ingest paths use;
 - optional pagination: ``?page=N`` starting at ``start_page``,
   incrementing until the endpoint is exhausted
   (src/datasources.rs:119-161). The reference stops only on JSON
@@ -23,6 +24,21 @@ Reference behavior being re-created (for parity, with the bugs fixed):
   strictly more robust, so the default is full-scan with an opt-in
   ``schema_mode="first_record"`` for bit-parity experiments.
 
+One walker, ``fetch_rows``, serves all three pagination modes. The loop
+owns every stop rule (``max_rows`` reached, a null or empty page, no
+next request, a request already made, the mode's page cap); a mode
+contributes only its first URL and a step from one response to
+``(rows, next_url)``:
+
+- page number (``Pagination``): ``?page=N&limit=M`` up to ``end_page``
+  (open-ended when None); a single-object page ends the walk;
+- cursor/token (``CursorPagination``): the response object's
+  ``data_field`` holds the rows and its ``cursor_field`` the token for
+  the next request;
+- RFC 8288 Link (``LinkPagination``): the response's
+  ``Link: <...>; rel="next"`` header names the next URL, resolved
+  against the current one.
+
 Scale note: this module stages rows on the driver — exactly what the
 reference does (src/datasources.rs:192-198) and appropriate for
 config-driven API ingest (bounded payloads). For large paginated APIs
@@ -34,12 +50,13 @@ on the driver.
 from __future__ import annotations
 
 import json
+from collections.abc import Callable, Mapping
 from typing import Any
 
 import requests
 from pyspark.sql import DataFrame, SparkSession
 
-from http_datafusion_spark.config import CursorPagination, LinkPagination, Pagination
+from http_datafusion_spark.config import CursorPagination, LinkPagination, Pagination, Paging
 from http_datafusion_spark.errors import HttpError
 
 _ALLOWED_METHODS = {"GET", "POST"}
@@ -80,6 +97,10 @@ def fetch_json(
         headers=headers,
         json_body=json_body,
     )
+    return _json_of(resp, url)
+
+
+def _json_of(resp: "requests.Response", url: str) -> Any:
     try:
         return resp.json()
     except ValueError as e:
@@ -142,15 +163,12 @@ def _request_with_retries(
     raise last_err  # type: ignore[misc]
 
 
-def _extend_rows(rows: list[dict | Any], body: Any) -> None:
-    """Array body extends, object body appends one row, null adds nothing
-    (reference src/datasources.rs:177-190)."""
+def page_rows(body: Any) -> list[Any]:
+    """The rows of one response body: an array is its elements, an
+    object one row, null none (reference src/datasources.rs:177-190)."""
     if body is None:
-        return
-    if isinstance(body, list):
-        rows.extend(body)
-    else:
-        rows.append(body)
+        return []
+    return body if isinstance(body, list) else [body]
 
 
 def build_page_url(url: str, pagination: Pagination, page: int) -> str:
@@ -165,56 +183,6 @@ def build_page_url(url: str, pagination: Pagination, page: int) -> str:
     sep = "&" if "?" in url else "?"
     size = pagination.page_size or pagination.page_size_default
     return f"{url}{sep}{pagination.page_param}={page}&{pagination.page_size_param}={size}"
-
-
-def fetch_rows(
-    url: str,
-    method: str = "GET",
-    start_page: int | str | None = None,
-    pagination: Pagination | None = None,
-    timeout: float = _DEFAULT_TIMEOUT,
-    max_rows: int | None = None,
-    headers: dict[str, str] | None = None,
-    json_body: Any | None = None,
-) -> list[Any]:
-    """Fetch all rows from an endpoint, paginating if requested
-    (reference populate_data, src/datasources.rs:110-199).
-
-    Pagination stops on a ``null`` body (reference behavior,
-    src/datasources.rs:139-142) or an empty array (bug-fix — the
-    reference loops forever on ``[]``), or at ``pagination.end_page``
-    when configured, or once ``max_rows`` rows have been staged (limit
-    pushdown, SURVEY §4.2: a LIMIT n query must not fetch a 10k-page
-    source). Rows are never trimmed — the engine applies the exact
-    LIMIT; the cap only stops further page *fetches*.
-    """
-    rows: list[Any] = []
-    if start_page is None and pagination is None:
-        _extend_rows(rows, fetch_json(url, method, timeout, headers=headers, json_body=json_body))
-        return rows
-
-    pag = pagination or Pagination()
-    if start_page is not None:
-        # Non-numeric start pages parse to 0 in the reference
-        # (src/datasources.rs:159-160); here they are an error.
-        page = int(start_page)
-    else:
-        page = pag.start_page
-    while True:
-        if pag.end_page is not None and page > pag.end_page:
-            break
-        if max_rows is not None and len(rows) >= max_rows:
-            break
-        body = fetch_json(
-            build_page_url(url, pag, page), method, timeout, headers=headers, json_body=json_body
-        )
-        if body is None or (isinstance(body, list) and not body):
-            break
-        _extend_rows(rows, body)
-        if not isinstance(body, list):
-            break  # single-object page: nothing further to paginate
-        page += 1
-    return rows
 
 
 def build_cursor_url(url: str, cp: CursorPagination, cursor: str | None) -> str:
@@ -234,40 +202,42 @@ def build_cursor_url(url: str, cp: CursorPagination, cursor: str | None) -> str:
     return f"{url}{sep}{'&'.join(parts)}"
 
 
-def fetch_rows_cursor(
-    url: str,
-    method: str = "GET",
-    cursor_pagination: CursorPagination | None = None,
-    timeout: float = _DEFAULT_TIMEOUT,
-    max_rows: int | None = None,
-    headers: dict[str, str] | None = None,
-    json_body: Any | None = None,
-) -> list[Any]:
-    """Walk a cursor/token-paginated endpoint to exhaustion.
+# A mode's step: (pages fetched so far, this page's URL, its parsed body,
+# its response headers) -> (this page's rows, the next URL or None).
+Step = Callable[[int, str, Any, Mapping[str, str]], tuple[list[Any], str | None]]
+Mode = tuple[str | None, Step, int | None]  # (first URL, step, page cap)
 
-    The shape the reference's page-number model cannot express (its
-    Pagination is page/limit only, src/model.rs:20-34): each response
-    is an object whose ``data_field`` holds the page's rows and whose
-    ``cursor_field`` holds the opaque token for the next request —
-    null / absent / "" meaning done. Also stops on an empty page, at
-    ``max_rows`` staged rows (limit pushdown, same contract as
-    fetch_rows), at ``max_pages`` (safety cap against token loops),
-    and on a token the walk has already seen (a re-served cursor is a
-    server bug that must not burn the cap before stopping).
-    """
-    cp = cursor_pagination or CursorPagination()
-    rows: list[Any] = []
-    cursor: str | None = None
-    seen_cursors: set[str] = set()
-    for _ in range(cp.max_pages):
-        if max_rows is not None and len(rows) >= max_rows:
-            break
-        body = fetch_json(
-            build_cursor_url(url, cp, cursor), method, timeout,
-            headers=headers, json_body=json_body,
-        )
+
+def _fetch_page(
+    url: str, method: str, headers: dict[str, str] | None, json_body: Any | None
+) -> tuple[Any, Mapping[str, str]]:
+    """The walker's one request: parsed body plus response headers (the
+    Link mode reads its next URL from them), on the shared retry loop."""
+    resp = _request_with_retries(url, method=method, headers=headers, json_body=json_body)
+    return _json_of(resp, url), resp.headers
+
+
+def _page_number_mode(url: str, pag: Pagination) -> Mode:
+    # Non-numeric start pages parse to 0 in the reference
+    # (src/datasources.rs:159-160); here they are an error.
+    start = int(pag.start_page)
+
+    def page_url(page: int) -> str | None:
+        if pag.end_page is not None and page > pag.end_page:
+            return None
+        return build_page_url(url, pag, page)
+
+    def step(n: int, _cur: str, body: Any, _headers: Mapping[str, str]):
+        # A single-object page has nothing further to paginate.
+        return page_rows(body), (page_url(start + n) if isinstance(body, list) else None)
+
+    return page_url(start), step, None
+
+
+def _cursor_mode(url: str, cp: CursorPagination) -> Mode:
+    def step(_n: int, _cur: str, body: Any, _headers: Mapping[str, str]):
         if body is None:
-            break
+            return [], None
         if not isinstance(body, dict):
             raise HttpError(
                 f"cursor pagination expects an object body with "
@@ -277,29 +247,84 @@ def fetch_rows_cursor(
         if cp.data_field not in body:
             # A missing data key is a misconfiguration (wrong data_field
             # or a non-paginated endpoint), not "no more pages" — silently
-            # returning a truncated/empty table would mask it (r10 ADVICE
-            # item 2). Only an explicit empty array means done.
+            # returning a truncated/empty table would mask it. Only an
+            # explicit empty array means done.
             raise HttpError(
                 f"cursor pagination field {cp.data_field!r} absent from "
                 f"response body of {url!r} (keys: {sorted(body)})"
             )
-        page_rows = body[cp.data_field]
-        if not page_rows:
-            break
-        if not isinstance(page_rows, list):
+        rows = body[cp.data_field]
+        if not rows:
+            return [], None
+        if not isinstance(rows, list):
             raise HttpError(
                 f"cursor pagination field {cp.data_field!r} must be an array; "
-                f"got {type(page_rows).__name__} from {url!r}"
+                f"got {type(rows).__name__} from {url!r}"
             )
-        rows.extend(page_rows)
         nxt = body.get(cp.cursor_field)
-        if nxt is None or nxt == "":
+        return rows, (None if nxt is None or nxt == "" else build_cursor_url(url, cp, str(nxt)))
+
+    return build_cursor_url(url, cp, None), step, cp.max_pages
+
+
+def _link_mode(url: str, lp: LinkPagination) -> Mode:
+    from urllib.parse import urljoin
+
+    def step(_n: int, cur: str, body: Any, headers: Mapping[str, str]):
+        nxt = parse_link_next(headers.get("Link"))
+        return page_rows(body), (None if nxt is None else urljoin(cur, nxt))
+
+    return url, step, lp.max_pages
+
+
+_MODES: dict[type, Callable[[str, Any], Mode]] = {
+    Pagination: _page_number_mode,
+    CursorPagination: _cursor_mode,
+    LinkPagination: _link_mode,
+}
+
+
+def fetch_rows(
+    url: str,
+    method: str = "GET",
+    paging: Paging | None = None,
+    *,
+    max_rows: int | None = None,
+    headers: dict[str, str] | None = None,
+    json_body: Any | None = None,
+) -> list[Any]:
+    """Fetch all rows from an endpoint, walking its pages when ``paging``
+    names a mode (reference populate_data, src/datasources.rs:110-199).
+
+    Without ``paging``: one request, its body through ``page_rows``.
+    With it, the walk stops before a fetch when ``max_rows`` rows are
+    staged (limit pushdown, SURVEY §4.2: a LIMIT n query must not fetch
+    a 10k-page source), when the mode names no next request, when that
+    request was already made (a re-served cursor or a looping Link chain
+    is a server bug that must not spin to the cap), or at the mode's page
+    cap (``max_pages``; page-number mode has ``end_page`` instead); and
+    after a fetch on a null or empty page (the reference stops on null
+    only and loops forever on ``[]``, src/datasources.rs:139-142). Rows
+    are never trimmed — the engine applies the exact LIMIT; the cap only
+    stops further page *fetches*.
+    """
+    if paging is None:
+        return page_rows(_fetch_page(url, method, headers, json_body)[0])
+    nxt, step, cap = _MODES[type(paging)](url, paging)
+    rows: list[Any] = []
+    seen: set[str] = set()
+    while (
+        nxt is not None
+        and nxt not in seen
+        and (cap is None or len(seen) < cap)
+        and (max_rows is None or len(rows) < max_rows)
+    ):
+        seen.add(nxt)
+        body, resp_headers = _fetch_page(nxt, method, headers, json_body)
+        page, nxt = step(len(seen), nxt, body, resp_headers)
+        if not page:
             break
-        nxt = str(nxt)
-        if nxt in seen_cursors:
-            break  # server re-served a token — stop, don't loop
-        seen_cursors.add(nxt)
-        cursor = nxt
+        rows.extend(page)
     return rows
 
 
@@ -385,15 +410,12 @@ def register_http_table(
     url: str,
     method: str = "GET",
     table_name: str = "http_table",
-    start_page: int | str | None = None,
-    pagination: Pagination | None = None,
+    paging: Paging | None = None,
     schema_mode: str = "full",
     cache: bool = True,
     max_rows: int | None = None,
     headers: dict[str, str] | None = None,
     json_body: Any | None = None,
-    cursor_pagination: CursorPagination | None = None,
-    link_pagination: LinkPagination | None = None,
 ) -> DataFrame:
     """Fetch + register a named temp view — the Spark analogue of
     ``dataframe::url`` (reference src/dataframe.rs:7-24).
@@ -401,28 +423,15 @@ def register_http_table(
     The reference re-serializes and re-parses the staged JSON on every
     query execution (src/execution.rs:173-202); we ``cache()`` the
     ingested DataFrame instead so repeat queries hit the in-memory
-    columnar form. ``max_rows`` stops page fetches early (limit
-    pushdown; see fetch_rows). ``cursor_pagination`` selects the
-    token-walk protocol and ``link_pagination`` the RFC 8288
-    rel="next" walk instead of page numbers (the three modes are
-    mutually exclusive, enforced by config.Source).
+    columnar form. ``paging`` and ``max_rows`` go to fetch_rows.
     """
-    if cursor_pagination is not None:
-        rows = fetch_rows_cursor(
-            url, method, cursor_pagination,
-            max_rows=max_rows, headers=headers, json_body=json_body,
-        )
-    elif link_pagination is not None:
-        rows = fetch_rows_link(
-            url, method,
-            max_rows=max_rows, max_pages=link_pagination.max_pages,
-            headers=headers, json_body=json_body,
-        )
-    else:
-        rows = fetch_rows(
-            url, method, start_page, pagination,
-            max_rows=max_rows, headers=headers, json_body=json_body,
-        )
+    rows = fetch_rows(url, method, paging, max_rows=max_rows, headers=headers, json_body=json_body)
+    return _register_rows(spark, rows, table_name, schema_mode, cache)
+
+
+def _register_rows(
+    spark: SparkSession, rows: list[Any], table_name: str, schema_mode: str, cache: bool
+) -> DataFrame:
     df = json_rows_to_df(spark, rows, schema_mode=schema_mode)
     if cache and rows:
         df = df.cache()
@@ -471,11 +480,7 @@ def fetch_json_conditional(
     )
     if resp.status_code == 304:
         return None, etag, last_modified, True
-    try:
-        body = resp.json()
-    except ValueError as e:
-        raise HttpError(f"failed to parse JSON from {url!r}: {e}") from e
-    return body, resp.headers.get("ETag"), resp.headers.get("Last-Modified"), False
+    return _json_of(resp, url), resp.headers.get("ETag"), resp.headers.get("Last-Modified"), False
 
 
 def refresh_http_table(
@@ -511,12 +516,7 @@ def refresh_http_table(
     )
     if not_modified:
         return new_etag, new_lm, False
-    rows: list[Any] = []
-    _extend_rows(rows, body)
-    df = json_rows_to_df(spark, rows, schema_mode=schema_mode)
-    if cache and rows:
-        df = df.cache()
-    df.createOrReplaceTempView(table_name)
+    _register_rows(spark, page_rows(body), table_name, schema_mode, cache)
     return new_etag, new_lm, True
 
 
@@ -598,56 +598,3 @@ def parse_link_next(link_header: str | None) -> str | None:
             if "next" in rels:
                 return target
     return None
-
-
-def fetch_rows_link(
-    url: str,
-    method: str = "GET",
-    timeout: float = _DEFAULT_TIMEOUT,
-    max_rows: int | None = None,
-    max_pages: int = 10_000,
-    headers: dict[str, str] | None = None,
-    json_body: Any | None = None,
-) -> list[Any]:
-    """Walk a ``Link: <...>; rel="next"`` paginated endpoint to
-    exhaustion — the third pagination contract beside page-number
-    (fetch_rows) and cursor/token (fetch_rows_cursor), and the one the
-    reference's page/limit-only model (src/model.rs:20-34) cannot
-    express at all: the server names the next URL, the client follows
-    it verbatim.
-
-    Stops when the response carries no ``rel="next"`` link, on an empty
-    array body, at ``max_rows`` staged rows (limit pushdown, same
-    contract as fetch_rows), at ``max_pages`` (safety cap), or on a
-    next-URL the walk has already visited (a self/looping link is a
-    server bug that must not burn the cap before stopping). Relative
-    next-URLs resolve against the current page's URL (RFC 3986 join).
-    Transient failures ride the shared retry/Retry-After loop.
-    """
-    from urllib.parse import urljoin
-
-    rows: list[Any] = []
-    current = url
-    seen: set[str] = {url}
-    for _ in range(max_pages):
-        if max_rows is not None and len(rows) >= max_rows:
-            break
-        resp = _request_with_retries(
-            current, method=method, timeout=timeout, headers=headers, json_body=json_body
-        )
-        try:
-            body = resp.json()
-        except ValueError as e:
-            raise HttpError(f"failed to parse JSON from {current!r}: {e}") from e
-        if body is None or (isinstance(body, list) and not body):
-            break
-        _extend_rows(rows, body)
-        nxt = parse_link_next(resp.headers.get("Link"))
-        if nxt is None:
-            break
-        nxt = urljoin(current, nxt)
-        if nxt in seen:
-            break  # looping Link chain — stop, don't spin to the cap
-        seen.add(nxt)
-        current = nxt
-    return rows

@@ -13,7 +13,7 @@ from urllib.parse import parse_qs, urlparse
 
 import pytest
 
-from http_datafusion_spark.config import Pagination, Source
+from http_datafusion_spark.config import LinkPagination, Pagination, Source
 from http_datafusion_spark.errors import ConfigError, HttpError
 from http_datafusion_spark.sources.http_json import (
     fetch_json,
@@ -193,29 +193,23 @@ def test_object_body_single_row(base_url):
 
 
 def test_pagination_terminates_on_empty_array(base_url):
-    rows = fetch_rows(
-        f"{base_url}/paged_empty", start_page=1, pagination=Pagination(page_size=10, end_page=None)
-    )
+    rows = fetch_rows(f"{base_url}/paged_empty", paging=Pagination(page_size=10, end_page=None))
     assert rows == ROWS
 
 
 def test_pagination_terminates_on_null(base_url):
-    rows = fetch_rows(
-        f"{base_url}/paged_null", start_page=1, pagination=Pagination(page_size=10, end_page=None)
-    )
+    rows = fetch_rows(f"{base_url}/paged_null", paging=Pagination(page_size=10, end_page=None))
     assert rows == ROWS
 
 
 def test_pagination_honors_end_page(base_url):
-    rows = fetch_rows(
-        f"{base_url}/paged_empty", start_page=1, pagination=Pagination(page_size=10, end_page=2)
-    )
+    rows = fetch_rows(f"{base_url}/paged_empty", paging=Pagination(page_size=10, end_page=2))
     assert rows == ROWS[:20]
 
 
 def test_pagination_custom_params(base_url):
     pag = Pagination(page_size=5, page_param="page", page_size_param="per", end_page=None)
-    rows = fetch_rows(f"{base_url}/paged_empty", start_page=1, pagination=pag)
+    rows = fetch_rows(f"{base_url}/paged_empty", paging=pag)
     assert rows == ROWS
 
 
@@ -375,23 +369,19 @@ def test_kafka_source_gated(spark):
 
 def test_cursor_pagination_drains_endpoint(base_url):
     from http_datafusion_spark.config import CursorPagination
-    from http_datafusion_spark.sources.http_json import fetch_rows_cursor
 
     _Handler.hit_counts.pop("/cursor", None)
-    rows = fetch_rows_cursor(f"{base_url}/cursor", cursor_pagination=CursorPagination())
+    rows = fetch_rows(f"{base_url}/cursor", paging=CursorPagination())
     assert rows == ROWS
     assert _Handler.hit_counts["/cursor"] == 4  # 40 rows / 10 per page
 
 
 def test_cursor_pagination_max_rows_stops_fetching(base_url):
     from http_datafusion_spark.config import CursorPagination
-    from http_datafusion_spark.sources.http_json import fetch_rows_cursor
 
     _Handler.hit_counts.pop("/cursor", None)
-    rows = fetch_rows_cursor(
-        f"{base_url}/cursor", cursor_pagination=CursorPagination(), max_rows=15
-    )
-    # Limit pushdown contract (same as fetch_rows): stop FETCHING once
+    rows = fetch_rows(f"{base_url}/cursor", paging=CursorPagination(), max_rows=15)
+    # Limit pushdown contract (same for every mode): stop FETCHING once
     # max_rows staged, never trim — the engine applies the exact LIMIT.
     assert rows == ROWS[:20]
     assert _Handler.hit_counts["/cursor"] == 2
@@ -399,12 +389,9 @@ def test_cursor_pagination_max_rows_stops_fetching(base_url):
 
 def test_cursor_pagination_stops_on_reserved_token(base_url):
     from http_datafusion_spark.config import CursorPagination
-    from http_datafusion_spark.sources.http_json import fetch_rows_cursor
 
     _Handler.hit_counts.pop("/cursor_loop", None)
-    rows = fetch_rows_cursor(
-        f"{base_url}/cursor_loop", cursor_pagination=CursorPagination()
-    )
+    rows = fetch_rows(f"{base_url}/cursor_loop", paging=CursorPagination())
     # The same token twice = server bug; the walk stops after the second
     # page (first page: no cursor; second: tokX; third would repeat tokX).
     assert rows == ROWS[:10] + ROWS[:10]
@@ -464,7 +451,7 @@ def test_register_http_table_via_cursor(spark, base_url):
         spark,
         f"{base_url}/cursor",
         table_name="cursor_rows",
-        cursor_pagination=CursorPagination(),
+        paging=CursorPagination(),
     )
     got = spark.sql("SELECT count(*) AS n, sum(id) AS s FROM cursor_rows").collect()[0]
     assert got.n == len(ROWS) and got.s == sum(r["id"] for r in ROWS)
@@ -554,24 +541,18 @@ def test_conditional_fetch_method_gate_and_errors(base_url):
 def test_link_pagination_walks_all_pages(base_url):
     """Absolute, relative, and multi-valued-rel next links across 4
     pages; the last page carries no Link header."""
-    from http_datafusion_spark.sources.http_json import fetch_rows_link
-
-    rows = fetch_rows_link(f"{base_url}/linked")
+    rows = fetch_rows(f"{base_url}/linked", paging=LinkPagination())
     assert [r["id"] for r in rows] == [r["id"] for r in ROWS]
 
 
 def test_link_pagination_max_rows_pushdown(base_url):
-    from http_datafusion_spark.sources.http_json import fetch_rows_link
-
-    rows = fetch_rows_link(f"{base_url}/linked", max_rows=15)
-    # stops FETCHING once >= 15 rows staged (page granularity, like fetch_rows)
+    rows = fetch_rows(f"{base_url}/linked", paging=LinkPagination(), max_rows=15)
+    # stops FETCHING once >= 15 rows staged (page granularity, every mode)
     assert len(rows) == 20
 
 
 def test_link_pagination_self_loop_stops(base_url):
-    from http_datafusion_spark.sources.http_json import fetch_rows_link
-
-    rows = fetch_rows_link(f"{base_url}/linked_loop")
+    rows = fetch_rows(f"{base_url}/linked_loop", paging=LinkPagination())
     assert len(rows) == 10  # one page, then the self-link is refused
 
 

@@ -936,3 +936,37 @@ def test_feature_hash_collisions_track_birthday_bound(spark, sf_dir):
         if r.expected_term_frac > 0.01:  # enough signal to compare
             assert r.colliding_term_frac < 3 * r.expected_term_frac
             assert r.colliding_term_frac > r.expected_term_frac / 3
+
+
+def test_fetch_vectors_rereads_a_rewritten_embeddings_file(spark, sf_dir, tmp_path):
+    """A long-lived session must not serve stale vectors: once the
+    embeddings file is rewritten with changed vectors, _fetch_vectors
+    returns the new ones, not its memo of the old file."""
+    import os
+    import shutil
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from http_datafusion_spark.operators.similarity import _fetch_vectors
+
+    d = str(tmp_path)
+    path = os.path.join(d, "embeddings.parquet")
+    shutil.copy(os.path.join(sf_dir, "embeddings.parquet"), path)
+    ids = (0, 1, 2)
+    before = _fetch_vectors(spark, d, ids)
+    assert sorted(before) == list(ids)
+
+    t = pq.read_table(path)
+    field = t.schema.field("embedding")
+    negated = pa.array([[-x for x in v] for v in t.column("embedding").to_pylist()], type=field.type)
+    pq.write_table(t.set_column(t.schema.get_field_index("embedding"), field, negated), path)
+    # The rewrite can land inside the filesystem's mtime granularity;
+    # move the mtime on so the file visibly changed.
+    st = os.stat(path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 2 * 10**9))
+
+    after = _fetch_vectors(spark, d, ids)
+    for i in ids:
+        assert np.array_equal(after[i], -before[i]), f"vec_id {i} served stale"

@@ -219,3 +219,27 @@ def test_pin_scope_is_thread_local(spark, df):
         assert _cached_rdd_ids(spark) - base == mine
         assert sorted(r.v for r in out.collect()) == [2 * i for i in range(10)]
     assert _cached_rdd_ids(spark) <= base
+
+
+def test_pin_scope_logs_a_failed_release_and_runs_the_rest(caplog):
+    """A release that raises is logged with its exception and does not
+    stop the scope: the other releases still run and the scope exits
+    cleanly (the query's results are already out)."""
+    import logging
+
+    from http_datafusion_spark.functions.pinning import _track, pin_scope
+
+    ran = []
+
+    def failing() -> None:
+        raise RuntimeError("executor lost")
+
+    with caplog.at_level(logging.WARNING, logger="http_datafusion_spark.functions.pinning"):
+        with pin_scope():
+            _track(lambda: ran.append("first"))
+            _track(failing)
+            _track(lambda: ran.append("last"))
+    assert sorted(ran) == ["first", "last"]
+    [record] = [r for r in caplog.records if r.name == "http_datafusion_spark.functions.pinning"]
+    assert record.levelno == logging.WARNING
+    assert "RuntimeError" in record.getMessage() and "executor lost" in record.getMessage()

@@ -711,14 +711,33 @@ BROADCAST_GUARD_REPAIRED = (
 )
 
 
-def test_no_forced_broadcast_of_fact_derived_relations(spark, sf_dir):
+@pytest.fixture(scope="module")
+def guard_sweep(spark, sf_dir) -> dict[str, tuple[list, list, list]]:
+    """One plan sweep for the three registry-wide guard tests: each query
+    is built once inside ``pin_scope`` (its pins are released when the
+    scope exits), the broadcast, ranking-window and grouped-pandas guards
+    all run on that frame, and only their results are kept, keyed by
+    query name."""
+    from http_datafusion_spark.functions.pinning import pin_scope
     from http_datafusion_spark.plans.broadcast_guard import broadcast_hint_violations
-    from http_datafusion_spark.plans.registry import all_queries
+    from http_datafusion_spark.plans.pandas_guard import grouped_pandas_key_signatures
+    from http_datafusion_spark.plans.window_guard import ranking_window_violations
 
+    results = {}
+    for name, spec in QS.items():
+        with pin_scope():
+            df = spec.spark(spark, sf_dir)
+            results[name] = (
+                broadcast_hint_violations(df),
+                ranking_window_violations(df),
+                grouped_pandas_key_signatures(df),
+            )
+    return results
+
+
+def test_no_forced_broadcast_of_fact_derived_relations(guard_sweep):
     flagged: dict[str, list[str]] = {}
-    for name, spec in all_queries().items():
-        df = spec.spark(spark, sf_dir)
-        v = broadcast_hint_violations(df)
+    for name, (v, _, _) in guard_sweep.items():
         if v:
             flagged[name] = [f"{x.fact_tables}: {x.subtree_head[:80]}" for x in v]
 
@@ -1189,13 +1208,9 @@ WINDOW_GUARD_REPAIRED = (
 )
 
 
-def test_no_unbounded_ranking_window_over_fact_scan(spark, sf_dir):
-    from http_datafusion_spark.plans.registry import all_queries
-    from http_datafusion_spark.plans.window_guard import ranking_window_violations
-
+def test_no_unbounded_ranking_window_over_fact_scan(guard_sweep):
     flagged: dict[str, list[str]] = {}
-    for name, spec in all_queries().items():
-        v = ranking_window_violations(spec.spark(spark, sf_dir))
+    for name, (_, v, _) in guard_sweep.items():
         if v:
             flagged[name] = [
                 f"keys={x.partition_keys} facts={x.fact_scans}: {x.window_head[:80]}"
@@ -1368,14 +1383,10 @@ PANDAS_GUARD_BOUNDED: dict[tuple[str, ...], str] = {
 }
 
 
-def test_every_grouped_pandas_key_is_argued_bounded(spark, sf_dir):
-    from http_datafusion_spark.plans.pandas_guard import (
-        grouped_pandas_key_signatures,
-    )
-
+def test_every_grouped_pandas_key_is_argued_bounded(guard_sweep):
     observed: dict[tuple[str, ...], list[str]] = {}
-    for name, spec in QS.items():
-        for sig in grouped_pandas_key_signatures(spec.spark(spark, sf_dir)):
+    for name, (_, _, sigs) in guard_sweep.items():
+        for sig in sigs:
             observed.setdefault(sig, []).append(name)
 
     unexplained = {
@@ -1469,17 +1480,32 @@ def test_collect_inventory_is_pinned():
 
 def test_spread_docs_is_scale_adaptive(spark, sf_dir):
     """spread_docs must repartition ONLY when the scan is narrower than
-    the cluster's parallelism (the single-file bench-SF case) and be a
-    strict no-op on already-wide inputs — the property that makes the
+    both the cluster's parallelism (the single-file bench-SF case) and
+    its shuffle-width target, and be a strict no-op on already-wide
+    inputs (it never narrows a scan): the property that makes the
     r18 tokenize-spread adoptions safe at the many-file 100 TB layout
     (guide §2.5: fix input skew without pessimizing parallel scans)."""
     from http_datafusion_spark.operators.text import spread_docs
 
+    parallelism = spark.sparkContext.defaultParallelism
+    shuffle_key = "spark.sql.shuffle.partitions"
+    n_shuffle = int(spark.conf.get(shuffle_key))
     d = load_tables(spark, sf_dir, "documents")["documents"].select("doc_id", "text")
     narrow = d.coalesce(1)
     spread = spread_docs(narrow)
-    assert spread.rdd.getNumPartitions() == int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
-    wide = d.repartition(spark.sparkContext.defaultParallelism * 2, "doc_id")
+    if 1 < min(parallelism, n_shuffle):
+        assert spread.rdd.getNumPartitions() == n_shuffle
+    else:
+        assert spread is narrow, "a one-task session has nothing to spread to"
+    wide = d.repartition(parallelism * 2, "doc_id")
     assert spread_docs(wide) is wide, "no-op expected on core-wide inputs"
+
+    # shuffle.partitions < scan width < defaultParallelism: the spread's
+    # target is narrower than the scan, so it must not narrow it.
+    if parallelism >= 3:
+        mid = d.repartition(parallelism - 1, "doc_id")
+        spark.conf.set(shuffle_key, str(parallelism - 2))
+        try:
+            assert spread_docs(mid) is mid, "spread_docs narrowed a wider scan"
+        finally:
+            spark.conf.set(shuffle_key, str(n_shuffle))

@@ -545,7 +545,7 @@ def test_cursor_walk_drains_exactly_and_never_loops(n_rows, page_size, reserve_a
     rows = [{"id": i} for i in range(n_rows)]
     calls = []
 
-    def fake_fetch(url, method="GET", timeout=None, headers=None, json_body=None):
+    def fake_fetch(url, method, headers, json_body):
         from urllib.parse import parse_qs, urlparse
 
         calls.append(url)
@@ -559,12 +559,10 @@ def test_cursor_walk_drains_exactly_and_never_loops(n_rows, page_size, reserve_a
             nxt = f"tok{off + page_size}"
         else:
             nxt = None
-        return {"data": rows[off : off + page_size], "next_cursor": nxt}
+        return {"data": rows[off : off + page_size], "next_cursor": nxt}, {}
 
-    with patch.object(hj, "fetch_json", side_effect=fake_fetch):
-        got = hj.fetch_rows_cursor(
-            "http://api/items", cursor_pagination=CursorPagination(max_pages=500)
-        )
+    with patch.object(hj, "_fetch_page", side_effect=fake_fetch):
+        got = hj.fetch_rows("http://api/items", paging=CursorPagination(max_pages=500))
     if reserve_at is None:
         assert got == rows
         expected_calls = max(1, -(-n_rows // page_size))

@@ -42,6 +42,9 @@ def pushable_limit(sql: str | None, table: str) -> int | None:
     WHERE/JOIN/GROUP/ORDER/OFFSET/set-op — or any parenthesis in the
     select list (aggregates, subqueries) — needs the full row set, so
     those return None and every page is fetched as before.
+
+    ``LIMIT 0`` pushes 1: the first page still gives the table its
+    columns, and Spark applies the exact limit.
     """
     if not sql:
         return None
@@ -55,7 +58,7 @@ def pushable_limit(sql: str | None, table: str) -> int | None:
     forbidden = ("where", "join", "group", "order", "having", "union", "intersect", "except", "distinct", "offset")
     if any(re.search(rf"\b{kw}\b", m.group("cols"), re.IGNORECASE) for kw in forbidden):
         return None
-    return int(m.group("n"))
+    return max(int(m.group("n")), 1)
 
 
 def run_source(
@@ -64,9 +67,10 @@ def run_source(
     pag = source.pagination
     max_rows = pushable_limit(source.sql, source.name)
     if via_datasource and pag is not None and pag.end_page is not None:
-        # Scale-out path: known page range => page-per-partition parallel
-        # fetch on executors (sources/datasource.py) instead of
-        # driver-side staging.
+        # Scale-out path: known page range => parallel fetch on executors
+        # (sources/datasource.py) instead of driver-side staging, in at
+        # most one contiguous page range per core: a task wave beyond
+        # the core count costs more than its pages take to fetch.
         from http_datafusion_spark.sources.datasource import register
 
         register(spark)
@@ -79,6 +83,7 @@ def run_source(
             .option("pageSize", pag.page_size)
             .option("pageParam", pag.page_param)
             .option("pageSizeParam", pag.page_size_param)
+            .option("numPartitions", spark.sparkContext.defaultParallelism)
         )
         if max_rows is not None:
             reader = reader.option("maxRows", max_rows)

@@ -6,9 +6,14 @@ in driver memory (reference src/execution.rs:95-96,
 src/datasources.rs:192-198). This source instead registers as a real
 ``spark.read.format("httpjson")`` provider whose reader:
 
-- enumerates ONE InputPartition PER PAGE when the page range is known
-  (``startPage``/``endPage`` options) — fetches run in parallel on
-  executors, nothing is staged on the driver;
+- splits a known page range (``startPage``/``endPage`` options) into
+  contiguous page ranges, one InputPartition each — fetches run in
+  parallel on executors, nothing is staged on the driver. The
+  ``numPartitions`` option caps the number of ranges (JDBC's option of
+  the same name); the engine sets it to the session's parallelism,
+  since every task wave beyond the core count costs a scheduling round
+  and the reader runs where no session is at hand. Without it, each
+  page is its own partition;
 - falls back to a single sequential partition for open-ended
   pagination (termination on ``null``/``[]`` is inherently sequential);
 - infers its schema from the first page at plan time (or accepts a
@@ -20,7 +25,7 @@ src/datasources.rs:192-198). This source instead registers as a real
   declines all pushdown, src/datasources.rs:386-388).
 
 At 100 TB-class ingest (many pages × many endpoints) this shape is the
-right one: the page grid is the parallelism unit, executors fetch
+right one: page ranges are the parallelism unit, executors fetch
 concurrently, and the result lands already partitioned for downstream
 repartition/bucketing.
 
@@ -31,6 +36,7 @@ Usage::
           .option("url", "https://api.example.com/items")
           .option("startPage", 1).option("endPage", 40)
           .option("pageSize", 500)
+          .option("numPartitions", 8)
           .load())
 """
 
@@ -48,7 +54,7 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from http_datafusion_spark.config import Pagination
-from http_datafusion_spark.errors import HttpError
+from http_datafusion_spark.errors import ConfigError, HttpError
 
 
 class HttpJsonDataSource(DataSource):
@@ -135,8 +141,15 @@ def _infer_schema_from_rows(rows: Sequence) -> StructType:
 
 
 class _PagePartition(InputPartition):
-    def __init__(self, page: int | None):
-        self.page = page  # None => sequential open-ended scan
+    def __init__(self, pages: range | None):
+        self.pages = pages  # None => sequential open-ended scan
+
+
+def _split_pages(pages: range, n: int | None) -> list[range]:
+    """``pages`` as ``min(len(pages), n)`` contiguous ranges in page order,
+    sizes differing by at most one; one page per range when ``n`` is None."""
+    n = len(pages) if n is None else min(len(pages), n)
+    return [pages[i * len(pages) // n : (i + 1) * len(pages) // n] for i in range(n)]
 
 
 class HttpJsonReader(DataSourceReader):
@@ -216,7 +229,10 @@ class HttpJsonReader(DataSourceReader):
                 size = _pagination_from_options(opts).page_size or 10
                 need = -(-max_rows // size)  # ceil
                 end = min(end, start + need - 1)
-            return [_PagePartition(p) for p in range(start, end + 1)]
+            n = int(opts["numpartitions"]) if opts.get("numpartitions") is not None else None
+            if n is not None and n < 1:
+                raise ConfigError(f"httpjson option numPartitions must be >= 1, got {n}")
+            return [_PagePartition(r) for r in _split_pages(range(start, end + 1), n)]
         return [_PagePartition(None)]
 
     def read(self, partition: _PagePartition) -> Iterator[tuple]:
@@ -225,7 +241,7 @@ class HttpJsonReader(DataSourceReader):
 
         opts = self.options
         url = self._base_url()
-        if partition.page is None:
+        if partition.pages is None:
             max_rows = int(opts["maxrows"]) if opts.get("maxrows") is not None else None
             paging = _pagination_from_options(opts) if opts.get("startpage") is not None else None
             rows = fetch_rows(
@@ -237,7 +253,7 @@ class HttpJsonReader(DataSourceReader):
                 json_body=_body_from_options(opts),
             )
         else:
-            rows = _fetch_page_rows(opts, url, partition.page)
+            rows = (row for page in partition.pages for row in _fetch_page_rows(opts, url, page))
         yield from map(_tuple_converter(self.schema), rows)
 
 

@@ -39,11 +39,14 @@ contributes only its first URL and a step from one response to
   ``Link: <...>; rel="next"`` header names the next URL, resolved
   against the current one.
 
-Scale note: this module stages rows on the driver — exactly what the
+Scale note: this module fetches rows on the driver — exactly what the
 reference does (src/datasources.rs:192-198) and appropriate for
-config-driven API ingest (bounded payloads). For large paginated APIs
-use sources/datasource.py, which fetches pages in parallel on
-executors (one partition per page) and never materializes the dataset
+config-driven API ingest (bounded payloads). The rows reach the JVM as
+JSON lines in one Arrow table and Spark's own JSON reader parses them
+there, so staging and the cache build run no Python worker. For large
+paginated APIs use sources/datasource.py, which fetches pages in
+parallel on executors (contiguous page ranges, at most one partition
+per core when the engine drives it) and never materializes the dataset
 on the driver.
 """
 
@@ -55,6 +58,8 @@ from typing import Any
 
 import requests
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from http_datafusion_spark.config import CursorPagination, LinkPagination, Pagination, Paging
 from http_datafusion_spark.errors import HttpError
@@ -369,7 +374,6 @@ def json_rows_to_df(
     spark: SparkSession,
     rows: list[Any],
     schema_mode: str = "full",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Stage JSON rows as a DataFrame.
 
@@ -382,6 +386,13 @@ def json_rows_to_df(
     src/datasources.rs:195-196 + 318-343 (no normalization — parity
     mode reproduces the reference byte-for-byte).
 
+    Each row becomes one JSON line that Spark's own JSON reader parses
+    in the JVM (``_read_json_lines``), so inference, parsing and the
+    cache build run no Python worker. Lines are ASCII-escaped: a lone
+    surrogate escape in an API body (``"\\ud800"``) is not valid UTF-8
+    and could not reach the JVM verbatim; escaped, the JSON reader
+    decodes it as ``?`` and the row stages.
+
     Empty input yields an empty 0-column DataFrame instead of the
     reference's panic (src/datasources.rs:195).
     """
@@ -392,17 +403,37 @@ def json_rows_to_df(
             {k: _normalize_untyped(v) for k, v in r.items()} if isinstance(r, dict) else r
             for r in rows
         ]
-    if num_partitions is None:
-        num_partitions = max(1, min(len(rows) // 5000 + 1, spark.sparkContext.defaultParallelism))
-    lines = [json.dumps(r, ensure_ascii=False) for r in rows]
-    rdd = spark.sparkContext.parallelize(lines, num_partitions)
-    if schema_mode == "first_record":
-        first = spark.sparkContext.parallelize(lines[:1], 1)
-        schema = spark.read.json(first).schema
-        return spark.read.schema(schema).json(rdd)
-    if schema_mode != "full":
+    elif schema_mode != "first_record":
         raise ValueError(f"unknown schema_mode {schema_mode!r}")
-    return spark.read.json(rdd)
+    lines = [json.dumps(r) for r in rows]
+    if schema_mode == "first_record":
+        schema = _read_json_lines(spark, lines[:1]).schema
+        return _read_json_lines(spark, lines, schema)
+    return _read_json_lines(spark, lines)
+
+
+def _read_json_lines(
+    spark: SparkSession, lines: list[str], schema: StructType | None = None
+) -> DataFrame:
+    """Parse JSON lines with Spark's JSON reader over a ``Dataset[String]``
+    built in the JVM, so no Python RDD sits under the result.
+
+    The lines travel as one Arrow string per core (a ``LocalTableScan``)
+    and are split back into lines in the JVM: ``json.dumps`` escapes
+    every newline inside a value, so ``\\n`` separates lines exactly.
+    One local row per line would make every job ship one serialized
+    object per line inside its tasks (at 10^5 lines on 4 cores, schema
+    inference took 0.33 s instead of 0.11 s)."""
+    import pyarrow as pa
+
+    n = -(-len(lines) // spark.sparkContext.defaultParallelism)
+    chunks = ["\n".join(lines[i : i + n]) for i in range(0, len(lines), n)]
+    strings = spark.createDataFrame(pa.table({"value": chunks})).select(
+        F.explode(F.split("value", "\n")).alias("value")
+    )
+    encoder = spark._jvm.org.apache.spark.sql.Encoders.STRING()
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader._df(reader._jreader.json(getattr(strings._jdf, "as")(encoder)))
 
 
 def register_http_table(

@@ -1,5 +1,5 @@
 """Spark 4 Python DataSource ("httpjson") tests — the scale-out ingest
-path: page-per-partition parallelism, schema inference, filter
+path: page-range partitions, schema inference, filter
 behavior, open-ended fallback.
 """
 
@@ -11,6 +11,8 @@ from http.server import BaseHTTPRequestHandler, HTTPServer
 from urllib.parse import parse_qs, urlparse
 
 import pytest
+
+from http_datafusion_spark.errors import ConfigError
 
 ROWS = [{"id": i, "tag": f"t{i % 3}", "score": i * 0.5} for i in range(1, 101)]
 
@@ -52,6 +54,33 @@ def test_page_per_partition(spark, url):
     df = _read(spark, url, startPage=1, endPage=10, pageSize=10)
     assert df.rdd.getNumPartitions() == 10  # one partition per page
     assert df.count() == 100
+
+
+def _partition_pages(**opts) -> list[list[int]]:
+    from http_datafusion_spark.sources.datasource import HttpJsonReader
+
+    reader = HttpJsonReader(None, {"url": "http://unused", **opts})
+    return [list(p.pages) for p in reader.partitions()]
+
+
+def test_page_ranges_split_evenly_in_order():
+    for n_pages in range(1, 13):
+        for n_parts in range(1, 9):
+            parts = _partition_pages(startPage=3, endPage=2 + n_pages, numPartitions=n_parts)
+            assert len(parts) == min(n_pages, n_parts)
+            assert [p for part in parts for p in part] == list(range(3, 3 + n_pages))
+            sizes = [len(part) for part in parts]
+            assert min(sizes) >= 1 and max(sizes) - min(sizes) <= 1
+            assert all(part == list(range(part[0], part[-1] + 1)) for part in parts)
+    # the maxRows trim comes first: 25 rows at 10 per page need pages 3-5
+    assert _partition_pages(startPage=3, endPage=12, pageSize=10, maxRows=25, numPartitions=2) == [
+        [3],
+        [4, 5],
+    ]
+    # without the option, each page is its own partition
+    assert _partition_pages(startPage=3, endPage=7) == [[3], [4], [5], [6], [7]]
+    with pytest.raises(ConfigError, match="numPartitions"):
+        _partition_pages(startPage=1, endPage=4, numPartitions=0)
 
 
 def test_schema_inference_from_first_page(spark, url):

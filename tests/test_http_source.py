@@ -165,6 +165,8 @@ class _Handler(BaseHTTPRequestHandler):
             self._send([])
         elif u.path == "/ragged":
             self._send([{"a": 1}, {"a": 2, "b": "late-field"}])
+        elif u.path == "/lone_surrogate":  # body text carries the escape \ud800
+            self._send([{"a": "x\ud800y", "b": 1}])
         elif u.path == "/error":
             self._send({"boom": True}, code=500)
         else:
@@ -257,6 +259,25 @@ def test_schema_mode_first_record_drops_late_fields(base_url, spark):
     full = json_rows_to_df(spark, rows, schema_mode="full")
     assert first.columns == ["a"]  # reference first-record inference behavior
     assert sorted(full.columns) == ["a", "b"]  # Spark full-scan default
+
+
+def test_lone_surrogate_escape_stages(base_url, spark):
+    # JSON allows a lone surrogate escape; UTF-8 cannot carry the decoded
+    # character, so staging must not hand it to the JVM verbatim.
+    df = register_http_table(spark, f"{base_url}/lone_surrogate", table_name="t_surrogate")
+    [row] = df.collect()
+    assert (row.a, row.b) == ("x?y", 1)
+
+
+def test_staged_table_runs_no_python_worker(base_url, spark):
+    # Inference, parsing and the cache build run in the JVM: no PythonRDD
+    # anywhere in the staged table's lineage.
+    df = register_http_table(spark, f"{base_url}/rows", table_name="t_jvm_lineage")
+    lineage = df._jdf.queryExecution().toRdd().toDebugString()
+    assert "PythonRDD" not in lineage, lineage
+    first = json_rows_to_df(spark, ROWS, schema_mode="first_record")
+    assert "PythonRDD" not in first._jdf.queryExecution().toRdd().toDebugString()
+    assert df.count() == first.count() == len(ROWS)
 
 
 def test_register_and_query(base_url, spark):

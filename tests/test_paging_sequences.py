@@ -2,7 +2,7 @@
 config-driven product path (config.yaml -> ``engine.run_source``):
 which URLs the walk asks for, in order, and where it stops — at
 ``end_page``, on an empty page, on a re-served cursor, on a looping Link
-chain, and at a pushed-down LIMIT."""
+chain, and at a pushed-down LIMIT (``LIMIT 0`` included)."""
 
 from __future__ import annotations
 
@@ -120,3 +120,28 @@ sources:
     row = run_source(spark, source).result.collect()[0]
     assert (row.n, row.m) == (15 * PAGE, 15 * PAGE - 1)
     assert len(_Handler.requests) == 16  # 15 pages + the empty page that ends the walk
+
+
+@pytest.mark.parametrize("via_datasource", [False, True], ids=["driver", "httpjson"])
+def test_limit_zero_fetches_one_page_and_keeps_columns(via_datasource, base_url, spark):
+    """``LIMIT 0`` still fetches the first page, so the table has its
+    columns; the engine applies the exact limit."""
+    name = f"limit0_{'ds' if via_datasource else 'driver'}"
+    source = Source.from_dict(
+        {
+            "name": name,
+            "url": f"{base_url}/pages/3",
+            "pagination": {"end_page": 3},
+            "sql": f"SELECT id FROM {name} LIMIT 0",
+        }
+    )
+    _Handler.requests.clear()
+    result = run_source(spark, source, via_datasource=via_datasource).result
+    assert result.collect() == []
+    assert result.columns == ["id"]
+    if via_datasource:
+        # the schema probe reads page 1; the scan reads at most one page
+        assert 1 <= len(_Handler.requests) <= 2
+        assert set(_Handler.requests) == {_PAGES3[0]}
+    else:
+        assert _Handler.requests == [_PAGES3[0]]

@@ -717,12 +717,16 @@ def guard_sweep(spark, sf_dir) -> dict[str, tuple[list, list, list]]:
     is built once inside ``pin_scope`` (its pins are released when the
     scope exits), the broadcast, ranking-window and grouped-pandas guards
     all run on that frame, and only their results are kept, keyed by
-    query name."""
+    query name. The cache is cleared first: a lazy pin that an earlier
+    test executed outside ``pin_scope`` stays cached, and the guards
+    would then see its in-memory leaf instead of the scan beneath it,
+    so the flagged set would depend on test order."""
     from http_datafusion_spark.functions.pinning import pin_scope
     from http_datafusion_spark.plans.broadcast_guard import broadcast_hint_violations
     from http_datafusion_spark.plans.pandas_guard import grouped_pandas_key_signatures
     from http_datafusion_spark.plans.window_guard import ranking_window_violations
 
+    spark.catalog.clearCache()
     results = {}
     for name, spec in QS.items():
         with pin_scope():
@@ -1190,9 +1194,9 @@ WINDOW_GUARD_ALLOWED = {
     "attribution_models_compare": "conv_id keys are corpus-scale conversions; contents = one user journey",
     "cdc_scd2_intervals": "user_id keys are corpus-scale; contents = one user's event stream",
     "q_window_clause": "o_custkey keys are corpus-scale (SQL named-WINDOW parity surface)",
-    # dedup_substring_runs dropped r15: the df-gated gram table gk is
-    # now eagerly checkpointed, so the gaps-and-islands window reads an
-    # RDD leaf and the guard sees no fact scan beneath it.
+    # dedup_substring_runs: its gk pin is a lazy fact_scale persist, so
+    # the documents scan stays visible beneath the (da, db, diag) window.
+    "dedup_substring_runs": "pair-and-diagonal keys are corpus-scale; contents bounded by document length (COVERAGE row 'exact-substring runs')",
     "stats_bh_fdr": "global step-up window over the per-nation test table — m<=25 rows by the nation-keyed aggregate upstream; BH's sort is over TESTS, never facts",
     "events_group_sequential": "global look-scheduling windows over the day-grain cumulative table — |days|-bounded by the day-keyed aggregate upstream, and the looks table is <= GS_LOOKS rows; the schedule sorts DAYS, never facts",
     "quantile_sketch_audit": "per-shard local sort IS the sketch's parallelism unit (train_shuffle_shards pattern): contents = corpus/QS_SHARDS, QS_SHARDS the cluster-scaling knob; downstream merge is a window over the constant QS_SHARDS*QS_K summary",

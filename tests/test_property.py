@@ -304,6 +304,18 @@ def test_json_staging_empty_object_vs_typed_scalar_pinned(spark):
     assert {r[0] for r in df.select("k1").collect()} == {None, 7}
 
 
+def test_json_staging_keeps_values_and_order_across_line_chunks(spark):
+    # Staging ships its JSON lines to the JVM several to a string and
+    # splits them there: a value holding newlines, carriage returns or
+    # non-ASCII text must come back exactly, and rows keep their order.
+    from http_datafusion_spark.sources.http_json import json_rows_to_df
+
+    n = 4 * spark.sparkContext.defaultParallelism + 3
+    rows = [{"id": i, "s": f"row{i}\nnext\r\n\u2028é" * (i % 3)} for i in range(n)]
+    got = [(r.id, r.s) for r in json_rows_to_df(spark, rows).collect()]
+    assert got == [(r["id"], r["s"]) for r in rows]
+
+
 def test_first_record_mode_drops_late_only_fields(spark):
     # Parity quirk mode: schema comes from row 1 alone (reference
     # src/datasources.rs:318-343). Columns must be exactly row 1's

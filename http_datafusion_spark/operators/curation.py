@@ -2273,14 +2273,14 @@ def embedding_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     from http_datafusion_spark.operators.similarity import (
-        _ivf_topk_impl,
         sim_bruteforce_topk,
+        sim_ivf_topk,
     )
 
     exact = sim_bruteforce_topk(spark, sf_dir).select(
         "vec_id", F.row_number().over(W.orderBy(F.desc("cosine"), "vec_id")).alias("e_rk")
     )
-    approx = _ivf_topk_impl(spark, sf_dir).select(
+    approx = sim_ivf_topk(spark, sf_dir).select(
         F.col("vec_id").alias("a_id"),
         F.row_number().over(W.orderBy(F.desc("cosine"), "vec_id")).alias("a_rk"),
     )

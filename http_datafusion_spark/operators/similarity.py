@@ -282,7 +282,7 @@ def sim_ivf_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc=f"IVF-bucketed ANN top-k: driver-side probe over the cached codebook, literal IN bucket filter (partition-prunable), probe {N_PROBE}/{N_CENTROIDS} (north-star similarity scale path)",
     tags=("similarity", "bench"),
 )
-def _ivf_topk_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
+def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = _fetch_vectors(spark, sf_dir, (QUERY_VEC_ID, *CENTROID_VEC_IDS))
     qv = vecs[QUERY_VEC_ID]
     cids = sorted(CENTROID_VEC_IDS)
@@ -304,10 +304,6 @@ def _ivf_topk_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(TOP_K)
         .select("vec_id", "label", F.round("cosine_raw", 6).alias("cosine"))
     )
-
-
-def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _ivf_topk_impl(spark, sf_dir)
 
 
 _DIST2_TO_LIST_SQL = (
@@ -495,7 +491,7 @@ def sim_kmeans_refit(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sim_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact_ids = sim_bruteforce_topk(spark, sf_dir).select("vec_id")
-    approx_ids = _ivf_topk_impl(spark, sf_dir).select(F.col("vec_id").alias("a_id"))
+    approx_ids = sim_ivf_topk(spark, sf_dir).select(F.col("vec_id").alias("a_id"))
     hits = approx_ids.join(exact_ids, approx_ids["a_id"] == exact_ids["vec_id"], "inner")
     return hits.agg(
         F.lit(TOP_K).cast("bigint").alias("k"),

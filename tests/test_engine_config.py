@@ -14,6 +14,8 @@ import pytest
 from http_datafusion_spark.config import Config, load_config
 from http_datafusion_spark.engine import run
 from http_datafusion_spark.errors import ConfigError, IoError, QueryError
+from http_datafusion_spark.functions.pinning import pin_scope
+from http_datafusion_spark.plans.registry import all_queries
 
 USERS = [{"id": i, "country": ["us", "de"][i % 2]} for i in range(1, 11)]
 ORDERS = [{"oid": i, "uid": (i % 10) + 1, "amt": float(i)} for i in range(1, 51)]
@@ -188,3 +190,45 @@ def test_configured_auth_header_reaches_every_paged_request(spark, monkeypatch):
             )
     finally:
         srv.shutdown()
+
+
+# Headline queries that are cheap once warm and together compile about
+# 220 generated classes at sf0.001, more than Spark's default
+# 100-entry cache holds.
+STEADY_STATE_QUERIES = (
+    "q1_pricing_summary",
+    "q3_shipping_priority",
+    "q6_revenue_delta",
+    "q7_nation_volume",
+    "q9_product_profit",
+    "q10_returned_revenue",
+    "q_agg_basic",
+    "q_explode_unnest",
+    "q_topk_per_group",
+    "events_sessionize",
+    "events_tumbling_agg",
+    "ts_ewma",
+    "ts_mad_outliers",
+    "sim_bruteforce_topk",
+)
+
+
+def test_repeated_queries_reuse_generated_classes(spark, sf_dir):
+    # A long-lived session runs its queries in turn, round after round.
+    # By the third round they must find their generated classes still
+    # cached: recompiling them on every request is pure overhead.
+    registry = all_queries()
+    compilations = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    per_round = []
+    for _ in range(3):
+        before = compilations.getCount()
+        for name in STEADY_STATE_QUERIES:
+            with pin_scope():
+                registry[name].spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        per_round.append(compilations.getCount() - before)
+
+    first, _, third = per_round
+    assert first > 150, f"the set no longer outgrows the default cache: {per_round}"
+    # AQE occasionally re-plans a query, so a handful of compilations is
+    # not a regression.
+    assert third <= 0.05 * first, f"compilations per round: {per_round}"

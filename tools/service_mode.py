@@ -81,24 +81,33 @@ def main() -> None:
             registry[name].spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
         return time.perf_counter() - t0
 
+    # Janino compilations so far in this JVM; each pass reports its own.
+    compilations = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    compiled = {}
+
     # Pass 1: cold (first execution of each plan in this JVM).
-    t0 = time.perf_counter()
+    c0, t0 = compilations.getCount(), time.perf_counter()
     cold = {n: run(n) for n in names}
     cold_total = time.perf_counter() - t0
+    compiled["cold_sequential"] = compilations.getCount() - c0
 
-    # Settle codegen fully (bench.py uses 3 warmups), then steady state.
+    # Two more passes (bench.py uses 3 warmups): get_spark's generated-class
+    # cache holds every class of the bench queries, so what is still
+    # compiled after pass 1 is only AQE re-planning; then steady state.
     for n in names:
         run(n)
         run(n)
-    t0 = time.perf_counter()
+    c0, t0 = compilations.getCount(), time.perf_counter()
     warm = {n: run(n) for n in names}
     warm_total = time.perf_counter() - t0
+    compiled["warm_sequential"] = compilations.getCount() - c0
 
     # Pass 3: concurrent submission — the service regime.
-    t0 = time.perf_counter()
+    c0, t0 = compilations.getCount(), time.perf_counter()
     with ThreadPoolExecutor(max_workers=THREADS) as ex:
         list(ex.map(run, names))
     concurrent_total = time.perf_counter() - t0
+    compiled["warm_concurrent"] = compilations.getCount() - c0
 
     # Per-process cost (CLI-per-query anti-pattern), a few samples.
     # The probe inherits SPARK_GRAFT_CPUS via get_spark()'s default, so
@@ -127,6 +136,7 @@ def main() -> None:
         "warm_concurrent_total_sec": round(concurrent_total, 4),
         "amortizable_floor_sec": round(warm_total - concurrent_total, 4),
         "concurrent_speedup": round(warm_total / concurrent_total, 2),
+        "codegen_compilations": compiled,
         "per_process_samples": proc,
         "cold_vs_warm_per_query": {
             n: [round(cold[n], 4), round(warm[n], 4)] for n in names

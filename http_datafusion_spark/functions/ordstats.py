@@ -135,7 +135,7 @@ def bucketed_global_rank(
     bounds = df.agg(F.percentile_approx(value, qs, 10_000).alias("b")).collect()[0]["b"]
     if bounds is None:
         # percentile_approx of zero rows is NULL — same guard as
-        # exact_rank_values above (ADVICE r7): fail with the cause, not
+        # exact_rank_values above: fail with the cause, not
         # an opaque TypeError iterating None
         raise ValueError(
             f"bucketed_global_rank: input has no non-null rows of {value!r}"

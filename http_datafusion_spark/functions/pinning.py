@@ -1,61 +1,44 @@
 """``pin(df)`` — the repo's single frame-materialization primitive.
 
-Every multi-consumer BOUNDED frame in the registry is pinned so its
-plan stops re-deriving the fact scan per consumer (the r14/r15
-scan-audit remediation). Until r16 each site spelled the idiom raw
-(``.localCheckpoint(eager=True)``); this module centralizes it behind
-one name so (a) the checkpoint-inventory test derives the live
-call-site count (the only canonical number — don't restate it here),
-and (b) the CLUSTER story is a config switch instead of a
-per-site rewrite.
+Every multi-consumer frame in the registry is pinned so its plan stops
+re-deriving the fact scan once per consumer. The checkpoint-inventory
+test in ``tests/test_plans.py`` derives the live call-site count from
+the source, so the number is not restated here.
 
-Cluster story (the r15 verdict's structural note): a local checkpoint
-is **executor-local and non-replicated** — it severs lineage, so an
-executor loss kills the job instead of recomputing. Locally (one JVM,
-the test/bench environment) that is free determinism; on a 1000-executor
-cluster you want one of:
+One policy, chosen by the frame's size class:
 
-- ``spark.http_datafusion.pin.mode=persist`` — replicated, spill-friendly
-  ``MEMORY_AND_DISK_2`` persist. Lineage is KEPT (recoverable: a lost
-  replica recomputes), at the cost of plan-depth growth across
-  iterative loops (the reason localCheckpoint was chosen locally).
-- ``spark.http_datafusion.pin.mode=reliable`` — a reliable
-  ``df.checkpoint()`` into ``spark.http_datafusion.pin.dir`` (HDFS/S3):
-  lineage severed AND replicated by the filesystem; survives executor
-  loss. The right choice for the long iterative contractions
-  (connected components / LPA) at 100k-task scale.
+- A BOUNDED frame (an aggregate, a vocabulary, a small lookup) gets an
+  eager ``localCheckpoint``: it is fully materialized before ``pin``
+  returns and its lineage is severed, so deep iterative plans (the
+  connected-components and label-propagation loops) do not grow. Callers
+  may read a source, pin it and delete the source files (the streaming
+  scratch-dir reclaims rely on this).
+- A FACT-SCALE frame (``fact_scale=True``: proportional to a fact
+  table) gets a lazy, lineage-recoverable ``MEMORY_AND_DISK`` persist:
+  a fact-sized frame never sits solely in unreplicated executor
+  storage, and a lost block recomputes instead of failing the job.
 
-Per-site escape hatches:
-
-- ``storage=`` overrides the storage level in local/persist modes —
-  e.g. ``StorageLevel.DISK_ONLY`` for the biggest LPA round frames,
-  whose eager MEMORY_AND_DISK blocks competed with aggregation memory
-  in one unified pool and OOM'd the sf25 modularity probe below 48 g
-  (BASELINE r15; the r16 fix).
-- ``fact_scale=True`` declares the frame proportional to a FACT table
-  (not a bounded aggregate). Fact-scale frames are never
-  local-checkpointed: unreplicated executor storage of a fact is both
-  a memory cliff and an availability bug (r15 ADVICE on
-  events_ks_two_sample). They get a lineage-recoverable
-  ``MEMORY_AND_DISK`` persist in every mode instead.
+``storage=`` overrides the storage level, e.g. ``StorageLevel.DISK_ONLY``
+for the largest label-propagation round frames, whose eager
+MEMORY_AND_DISK blocks competed with aggregation memory in one unified
+pool and ran the sf25 modularity probe out of memory below 48 g.
 
 Call style: ``df.transform(pin)`` (chain-preserving), or
 ``df.transform(pin, storage=...)`` / ``pin(df)`` directly.
 
-Lifecycle (r17 verdict, What's-wrong #2): a pin's storage outlives the
-query that created it — nothing unpersists a localCheckpoint's blocks
-or a persist's cache except driver GC + ContextCleaner, whose timing
-is a JVM-GC accident (``spark.cleaner.periodicGC.interval`` defaults
-to 30 MINUTES). In a long-lived service session executing hundreds of
-pin-bearing queries, executor storage grows until a GC cycle happens
-to run. ``pin_scope()`` bounds that: harness code wraps each query
-execution (plan build + action) in a scope, and on scope exit every
-pin created inside it is unpersisted immediately. Tracking is OPT-IN —
-``pin()`` outside any scope behaves exactly as before (GC-reclaimed),
-so library consumers that hold pinned frames across calls are
-unaffected. Scopes are thread-local: concurrent service threads each
-release only their own query's pins (releasing another in-flight
-query's local checkpoint would kill it — lineage is severed).
+Lifecycle: a pin's storage outlives the query that created it. Nothing
+unpersists a localCheckpoint's blocks or a persist's cache except
+driver GC + ContextCleaner, whose timing is a JVM-GC accident
+(``spark.cleaner.periodicGC.interval`` defaults to 30 minutes), so in a
+long-lived session storage grows until a GC cycle happens to run.
+``pin_scope()`` bounds that: harness code wraps each query execution
+(plan build + action) in a scope, and on scope exit every pin created
+inside it is unpersisted immediately. Tracking is opt-in — ``pin()``
+outside any scope leaves its blocks to GC, so library consumers that
+hold pinned frames across calls are unaffected. Scopes are
+thread-local: concurrent service threads each release only their own
+query's pins (releasing another in-flight query's local checkpoint
+would kill it — lineage is severed).
 """
 
 from __future__ import annotations
@@ -66,9 +49,6 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
-
-PIN_MODE_KEY = "spark.http_datafusion.pin.mode"  # local | persist | reliable
-PIN_DIR_KEY = "spark.http_datafusion.pin.dir"  # reliable-mode checkpoint dir
 
 _SCOPES = threading.local()
 _log = logging.getLogger(__name__)
@@ -115,11 +95,7 @@ def pin_scope():
     the scope exits, so a failed unpersist (stopped session, lost
     executor) logs a warning naming the exception and raises nothing —
     the remaining releases still run, and the failed pin's blocks fall
-    back to the pre-scope GC + ContextCleaner path. Reliable-mode pins
-    (``df.checkpoint()`` files) are not tracked: their storage is
-    filesystem-managed (``spark.cleaner.referenceTracking.
-    cleanCheckpoints`` reclaims on GC), and deleting files under a
-    frame someone may still hold is not this scope's call."""
+    back to the GC + ContextCleaner path."""
     stack = _scope_stack()
     entries: list = []
     stack.append(entries)
@@ -139,54 +115,18 @@ def pin(
     *,
     storage: StorageLevel | None = None,
     fact_scale: bool = False,
-    eager: bool = False,
 ) -> DataFrame:
     """Materialize ``df`` once so every downstream consumer reads the
     stored frame instead of re-deriving its lineage.
 
-    Default (mode ``local``) is an eager ``localCheckpoint`` — identical
-    behavior to the pre-r16 raw idiom, byte-for-byte the same plans
-    (the adoption was verified scan-audit-histogram-identical). See the
-    module docstring for the cluster modes and the per-site knobs.
-
-    ``eager=True`` guarantees the frame is FULLY materialized before
-    this call returns in EVERY mode. Persist-based paths (mode
-    ``persist``, and ``fact_scale=True`` in any mode) are otherwise
-    lazy — callers that delete the source files right after pinning
-    (the streaming scratch-dir reclaims) would hand back a frame whose
-    first action reads already-deleted inputs. Those read-then-delete
-    sites must pass ``eager=True``.
+    Bounded frames get an eager ``localCheckpoint`` (materialized before
+    this call returns); ``fact_scale=True`` frames get a lazy
+    ``MEMORY_AND_DISK`` persist. See the module docstring.
     """
     if fact_scale:
-        # Lineage-recoverable in every mode: a fact-sized frame must
-        # never sit solely in unreplicated executor storage.
         out = df.persist(storage or StorageLevel.MEMORY_AND_DISK)
-        if eager:
-            out.count()
         _track(_persist_release(out))
         return out
-    mode = df.sparkSession.conf.get(PIN_MODE_KEY, "local")
-    if mode == "local":
-        out = df.localCheckpoint(eager=True, storageLevel=storage)
-        _track(_checkpoint_release(out))
-        return out
-    if mode == "persist":
-        out = df.persist(storage or StorageLevel.MEMORY_AND_DISK_2)
-        if eager:
-            out.count()
-        _track(_persist_release(out))
-        return out
-    if mode == "reliable":
-        spark = df.sparkSession
-        ckdir = spark.conf.get(PIN_DIR_KEY, None)
-        if ckdir:
-            spark.sparkContext.setCheckpointDir(ckdir)
-        elif spark.sparkContext.getCheckpointDir() is None:
-            raise ValueError(
-                f"{PIN_MODE_KEY}=reliable requires a checkpoint directory: "
-                f"set {PIN_DIR_KEY} (or SparkContext.setCheckpointDir)"
-            )
-        return df.checkpoint(eager=True)
-    raise ValueError(
-        f"{PIN_MODE_KEY}={mode!r}: expected 'local', 'persist', or 'reliable'"
-    )
+    out = df.localCheckpoint(eager=True, storageLevel=storage)
+    _track(_checkpoint_release(out))
+    return out

@@ -38,7 +38,7 @@ def fold_dot(A: np.ndarray, B: np.ndarray) -> np.ndarray:
     Tiled over B's rows (output columns) so the accumulator slab stays
     cache-resident across the d fold iterations — the untiled form
     streamed the full (n, m) accumulator through DRAM once PER
-    DIMENSION, which made the r10 bucket-kNN kernel memory-bound (d x
+    DIMENSION, which made the bucket-kNN kernel memory-bound (d x
     the necessary traffic). Tiling partitions independent output
     elements only; each element's accumulation order is unchanged, so
     results stay bit-identical to the sequential fold / SQL oracle."""

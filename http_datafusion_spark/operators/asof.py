@@ -98,14 +98,14 @@ def asof_join(
         .orderBy("_t", "_prio", F.col("_tie").asc_nulls_last())
         .rowsBetween(W.unboundedPreceding, 0)
     )
-    # r18 probe: AQE's byte-based coalescing squeezes this merge window
-    # into a handful of tasks at bench scale (6 x 0.9 s in the task
-    # histogram), so an explicit-width repartition on _k was TRIED —
-    # and measured a net NEGATIVE: sf0.1 latest_order 0.73 -> 0.86 s,
-    # nearest 1.09 -> 1.45 s; sf5 latest_order 2.20 -> 2.52 s, nearest
+    # AQE's byte-based coalescing squeezes this merge window into a
+    # handful of tasks at bench scale (6 x 0.9 s in the task histogram),
+    # and that stands: an explicit-width repartition on _k measured a net
+    # loss on 32 cores — sf0.1 latest_order 0.73 -> 0.86 s, nearest
+    # 1.09 -> 1.45 s; sf5 latest_order 2.20 -> 2.52 s, nearest
     # 3.76 -> 4.38 s (only attribution_window_sweep improved, -37% at
     # sf5). The extra task width costs more scheduling than the window
-    # compute it spreads. REVERTED; AQE's choice stands.
+    # compute it spreads.
     carried = lt.unionByName(rt).select(
         "_side",
         "_t",

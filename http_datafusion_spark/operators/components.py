@@ -92,14 +92,14 @@ def connected_components(
     # Checkpoint the caller's edge list FIRST: `nodes` used to read the
     # raw `edges` frame, so the final centers anti-join re-derived the
     # caller's whole candidate pipeline in every CC consumer's plan
-    # (the r14 scan audit's 9-10x class for CC-based queries). One
+    # (the scan audit's 9-10x class for CC-based queries). One
     # materialization; nodes and the contraction both read it.
-    # DISK_ONLY (r16, the sf25 memory cliff): the edge frames are the
+    # DISK_ONLY (the sf25 memory cliff): the edge frames are the
     # LARGEST pinned data in the registry — on the replicated sf25
     # corpus the LSH candidate graph densifies superlinearly and eager
     # MEMORY_AND_DISK checkpoint blocks competed with aggregation
     # memory in the single local JVM (AGGREGATE_OUT_OF_MEMORY below
-    # 48 g, BASELINE r15). Edge blocks are written once and read
+    # 48 g). Edge blocks are written once and read
     # sequentially per round, so disk storage costs little and frees
     # the unified pool for the contraction's aggs.
     e0 = edges.select(
@@ -110,7 +110,7 @@ def connected_components(
         .union(e0.select(F.col("v").alias("node")))
         .distinct()
     )
-    # NOTE (r15 ADVICE): this second checkpoint doubles the edge list's
+    # NOTE: this second checkpoint doubles the edge list's
     # executor-storage footprint back-to-back with e0 (and ARI-style
     # consumers pay it twice per run). Accepted: e0 must outlive this
     # frame anyway (the final centers anti-join reads nodes from e0,
@@ -367,7 +367,7 @@ def graph_pagerank_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The distinct (customer, supplier) edge list feeds seven branches
     # (counts, both degree tables, three propagation half-steps) —
     # unpinned, each re-derived the orders x lineitem join (10x fact
-    # scans per table, r14 scan audit). One eager checkpoint of the
+    # scans per table). One eager checkpoint of the
     # edge list + the two node-bounded degree tables pins the plan to
     # one scan of each fact (the _lpa_label_frame pattern).
     e = (
@@ -505,8 +505,8 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = load_tables(spark, sf_dir, "orders", "lineitem")
     # Edge list / degrees / capped edges each feed 2-3 branches;
-    # unpinned, the orders x lineitem join re-derived 6x per fact (r14
-    # scan audit). Checkpoints pin one scan of each fact
+    # unpinned, the orders x lineitem join re-derived 6x per fact (scan
+    # audit). Checkpoints pin one scan of each fact
     # (graph_pagerank_suppliers pattern).
     e = (
         t["orders"]
@@ -633,7 +633,7 @@ def golden_record_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_tables(spark, sf_dir, "documents")["documents"]
     # members (one row per clustered doc) feeds the lang-vote and the
     # per-field survivorship branches; unpinned, each re-derived the
-    # pair pipeline + documents join (10x docs scans, r14 scan audit).
+    # pair pipeline + documents join (10x docs scans).
     members = (
         comp.join(d, comp["node"] == d["doc_id"])
         .select("component", "doc_id", "lang", "source", "n_chars")
@@ -1298,7 +1298,7 @@ _Q6D = "CAST(round({x}, 6) AS DECIMAL(18,6))"
 )
 def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The pair list feeds the doubled edge union AND the two degree
-    # join-backs, and deg feeds three branches — unpinned, the r14 scan
+    # join-backs, and deg feeds three branches — unpinned, the scan
     # audit counted 14 re-derivations of the MinHash pipeline. Eager
     # checkpoints on both (LSH-pair-bounded / node-bounded) pin the
     # plan to one candidate-pipeline run (graph_modularity_score
@@ -1384,12 +1384,12 @@ PL_DMIN = 2  # tail cutoff: fit nodes with degree >= this
 def graph_degree_powerlaw(spark: SparkSession, sf_dir: str) -> DataFrame:
     # LSH-bounded candidate-pair list (the LPA edge-pin precedent):
     # the 2-branch endpoint union re-derived the WHOLE minhash pipeline
-    # per branch unpinned (4 executed documents scans, r16 4x-class
-    # triage); pinned, the pipeline runs once and both branches read
+    # per branch unpinned (4 executed documents scans); pinned, the
+    # pipeline runs once and both branches read
     # the stored pairs. fact_scale: the pair list grows with the corpus
     # (worst-case superlinear in skewed band buckets), so it gets the
     # lineage-recoverable persist, never an unreplicated local
-    # checkpoint of a corpus-growing frame (r17 ADVICE).
+    # checkpoint of a corpus-growing frame.
     pairs = dedup_minhash_pairs(spark, sf_dir).transform(pin, fact_scale=True)
     edges = pairs.select(F.col("doc_a").alias("u")).unionAll(
         pairs.select(F.col("doc_b").alias("u"))

@@ -1,4 +1,4 @@
-"""Corpus-curation operators, round 4: leakage-safe splitting,
+"""Corpus-curation operators: leakage-safe splitting,
 sketch-based frequency estimation, blocked fuzzy matching, adaptive
 quality filtering, deletion propagation, statistics profiling, and
 winnowing fingerprints.
@@ -442,7 +442,7 @@ def table_stats_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     # ONE wide agg row feeds a union branch per profiled column; without
     # the pin each branch re-derived the full lineitem scan (4 executed
-    # scans, zero exchange reuse — measured r16, 4x-class triage).
+    # scans, zero exchange reuse, measured).
     s = li.agg(*aggs).transform(pin)
     per_col = [
         s.select(
@@ -607,8 +607,8 @@ def kmv_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_tables(spark, sf_dir, "documents")["documents"].select("doc_id", "source")
     src_sh = sh.join(d, "doc_id").select("source", "shingle").distinct()
     # Four consumers (counts + k-min pass, per-source and merged) each
-    # re-derived the shingle explode + join (8x documents scans, r14
-    # scan audit); checkpoint the hashed distinct-shingle frame once —
+    # re-derived the shingle explode + join (8x documents scans, scan
+    # audit); checkpoint the hashed distinct-shingle frame once —
     # it is the sketch input both sketches legitimately share.
     hashed = src_sh.select(
         "source", "shingle", (md5_int(F.col("shingle")) / F.lit(_H_NORM)).alias("h")
@@ -707,7 +707,7 @@ def histogram_equi_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("_"),
         F.col("l_linenumber").cast("string"),
     )
-    # No localCheckpoint (VERDICT r7 task 5): the hash-gate sample is
+    # No localCheckpoint: the hash-gate sample is
     # deterministic, so the count pass and bucketed_global_rank's two
     # passes re-derive the identical row set from the parquet scan —
     # same rationale as weighted_median_price below. Materializing a
@@ -782,12 +782,12 @@ def ngram_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    # One text exchange feeds BOTH token streams (r18 partitioned_docs:
-    # the bigram window needed the doc_id exchange anyway; carrying raw
+    # One text exchange feeds BOTH token streams (partitioned_docs:
+    # the bigram window needs the doc_id exchange anyway; carrying raw
     # text across it and exploding after runs tokenize at full width).
-    # Measured sf5 13.12 -> 2.68 s; sf0.1 1.05 -> 1.65 s (32-task floor
-    # cost at the smallest SF — the sax-motifs fixed-cost-vs-linear-win
-    # trade).
+    # Measured on 32 cores: sf5 13.12 -> 2.68 s; sf0.1 1.05 -> 1.65 s
+    # (32-task floor cost at the smallest SF — the sax-motifs
+    # fixed-cost-vs-linear-win trade).
     dp = partitioned_docs(d)
     dw = dp.select("doc_id", F.posexplode(whitespace_tokens(F.col("text"))).alias("pos", "w1"))
     wdoc = W.partitionBy("doc_id").orderBy("pos")
@@ -797,23 +797,19 @@ def ngram_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("w1", "w2")
     )
     uni = dp.select(F.explode(whitespace_tokens(F.col("text"))).alias("word"))
-    # Two passes total (was 5 — r16 derive-don't-rescan triage): the
+    # Two passes total (was 5): the
     # unigram/bigram COUNT TABLES are pinned, and the corpus totals
     # n1/n2 are derived as sum(c) over them (1-row broadcast aggs, the
     # quality_drift_psi pattern) instead of separate uni.count() /
     # bi.count() driver actions that re-exploded every document's
     # token stream / re-ran the lead-window bigram pass.
-    # r17 ADVICE asked: fact_scale persist for bc (distinct bigrams are
-    # near-linear in NATURAL text), or a documented size bound. The
-    # persist was TRIED and measured SLOWER at every scale (sf0.1
-    # 0.82 -> 1.03 s +26%, sf5 11.7 -> 17.1 s +46%: the columnar cache
-    # build of the count table costs more than it saves). Measured size
-    # bound instead: this corpus's vocabulary is CLOSED — 931 distinct
-    # bigrams at BOTH sf0.1 and sf5 (replication adds no new types), so
-    # the bounded-frame pin is sound here; and at cluster scale the
-    # deployment's pin.mode=persist/reliable replicates every pin
-    # regardless, so the unreplicated-local-checkpoint exposure is a
-    # local-mode-only artifact.
+    # bc gets the bounded-frame pin, not a fact_scale persist (distinct
+    # bigrams are near-linear in NATURAL text): the persist measured
+    # SLOWER at every scale (sf0.1 0.82 -> 1.03 s +26%, sf5 11.7 ->
+    # 17.1 s +46%: the columnar cache build of the count table costs
+    # more than it saves). Measured size bound instead: this corpus's
+    # vocabulary is CLOSED — 931 distinct bigrams at BOTH sf0.1 and sf5
+    # (replication adds no new types), so the bounded-frame pin is sound.
     uc = uni.groupBy("word").agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
     ).transform(pin)
@@ -907,7 +903,7 @@ def dedup_minhash_estimator_calibration(spark: SparkSession, sf_dir: str) -> Dat
     from http_datafusion_spark.operators.dedup import shingled_docs
 
     # cand feeds the verify join AND the scoring join; the shingle
-    # frame feeds sizes/a/b — unpinned, the r14 scan audit counted 8
+    # frame feeds sizes/a/b — unpinned, the scan audit counted 8
     # documents re-derivations. Checkpoint the LSH-bounded candidate
     # list, and restrict the corpus shingle explode to candidate docs
     # before checkpointing (dedup_simhash_recall_audit pattern):
@@ -1005,7 +1001,7 @@ def minhash_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Candidate list + candidate-restricted shingle frame, both
     # checkpointed (dedup_minhash_estimator_calibration pattern; 6x
-    # documents scans unpinned, r14 scan audit). Value-identical:
+    # documents scans unpinned). Value-identical:
     # sizes beyond candidate docs were only ever dropped by the
     # za/zb joins.
     cand = (
@@ -1369,7 +1365,7 @@ def embedding_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame
     def q6(c):
         return F.round(c, 6).cast("decimal(28,6)")
 
-    # Unrolled-iteration-without-checkpoint was the r14 scan audit's
+    # Unrolled-iteration-without-checkpoint was the scan audit's
     # 12x-embeddings-scans finding: s1/u2/s2 each re-derived the
     # posexplode lineage, and the chained iterates compounded it. The
     # lineage cuts below pin the physical plan to ONE embeddings scan
@@ -1593,9 +1589,10 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    # r18 partitioned_docs: one raw-text exchange feeds the bigram
+    # partitioned_docs: one raw-text exchange feeds the bigram
     # window AND the unigram stream; tokenize runs at full width.
-    # Measured sf5 12.14 -> 4.83 s; sf0.1 1.18 -> 1.51 s (floor cost).
+    # Measured on 32 cores: sf5 12.14 -> 4.83 s; sf0.1 1.18 -> 1.51 s
+    # (floor cost).
     dp = partitioned_docs(d)
     dw = dp.select("doc_id", F.posexplode(whitespace_tokens(F.col("text"))).alias("pos", "w1"))
     wdoc = W.partitionBy("doc_id").orderBy("pos")
@@ -1926,13 +1923,12 @@ NORM_MAD_K = 3.0
 def embedding_norm_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_tables(spark, sf_dir, "embeddings")["embeddings"]
     x = F.col("x").cast("double")
-    # r18 spot-audit probe: the norm frame is re-derived by the med/mad/
-    # final consumers (4 full-width embedding scans in the plan), so a
-    # fact_scale persist of the 3-column norm frame was TRIED — and
-    # measured SLOWER at BOTH scales (sf0.1 0.77 -> 1.20 s, sf5 9.9 ->
-    # 11.5 s): the codegen'd explode+decimal-agg recompute is cheaper
-    # than the columnar cache build+read. 3-pass MAD floor disposition
-    # CONFIRMED by measurement.
+    # The norm frame is re-derived by the med/mad/final consumers (4
+    # full-width embedding scans in the plan) and stays unpinned: a
+    # fact_scale persist of the 3-column norm frame measured SLOWER at
+    # BOTH scales on 32 cores (sf0.1 0.77 -> 1.20 s, sf5 9.9 -> 11.5 s):
+    # the codegen'd explode+decimal-agg recompute is cheaper than the
+    # columnar cache build+read.
     norms = (
         spread_docs(e.select("vec_id", "label", "embedding"), "vec_id")
         .select("vec_id", "label", F.explode("embedding").alias("x"))
@@ -2333,13 +2329,13 @@ def embedding_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_tables(spark, sf_dir, "documents")["documents"].select("doc_id", "source")
-    # LSH-bounded candidate-pair list pinned (r16 4x-class triage):
+    # LSH-bounded candidate-pair list pinned:
     # the band self-join inside the pipeline derives the signature
     # lineage twice; pinning the pair output here keeps this plan's
     # own documents scans to the two pruned (doc_id, source) source
     # lookups instead of stacking the pipeline's scans on top.
     # fact_scale: corpus-growing pair list -> lineage-recoverable
-    # persist, matching graph_degree_powerlaw (r17 ADVICE).
+    # persist, matching graph_degree_powerlaw.
     pairs = dedup_minhash_pairs(spark, sf_dir).transform(pin, fact_scale=True)
     sa = d.select(F.col("doc_id").alias("doc_a"), F.col("source").alias("src_a"))
     sb = d.select(F.col("doc_id").alias("doc_b"), F.col("source").alias("src_b"))
@@ -2632,8 +2628,8 @@ def orders_cohort_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     activity = o.select("o_custkey", idx)
     # customer-grain first-order frame (the RFM pin precedent): the
     # cohort-size agg and the activity join both consumed it; unpinned
-    # each re-derived the orders scan (3 executed scans, r16 3x-class
-    # triage). The 2 remaining passes are the cohort shape's floor.
+    # each re-derived the orders scan (3 executed scans). The 2
+    # remaining passes are the cohort shape's floor.
     firsts = activity.groupBy("o_custkey").agg(
         F.min("idx").alias("first_idx")
     ).transform(pin)
@@ -2917,7 +2913,7 @@ def segment_chisquare(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("c_mktsegment").alias("seg"), F.col("o_orderpriority").alias("pri"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("o"))
         # seg x pri cells (~25 rows) feeding four branches; unpinned,
-        # each re-derived the orders scan (6x, r14 scan audit).
+        # each re-derived the orders scan (6x).
         .transform(pin)
     )
     tot = obs.agg(F.sum("o").cast("bigint").alias("t"))
@@ -3384,10 +3380,10 @@ BOT_TYPES_REF = 5  # alphabet size for max-entropy normalization
 def events_bot_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
-    # r18 sf5 probe (r17 carry): fact_scale persist of the shared
-    # 4-column events projection feeding the gap window + type counts —
-    # sf5 2.274 -> 2.183 s (-4%, noise), sf0.1 0.515 -> 0.771 s (+50%).
-    # REVERTED: two pushed narrow scans beat cache build+read at every
+    # The shared 4-column events projection feeding the gap window +
+    # type counts stays unpinned: a fact_scale persist measured sf5
+    # 2.274 -> 2.183 s (-4%, noise), sf0.1 0.515 -> 0.771 s (+50%) on 32
+    # cores — two pushed narrow scans beat cache build+read at every
     # measured scale.
     e = load_tables(spark, sf_dir, "events")["events"]
     wseq = W.partitionBy("user_id").orderBy("ts", "event_id")
@@ -3971,7 +3967,7 @@ ATTR_SWEEP_WINDOWS = (300, 900, 1800, 3600)  # candidate windows, seconds
 def attribution_window_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_tables(spark, sf_dir, "events")["events"]
     # clicks feed the as-of match and the denominator count. A
-    # fact_scale persist of the click frame was TRIED (r17) and
+    # fact_scale persist of the click frame was TRIED and
     # A/B-measured SLOWER at sf0.1 and sf1 (1.41->1.63 s sf1): both
     # re-scans are pushed event_type filters over 3 pruned columns —
     # cheaper than building and reading the cache. Measured-negative
@@ -4090,7 +4086,7 @@ def part_price_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # greatest(..., 0): ss is built from 4dp-quantized squares while s*s/n
     # is unquantized, so a (near-)constant-price part can drive the numerator
     # slightly NEGATIVE -> sqrt = NaN, and the top-k order would then hinge on
-    # both engines sorting NaN identically. Clamp on both sides (ADVICE r6).
+    # both engines sorting NaN identically. Clamp on both sides.
     cv = F.round(
         F.sqrt(
             F.greatest(
@@ -4149,11 +4145,10 @@ def events_transition_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
     e = load_tables(spark, sf_dir, "events")["events"]
-    # r18 spot-audit probe: the carried "optional micro-pin" of this
-    # |types|-bounded distinct was TRIED — and measured SLOWER at both
-    # scales (sf0.1 0.41 -> 0.85 s, sf5 1.12 -> 1.25 s): the eager pin
-    # job costs more than the two pushed ONE-COLUMN events scans it
-    # removes. Disposition finalized: keep the re-scan.
+    # This |types|-bounded distinct stays unpinned: a pin measured
+    # SLOWER at both scales on 32 cores (sf0.1 0.41 -> 0.85 s, sf5
+    # 1.12 -> 1.25 s) — the eager pin job costs more than the two
+    # pushed ONE-COLUMN events scans it removes.
     types = e.select(F.col("event_type").alias("t")).distinct()
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     observed = (
@@ -4269,7 +4264,7 @@ def parts_abc_xyz(spark: SparkSession, sf_dir: str) -> DataFrame:
         # part-grain profile: the two-phase global rank (bucket sketch
         # + per-bucket window + offsets) and the total-revenue agg each
         # re-derived the lineitem monthly aggregation unpinned
-        # (3 executed scans, r16 3x-class triage). One pass now.
+        # (3 executed scans). One pass now.
         .transform(pin)
     )
     # Global revenue cumsum WITHOUT an Exchange SinglePartition: the
@@ -4303,7 +4298,7 @@ def parts_abc_xyz(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # greatest(..., 0): quantized ssq minus unquantized mean^2 can go
     # slightly negative for constant-demand parts -> NaN (see
-    # part_price_dispersion; ADVICE r6). Clamp on both sides.
+    # part_price_dispersion). Clamp on both sides.
     cv = (
         F.sqrt(
             F.greatest(
@@ -4467,9 +4462,9 @@ def text_heldout_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    # r18 partitioned_docs: text crosses the window's exchange raw;
-    # tokenize runs post-exchange at full width. Measured sf5
-    # 6.89 -> 3.35 s; sf0.1 0.98 -> 1.62 s (floor cost).
+    # partitioned_docs: text crosses the window's exchange raw;
+    # tokenize runs post-exchange at full width. Measured on 32 cores:
+    # sf5 6.89 -> 3.35 s; sf0.1 0.98 -> 1.62 s (floor cost).
     dw = partitioned_docs(d, "source").select(
         "doc_id", "source", F.posexplode(whitespace_tokens(F.col("text"))).alias("pos", "w1")
     )
@@ -4499,8 +4494,7 @@ def text_heldout_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
         6,
     ).cast("decimal(18,6)")
     # train_bi/train_uc are train-corpus n-gram count tables — they grow
-    # with the data (round-6 re-introduced the forced-broadcast
-    # anti-pattern here; round 7 removes it). Plain left joins: AQE
+    # with the data, so no forced broadcast. Plain left joins: AQE
     # broadcasts at small scale, shuffle-joins co-keyed at 100 TB.
     scored = (
         ev.join(train_bi, ["w1", "w2"], "left")
@@ -4563,8 +4557,8 @@ def weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     # No localCheckpoint: the parquet source is deterministic, so
     # bucketed_global_rank's two passes re-scan it exactly. Eagerly
     # materializing a fact-table-sized 3-column projection to executor
-    # storage undercuts the no-materialization story at 100 TB
-    # (ADVICE r6); a re-scan is a cheap columnar read.
+    # storage undercuts the no-materialization story at 100 TB; a
+    # re-scan is a cheap columnar read.
     lines = li.select(
         F.col("l_extendedprice").alias("v"),
         (F.col("l_orderkey") * 8 + F.col("l_linenumber")).alias("tb"),
@@ -4770,9 +4764,10 @@ def text_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    # r18 partitioned_docs: one raw-text exchange feeds the bigram
+    # partitioned_docs: one raw-text exchange feeds the bigram
     # window AND the unigram stream; tokenize runs at full width.
-    # Measured sf5 9.83 -> 5.00 s; sf0.1 1.13 -> 2.21 s (floor cost).
+    # Measured on 32 cores: sf5 9.83 -> 5.00 s; sf0.1 1.13 -> 2.21 s
+    # (floor cost).
     dp = partitioned_docs(d, "source")
     dw = dp.select(
         "doc_id", "source", F.posexplode(whitespace_tokens(F.col("text"))).alias("pos", "w1")
@@ -4790,10 +4785,10 @@ def text_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # runtime — an eager localCheckpoint here was tried and MEASURED
     # SLOWER at sf5 (12.1 -> 18.5 s: it serializes the materialization
     # and pays the store/read where the reused shuffle was free).
-    # r18 re-probe with the r17 pattern (lazy fact_scale persist, not
-    # the eager store): sf5 15.3 -> 14.5 s (-6%) but sf0.1 1.15 ->
-    # 1.73 s (+50%) — the columnar cache build of the bigram table
-    # still loses to exchange reuse; REVERTED, disposition final.
+    # A lazy fact_scale persist instead of the eager store measured
+    # sf5 15.3 -> 14.5 s (-6%) but sf0.1 1.15 -> 1.73 s (+50%) on 32
+    # cores — the columnar cache build of the bigram table still loses
+    # to exchange reuse.
     bc = bi.groupBy("w1", "w2").agg(F.count(F.lit(1)).cast("bigint").alias("cb"))
     fw = bc.groupBy("w1").agg(F.count(F.lit(1)).cast("bigint").alias("n1f"))
     pcn = bc.groupBy("w2").agg(F.count(F.lit(1)).cast("bigint").alias("n1p"))
@@ -5382,8 +5377,8 @@ def quantile_sketch_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # CLOSED FORM (block b of a shard covers local ranks
     # ceil(b*n_s/K)+1 .. ceil((b+1)*n_s/K)) — no per-block aggregate
     # at all, just a filter to one row per block. Mid-rank centers the
-    # estimate inside its block: the r13 first cut used block MINIMA
-    # and every target's true rank undershot one-sidedly; same provable
+    # estimate inside its block: block MINIMA make every target's true
+    # rank undershoot one-sidedly; same provable
     # bound, ~half the observed error.
     blk = F.floor((F.col("rn") - 1) * QS_K / F.col("n_s")).cast("bigint")
     lo = F.floor((blk * F.col("n_s") + QS_K - 1) / QS_K).cast("bigint")
@@ -5522,7 +5517,7 @@ _KM_LN_FACTOR = (
 )
 def customer_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_tables(spark, sf_dir, "orders")["orders"]
-    # ONE orders scan (was 2, r14 verdict #6): the corpus horizon is
+    # ONE orders scan (was 2): the corpus horizon is
     # the max of the per-customer maxes, so it folds off the
     # checkpointed customer aggregate instead of a second fact scan.
     cust = o.groupBy("o_custkey").agg(
@@ -5554,7 +5549,7 @@ def customer_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     # possible at the maximal month, since n_risk counts all m' >= m)
     # would be ln(0): DuckDB raises out-of-range while Spark's F.log
     # returns NULL that the window sum silently SKIPS, leaving survival
-    # at the prior level instead of 0 (ADVICE r13). Both engines take
+    # at the prior level instead of 0. Both engines take
     # the same finite sentinel instead; exp(-1e6 + bounded terms)
     # underflows to exactly 0.0, so survival lands at 0 on both.
     ln_f = F.round(
@@ -5649,7 +5644,7 @@ def _fh_bucket_sql(k: int) -> str:
 def feature_hash_collision_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_tables(spark, sf_dir, "documents")["documents"]
     wdoc = Window.partitionBy("doc_id").orderBy("pos")
-    # r18 partitioned_docs: text crosses the window's exchange raw;
+    # partitioned_docs: text crosses the window's exchange raw;
     # tokenize runs post-exchange at full width (sf5 7.01 -> 1.69 s).
     toks = (
         partitioned_docs(d)

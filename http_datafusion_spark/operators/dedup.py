@@ -48,7 +48,7 @@ N_BANDS = 4  # bands of 2 -> candidate recall ~J^2 per band
 # Word-n-gram width of shingles_of / _SHINGLES_SQL. Consumers that
 # reason "a doc emits >=1 shingle iff it has >= SHINGLE_WIDTH words"
 # (decontaminate_threshold_sweep's denominator) must derive from this
-# constant, not a literal 3 (r17 ADVICE).
+# constant, not a literal 3.
 SHINGLE_WIDTH = 3
 
 _WORDS_SQL = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
@@ -77,11 +77,11 @@ def shingles_of(docs: DataFrame) -> DataFrame:
     hash-partitioned on doc_id, so a following groupBy(doc_id) adds NO
     exchange.
 
-    The doc_id repartition happens BEFORE the explode (r18, guide
-    §2.3/§8 "shuffle the payload once, small rows decide"): the window
-    needs hashpartitioning(doc_id) either way, so the exchange count is
-    unchanged, but exploding first made the ONE exchange carry the
-    exploded token stream (sf5: 154 MB, vs 35 MB of raw text) AND ran
+    The doc_id repartition happens BEFORE the explode ("shuffle the
+    payload once, small rows decide"): the window needs
+    hashpartitioning(doc_id) either way, so the exchange count is
+    unchanged, but exploding first makes the ONE exchange carry the
+    exploded token stream (sf5: 154 MB, vs 35 MB of raw text) AND runs
     the whole tokenize+explode inside the scan task — a single task
     when the input is one parquet file (6.6 s serial of a 16 s sf5
     wall, task-histogram-measured). Repartitioning the (doc_id, text)
@@ -327,8 +327,8 @@ def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # with), so the band self-join verifies agreement inline and the
     # two signature re-joins of the naive plan disappear: one band
     # shuffle + one distinct instead of three shuffles. Cost is a wider
-    # band row (k ints). Driver-bench medians at sf0.1: 1.302 s (r5,
-    # naive) -> 1.221 s (r6, this plan); isolated same-session A/Bs
+    # band row (k ints). Full-suite bench medians at sf0.1: 1.302 s
+    # (naive) -> 1.221 s (this plan); isolated same-session A/Bs
     # showed larger gains (1.02 -> 0.89) but lack full-suite JVM warmup
     # context. At sf1 the rewrite measured -51%. At cluster scale it
     # trades two candidate-sized shuffles for k*8 bytes/row on the band
@@ -588,7 +588,7 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep docs with no dominating neighbor via one anti-join."""
     d = load_tables(spark, sf_dir, "documents")["documents"]
     # The pair list fans into both edge directions (2x the MinHash
-    # pipeline unpinned — 7x documents scans total, r14 scan audit),
+    # pipeline unpinned — 7x documents scans total),
     # and the dominance check reads (doc_id, n_chars) on both sides;
     # checkpoint the LSH-bounded pairs and the two-column length frame
     # so the final plan scans documents once (the survivor projection).
@@ -861,23 +861,22 @@ def embedding_pairs_ivf(
 
     Stage 1 (candidates): every vector is assigned to its ``n_probe``
     nearest of the K fixed IVF centroids (operators/similarity.py) in
-    one shuffle-free Arrow pass. Stage 2 (verification, REWRITTEN r16):
+    one shuffle-free Arrow pass. Stage 2 (verification):
     within-bucket pairs are scored by the fold-exact numpy tile kernel
     (functions/veclib.py) — each bucket's members are hash-split into
     ``IVF_SUBBLOCKS`` sub-blocks and every (bucket, bi, bj) tile is an
     independent ``applyInPandas`` task, so per-task memory is
     O(chunk x sub-block) at any bucket size and parallelism is
-    K x nb(nb+1)/2 tasks, not K. The r15 shape hydrated candidate
+    K x nb(nb+1)/2 tasks, not K. Hydrating candidate
     PAIRS through two vec_id joins and scored them with the
     interpreted JVM fold (~17-20x slower than the vectorized kernel,
-    BASELINE.md) — measured 363 s at sf1 for this function's main
-    consumer vs ~12 s after the rewrite, IDENTICAL output (same
+    BASELINE.md) measured 363 s at sf1 for this function's main
+    consumer vs ~12 s with the tile kernel, IDENTICAL output (same
     candidate set, same left-fold accumulation, same 4dp rounding; the
     SQL oracle is untouched).
 
     Why the quantizer stays at K fixed centroids rather than a
-    scale-adaptive sample-trained k-means (the r15 verdict's
-    hypothesis, investigated and MEASURED r16, BASELINE.md): every
+    scale-adaptive sample-trained k-means (measured, BASELINE.md): every
     true pair of this corpus lies at cosine 0.40-0.51 — the noise
     floor — so recall collapses under any sub-cluster partitioning
     (K=sqrt(N) hash-seeded: 0.76; 5-iter Lloyd-trained: 0.88; both
@@ -1084,7 +1083,7 @@ def dedup_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
     w = W.partitionBy("doc_id").orderBy("pos")
-    # r18 (the shingles_of fix): raw text across the window's exchange,
+    # The shingles_of pattern: raw text across the window's exchange,
     # tokenize post-exchange at full width; explicit N so AQE can't
     # coalesce the small text exchange to one partition. Measured sf5
     # 15.49 -> 4.97 s; sf0.1 1.18 -> 0.94 s.
@@ -1337,7 +1336,7 @@ def dedup_semantic_threshold_calibration(spark: SparkSession, sf_dir: str) -> Da
     e = load_tables(spark, sf_dir, "embeddings")["embeddings"]
     # pred is sim-bounded but carries the whole IVF pipeline; the
     # scoring join AND the n_pred count each re-derived it (9x
-    # embeddings scans, r14 scan audit) — checkpoint the pair list.
+    # embeddings scans) — checkpoint the pair list.
     pred = (
         embedding_pairs_ivf(spark, sf_dir, e, threshold=CALIB_DEPLOY_T)
         .select("vec_a", "vec_b", F.lit(1).alias("hit"))
@@ -1446,7 +1445,7 @@ def dedup_cluster_ari(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The contingency table (one row per (pred, truth) cluster pair)
     # feeds three branches (both marginals + the agreement sums);
     # unpinned, each re-derived the signature + canon pipelines (6x
-    # documents scans, r14 scan audit) — checkpoint the cells.
+    # documents scans) — checkpoint the cells.
     cont = (
         pred.join(truth, "doc_id")
         .groupBy("pa", "pb")
@@ -1584,7 +1583,7 @@ def dedup_lexical_semantic_ari(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # contingency cells feed both marginals + the agreement sums —
-    # checkpoint once (dedup_cluster_ari r15 pattern).
+    # checkpoint once (the dedup_cluster_ari pattern).
     cont = (
         assigned.groupBy("la", "lb")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
@@ -1632,9 +1631,8 @@ def _pow_tree_sql(expr: str, n: int) -> str:
     tree the Spark side builds, so both engines run the identical
     sequence of exactly-rounded IEEE multiplies (no pow(), whose libm
     rounding may differ across engines). Odd n multiplies the squared
-    half by the base (ADVICE r8: the bare n//2 recursion silently
-    dropped the odd bit, so x^3 evaluated as x^2 — harmless for the
-    current power-of-two grid, wrong for any (3,4)-style split)."""
+    half by the base (a bare n//2 recursion silently drops the odd bit,
+    so x^3 would evaluate as x^2 — wrong for any (3,4)-style split)."""
     if n == 1:
         return expr
     h = _pow_tree_sql(expr, n // 2)
@@ -1657,7 +1655,7 @@ def _band_tuning_oracle() -> str:
     for b, r in BAND_TUNING_GRID:
         s_half = round((1.0 - 0.5 ** (1.0 / b)) ** (1.0 / r), 6)
         # validate EVERY grid entry's 50%-threshold, not just the last
-        # one via the leaked loop variable (ADVICE r8)
+        # one via the leaked loop variable
         assert math.isfinite(s_half)
         sr = _pow_tree_sql("s", r)
         qb = _pow_tree_sql(f"(1.0 - {sr})", b)
@@ -1705,9 +1703,9 @@ def dedup_minhash_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("est_jaccard").alias("s"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     )
-    # ONE candidate-generation pass (VERDICT r8 task 4): the old shape
-    # unioned one aggregation branch per grid row, each re-deriving the
-    # full LSH candidate join (4x the dominant step). Instead the
+    # ONE candidate-generation pass: one aggregation branch per grid row
+    # would each re-derive the full LSH candidate join (4x the dominant
+    # step). Instead the
     # <= k/2+1 row histogram cross-joins the broadcast 4-row grid and a
     # literal CASE selects each plan's S-curve power tree — identical
     # per-branch IEEE expressions, selected not recomputed — then one
@@ -1811,7 +1809,7 @@ def dedup_substring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
     w = W.partitionBy("doc_id").orderBy("pos")
-    # r18 (the shingles_of fix): raw text across the window's exchange,
+    # The shingles_of pattern: raw text across the window's exchange,
     # tokenize post-exchange at full width (sf5 55.4 -> 54.3 s — the
     # gram self-join dominates here; sf0.1 1.55 -> 1.40 s).
     _n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -1838,11 +1836,11 @@ def dedup_substring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # The df-gated gram table feeds both sides of the seed self-join;
     # unpinned, a and b each re-derived grams + keyed (8x documents
-    # scans, r14 scan audit). Pinning gk fixes the plan at TWO corpus
+    # scans). Pinning gk fixes the plan at TWO corpus
     # scans — the induce-then-apply floor (keyed needs the df histogram
     # before gk can filter) — while materializing only the df-in-[2,cap]
     # grams, never the full gram stream (which is ~5x corpus bytes and
-    # would be the wrong trade at 100 TB). fact_scale (r18): gk is
+    # would be the wrong trade at 100 TB). fact_scale: gk is
     # CORPUS-LINEAR, and the checkpoint's size-blind stats let the
     # planner BROADCAST it into the seed self-join at every scale — at
     # sf5 a ~12M-row hash relation in every task's heap (GCLocker
@@ -2004,7 +2002,7 @@ def dedup_simhash_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pairs, Henzinger-style. The union is LSH-banding-bounded, so an
     # eager checkpoint materializes it ONCE for its three consumers
     # (totals, shared, scored) — the repartition it replaces only
-    # shared an Exchange per execution, and the r14 scan audit showed
+    # shared an Exchange per execution, and the scan audit showed
     # Catalyst still re-derived the two candidate pipelines 16x.
     u = u.transform(pin)
     totals = u.agg(

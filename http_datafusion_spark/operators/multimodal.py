@@ -775,7 +775,7 @@ def multimodal_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # One hash row (or two, for the perturbed copy) per even doc; four
     # downstream consumers re-derived the mapInPandas decode 6x
-    # unpinned (r14 scan audit) — checkpoint the per-image hash table.
+    # unpinned — checkpoint the per-image hash table.
     hashes = d.select("doc_id", "n_chars").mapInPandas(
         batches, schema="img_id bigint, h_hi bigint, h_lo bigint"
     ).transform(pin)
@@ -795,7 +795,7 @@ def multimodal_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sel stays UNcheckpointed: the expensive decode is already pinned
     # by the hashes checkpoint (bands/kept re-derive only cheap RDD
     # reads), and the stop-band cap filter must stay visible in the
-    # final plan for the r8 quadratic pin (test_r8_operators_plan_
+    # final plan for the quadratic guard (test_r8_operators_plan_
     # invariants' `bn <= 64` regex).
     sel = bands.join(kept, ["j", "v"])
     a, b = sel.alias("a"), sel.alias("b")

@@ -8,7 +8,7 @@
   shuffle at all.
 - **deterministic sampling**: hash-gated per-source sampling. NEVER
   ``rand()`` in a pipeline that must be re-runnable: the md5-derived
-  gate gives every row a stable verdict, so a resumed/partial job
+  gate gives every row a stable keep/drop decision, so a resumed/partial job
   samples the same rows, at any parallelism (functions/hashing.py is
   reproduced bit-for-bit by the DuckDB oracle).
 - **quantization**: per-vector symmetric int8 scalar quantization of
@@ -189,7 +189,7 @@ def sample_weighted_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wall = W.orderBy(F.lit(1)).rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
     # n <= k populations keep EVERY row with est_weight = w (tau = 0 —
-    # standard DLT priority sampling; r14 ADVICE): the k+1-limit frame
+    # standard DLT priority sampling): the k+1-limit frame
     # then holds the whole population and no threshold exists. prio is
     # always > 0 (w >= 1, u in (0,1]), so the tau filter passes all.
     tau = F.when(
@@ -536,7 +536,7 @@ def mix_sources_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_tables(spark, sf_dir, "documents")["documents"]
     # |sources| count table: the min agg and the rate join both
     # consumed it; unpinned each re-derived the documents scan
-    # (3 executed scans, r16 3x-class triage). The remaining 2 passes
+    # (3 executed scans). The remaining 2 passes
     # (count pass + gate-filter pass) are the shape's floor.
     counts = d.groupBy("source").agg(F.count(F.lit(1)).alias("n")).transform(pin)
     min_n = counts.agg(F.min("n").alias("mn"))
@@ -634,7 +634,7 @@ def pq_codes(spark: SparkSession, e: DataFrame) -> DataFrame:
     )
     from http_datafusion_spark.operators.text import spread_docs
 
-    # spread (r18): the 256-fold ADC distance grid per vector ran inside
+    # spread: the 256-fold ADC distance grid per vector would run inside
     # the single-row-group scan task at bench SFs; no-op on wide layouts.
     return (
         spread_docs(e.select("vec_id", emb.alias("x")), "vec_id")
@@ -1163,7 +1163,7 @@ def embedding_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 N_SHARDS = 16
 SHUFFLE_EPOCH_SEED = "ep1"
 # Sub-buckets per shard for the two-phase within-shard rank (window
-# guard r9): md5_int is <= 60 bits, so hb = h >> 54 yields 64 buckets
+# guard): md5_int is <= 60 bits, so hb = h >> 54 yields 64 buckets
 # that are ORDER-ALIGNED with h (hb monotone in h; equal h -> equal
 # hb), letting the within-shard position telescope from per-(shard,hb)
 # counts + a bucket-local row_number. Sort parallelism becomes
@@ -1617,7 +1617,7 @@ def quality_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = d.select("source", F.floor(F.col("n_chars") / PSI_BIN_W).cast("bigint").alias("bin"))
     # (source, bin)-bounded cell table: pin it and derive BOTH marginals
     # AND the grand total from the cells instead of re-scanning the
-    # corpus per consumer (4 documents scans, r16 4x-class triage) —
+    # corpus per consumer (4 documents scans) —
     # the plan is one corpus pass.
     sb = b.groupBy("source", "bin").agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
@@ -2455,9 +2455,8 @@ def decontaminate_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame
         .groupBy("doc_id")
         .agg(F.count_distinct("shingle").cast("bigint").alias("n_shared"))
     )
-    # Corpus-doc denominator WITHOUT a third gram-stream pass (r16
-    # sweep-grid triage): a doc appears in the shingle stream iff it
-    # has >= SHINGLE_WIDTH words (shingles_of's lead-window null
+    # Corpus-doc denominator WITHOUT a third gram-stream pass: a doc
+    # appears in the shingle stream iff it has >= SHINGLE_WIDTH words (shingles_of's lead-window null
     # filter), so countDistinct(doc_id) over the exploded corpus stream
     # equals the distinct non-bench >=SHINGLE_WIDTH-word doc count read
     # straight off the documents table — per-row tokenize + filter, no
@@ -2568,7 +2567,7 @@ def rag_chunk_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The query-token frame is bounded (|RAG_QUERY_DOCS| docs' distinct
     # words) and feeds THREE consumers (whole-doc hits, per-chunk hits,
     # the qid grid); unpinned, each re-derived the documents scan — the
-    # r15 scan audit's 5x class. Pinned, the plan is at its 2-scan
+    # scan audit's 5x class. Pinned, the plan is at its 2-scan
     # floor: one whole-doc token pass + one chunk token pass (the two
     # passes ARE the A/B being evaluated).
     q = toks.filter(F.col("doc_id").isin(*RAG_QUERY_DOCS)).select(
@@ -2580,9 +2579,8 @@ def rag_chunk_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("qid", "doc_id")
         .agg(F.count(F.lit(1)).alias("hits"))
     )
-    # Literal rank bound directly on the window output (VERDICT r8
-    # task 1): the ks-grid join below already implies rk <= max(ks),
-    # but expressed as a join condition Spark cannot see the bound —
+    # Literal rank bound directly on the window output: the ks-grid
+    # join below already implies rk <= max(ks), but expressed as a join condition Spark cannot see the bound —
     # the reducers for the |probes| partition keys would each sort a
     # corpus-sized candidate list. A LITERAL filter lets
     # InferWindowGroupLimit insert Partial+Final WindowGroupLimit, so
@@ -2726,7 +2724,7 @@ def curriculum_stage_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("nll").cast("double") / F.count(F.lit(1)), 4).alias("avg_nll"),
         )
     )
-    # Materialize the per-doc aggregate ONCE (VERDICT r8 task 6): the
+    # Materialize the per-doc aggregate ONCE: the
     # count below plus bucketed_global_rank's boundary-sketch and rank
     # passes would otherwise each re-derive the whole token-explode +
     # vocab-join + NLL aggregation (the BASELINE "two corpus token
@@ -2851,8 +2849,8 @@ def table_zonemap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     # ONE wide 1-row agg over the zone table feeds a union branch per
     # cutoff; unpinned each branch re-derived the full orders scan +
-    # zone aggregation (3 executed scans, r16 3x-class triage — the
-    # table_stats_profile pattern). One pass now.
+    # zone aggregation (3 executed scans — the table_stats_profile
+    # pattern). One pass now.
     tot = z.agg(*tot_aggs).transform(pin)
     zone_target = F.ceil(F.col("n_rows") * 1.0 / F.col("n_zones"))
     per_cut = [
@@ -2894,7 +2892,7 @@ RRF_EVAL_KS = (5, 10)
 # Per-signal rank-list truncation depth (the rank_window_size of
 # production hybrid-search RRF): only the top-RRF_DEPTH docs of each
 # signal contribute to fusion; anything deeper contributes 0. This is
-# BOTH the standard semantics and the scale fix (VERDICT r8 task 1) —
+# BOTH the standard semantics and the scale fix —
 # the literal bound lets InferWindowGroupLimit prune each signal's
 # keyed ranking map-side instead of funneling the corpus through
 # |probes| reducers. Must be >= max(RRF_EVAL_KS).
@@ -3015,7 +3013,7 @@ def rag_rrf_fusion_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("rl") <= RRF_DEPTH)
     # lr and sr are |Q| x RRF_DEPTH rows but carry the full lexical /
     # semantic scoring lineage, and fusion + both recall branches each
-    # re-derived them (6x embeddings scans, r14 scan audit) — eager
+    # re-derived them (6x embeddings scans) — eager
     # checkpoints on the bounded rankings pin one scoring pass per
     # signal.
     lr = lr.transform(pin)
@@ -3537,7 +3535,7 @@ def join_bloom_prefilter_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------- cross-encoder-style rerank eval
 
 # Completes the retrieval arc (lexical -> semantic -> RRF fusion ->
-# RERANK; r9 VERDICT task 6b): the fused top-RERANK_DEPTH candidates
+# RERANK): the fused top-RERANK_DEPTH candidates
 # per probe query are re-scored by a PAIRWISE interaction model and
 # recall@k of the reranked list is A/B'd against the fused baseline.
 # The stand-in for the cross-encoder is a deterministic late-
@@ -3666,7 +3664,7 @@ def rag_rerank_cross_encoder(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The distinct-token index feeds four branches (query tokens,
     # lexical ranker, corpus IDF, candidate-token fetch); unpinned,
     # each re-derived the explode-over-text lineage (9x documents
-    # scans, r14 scan audit). Checkpoint it once — the BM25 tf-index
+    # scans). Checkpoint it once — the BM25 tf-index
     # pattern (text_prf_query_expansion).
     toks = d.select(
         "doc_id", F.explode(F.array_distinct(lwords)).alias("word")
@@ -3886,7 +3884,7 @@ def shard_mix_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The cell grid (N_SHARDS x |sources|, ~hundreds of rows) feeds five
     # downstream consumers; without the checkpoint Catalyst re-derives
     # it per consumer and the plan scans the CORPUS eight times (caught
-    # by the r10 .explain audit). One token pass, everything after runs
+    # by the .explain audit). One token pass, everything after runs
     # on the checkpointed grid — the curriculum_stage_plan precedent.
     cell = (
         h.groupBy("shard", "source")
@@ -4018,7 +4016,7 @@ def partition_layout_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     hi = F.lit(LAYOUT_FILTER_HI).cast("timestamp")
     # ONE fact scan for all three candidates: each row explodes into
     # (candidate, pk-as-string) pairs and the per-(candidate, pk) stats
-    # aggregate map-side before the only exchange — the r10 .explain
+    # aggregate map-side before the only exchange — the .explain
     # audit caught the per-candidate-loop draft scanning orders 9x.
     # The stats table (~150 x 3 rows) is localCheckpointed so its four
     # downstream consumers don't re-derive the scan.
@@ -4140,8 +4138,8 @@ def train_shuffle_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = md5_int(F.concat(F.lit(f"{SHUFFLE_EPOCH_SEED}|"), F.col("doc_id").cast("string")))
     # doc-grain (doc_id, source, hash) frame feeds both adjacency
     # phases and the permutation-expectation agg; unpinned each
-    # re-derived the documents scan (3 executed scans, r16 3x-class
-    # triage). Doc-grain == FACT-SCALE, so the events_ks fact_scale
+    # re-derived the documents scan (3 executed scans). Doc-grain ==
+    # FACT-SCALE, so the events_ks fact_scale
     # pin: lineage-recoverable persist, never an unreplicated local
     # checkpoint. Narrow (3 small columns), so the persist is cheap.
     base = (

@@ -1,5 +1,5 @@
-"""Privacy / data-governance operators, round 5 — north-star extension
-(the reference has no privacy surface; scope: ``src/datasources.rs``).
+"""Privacy / data-governance operators — an extension beyond the
+reference (it has no privacy surface; scope: ``src/datasources.rs``).
 
 Two release-gate shapes a dataset-publication pipeline runs at 100 TB:
 
@@ -92,7 +92,7 @@ def privacy_kanonymity_joint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # ONE fact pass (was 3 — one orders⋈customer re-aggregation per
-    # lattice level, the r16 derive-don't-rescan triage): every coarser
+    # lattice level): every coarser
     # level's QI is a subset of level 0's, so its cells roll up EXACTLY
     # from the pinned finest-level cell table (drop-a-column regroup
     # summing integer cell sizes — the quality_drift_psi pattern).
@@ -369,7 +369,7 @@ def privacy_tcloseness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # enum-cell grid (nation x segment x priority): cell sizes,
         # priority marginals, AND the zero-fill left join all consume
         # it; unpinned each re-derived the orders⋈customer scan
-        # (4 executed scans, r16 4x-class triage)
+        # (4 executed scans)
         .transform(pin)
     )
     cellsz = sc.groupBy("c_nationkey", "c_mktsegment").agg(F.sum("n").alias("cell_size"))

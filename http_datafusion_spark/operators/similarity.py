@@ -165,7 +165,7 @@ def ivf_assignments(spark: SparkSession, sf_dir: str, spread: bool = True) -> Da
     written partitioned by ``bucket`` so probes become partition-pruned
     scans.
 
-    ``spread`` (r18): the single-row-group bench-SF scan fed this
+    ``spread``: the single-row-group bench-SF scan feeds this
     Python kernel ONE input partition — one Arrow worker assigned every
     vector; the scale-adaptive repartition parallelizes it (no-op on
     file-parallel layouts). sim_contrastive_pair_mining opts OUT: it
@@ -365,7 +365,7 @@ _DIST2_TO_LIST_SQL = (
     tags=("similarity",),
 )
 def sim_kmeans_refit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lloyd's update, kernelized r11: assignment = one Arrow pass per
+    """Lloyd's update, kernelized: assignment = one Arrow pass per
     round against the closure-captured codebook (fold_sqdist is the
     dim-by-dim sequential fold, bit-identical to the SQL oracle's
     list_sum — and to the interpreted zip_with/aggregate form it
@@ -383,7 +383,7 @@ def sim_kmeans_refit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_tables(spark, sf_dir, "embeddings")["embeddings"]
     emb = F.col("embedding").cast("array<double>")
-    # spread (r18): both Lloyd passes inherit base's partitioning.
+    # spread: both Lloyd passes inherit base's partitioning.
     base = spread_docs(e.select("vec_id", emb.alias("x")), "vec_id")
 
     def assign_kernel(points: DataFrame, cids: np.ndarray, C: np.ndarray) -> DataFrame:
@@ -843,7 +843,7 @@ def embedding_centroid_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # |labels| x 64-dim bounded centroid table feeds THREE consumers
     # (norms + both dot-join sides); unpinned, each re-derived the
-    # embeddings scan (r16 4x-class triage) — pin it: one corpus pass.
+    # embeddings scan — pin it: one corpus pass.
     cent = (
         spread_docs(e.select("vec_id", "label", "embedding"), "vec_id")
         .crossJoin(dims)
@@ -950,8 +950,8 @@ def embedding_jl_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sample-bounded component table (JL_SAMPLE_IDS vectors x 64 dims):
     # the projection agg and the two sides of the original-distance
     # self-join all consumed it; unpinned each re-derived the
-    # (range-pruned) embeddings scan (4 executed scans, r16 4x-class
-    # triage). One pushed-down sample scan now.
+    # (range-pruned) embeddings scan (4 executed scans). One pushed-down
+    # sample scan now.
     comp = sample.select(
         "vec_id", F.posexplode("embedding").alias("p", "xf")
     ).select(
@@ -1284,7 +1284,7 @@ def centroid_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     to first label) — the per-vector frame behind the confusion matrix
     and the inter-annotator kappa.
 
-    Exactness/perf split (r11): EVERY rounding happens in Spark —
+    Exactness/perf split: EVERY rounding happens in Spark —
     components quantize to 6dp decimal and scale to integer MICRO
     units engine-side, the per-(label, dim) centroid means stay the
     same decimal aggregate as before (collected: O(labels x dims)
@@ -1470,7 +1470,7 @@ OOD_TOPK = 20
     tags=("similarity", "agg"),
 )
 def sim_ood_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kernelized r11 (same exact-int64 pattern as centroid_assignments,
+    """Kernelized (same exact-int64 pattern as centroid_assignments,
     which replaced a 64M-decimal-row join measured 60.4 s at sf5): the
     kernel emits each vector's min squared distance in micro^2 integer
     units (exact ordering) plus its 6dp HALF_UP rounding computed in
@@ -1608,7 +1608,7 @@ def sim_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # k-bounded ranking table (|queries| x |dims| x K rows): the truth
     # slice and the approx slice both consumed it; unpinned each
     # re-derived the full corpus scan + query-broadcast + window
-    # (4 executed scans, r16 4x-class triage). The corpus pass and the
+    # (4 executed scans). The corpus pass and the
     # vec_id-pushed query lookup run once now.
     rk = sc.select(
         "qid",
@@ -1745,7 +1745,7 @@ def sim_ivf_incremental_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     base_e = e.select("vec_id", emb.alias("emb"), _norm(emb).alias("nrm"))
     # The 1-row query vector is cross-joined into all four top-k
     # branches; checkpointing it removes four pruned-scan
-    # re-derivations (6x embeddings scans unpinned, r14 scan audit).
+    # re-derivations (6x embeddings scans unpinned).
     # The two exact baselines (before/after) are inherently two passes.
     qrow = (
         base_e.filter(F.col("vec_id") == QUERY_VEC_ID)
@@ -1880,7 +1880,7 @@ def sim_contrastive_pair_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialization: the anchor join, the partner join, and the
     # bucket-size agg all consumed it; unpinned each re-derived the
     # embeddings scan + centroid assignment (3 executed mapInPandas
-    # passes, r16 3x-class triage — opaque Python subtrees get no AQE
+    # passes — opaque Python subtrees get no AQE
     # exchange reuse). One embeddings pass now. The frame is
     # CORPUS-LINEAR (one row per vector), so fact_scale per the
     # pinning rule: a lineage-recoverable persist, never an
@@ -1925,8 +1925,8 @@ def sim_contrastive_pair_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per (query-sub-bucket x neighbor-sub-bucket) group, so ONE
 # applyInPandas group holds at most ~2*cap embedding rows (one query
 # slice + one neighbor slice) AT ANY CORPUS SIZE — the bound is by
-# construction, not by hoping buckets stay small (r10 verdict, What's
-# wrong #1). 4096 rows x 64 dims x 8 B ~ 2 MB per slice; the measured
+# construction, not by hoping buckets stay small. 4096 rows x 64 dims
+# x 8 B ~ 2 MB per slice; the measured
 # scales split as sf1 S=1 (2.5k-row buckets), sf5 S=4 (12.5k).
 BUCKET_KNN_ROW_CAP = 4096
 
@@ -1950,7 +1950,7 @@ def _bucket_knn_partial_fn(k: int):
     order — property-tested), so cross-slice ties are exact and nid
     breaks them identically to the SQL oracle's row_number. The
     quadratic tile runs in numpy, not per-pair interpreted Catalyst
-    lambdas (~50x slower, r10 timing audit); query rows stream in
+    lambdas (~50x slower, measured); query rows stream in
     chunks so the cos tile is O(chunk x slice), never O(slice^2)."""
     import pandas as pd
 
@@ -1996,7 +1996,7 @@ def _bucket_knn_partial_fn(k: int):
             hitr = np.flatnonzero((pos < m) & (nids[np.minimum(pos, m - 1)] == qids[lo:hi]))
             neg[hitr, pos[hitr]] = np.inf
             # Exact top-k selection (full-row argsort was 7x the fold's
-            # cost in the r10 rebuild): O(m) partition for the kk-th
+            # cost): O(m) partition for the kk-th
             # value, tie-inclusive mask, stable sort of the boundary set.
             kth = np.partition(neg, kk - 1, axis=1)[:, kk - 1]
             top = np.empty((rows, kk), dtype=np.int64)
@@ -2096,7 +2096,7 @@ def bucket_knn_pairs(
     cosine neighbors — the shared candidate frame of the hubness audit
     and the LOO label eval.
 
-    Scale shape (the r10 verdict's one `weak` item, now implemented):
+    Scale shape:
     a bucket larger than ``row_cap`` is hash-split into
     S = ceil(size / cap) sub-buckets (xxhash64 of vec_id, so id-pattern
     correlation with the IVF assignment cannot skew a slice), and the
@@ -2563,7 +2563,7 @@ def sim_classifier_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFram
     cpred = centroid_assignments(spark, sf_dir).select("vec_id", F.col("pred_label").alias("pc"))
     # One (pc, pk) row per vector, but three consumers (totals + both
     # marginals) re-derived the two upstream classifier pipelines 6x
-    # unpinned (r14 scan audit) — checkpoint the label-pair frame.
+    # unpinned — checkpoint the label-pair frame.
     j = (
         kpred.join(cpred, kpred["qid"] == cpred["vec_id"])
         .select("pc", "pk")
@@ -2688,8 +2688,8 @@ def sim_spearman_rank_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "embedding", "exact_rank")
         # FIDELITY_TOP_K rows carrying the full exact-scoring scan; the
         # candidate branch and the final rank join each re-derived it
-        # (8x embeddings scans with proj's two consumers compounding,
-        # r14 scan audit) — checkpoint the bounded frame.
+        # (8x embeddings scans with proj's two consumers compounding)
+        # — checkpoint the bounded frame.
         .transform(pin)
     )
     cand = exact.select("vec_id", "embedding").unionAll(
@@ -2816,7 +2816,7 @@ def sim_semdedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tau row is emitted even when `best` is empty (no vector has an
     # earlier cluster-mate) — matches the oracle's CROSS JOIN n LEFT
     # JOIN hits shape, which always yields the full grid with
-    # n_pruned=0 (r11 ADVICE item 1).
+    # n_pruned=0.
     counts = (
         grid.crossJoin(best)
         .groupBy("tau")
@@ -3204,7 +3204,7 @@ def sim_srp_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Pin the bucket-bounded multi-probe candidate set: its two
     # consumers (the count and the exact rerank) each re-derived the
-    # full coded projection — 2 of the 5 embeddings scans the r15 scan
+    # full coded projection — 2 of the 5 embeddings scans the scan
     # audit counted here. The query row comes from the driver-held
     # vector (vecs already fetched it, memoized) as literals: fold_norms
     # is the same left-fold as _norm/the oracle, and qn is a constant

@@ -766,7 +766,7 @@ def ml_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = d.groupBy(F.col("n_chars").alias("score")).agg(
         F.sum(F.when(en, 1).otherwise(0)).cast("bigint").alias("pos"),
         F.sum(F.when(~en, 1).otherwise(0)).cast("bigint").alias("neg"),
-    ).transform(pin)  # score-grain: totals agg + cum window + 2 terms consumers re-derived the doc scan unpinned (4 scans, r16 4x triage)
+    ).transform(pin)  # score-grain: totals agg + cum window + 2 terms consumers re-derived the doc scan unpinned (4 scans)
     tot = s.agg(
         F.sum("pos").cast("bigint").alias("n_pos"),
         F.sum("neg").cast("bigint").alias("n_neg"),
@@ -1513,7 +1513,7 @@ def ml_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # score-grain (distinct p_hat) table: totals agg + decomposition
     # terms both re-derived the stats+scoring passes over documents
-    # unpinned (4 executed scans, r16 4x-class triage). Two passes
+    # unpinned (4 executed scans). Two passes
     # remain after the pin — the moments pass and the scoring pass are
     # inherently ordered (mu/sigma before p_hat).
     g = scored.groupBy("p_hat").agg(
@@ -1554,7 +1554,7 @@ def ml_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         # BOTH engine sides: the identity check rounds a difference, and
         # DuckDB's round landed on -0.0 while Spark's landed on 0.0 —
         # numerically equal but the driver hashes RENDERED values, so
-        # repr(-0.0) = '-0.0' diverged (the one red CORRECTNESS_r12 row).
+        # repr(-0.0) = '-0.0' diverges.
         (F.round(brier - (rel - res + unc), 6) + F.lit(0.0)).alias(
             "decomp_residual"
         ),
@@ -2212,7 +2212,7 @@ def feature_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = d.groupBy(F.col("n_chars").alias("score")).agg(
         F.count(F.lit(1)).cast("bigint").alias("tot"),
         F.sum(F.when(en, 1).otherwise(0)).cast("bigint").alias("pos"),
-    ).transform(pin)  # score-grain: totals + decile window + IV/final consumers re-derived the doc scan unpinned (4 scans, r16 4x triage)
+    ).transform(pin)  # score-grain: totals + decile window + IV/final consumers re-derived the doc scan unpinned (4 scans)
     n = s.agg(
         F.sum("tot").cast("bigint").alias("n"),
         F.sum("pos").cast("bigint").alias("n_pos"),
@@ -2454,16 +2454,16 @@ LN2 = 0.6931471805599453
 def events_retention_halflife(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_tables(spark, sf_dir, "events")["events"]
     day = F.to_date("ts")
-    # Two events passes (was 4, r16 4x-class triage): the days-grain
+    # Two events passes (was 4): the days-grain
     # offset table is pinned, so the n0 base branch and the regression
     # points read it instead of each re-running the cohort⋈active join
     # (which re-derived BOTH events scans per consumer). A fact_scale
     # persist of the user-day frame itself was A/B-measured SLOWER at
     # sf0.1 AND sf1 (0.75->1.01 s sf1) — cache overhead exceeds the
     # pushed 2-column re-scan — so the cohort/active passes keep their
-    # lineage and only the bounded aggregate is pinned. r18 sf5
-    # re-probe: persist flat at sf5 (1.245 -> 1.236 s) and +12% at
-    # sf0.1 (0.66 -> 0.74 s) — no crossover; REVERTED again.
+    # lineage and only the bounded aggregate is pinned. An sf5
+    # re-probe on 32 cores: persist flat at sf5 (1.245 -> 1.236 s) and
+    # +12% at sf0.1 (0.66 -> 0.74 s) — no crossover.
     cohort = e.groupBy("user_id").agg(F.min(day).alias("c_day"))
     active = e.select("user_id", day.alias("a_day")).distinct()
     offs = (
@@ -2569,7 +2569,7 @@ def events_funnel_wilson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_tables(spark, sf_dir, "events")["events"]
     # Each per-user step frame feeds the next step AND one-or-two count
     # branches; unpinned, the re-derivations compounded to 8 events
-    # scans (r14 scan audit). Checkpointing the user-bounded step
+    # scans. Checkpointing the user-bounded step
     # frames pins the plan at exactly three type-filtered, pushed-down
     # events scans — one per funnel layer, the shape you'd want.
     v = (

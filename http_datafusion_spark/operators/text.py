@@ -52,8 +52,8 @@ def partitioned_docs(df: DataFrame, *cols: str) -> DataFrame:
     anyway; taking it BEFORE the explode makes it carry raw text
     instead of the exploded token stream (strictly fewer bytes at every
     scale) and runs tokenize at full width instead of inside the scan
-    task (the r18 shingles_of fix: one 6.6 s serial map task at sf5
-    became 32-way). Explicit N because AQE would coalesce the small
+    task (one 6.6 s serial map task at sf5 became 32-way on 32
+    cores, the ``shingles_of`` pattern). Explicit N because AQE would coalesce the small
     text exchange back to one partition at bench SFs. Sibling token
     streams in the same query should derive from THIS frame so the one
     exchange feeds them all."""
@@ -103,9 +103,9 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Tokenize once in its own projection — Catalyst does not
     # subexpression-eliminate the split across select-list items
     # (measured on bm25: 2.46 s vs 1.59 s at sf1 for a 4-use list).
-    # spread_docs (r18): this is a pure map query, so a narrow scan ran
-    # the whole regex pass serially (sf5: one 6.6 s task). Measured
-    # sf5 6.60 -> 2.64 s, sf0.1 0.48 -> 0.34 s.
+    # spread_docs: this is a pure map query, so a narrow scan runs the
+    # whole regex pass serially (sf5: one 6.6 s task). Measured on 32
+    # cores: sf5 6.60 -> 2.64 s, sf0.1 0.48 -> 0.34 s.
     pre = spread_docs(d.select("doc_id", "text")).select(
         "doc_id",
         "text",
@@ -292,7 +292,7 @@ def text_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_tables(spark, sf_dir, "documents")["documents"]
     w = W.partitionBy("doc_id").orderBy("pos")
     words = F.filter(F.split(F.trim("text"), r"\s+"), lambda x: x != "")
-    # r18 partitioned_docs: text crosses the window's exchange raw;
+    # partitioned_docs: text crosses the window's exchange raw;
     # tokenize runs post-exchange at full width (sf5 6.67 -> 1.27 s).
     return (
         partitioned_docs(d)
@@ -588,9 +588,9 @@ def text_tfidf_topterm(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Explicit Exchange (not .cache()) so the exploded token stream is
     # computed once per execution via exchange reuse — zero pinned
     # state, honest re-execution on every run.
-    # r18: the repartition moved BEFORE the explode (the shingles_of
-    # pattern): the exchange needed hashpartitioning(doc_id) either
-    # way, but it now carries raw text instead of the exploded token
+    # The repartition comes BEFORE the explode (the shingles_of
+    # pattern): the exchange needs hashpartitioning(doc_id) either
+    # way, but it carries raw text instead of the exploded token
     # stream (fewer bytes at every scale) and tokenize+explode runs at
     # full shuffle width instead of inside the scan task; explicit N
     # stops AQE coalescing the small text exchange back to one
@@ -619,8 +619,8 @@ def text_tfidf_topterm(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (max score, then lexicographically first word), the window's exact
     # tiebreak, without the rank window's per-partition sort. Isolated
     # same-session A/B at sf0.1 measured 0.775 -> 0.656 s, but the
-    # DRIVER bench medians went 0.669 (r5, rank window) -> 0.732 (r6,
-    # this rewrite) — the isolated gain did not reproduce in the
+    # Full-suite bench medians went 0.669 (rank window) -> 0.732 (this
+    # rewrite) — the isolated gain did not reproduce in the
     # full-suite regime at sf0.1; sf1 gains are real. Kept because the
     # aggregate form avoids the per-partition sort at scale.
     # The round re-normalizes -0.0.
@@ -713,7 +713,7 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Split the text ONCE in its own projection: with the split inlined
     # into all four consumers Catalyst did NOT subexpression-eliminate
     # it across the select list (measured 2.46 s vs 1.59 s at sf1).
-    # spread_docs (r18): the tokenize+tf map work ran in the scan task
+    # spread_docs: the tokenize+tf map work ran in the scan task
     # (sf5 5.53 -> 1.63 s, sf0.1 0.75 -> 0.65 s); the doc_id exchange
     # below stays narrow (6 ints/doc) at every scale.
     pre = spread_docs(d.select("doc_id", "text")).select(
@@ -825,7 +825,7 @@ def tokenize_to_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Catalyst MAY feed both from one shuffle. Measured 17.6 -> 12.7 s
     # at sf5 together with the bounded-prefix rewrite below.
     # The explicit isnotnull(doc_id) is vacuous on data (doc_id is the
-    # key) but load-bearing for the plan (r18): the final inner join
+    # key) but load-bearing for the plan: the final inner join
     # pushes an isnotnull(doc_id) constraint into the counts branch
     # ONLY, so the two otherwise-identical token-stream subtrees no
     # longer canonicalize equal and ReuseExchange never fires — the
@@ -848,19 +848,14 @@ def tokenize_to_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("vocab_id"),
         )
     )
-    # r18 re-probe of the r16 measured-negative: pinning the
-    # VOCAB_SIZE-bounded vocab (it appears twice in the static plan)
-    # measured sf0.1 0.93 -> 1.00 s and sf5 12.6 -> 18.8 s (+49%) —
-    # the eager pin SERIALIZES the vocab build that Spark otherwise
-    # overlaps with the main stream's stages. Disposition re-confirmed.
-    # r18 re-probe of the r16 measured-negative: pinning the
-    # VOCAB_SIZE-bounded vocab (it appears twice in the static plan)
-    # measured sf0.1 0.93 -> 1.00 s and sf5 12.6 -> 18.8 s (+49%) —
-    # the eager pin SERIALIZES the vocab build that Spark otherwise
-    # overlaps with the main stream's stages. Disposition re-confirmed.
+    # The VOCAB_SIZE-bounded vocab is not pinned (it appears twice in
+    # the static plan): pinning it measured sf0.1 0.93 -> 1.00 s and
+    # sf5 12.6 -> 18.8 s (+49%) on 32 cores — the eager pin SERIALIZES
+    # the vocab build that Spark otherwise overlaps with the main
+    # stream's stages.
     # Two bounded paths instead of one collect_list-of-everything (the
-    # round-3 form shuffled EVERY (doc,pos,id) struct to sort per doc —
-    # collect_list's partial state carried the whole token stream, and
+    # single-path form shuffles EVERY (doc,pos,id) struct to sort per doc —
+    # collect_list's partial state carries the whole token stream, and
     # folding it into the count aggregation forces the whole stream out
     # of codegen'd HashAggregate into ObjectHashAggregate, measured
     # SLOWER: 17.6 s both ways at sf5. The split:
@@ -1326,7 +1321,7 @@ def quality_model_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # then RENDERED as a rounded double: the driver hashes stringified
     # values, and Spark's DECIMAL(18,3) prints '3.410' where DuckDB's
     # decimal prints '3.41' — numerically identical, hash-divergent
-    # (the one red row of CORRECTNESS_r06). Registry convention
+    # (plans/compare.py's render check catches it). Registry convention
     # (plans/registry.py:12-13): floating outputs are rounded doubles.
     return scored.select(
         "doc_id",
@@ -1640,7 +1635,7 @@ def bpe_first_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # The vocab-bounded sequence table feeds pair mining AND the merge
     # rewrite; the pair tables each feed an argmax and a total branch —
-    # unpinned, the corpus explode re-derived 6x (r14 scan audit).
+    # unpinned, the corpus explode re-derived 6x.
     # Checkpoints pin ONE corpus scan; everything below is vocab-sized
     # (the bpe_merge_train pattern one function down).
     seqs = vocab.select(
@@ -1929,7 +1924,7 @@ def vocab_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # One checkpointed (source, word) count table feeds BOTH the
     # corpus-level vocab and the per-source counts (the
     # text_burrows_delta pattern) — unpinned, corpus + sc each
-    # re-derived the explode (6x documents scans, r14 scan audit).
+    # re-derived the explode (6x documents scans).
     st = (
         toks.groupBy("source", "word")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
@@ -2067,7 +2062,7 @@ def text_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------- pseudo-relevance feedback (PRF)
 
-PRF_FEEDBACK_DOCS = 3  # round-1 docs mined for expansion terms
+PRF_FEEDBACK_DOCS = 3  # first-pass top docs mined for expansion terms
 PRF_EXPAND_PER_DOC = 2  # top tf-idf terms taken from each feedback doc
 
 _PRF_BASE_SQL = f"""
@@ -2172,7 +2167,7 @@ def text_prf_query_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # The (doc, word, tf) table IS the BM25 index, and both scoring
     # rounds plus the candidate miner read it; unpinned, Catalyst
-    # re-derived the corpus explode 15x (r14 scan audit). Checkpoint it
+    # re-derived the corpus explode 15x. Checkpoint it
     # once — "two corpus passes" in the docstring becomes ONE physical
     # parquet scan + index reads — and derive doclen from it (sum of
     # per-word tf == token count, value-identical to counting toks).
@@ -2319,7 +2314,7 @@ HEAPS_CHECKPOINTS = 10
 )
 def text_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    # spread_docs (r18): the lower+tokenize+explode pass ran serially
+    # spread_docs: the lower+tokenize+explode pass ran serially
     # in the scan task (sf5 11.11 -> 1.56 s, sf0.1 flat); the
     # (word, doc_id) partial agg still collapses map-side before the
     # word exchange.
@@ -2497,7 +2492,7 @@ def corpus_language_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_tables(spark, sf_dir, "documents")["documents"]
     # |sources| x |langs|-bounded cell table feeds FOUR consumers (both
     # marginals, the total, and the grid join); unpinned, each
-    # re-derived the documents scan (r16 4x-class triage) — pin it so
+    # re-derived the documents scan — pin it so
     # the plan is one corpus pass.
     sl = d.groupBy("source", "lang").agg(
         F.count(F.lit(1)).cast("double").alias("n")
@@ -2603,7 +2598,7 @@ def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    # r18 partitioned_docs: text crosses the segment window's exchange
+    # partitioned_docs: text crosses the segment window's exchange
     # raw; tokenize runs post-exchange at full width (sf5 33 -> 13 s).
     toks = partitioned_docs(d).select(
         "doc_id",
@@ -3347,7 +3342,7 @@ def text_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (source, tok) count table feeds THREE branches (top-word list,
     # per-source totals, count grid), and without a lineage cut
     # Catalyst re-derives the explode-over-text scan per consumer (the
-    # r14 scan audit measured 16x documents scans in this plan). The
+    # scan audit measured 16x documents scans in this plan). The
     # eager localCheckpoint materializes the |sources| x vocab-bounded
     # aggregate once, so every downstream branch reads the checkpoint
     # instead of the corpus (dedup_candidate_budget pattern,

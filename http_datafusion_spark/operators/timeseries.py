@@ -74,10 +74,9 @@ def ts_forward_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ts_gapfill_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_tables(spark, sf_dir, "events")["events"]
-    # r18 sf5 probe (the r17 measured-negative family's "may cross over
-    # at sf5" carry): fact_scale persist of the user x slot aggregate —
-    # sf5 1.236 -> 1.219 s (flat), sf0.1 0.571 -> 0.862 s (+51%).
-    # REVERTED: the columnar cache build costs more than the grid
+    # No pin on the user x slot aggregate: a fact_scale persist measured
+    # sf5 1.236 -> 1.219 s (flat), sf0.1 0.571 -> 0.862 s (+51%) on 32
+    # cores — the columnar cache build costs more than the grid
     # branch's re-aggregation at every measured scale.
     hourly = (
         e.withColumn("slot", F.floor(F.unix_timestamp("ts") / GRID_SEC).cast("bigint"))
@@ -375,8 +374,8 @@ MAD_K = 3.0  # |x - median| > K * MAD flags an outlier
 )
 def ts_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_tables(spark, sf_dir, "events")["events"]
-    # dev fed both the MAD median and the scoring pass, so the r14
-    # scan audit counted 4 events scans. Checkpointing the per-type
+    # dev fed both the MAD median and the scoring pass, so the scan
+    # audit counted 4 events scans. Checkpointing the per-type
     # scalar tables (<= |event types| rows each) — NOT the events-sized
     # dev frame — pins the plan at the three passes two exact medians +
     # one count inherently need, with no fact-scale materialization.
@@ -824,7 +823,7 @@ def ts_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_tables(spark, sf_dir, "events")["events"]
     # The |hours|-bounded count series feeds FIVE consumers (stats, both
     # lag-join sides, the denominator, the final agg); unpinned, each
-    # re-derived the events scan (the r15 scan audit's 5x class). One
+    # re-derived the events scan (the scan audit's 5x class). One
     # rollup shuffle, everything after runs on the pinned hours-grain
     # table.
     hourly = (
@@ -1050,7 +1049,7 @@ WAU_DAYS = 7
 )
 def events_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_tables(spark, sf_dir, "events")["events"]
-    # Two events passes (was 4, r16 4x-class triage): the day list is
+    # Two events passes (was 4): the day list is
     # read off the pinned days-grain DAU table (one row per distinct
     # day — grouping the user-day frame by day IS the distinct-day
     # set) instead of a third user-day derivation, and the final join
@@ -1059,10 +1058,9 @@ def events_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf1): the cache build/read overhead exceeds re-running the
     # pushed 2-column scan + map-side-combined distinct, so only the
     # bounded aggregate is pinned and the user-day frame is derived
-    # twice (DAU pass + WAU pass). r18 sf5 re-probe (the verdict's
-    # crossover question): persist 1.73 -> 1.48 s at sf5 (-14%,
-    # overlapping bands) but 0.82 -> 1.46 s at sf0.1 (+78%) — still a
-    # net negative; REVERTED again.
+    # twice (DAU pass + WAU pass). An sf5 re-probe on 32 cores: persist
+    # 1.73 -> 1.48 s at sf5 (-14%, overlapping bands) but 0.82 -> 1.46 s
+    # at sf0.1 (+78%) — still a net negative.
     ud = e.select(
         "user_id", F.floor(F.unix_timestamp("ts") / 86400).cast("bigint").alias("day")
     ).distinct()
@@ -1509,7 +1507,7 @@ def events_crosscorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_tables(spark, sf_dir, "events")["events"]
     # Same 5x fix as ts_autocorrelation: the hours-bounded two-series
     # table feeds stats, both lag-join sides, and the denominator —
-    # pin it so the plan scans events once (r15 scan audit, 5x class).
+    # pin it so the plan scans events once (scan audit, 5x class).
     hourly = e.groupBy(
         F.floor(F.unix_timestamp("ts") / 3600).cast("bigint").alias("slot")
     ).agg(
@@ -1593,7 +1591,7 @@ def orders_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_tables(spark, sf_dir, "orders")["orders"]
     # months-bounded revenue series feeds FOUR consumers (both slope
     # self-join sides, the month count, the residual pass); unpinned,
-    # each re-derived the orders scan (r16 4x-class triage) — the
+    # each re-derived the orders scan — the
     # ts_autocorrelation pattern verbatim.
     monthly = o.groupBy(
         (F.year("o_orderdate") * 12 + F.month("o_orderdate")).cast("bigint").alias("midx")
@@ -1685,11 +1683,11 @@ def events_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The two-column sample frame feeds the range pre-pass AND the
     # binning pass, and the 256-row bin table feeds the cumulative and
     # total branches; unpinned, the re-derivations compounded to 6
-    # events scans (r14 scan audit). This frame is FACT-SCALE (every
+    # events scans. This frame is FACT-SCALE (every
     # row of two event types), so it is pinned fact_scale — a
     # lineage-recoverable MEMORY_AND_DISK persist, never an
-    # unreplicated executor-local checkpoint (r15 ADVICE: an executor
-    # loss must recompute the sample, not kill the job). The two
+    # unreplicated executor-local checkpoint (an executor loss must
+    # recompute the sample, not kill the job). The two
     # passes the equi-width grid inherently needs run over the persist.
     s = (
         e.filter(F.col("event_type").isin(KS_GROUP_A, KS_GROUP_B))
@@ -2234,7 +2232,7 @@ def orders_holt_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
         # nation x month cells: the bounds agg, the zero-fill grid's
         # nation list, and the series left join all consumed it;
         # unpinned each re-derived the 2-join orders aggregation
-        # (3 executed scans, r16 3x-class triage). One pass now.
+        # (3 executed scans). One pass now.
         .transform(pin)
     )
     bounds = g.agg(F.min("mi").alias("mn"), F.max("mi").alias("mx"))
@@ -2524,8 +2522,8 @@ def ts_sax_motifs(spark: SparkSession, sf_dir: str) -> DataFrame:
     q6 = lambda c: F.round(c, 6).cast("decimal(18,6)")  # noqa: E731
     # days-grain series: the min-day agg and the PAA segmenting both
     # consumed it, and paa's two consumers (moments + symbolization)
-    # compounded the re-derivation to 4 executed orders scans (r16
-    # 4x-class triage). One pass after the pin.
+    # compounded the re-derivation to 4 executed orders scans. One
+    # pass after the pin.
     daily = o.groupBy(F.to_date("o_orderdate").alias("day")).agg(
         F.sum(q6(F.col("o_totalprice").cast("double"))).cast("double").alias("rev")
     ).transform(pin)
@@ -2647,8 +2645,8 @@ def orders_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # customer-grain first-order frame (the RFM pin precedent): the
     # cohort-size agg and the revenue-cell join both consumed it;
-    # unpinned each re-derived the orders scan (3 executed scans, r16
-    # 3x-class triage). The remaining 2 passes (first-order + revenue
+    # unpinned each re-derived the orders scan (3 executed scans). The
+    # remaining 2 passes (first-order + revenue
     # cells) are the cohort shape's floor.
     first = o.groupBy("o_custkey").agg(
         F.min("mi").cast("bigint").alias("mi0")
@@ -2855,7 +2853,7 @@ def cusum_from_daily(daily: DataFrame) -> DataFrame:
     # Per-type mu/sd as UNBOUNDED windows over the day-grain table
     # instead of a groupBy + broadcast-join-back: the join form made
     # Spark derive `daily` twice (two full fact scans in the physical
-    # plan — the r14 .explain audit); the window form is ONE scan, one
+    # plan — the .explain audit); the window form is ONE scan, one
     # event_type shuffle, and the partition contents are |days|-bounded
     # at any corpus size. Same arithmetic, same doubles, oracle
     # untouched. (This also retires the rename workaround the join

@@ -1,7 +1,7 @@
 """Structural guard against forced broadcasts of data-growing relations.
 
-The round-6 verdict found eight operators baking ``F.broadcast`` hints
-onto relations that GROW with the data (vocabulary/bigram count tables,
+It catches operators that bake ``F.broadcast`` hints onto relations
+that GROW with the data (vocabulary/bigram count tables,
 per-document set sizes, fact-derived key sets). A baked-in hint is a
 plan AQE cannot demote — at 100 TB each such site is an executor/driver
 OOM. This module walks a query's ANALYZED logical plan (where
@@ -54,7 +54,7 @@ def _relation_table(line: str) -> str | None:
     if "text" in cols and "doc_id" in cols:
         return "documents"
     # embeddings schema is (vec_id, embedding, label) — no doc_id
-    # (ADVICE r7: requiring doc_id made this branch unreachable)
+    # (requiring doc_id would make this branch unreachable)
     if "vec_id" in cols or "embedding" in cols:
         return "embeddings"
     return None  # dimension or non-fact source
@@ -77,7 +77,7 @@ def _is_zero_key_aggregate(line: str) -> bool:
     Bracket-balanced: a grouping expression may itself contain ``[``
     (array element access, e.g. ``Aggregate [arr#1[0]], [...]``), so a
     naive "no '[' before '], ['" regex misclassifies grouped aggregates
-    as zero-key (ADVICE r7). We scan the first balanced bracket group
+    as zero-key. We scan the first balanced bracket group
     and check whether a second group follows."""
     m = _AGG_HEAD.search(line)
     if not m:
@@ -139,7 +139,7 @@ def broadcast_hint_violations(df: DataFrame) -> list[BroadcastViolation]:
     fact-scale table with no bounding Aggregate/Limit on the path
     between the hint and that scan.
 
-    Bounds are attributed PER BRANCH (ADVICE r7): a Limit on one join
+    Bounds are attributed PER BRANCH: a Limit on one join
     branch must not exempt a fact scan on a sibling branch. A fact
     Relation is bounded iff one of its ANCESTOR nodes inside the hint
     subtree — the chain of preceding lines with strictly decreasing

@@ -5,12 +5,11 @@ parquet tables, sorts columns by name and rows by value, and reports
 exact/approx equality. Used by tests and for pre-flight calibration —
 if this passes exactly, the driver's value-hash comparison will too.
 
-Exactness is RENDERING-aware since round 7: the driver hashes
-stringified values, so a Spark Decimal('3.410') vs a DuckDB double
-3.41 is numerically equal but hash-divergent — _values_equal marks any
-such mixed- or mixed-scale pair inexact (the coercion gap that let
-quality_model_score ship driver-red in r6 while 505 local tests were
-green).
+Exactness is RENDERING-aware: the gate hashes stringified values,
+so a Spark Decimal('3.410') vs a DuckDB double 3.41 is numerically
+equal but hash-divergent — _values_equal marks any such mixed- or
+mixed-scale pair inexact (a numeric-only compare once passed
+quality_model_score locally while the gate's hash compare failed it).
 """
 
 from __future__ import annotations
@@ -73,17 +72,15 @@ def _values_equal(a: object, b: object) -> tuple[bool, bool]:
             # equal but RENDERS differently (Decimal('3.410') vs 3.41), and
             # the driver hashes rendered values — so a mixed-dtype pair is
             # never 'exact' unless the strings also agree. This is exactly
-            # how quality_model_score shipped driver-red while 505 local
-            # tests were green (CORRECTNESS_r06): the old coercion hid the
+            # how quality_model_score once failed the gate's hash compare
+            # while passing locally: a numeric coercion hid the
             # Decimal(18,3)-vs-double scale gap.
             # fa == fb is NOT sufficient for 'exact': the driver hashes
             # RENDERED values, and two numerically-equal values can still
-            # render apart — Decimal('3.410') vs 3.41 (the r6
-            # quality_model_score incident), and -0.0 vs 0.0
-            # (repr(-0.0) = '-0.0'; the r12 ml_brier_decomposition
-            # incident — a float/float pair, which the old mixed-dtype-only
-            # check waved through). Require render equality regardless of
-            # dtype mix.
+            # render apart — Decimal('3.410') vs 3.41, and -0.0 vs 0.0
+            # (repr(-0.0) = '-0.0'; ml_brier_decomposition hit this with
+            # a float/float pair, which a mixed-dtype-only check waves
+            # through). Require render equality regardless of dtype mix.
             if _render(a) != _render(b):
                 return (True, False)
             return (True, True)

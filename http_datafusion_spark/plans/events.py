@@ -279,7 +279,7 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
     # Each per-user step frame feeds the next step AND the final wide
     # join; unpinned, the re-derivations compounded to 6 events scans
-    # (r14 scan audit). Checkpointing the user-bounded step frames pins
+    # (scan audit). Checkpointing the user-bounded step frames pins
     # exactly three type-filtered, pushed-down events scans — one per
     # funnel layer (events_funnel_wilson_ci twin).
     v = (

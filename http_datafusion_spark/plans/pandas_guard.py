@@ -4,9 +4,9 @@ group.
 ``groupBy(keys).applyInPandas(fn)`` (and the cogrouped variant)
 materializes an ENTIRE group as one pandas DataFrame on one executor —
 the one Python boundary where a bad key turns into an OOM at scale
-rather than a slow shuffle. The r10 verdict's single `weak` item was
-exactly this class: a kernel grouped on the fixed 8-value IVF bucket
-key, so one group held ~corpus/8 rows. The repaired kernel bounds its
+rather than a slow shuffle. A kernel grouped on the fixed 8-value IVF
+bucket key was exactly this class: one group held ~corpus/8 rows. The
+repaired kernel bounds its
 groups by construction (salted sub-bucket split, ~2*cap rows); this
 guard makes the argument STRUCTURAL for every grouped-pandas site in
 every registry plan, so the next unbounded key cannot land silently.
@@ -20,7 +20,7 @@ states WHY a group with that key is bounded (row-cap construction,
 block tiling, or a natural per-entity key whose group size tracks
 entity activity, not corpus size). Stale allowlist entries — a
 signature no longer produced by any plan — fail the test, so the
-allowlist cannot rot (r9 verdict task 8 pattern).
+allowlist cannot rot.
 """
 
 from __future__ import annotations

@@ -12,12 +12,6 @@ two (row count + schema + order-insensitive value hash), so:
 - floating aggregates are rounded so partial-aggregation order
   differences between engines can't flip the hash;
 - every LIMIT/top-k query carries a total order (unique tiebreak).
-
-Perf-claim convention (r6 verdict, What's wrong #3): a docstring citing
-"measured X -> Y" MUST either quote driver-bench medians (BENCH_r*.json)
-or name its measurement context (isolated same-session A/B, sf, idle or
-contended box). Isolated runs lack full-suite JVM warmup and have twice
-now disagreed with the driver regime — unlabeled numbers mislead.
 """
 
 from __future__ import annotations
@@ -47,92 +41,10 @@ class QuerySpec:
 
 REGISTRY: dict[str, QuerySpec] = {}
 
-# Registration order is the order the driver's correctness gate walks
-# (empirically it checks the first ~50 entries), so it is an explicit
-# artifact, not an accident of module import order. The head of the
-# list is composed to cover every SURVEY §2.2-2.8 operator row plus
-# every operator whose implementation changed this round; queries
-# already driver-verified in a previous round and unchanged since sit
-# in the tail (they stay covered by the local sf0.001+sf0.01 parity
-# sweep, tests/test_oracle_parity.py).
-# Round-16 rotation (per the r15 verdict's task 2, the named r16 head):
-#   "FIRST any row whose code or oracle changes during r15 after this
-#   window freezes, then r16 additions (throttled), then the 24-row
-#   named r6-class overflow in lexicographic order, then the balance
-#   of the r6 class lands back in r16's fill." Composed mechanically by
-#   tools/evidence_age.py --plan with that head.
-#   Window composition (exactly 50):
-#   (a) 14 changed-code rows (every r16 semantic code change, nothing
-#       else changed):
-#       - dedup_embedding_cosine, dedup_semantic_threshold_calibration,
-#         dedup_semantic_clusters, dedup_lexical_semantic_ari: the IVF
-#         verification-tier rewrite (r15 verdict task 1) — candidates
-#         are scored by the fold-exact numpy tile kernel over
-#         (bucket, sub-block, sub-block) applyInPandas tasks instead of
-#         pair-hydration joins + the interpreted JVM fold. ORACLES
-#         UNTOUCHED; output bit-identical (same candidate set, same
-#         left-fold, same rounding); 363.5 -> 25.6 s cold at sf1 for
-#         dedup_embedding_cosine (BASELINE r16). The r15-verdict
-#         hypothesis (sample-trained scale-adaptive quantizer) was
-#         investigated and measured-refuted: all true pairs of this
-#         corpus live at cosine 0.40-0.51 (the noise floor), so any
-#         sub-cluster K breaks the 0.9 recall gate (K=sqrt(N) seeded
-#         0.76, Lloyd-trained 0.88) — see embedding_pairs_ivf's
-#         docstring and the BASELINE r16 study table.
-#       - ts_autocorrelation (ALSO in the named r6 overflow — one slot
-#         covers both roles), events_crosscorrelation,
-#         rag_chunk_retrieval_eval, sim_srp_lsh_recall: the 5x
-#         scan-class triage (r15 verdict task 3) — bounded shared
-#         frames pinned; 5x -> 0-2 fact scans per plan.
-#       - events_ks_two_sample: the fact-scale sample frame moved to a
-#         lineage-recoverable persist (pin(fact_scale=True), r15
-#         ADVICE).
-#       - corpus_language_skew_audit, embedding_centroid_shift,
-#         orders_theil_sen_trend, quality_drift_psi,
-#         table_stats_profile: the five crispest 4x-scan-class fixes
-#         (bounded cell/series/1-row tables pinned; 4x -> one fact pass
-#         each; table_stats_profile measured zero exchange reuse before
-#         fixing, per the kneser-ney lesson) — the rest of the 4x class
-#         carries dispositions in BASELINE r16, per the verdict's
-#         record-don't-blanket-fix rule.
-#       NOT window-triggering (mechanical, value-preserving, verified
-#       scan-audit-histogram-identical): the r16 pin() refactor that
-#       replaced every raw localCheckpoint site (87 at refactor time;
-#       the inventory test derives the live count) (the r15 verdict's
-#       own task-5 done-criterion is "no plan change") and the
-#       DISK_ONLY storage level on the largest CC/LPA round pins (a
-#       storage knob, not a plan/value change; its consumers
-#       dedup_semantic_clusters + dedup_lexical_semantic_ari sit in
-#       this window as live representatives of the changed loop).
-#   (b) r16 ADDITIONS: none — zero additions this round so the r6
-#       evidence class drains completely (the r15 verdict's task-2
-#       "the r6 class empties" done-criterion).
-#   (c) the 23 remaining rows of the named 24-row r6 overflow,
-#       lexicographic (incremental_agg_merge .. ts_cusum_changepoints;
-#       ts_autocorrelation already satisfied in (a)). After this
-#       window the r6 class is EMPTY.
-#   (d) 13 rows of r7-class fill, lexicographic
-#       (attribution_models_compare .. events_path_3gram;
-#       events_crosscorrelation already satisfied in (a)).
-#   R17 HEAD (named now, per rotation discipline): FIRST any row whose
-#   code or oracle changes during r16 after this window freezes, then
-#   r17 additions (throttle can relax — the oldest class is r7 and
-#   shrinking), then the 23-row r7-class overflow in lexicographic
-#   order:
-#   ngram_pmi_bigrams, orders_duplicate_invoice_detect,
-#   orders_littles_law_check, orders_market_basket, orders_price_index,
-#   orders_seasonality_decompose, part_price_dispersion, parts_abc_xyz,
-#   privacy_ldiversity_audit, quality_model_score, revenue_bridge_pvm,
-#   sim_ivf_nprobe_sweep, sim_mmr_rerank, stream_quality_gate,
-#   supplier_concentration_hhi, text_bigram_logprob, text_burstiness,
-#   text_heaps_law_fit, text_heldout_perplexity, text_stopword_induction,
-#   text_tfidf_topterm, text_unigram_logprob, weighted_median_price
-#   — then r8-class fill.
-#   (tools/evidence_age.py --plan reproduces this window verbatim.)
-# test_driver_contract.py asserts 40 <= len(PRIORITY) <= 50 — window
-# occupancy is load-bearing.
+# PRIORITY heads the registration order: an outside correctness gate
+# may walk only the first ~50 entries of __spark_entry__.queries(), so
+# the head is explicit (test_driver_contract checks it), not import order.
 PRIORITY: tuple[str, ...] = (
-    # ---- (a) changed-code rows ----
     "dedup_embedding_cosine",
     "dedup_semantic_threshold_calibration",
     "dedup_semantic_clusters",
@@ -147,8 +59,6 @@ PRIORITY: tuple[str, ...] = (
     "orders_theil_sen_trend",
     "quality_drift_psi",
     "table_stats_profile",
-    # ---- (b) r16 additions: none ----
-    # ---- (c) the named r6-class overflow (lexicographic) ----
     "incremental_agg_merge",
     "join_size_preflight",
     "multimodal_blob_dedup",
@@ -172,7 +82,6 @@ PRIORITY: tuple[str, ...] = (
     "tokenize_bpe_apply",
     "train_split_temporal",
     "ts_cusum_changepoints",
-    # ---- (d) r7-class fill (lexicographic) ----
     "attribution_models_compare",
     "attribution_window_sweep",
     "customer_order_regularity",

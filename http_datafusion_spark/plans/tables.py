@@ -21,9 +21,14 @@ applies, which is fine — the relation is resident).
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+from http_datafusion_spark.session import RUNTIME_CONFS
+
+_log = logging.getLogger(__name__)
 
 TABLES = [
     "region",
@@ -42,17 +47,13 @@ TABLES = [
 def _ensure_session_confs(spark: SparkSession) -> None:
     """Queries must behave identically on a session we didn't build
     (the driver harness creates its own): pin the runtime-settable
-    confs the corpus depends on."""
-    for k, v in (
-        ("spark.sql.session.timeZone", "UTC"),  # timestamp-string determinism
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),  # events TIMESTAMP(NANOS)
-        ("spark.sql.parquet.inferTimestampNTZ.enabled", "false"),
-        ("spark.sql.python.filterPushdown.enabled", "true"),
-    ):
+    confs the corpus depends on (``session.RUNTIME_CONFS``). A conf the
+    session refuses is logged as a warning and the rest are still set."""
+    for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:  # noqa: BLE001 — non-settable on some builds; best effort
-            pass
+        except Exception as e:  # noqa: BLE001 — non-settable on some builds
+            _log.warning("could not set %s=%s on the session: %r", k, v, e)
 
 
 # DataFrame memo stored ON the session object (dies with it — safe
@@ -128,10 +129,9 @@ def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # the ~1.7e18 ns value through a double whose 53-bit mantissa
             # drops the low bits, leaving ~13% of stamps off by 1µs.
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if name in DIM_TABLES and os.environ.get("SPARK_GRAFT_DIM_CACHE", "1") != "0":
-        # Pin the dims: constant-size, re-joined by nearly every query.
-        # MEMORY_ONLY — a few MB even at sf10. SPARK_GRAFT_DIM_CACHE=0
-        # disables for A/B measurement (numbers in BASELINE.md).
+    if name in DIM_TABLES:
+        # Pin the dims: constant-size (a few MB even at sf10), re-joined
+        # by nearly every query.
         df = df.cache()
     cache[key] = df
     return df

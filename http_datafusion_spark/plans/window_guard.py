@@ -1,8 +1,8 @@
 """Structural guard against corpus-sized keyed window sorts.
 
-The round-8 verdict's one remaining scale-killer class (VERDICT r8,
-"What's wrong" #1): a ranking window — ``row_number()/rank()/
-dense_rank() OVER (PARTITION BY k ORDER BY ...)`` — whose partition key
+The scale-killer class it guards against: a ranking window —
+``row_number()/rank()/dense_rank() OVER (PARTITION BY k ORDER BY ...)``
+— whose partition key
 has few distinct values by construction (an eval probe set, a literal
 grid) while the partition CONTENTS are corpus-sized. Spark hashes the
 key onto |distinct k| reducers; at 100 TB each reducer sorts terabytes.

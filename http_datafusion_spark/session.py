@@ -1,18 +1,17 @@
 """SparkSession factory tuned for this engine.
 
-Local mode (`local[N]`) is the test/bench harness; the configs below
-are chosen so the same code runs unmodified on a multi-executor
-cluster at 100 TB scale:
+Local mode (`local[N]`) with N = `cpus` (default `SPARK_GRAFT_CPUS`,
+else the machine's core count):
 
 - AQE on (runtime coalescing, skew-join splitting, dynamic join
-  re-selection) — the single most important knob for unknown data
-  distributions at scale;
-- shuffle partitions sized to cores locally; at cluster scale AQE's
-  coalescing makes the initial number far less sensitive;
+  re-selection);
+- shuffle partitions sized to cores;
 - Arrow transfer enabled so the Pandas-UDF operators (dedup,
   similarity, multimodal) move batches, not rows;
-- UTC session timezone so results are reproducible and comparable
-  with the DuckDB oracle;
+- the runtime confs every query depends on (`RUNTIME_CONFS`: UTC
+  session timezone, parquet timestamp reading, DataSource filter
+  pushdown), which `plans/tables.py` also sets on a session the engine
+  did not build;
 - a generated-class cache of 2048 entries
   (`spark.sql.codegen.cache.maxEntries`; Spark's default is 100). At
   sf0.01 the 53 `bench` + `bench_extra` queries compile 1 027 classes
@@ -30,6 +29,17 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Runtime-settable confs every query depends on, whoever built the session.
+RUNTIME_CONFS: dict[str, str] = {
+    "spark.sql.session.timeZone": "UTC",  # timestamp-string determinism
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    # The events table stores TIMESTAMP(NANOS) which Spark's parquet
+    # reader rejects; read as raw int64 ns and convert in the loader.
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Let the httpjson Python DataSource participate in filter pushdown.
+    "spark.sql.python.filterPushdown.enabled": "true",
+}
+
 
 def get_spark(
     app_name: str = "http_datafusion_spark",
@@ -45,7 +55,6 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # The bench queries' 1 027 generated classes, with headroom (docstring).
         .config("spark.sql.codegen.cache.maxEntries", "2048")
@@ -66,14 +75,8 @@ def get_spark(
         .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "32m")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        # The events table stores TIMESTAMP(NANOS) which Spark's parquet
-        # reader rejects; read as raw int64 ns and convert in the loader.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # Let the httpjson Python DataSource participate in filter pushdown.
-        .config("spark.sql.python.filterPushdown.enabled", "true")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**RUNTIME_CONFS, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

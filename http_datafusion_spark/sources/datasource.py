@@ -319,16 +319,6 @@ class HttpJsonStreamReader(SimpleDataSourceStreamReader):
         return self._tuples(rows)
 
 
-def _coerce(v):
-    """JSON value -> something Spark's row converter accepts; nested
-    objects pass through as dicts (StructType) / lists (ArrayType)."""
-    if isinstance(v, dict):
-        return {k: _coerce(x) for k, x in v.items()}
-    if isinstance(v, list):
-        return [_coerce(x) for x in v]
-    return v
-
-
 def _int_guard(v):
     """Integer-typed field: refuse LOSSY float coercion loudly.
 
@@ -350,26 +340,31 @@ def _int_guard(v):
 
 
 def _coercer_for(dt):
-    """Schema-aware converter for one field type, built once per read.
+    """Schema-aware converter for one field type, built once per read, or
+    None when values of the type pass through as they are.
 
     Recurses into struct/array types so a nested fractional float in an
-    integer-typed nested field is caught too; all other types take the
-    generic passthrough."""
+    integer-typed nested field is caught too; every other leaf, and every
+    struct key the schema does not list, passes through unchanged."""
     from pyspark.sql.types import ArrayType, ByteType, IntegerType, LongType, ShortType, StructType
 
     if isinstance(dt, (LongType, IntegerType, ShortType, ByteType)):
         return _int_guard
     if isinstance(dt, StructType):
-        subs = {f.name: _coercer_for(f.dataType) for f in dt.fields}
+        subs = {f.name: c for f in dt.fields if (c := _coercer_for(f.dataType))}
+        if not subs:
+            return None
 
         def conv_struct(v, subs=subs):
             if not isinstance(v, dict):
                 return v
-            return {k: (subs[k](x) if k in subs else _coerce(x)) for k, x in v.items()}
+            return {k: (subs[k](x) if k in subs else x) for k, x in v.items()}
 
         return conv_struct
     if isinstance(dt, ArrayType):
         elem = _coercer_for(dt.elementType)
+        if elem is None:
+            return None
 
         def conv_array(v, elem=elem):
             if not isinstance(v, list):
@@ -377,17 +372,17 @@ def _coercer_for(dt):
             return [elem(x) for x in v]
 
         return conv_array
-    return _coerce
+    return None
 
 
 def _tuple_converter(schema: StructType):
     """Row -> the schema-ordered tuple the reader yields, each field
-    through its type's coercer (built once per read)."""
+    through its type's coercer, if it has one (built once per read)."""
     convs = [(f.name, _coercer_for(f.dataType)) for f in schema.fields]
 
     def to_tuple(row) -> tuple:
         r = _record(row)
-        return tuple(conv(r.get(name)) for name, conv in convs)
+        return tuple(r.get(name) if conv is None else conv(r.get(name)) for name, conv in convs)
 
     return to_tuple
 

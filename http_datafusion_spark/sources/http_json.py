@@ -495,7 +495,7 @@ def fetch_json_conditional(
       call to an unconditional fetch).
 
     The retry/Retry-After discipline is the SAME loop fetch_json uses
-    (``_request_with_retries``, r11 ADVICE item 2) with a 304
+    (``_request_with_retries``) with a 304
     short-circuit — a transient 429/503 during a periodic conditional
     refresh backs off and retries instead of killing the refresh
     (requests treats 304 as a non-exceptional response with an empty

@@ -653,7 +653,7 @@ def stream_incremental_minhash(
         q.awaitTermination(30)
     # materialize the result, then reclaim the run-scoped scratch dirs —
     # repeated gate/test runs must not grow /tmp unboundedly
-    out = spark.read.parquet(matches_path).transform(pin, eager=True)
+    out = spark.read.parquet(matches_path).transform(pin)
     for d in (store_path, matches_path, ckpt_path):
         shutil.rmtree(d, ignore_errors=True)
     return out
@@ -876,7 +876,7 @@ def stream_snapshot_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     merged = functools.reduce(lambda a, b: a.unionByName(b), outs)
-    result = merged.transform(pin, eager=True)
+    result = merged.transform(pin)
     shutil.rmtree(root, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
     return result
@@ -1078,7 +1078,7 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.col("keep").cast("int")) * 1.0 / F.count(F.lit(1)), 6
             ).alias("keep_rate"),
         )
-        .transform(pin, eager=True)
+        .transform(pin)
     )
     shutil.rmtree(out_path, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
@@ -1094,7 +1094,7 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ts-range staging, which replays in perfect order and can never drop
 # anything).
 #
-# Jitter geometry (r10 fix): Spark 4.1's stateful late filter uses
+# Jitter geometry: Spark 4.1's stateful late filter uses
 # watermarkForLateEvents, which is the EVICTION watermark of the
 # PREVIOUS batch — i.e. a batch-b row is dropped iff its window end
 # <= max-event-time(batches <= b-2) - slack (SPARK-40925 split the
@@ -1105,9 +1105,9 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # table spans ~30 days, so arrival span = 30d + 2J and bucket_span =
 # span/6; J = 5 days gives 2J = 10d vs bucket ~6.7d — real drops in
 # every replay (pinned by tests/test_streaming.py's
-# numRowsDroppedByWatermark assertion). The old +-6h jitter could
-# never out-lag the one-batch watermark delay, so nothing was dropped
-# and the eager-drop oracle was wrong (r9 VERDICT "What's wrong" #1).
+# numRowsDroppedByWatermark assertion). A +-6h jitter could never
+# out-lag the one-batch watermark delay, so nothing would be dropped
+# and an eager-drop oracle would be wrong.
 WM_ARRIVAL_FILES = 6
 WM_SLACK_SEC = 1799  # odd on purpose: never ties an hour-aligned window end
 WM_WINDOW_SEC = 3600
@@ -1116,7 +1116,7 @@ WM_JITTER_SEC = 432_000  # +-5d arrival jitter: rows land >=2 batches late
 # Filled by stream_watermark_late_drop on each run: the per-microbatch
 # progress dicts, so tests can pin that numRowsDroppedByWatermark > 0
 # actually fired (a drop oracle over a stream that never drops proves
-# nothing — r9 VERDICT task 1).
+# nothing).
 WM_LAST_PROGRESS: list = []
 
 
@@ -1299,15 +1299,15 @@ def stream_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------- watermark conformance matrix
 
 # (label, slack_sec, jitter_sec). Three geometries spanning the
-# behavior space the r9 bug lived in:
+# behavior space of the late-drop model:
 #   - drop_j5d_s30m: the repaired late-drop geometry — rows land >=2
 #     batches out of event-time order, drops fire in every replay.
-#   - nodrop_j6h_s30m: the EXACT r9 geometry (±6h jitter vs ~5-day
+#   - nodrop_j6h_s30m: ±6h jitter vs ~5-day
 #     arrival buckets). Under the wrong eager-drop model this config
 #     "drops" rows; under Spark's real two-watermark semantics nothing
 #     can ever be late enough — the model must predict ZERO drops and
 #     every closed window intact. Keeping it in the matrix pins the
-#     distinction that made r9's oracle red.
+#     distinction an eager-drop oracle gets wrong.
 #   - drop_j5d_s4h: same disorder, 4h slack — slack widening must
 #     monotonically reduce drops (checked in tests/test_streaming.py).
 WM_CONFORMANCE_CONFIGS: tuple[tuple[str, int, int], ...] = (

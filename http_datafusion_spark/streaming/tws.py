@@ -92,8 +92,7 @@ class SessionProcessor(StatefulProcessor):
             # Normalize explicitly through datetime64[ns] — pandas 2.x
             # Arrow conversion may deliver datetime64[us], and a bare
             # .astype('int64') on that would be µs already, making the
-            # //1000 below shear the gap math by 1000× (r11 ADVICE
-            # item 3).
+            # //1000 below shear the gap math by 1000×.
             ns = pd.to_datetime(pdf["ts"]).astype("datetime64[ns]").astype("int64")
             for us in sorted(ns // 1_000):
                 us = int(us)

@@ -177,8 +177,8 @@ def test_sql_join_hints_honored(spark, sf_dir):
 
 
 def test_compare_harness_decimal_float_rendering_split():
-    """Regression for the CORRECTNESS_r06 red row: a Spark DECIMAL(18,3)
-    value ('3.410') vs a DuckDB double (3.41) is numerically equal but
+    """Regression for a row the hash-compare gate marked red: a Spark
+    DECIMAL(18,3) value ('3.410') vs a DuckDB double (3.41) is numerically equal but
     hash-divergent in the driver (it hashes rendered values). The local
     harness must never call such a pair 'exact' again — compare.py's old
     float() coercion did, which is how quality_model_score shipped red

@@ -433,3 +433,61 @@ def test_explicit_double_schema_is_the_widening_path(spark, widen_url):
     )
     got = {r.wid: r.amt for r in df.collect()}
     assert got == {1: 10.0, 2: 30.5, 3: None}
+
+
+# -------------------- nested values pass through the reader unchanged
+
+NESTED_ROWS = [
+    {"nid": 1, "meta": {"src": "api", "w": 2.5, "n": 3, "inner": {"k": "v"}}, "tags": ["a", "b"]},
+    {"nid": 2, "meta": {"src": "feed", "w": 1.0, "n": 4, "inner": {"k": "u"}}, "tags": []},
+]
+
+
+class _NestedHandler(BaseHTTPRequestHandler):
+    def log_message(self, *args):
+        pass
+
+    def do_GET(self):  # noqa: N802
+        q = parse_qs(urlparse(self.path).query)
+        body = json.dumps(NESTED_ROWS if q.get("page", ["1"])[0] == "1" else []).encode()
+        self.send_response(200)
+        self.end_headers()
+        self.wfile.write(body)
+
+
+@pytest.fixture(scope="module")
+def nested_url(spark):
+    from http_datafusion_spark.sources.datasource import register
+
+    register(spark)
+    srv = HTTPServer(("127.0.0.1", 0), _NestedHandler)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    yield f"http://127.0.0.1:{srv.server_port}/nested"
+    srv.shutdown()
+
+
+def test_nested_object_and_string_list_round_trip(spark, nested_url):
+    """A nested object (an integer leaf, float and string leaves, a
+    struct inside it) and a string list come out of the reader with
+    their values intact, inferred and with a schema that lists only
+    some struct keys."""
+    df = _read(spark, nested_url, startPage=1, endPage=1, pageSize=2)
+    got = {
+        r.nid: (r.meta.src, r.meta.w, r.meta.n, r.meta.inner.k, r.tags)
+        for r in df.collect()
+    }
+    assert got == {1: ("api", 2.5, 3, "v", ["a", "b"]), 2: ("feed", 1.0, 4, "u", [])}
+
+    narrow = (
+        spark.read.format("httpjson")
+        .schema("nid bigint, meta struct<src: string>, tags array<string>")
+        .option("url", nested_url)
+        .option("startPage", 1)
+        .option("endPage", 1)
+        .option("pageSize", 2)
+        .load()
+    )
+    assert {r.nid: (r.meta.src, r.tags) for r in narrow.collect()} == {
+        1: ("api", ["a", "b"]),
+        2: ("feed", []),
+    }

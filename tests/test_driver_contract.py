@@ -1,4 +1,4 @@
-"""Guards on the two artifacts the round driver consumes directly:
+"""Guards on the two artifacts an outside harness consumes directly:
 ``__spark_entry__`` (entry/queries/oracle_sql shape) and ``bench.py``
 (one parseable JSON line on stdout).
 """
@@ -20,13 +20,10 @@ def test_spark_entry_contract(spark):
     qs, osql = E.queries(), E.oracle_sql()
     assert len(qs) >= 90
     assert set(osql) <= set(qs)
-    # The driver's correctness gate walks registration order and
-    # empirically checks the first ~50 entries: that window must hold
-    # the declared PRIORITY head (never-driver-checked names + this
-    # round's changed operators), in order. The upper bound is a HARD
-    # <= 50: round 3 shipped q_bucketed_join at PRIORITY position 51
-    # and the driver silently recorded only 50 rows — window occupancy
-    # must be load-bearing, not hopeful.
+    # An outside correctness gate may walk registration order and check
+    # only the first ~50 entries: that window must hold the declared
+    # PRIORITY head, in order. The upper bound is a HARD <= 50: a name
+    # at position 51 is silently left unchecked by such a gate.
     from http_datafusion_spark.plans.registry import PRIORITY
 
     assert 40 <= len(PRIORITY) <= 50
@@ -56,8 +53,8 @@ def test_bench_final_line_is_compact_headline_json():
     lines = [l for l in out.stdout.strip().splitlines() if l.strip()]
     # Every stdout line must parse as JSON on its own (the driver's
     # bounded tail capture may land anywhere), and the LAST line is the
-    # compact headline contract — no band (BENCH_r04's parsed:null came
-    # from the band outgrowing the capture window).
+    # compact headline contract — no band (a band-bearing line once
+    # outgrew the capture window and parsed as null).
     for l in lines:
         json.loads(l)
     payload = json.loads(lines[-1])
@@ -71,8 +68,8 @@ def test_bench_headline_line_stays_inside_tail_capture():
     # The full 27-query headline line must stay well under the driver's
     # tail-capture window. Reconstruct the worst-case final line from
     # the real bench set with pessimistic 4-digit-second timings and
-    # bound its length. (r04's band-bearing line measured ~2.9 KB and
-    # was truncated; the compact line must keep ample margin.)
+    # bound its length. (A band-bearing line measured ~2.9 KB and was
+    # truncated; the compact line must keep ample margin.)
     from http_datafusion_spark.plans.registry import all_queries
 
     bench = sorted(n for n, s in all_queries().items() if "bench" in s.tags)
@@ -100,22 +97,3 @@ def test_bench_set_is_oracle_checked_and_stable():
     assert len(bench) == 27, f"bench set changed: {sorted(bench)}"
     assert all(qs[n].oracle for n in bench)
 
-
-def test_no_evidence_rows_are_in_window():
-    """Evidence-age policy (BASELINE.md r12): every registry row with
-    no driver-green CORRECTNESS record yet must sit in the CURRENT
-    priority window — a new operator cannot silently skip the driver
-    gate. (The age-alert half lives in tools/evidence_age.py, kept out
-    of CI so a driver outage can't retroactively fail the suite.)"""
-    from http_datafusion_spark.plans.registry import PRIORITY, all_queries
-    from tools.evidence_age import latest_green_rounds
-
-    latest, _ = latest_green_rounds()
-    names = list(all_queries())
-    never = [n for n in names if n not in latest]
-    window = set(PRIORITY)
-    uncovered = [n for n in never if n not in window]
-    assert not uncovered, (
-        f"registry rows with no driver evidence missing from the "
-        f"priority window: {uncovered}"
-    )

@@ -1,10 +1,9 @@
 """functions/pinning.py — the centralized materialization primitive.
 
-The default (local) mode is exercised by every pinned plan in the
-suite; these tests pin the three cluster-facing branches the r16
-refactor introduced (persist / reliable / fact_scale) plus the
-config-error path, so a typo'd mode can't silently fall through to
-some default.
+One policy: a bounded frame is an eager ``localCheckpoint`` (lineage
+severed, materialized before ``pin`` returns), a ``fact_scale=True``
+frame a lazy, lineage-recoverable ``MEMORY_AND_DISK`` persist.
+``pin_scope`` releases the pins a thread created inside it.
 """
 
 from __future__ import annotations
@@ -13,7 +12,7 @@ import pytest
 
 from pyspark.storagelevel import StorageLevel
 
-from http_datafusion_spark.functions.pinning import PIN_DIR_KEY, PIN_MODE_KEY, pin
+from http_datafusion_spark.functions.pinning import pin
 
 
 @pytest.fixture
@@ -21,13 +20,7 @@ def df(spark):
     return spark.range(10).selectExpr("id", "id * 2 AS v")
 
 
-def _reset(spark):
-    spark.conf.unset(PIN_MODE_KEY)
-    spark.conf.unset(PIN_DIR_KEY)
-
-
 def test_local_mode_severs_lineage_and_matches_values(spark, df):
-    _reset(spark)
     out = df.transform(pin)
     # localCheckpoint replaces the logical plan with an RDD scan leaf
     plan = out._jdf.queryExecution().optimizedPlan().toString()
@@ -36,7 +29,6 @@ def test_local_mode_severs_lineage_and_matches_values(spark, df):
 
 
 def test_local_mode_storage_override(spark, df):
-    _reset(spark)
     out = df.transform(pin, storage=StorageLevel.DISK_ONLY)
     assert sorted(r.v for r in out.collect()) == [2 * i for i in range(10)]
     # the checkpoint's blocks must carry the requested level
@@ -49,7 +41,6 @@ def test_local_mode_storage_override(spark, df):
 
 
 def test_fact_scale_is_lineage_recoverable_persist(spark, df):
-    _reset(spark)
     out = df.transform(pin, fact_scale=True)
     try:
         # persist keeps lineage: the optimized plan still shows the range,
@@ -63,81 +54,20 @@ def test_fact_scale_is_lineage_recoverable_persist(spark, df):
         out.unpersist()
 
 
-def test_persist_mode_is_replicated(spark, df):
-    _reset(spark)
-    spark.conf.set(PIN_MODE_KEY, "persist")
-    try:
-        out = df.transform(pin)
-        # MEMORY_AND_DISK_2: replicated so a lost executor's blocks
-        # survive on the replica (the cluster story of the r15 verdict)
-        assert out.storageLevel.replication == 2
-        assert sorted(r.v for r in out.collect()) == [2 * i for i in range(10)]
-        out.unpersist()
-    finally:
-        _reset(spark)
-
-
-def test_reliable_mode_without_dir_raises_naming_the_key(spark, df):
-    """r16 ADVICE: a reliable pin with no dir configured anywhere must
-    fail with the repo's config key in the message, not Spark's generic
-    'checkpoint directory has not been set'. Must run BEFORE any test
-    that sets a session checkpoint dir (it can't be unset)."""
-    _reset(spark)
-    if spark.sparkContext.getCheckpointDir() is not None:
-        pytest.skip("a session-level checkpoint dir is already set")
-    spark.conf.set(PIN_MODE_KEY, "reliable")
-    try:
-        with pytest.raises(ValueError, match=PIN_DIR_KEY):
-            df.transform(pin)
-    finally:
-        _reset(spark)
-
-
-def test_reliable_mode_checkpoints_to_dir(spark, df, tmp_path):
-    _reset(spark)
-    spark.conf.set(PIN_MODE_KEY, "reliable")
-    spark.conf.set(PIN_DIR_KEY, str(tmp_path / "ck"))
-    try:
-        out = df.transform(pin)
-        assert sorted(r.v for r in out.collect()) == [2 * i for i in range(10)]
-        ckdirs = list((tmp_path / "ck").rglob("*"))
-        assert ckdirs, "reliable pin wrote nothing under the configured dir"
-    finally:
-        _reset(spark)
-
-
-def test_unknown_mode_raises(spark, df):
-    _reset(spark)
-    spark.conf.set(PIN_MODE_KEY, "banana")
-    try:
-        with pytest.raises(ValueError, match="banana"):
-            df.transform(pin)
-    finally:
-        _reset(spark)
-
-
-def test_persist_mode_eager_materializes_before_return(spark, df, tmp_path):
-    """r16 ADVICE (medium): the streaming read-then-delete sites pin a
-    parquet read and then rmtree the source; in persist mode a lazy pin
-    would read deleted files on first action. eager=True must fully
-    materialize in EVERY mode — verified here by deleting the source
-    and still collecting."""
+def test_default_pin_materializes_before_return(spark, df, tmp_path):
+    """The streaming read-then-delete sites pin a parquet read and then
+    rmtree the source: a default pin must be fully materialized before
+    it returns, so collecting after the delete still sees every row."""
     import shutil
 
-    _reset(spark)
     src = str(tmp_path / "src")
     df.write.parquet(src)
-    spark.conf.set(PIN_MODE_KEY, "persist")
-    try:
-        out = spark.read.parquet(src).transform(pin, eager=True)
-        shutil.rmtree(src)
-        assert sorted(r.v for r in out.collect()) == [2 * i for i in range(10)]
-        out.unpersist()
-    finally:
-        _reset(spark)
+    out = spark.read.parquet(src).transform(pin)
+    shutil.rmtree(src)
+    assert sorted(r.v for r in out.collect()) == [2 * i for i in range(10)]
 
 
-# ------------------------- pin lifecycle (r17 verdict, What's-wrong #2)
+# ------------------------- pin lifecycle
 
 
 def _cached_rdd_ids(spark) -> set[int]:
@@ -148,7 +78,6 @@ def _cached_rdd_ids(spark) -> set[int]:
 def test_pin_scope_releases_local_checkpoint_blocks(spark, df):
     from http_datafusion_spark.functions.pinning import pin_scope
 
-    _reset(spark)
     base = _cached_rdd_ids(spark)
     with pin_scope():
         out = df.transform(pin)
@@ -165,7 +94,6 @@ def test_pin_scope_releases_local_checkpoint_blocks(spark, df):
 def test_pin_scope_releases_fact_scale_persist(spark, df):
     from http_datafusion_spark.functions.pinning import pin_scope
 
-    _reset(spark)
     base = _cached_rdd_ids(spark)
     with pin_scope():
         out = df.transform(pin, fact_scale=True)
@@ -182,7 +110,6 @@ def test_pin_outside_scope_is_untracked(spark, df):
     holds a pinned frame across calls is unaffected."""
     from http_datafusion_spark.functions.pinning import _checkpoint_release
 
-    _reset(spark)
     base = _cached_rdd_ids(spark)
     out = df.transform(pin)
     assert sorted(r.v for r in out.collect()) == [2 * i for i in range(10)]
@@ -201,7 +128,6 @@ def test_pin_scope_is_thread_local(spark, df):
 
     from http_datafusion_spark.functions.pinning import pin_scope
 
-    _reset(spark)
     base = _cached_rdd_ids(spark)
     with pin_scope():
         out = df.transform(pin)

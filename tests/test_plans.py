@@ -848,13 +848,11 @@ def test_local_checkpoint_inventory_is_pinned():
     a deliberate, documented reuse materialization — no new fact-scale
     eager materialization can appear without updating this inventory.
 
-    Since r16 the idiom is centralized (VERDICT r15 task 5): every site
-    calls ``functions/pinning.py::pin`` (``.transform(pin)``), which is
-    byte-identical to the old raw ``.localCheckpoint(eager=True)`` in
-    its default mode (adoption verified scan-audit-histogram-identical)
-    but carries the cluster story — replicated persist / reliable
-    checkpoint dir by config — in ONE place. Raw ``localCheckpoint``
-    calls outside pinning.py are banned outright (asserted below).
+    The idiom is centralized: every site calls
+    ``functions/pinning.py::pin`` (``.transform(pin)``), which for a
+    bounded frame is the raw ``.localCheckpoint(eager=True)`` and keeps
+    the pin policy in ONE place. Raw ``localCheckpoint`` calls outside
+    pinning.py are banned outright (asserted below).
 
     Audit of the pinned sites (what each checkpoints and why it is
     bounded or a sound trade):
@@ -1009,7 +1007,7 @@ def test_local_checkpoint_inventory_is_pinned():
                 raw[rel] = r
     assert raw == {}, (
         "raw .localCheckpoint() call outside functions/pinning.py — use "
-        f"pin() (df.transform(pin)) so the cluster story stays central: {raw}"
+        f"pin() (df.transform(pin)) so the pin policy stays central: {raw}"
     )
     # pipeline.py gained 2 vs the r15 raw-call inventory: two pre-r15
     # sites spelled the idiom `.localCheckpoint()` (bare, eager by
@@ -1513,3 +1511,30 @@ def test_spread_docs_is_scale_adaptive(spark, sf_dir):
             assert spread_docs(mid) is mid, "spread_docs narrowed a wider scan"
         finally:
             spark.conf.set(shuffle_key, str(n_shuffle))
+
+
+def test_refused_session_conf_is_logged_and_the_rest_are_set(caplog):
+    """A session that refuses one runtime conf gets a warning naming the
+    key and the exception; the loader still sets every other conf."""
+    import logging
+    from types import SimpleNamespace
+
+    from http_datafusion_spark.plans.tables import _ensure_session_confs
+    from http_datafusion_spark.session import RUNTIME_CONFS
+
+    refused = "spark.sql.legacy.parquet.nanosAsLong"
+    applied: dict[str, str] = {}
+
+    def set_conf(k: str, v: str) -> None:
+        if k == refused:
+            raise RuntimeError("cannot modify the value of a static config")
+        applied[k] = v
+
+    stub = SimpleNamespace(conf=SimpleNamespace(set=set_conf))
+    with caplog.at_level(logging.WARNING, logger="http_datafusion_spark.plans.tables"):
+        _ensure_session_confs(stub)
+    assert applied == {k: v for k, v in RUNTIME_CONFS.items() if k != refused}
+    [record] = [r for r in caplog.records if r.name == "http_datafusion_spark.plans.tables"]
+    assert record.levelno == logging.WARNING
+    msg = record.getMessage()
+    assert refused in msg and "RuntimeError" in msg and "static config" in msg

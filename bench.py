@@ -6,16 +6,16 @@ local[$SPARK_GRAFT_CPUS] and prints JSON to stdout, LAST line compact:
     {"metric": "...", "value": <total sec>, "unit": "sec",
      "queries": {name: sec, ...}, "value_min": ..., "sf": <sf>}
 
-(The per-query variance band is a separate, preceding JSON line — the
-driver's bounded tail capture parses the last line, and round 4 showed
-a single band-bearing line outgrows that window: BENCH_r04 recorded
-parsed:null. Every stdout line is valid JSON on its own.)
+(The per-query variance band is a separate, preceding JSON line: a
+reader with a bounded tail capture parses the last line, and a single
+line that also carries the band outgrew that window once and parsed as
+nothing. Every stdout line is valid JSON on its own.)
 
 Each query is timed to FULL materialization: a noop-format write,
 which evaluates every output expression on every row and discards the
 bytes. (Timing ``.count()`` instead lets Catalyst prune expressions
 the count doesn't need — measured 3-7x under-reporting on agg/window/
-map-tailed queries at sf0.1, see BASELINE.md "honest sink" note.)
+map-tailed queries at sf0.1 on 32 cores.)
 Median of RUNS warm runs after one cold run that pays JVM/codegen
 warmup. Set BENCH_QUERIES=name1,name2 to restrict, BENCH_RUNS=n to
 change repetitions.
@@ -23,10 +23,9 @@ change repetitions.
 The JSON carries a per-query variance band ("band": {name: [min,
 median, max]}) so a loaded machine is distinguishable from a real
 regression: on an idle box max/min stays within ~1.3x for the
-sub-second floor-bound queries; a contended run (e.g. the round
-driver running next to other work) inflates max >> median while min
-stays near the idle wall. Compare BANDS across rounds, not bare
-medians — see BASELINE.md "reading the variance band".
+sub-second floor-bound queries; a contended run (other work on the
+box) inflates max >> median while min stays near the idle wall.
+Compare BANDS between runs, not bare medians.
 """
 
 from __future__ import annotations
@@ -75,9 +74,8 @@ def main() -> None:
         timed region covers plan build + pin materialization + the noop
         write (t0 precedes spec.spark); each execution is wrapped in a
         pin_scope so the PREVIOUS execution's pinned blocks are released
-        OUTSIDE the timed region (r17-verdict pin-lifecycle fix —
-        storage stays flat across the run; the measured work per sample
-        is unchanged: every sample still builds and pins from scratch).
+        OUTSIDE the timed region, so storage stays flat across the run;
+        every sample still builds and pins from scratch.
         """
         t: dict[str, float] = {}
         b: dict[str, list[float]] = {}
@@ -106,12 +104,10 @@ def main() -> None:
     total_min = round(sum(b[0] for b in bands.values()), 4)
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
 
-    # Additions-only evidence channel (r17 verdict task 6): the
-    # optimization rounds' touched queries carry a "bench_extra" tag; a
-    # full bench run times them with the same sink/warmup/median
-    # protocol and emits them as their OWN JSON line so the driver's
-    # PERF comparison can score optimized queries round-over-round.
-    # The headline set and the compact LAST line are untouched.
+    # Queries tagged "bench_extra" (the optimized, build-heavy set) are
+    # timed on a full run with the same sink/warmup/median protocol and
+    # emitted as their OWN JSON line, so the headline set and the
+    # compact LAST line stay comparable between runs.
     if not only:
         extra = sorted(
             n
@@ -138,8 +134,8 @@ def main() -> None:
     # Two stdout lines, BOTH valid JSON. The driver tail-captures stdout
     # with a bounded window and parses the LAST line, so the last line
     # must stay compact: headline + per-query medians only. The variance
-    # band (3 floats per query — what overflowed the window and left
-    # BENCH_r04 with parsed:null) goes on its own preceding line.
+    # band (3 floats per query, which overflowed that window when it
+    # shared the last line) goes on its own preceding line.
     print(json.dumps({"detail": "per_query_band_min_median_max", "band": bands, "sf": sf_val}))
     print(
         json.dumps(

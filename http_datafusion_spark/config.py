@@ -38,6 +38,12 @@ class Pagination:
     page_size_param: str = "limit"
     page_size_default: int = 10
 
+    @property
+    def effective_page_size(self) -> int:
+        """The size every page request asks for: ``page_size``, or
+        ``page_size_default`` when ``page_size`` is 0."""
+        return self.page_size or self.page_size_default
+
 
 @dataclass
 class CursorPagination:
@@ -86,18 +92,38 @@ _PAGING_MODES = {
 }
 
 
-def _paging_block(key: str, raw: dict[str, Any] | None) -> Paging | None:
-    """One pagination block from its config mapping. Unknown keys are an
-    error. A null value means None where the field admits None (so
-    ``end_page: null`` is open-ended) and the field's default elsewhere."""
+def _paging_block(source: Any, key: str, raw: Any) -> Paging | None:
+    """One pagination block of source ``source`` from its config mapping.
+    Unknown keys are an error. A null value means None where the field
+    admits None (so ``end_page: null`` is open-ended) and the field's
+    default elsewhere. Integer fields are parsed with ``int()`` here, so
+    ``start_page: "2"`` works and ``start_page: x`` fails at load time
+    rather than at fetch time; every other field must be a string."""
     if raw is None:
         return None
+    where = f"source {source!r}"
+    if not isinstance(raw, dict):
+        raise ConfigError(f"{where}: {key} must be a mapping, got {type(raw).__name__}")
     cls = _PAGING_MODES[key]
-    nullable = {f.name: "None" in str(f.type) for f in fields(cls)}
-    unknown = set(raw) - set(nullable)
+    types = {f.name: str(f.type) for f in fields(cls)}
+    unknown = set(raw) - set(types)
     if unknown:
-        raise ConfigError(f"unknown {key} keys: {sorted(unknown)}")
-    return cls(**{k: v for k, v in raw.items() if v is not None or nullable[k]})
+        raise ConfigError(f"{where}: unknown {key} keys: {sorted(unknown)}")
+    values = {}
+    for k, v in raw.items():
+        if v is None:
+            if "None" in types[k]:
+                values[k] = None
+            continue
+        if types[k].startswith("int"):
+            try:
+                v = int(v)
+            except (TypeError, ValueError):
+                raise ConfigError(f"{where}: {key}.{k} must be an integer, got {v!r}") from None
+        elif not isinstance(v, str):
+            raise ConfigError(f"{where}: {key}.{k} must be a string, got {type(v).__name__}")
+        values[k] = v
+    return cls(**values)
 
 
 def _expand_env(value: str, where: str) -> str:
@@ -132,6 +158,13 @@ class Source:
     body: Any | None = None
 
     def __post_init__(self) -> None:
+        for key in ("name", "url", "method", "sql"):
+            value = getattr(self, key)
+            if value is not None and not isinstance(value, str):
+                raise ConfigError(
+                    f"source {self.name!r}: {key!r} must be a string, "
+                    f"got {type(value).__name__}"
+                )
         if not self.name:
             raise ConfigError("source requires a non-empty 'name'")
         if not self.url:
@@ -173,12 +206,12 @@ class Source:
         known = {f.name for f in fields(cls)}
         unknown = set(raw) - known
         if unknown:
-            raise ConfigError(f"source has unknown keys: {sorted(unknown)}")
+            raise ConfigError(f"source {raw.get('name')!r} has unknown keys: {sorted(unknown)}")
         return cls(
             name=raw.get("name", ""),
             url=raw.get("url", ""),
             method=raw.get("method") or "GET",
-            **{m: _paging_block(m, raw.get(m)) for m in _PAGING_MODES},
+            **{m: _paging_block(raw.get("name"), m, raw.get(m)) for m in _PAGING_MODES},
             sql=raw.get("sql"),
             headers=raw.get("headers"),
             body=raw.get("body"),

@@ -80,7 +80,7 @@ def run_source(
             .option("method", source.method)
             .option("startPage", pag.start_page)
             .option("endPage", pag.end_page)
-            .option("pageSize", pag.page_size)
+            .option("pageSize", pag.effective_page_size)
             .option("pageParam", pag.page_param)
             .option("pageSizeParam", pag.page_size_param)
             .option("numPartitions", spark.sparkContext.defaultParallelism)

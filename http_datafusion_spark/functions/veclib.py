@@ -2,7 +2,7 @@
 
 Higher-order Spark expressions (``zip_with`` + ``aggregate``) evaluate
 interpreted — outside whole-stage codegen — and measured ~17-20x slower
-than vectorized numpy on this repo's own benchmarks (BASELINE.md). These
+than vectorized numpy on this repo's own benchmarks (32 cores). These
 kernels replace them in the hot paths while keeping **bit-identical**
 results to a sequential left fold, which is what both DuckDB's
 ``list_sum(list_transform(...))`` oracle and Spark's ``F.aggregate``

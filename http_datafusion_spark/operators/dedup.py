@@ -869,14 +869,14 @@ def embedding_pairs_ivf(
     O(chunk x sub-block) at any bucket size and parallelism is
     K x nb(nb+1)/2 tasks, not K. Hydrating candidate
     PAIRS through two vec_id joins and scored them with the
-    interpreted JVM fold (~17-20x slower than the vectorized kernel,
-    BASELINE.md) measured 363 s at sf1 for this function's main
+    interpreted JVM fold (~17-20x slower than the vectorized kernel)
+    measured 363 s at sf1 on 32 cores for this function's main
     consumer vs ~12 s with the tile kernel, IDENTICAL output (same
     candidate set, same left-fold accumulation, same 4dp rounding; the
     SQL oracle is untouched).
 
     Why the quantizer stays at K fixed centroids rather than a
-    scale-adaptive sample-trained k-means (measured, BASELINE.md): every
+    scale-adaptive sample-trained k-means (measured): every
     true pair of this corpus lies at cosine 0.40-0.51 — the noise
     floor — so recall collapses under any sub-cluster partitioning
     (K=sqrt(N) hash-seeded: 0.76; 5-iter Lloyd-trained: 0.88; both

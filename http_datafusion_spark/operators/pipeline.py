@@ -2727,7 +2727,7 @@ def curriculum_stage_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Materialize the per-doc aggregate ONCE: the
     # count below plus bucketed_global_rank's boundary-sketch and rank
     # passes would otherwise each re-derive the whole token-explode +
-    # vocab-join + NLL aggregation (the BASELINE "two corpus token
+    # vocab-join + NLL aggregation (a measured "two corpus token
     # passes" was partly this). Unlike histogram_equi_depth — whose
     # input re-derivation is a pushed-down 3-column parquet scan, so
     # checkpointing was dropped — this lineage is the expensive part,

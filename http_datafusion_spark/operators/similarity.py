@@ -7,7 +7,7 @@ Two tiers:
   JVM-side fold (``zip_with`` + ``aggregate``) against a broadcast
   1-row query vector, so the scan is shuffle-free and the top-k is
   Catalyst's TakeOrderedAndProject (per-partition heaps, no global
-  sort). Measured on this box (BASELINE.md): for a LINEAR numeric
+  sort). Measured on 32 cores: for a LINEAR numeric
   scan the JVM fold beats an Arrow-batched numpy kernel (0.35 s vs
   0.56 s warm at 100k x 64) because the Python path pays per-batch
   Arrow serialization of the embedding column; numpy kernels win for

@@ -867,7 +867,7 @@ def tokenize_to_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     #     O(prefix) per doc, not a second full split) — its
     #     collect_list carries <= 8 elements per doc.
     # Both shuffles land hash-partitioned on doc_id, so the final join
-    # adds no exchange. Measured 17.6 -> 12.7 s at sf5 (BASELINE.md).
+    # adds no exchange. Measured 17.6 -> 12.7 s at sf5 on 32 cores.
     oov = tok_by_word.join(F.broadcast(vocab), "word", "left").select(
         "doc_id", F.col("vocab_id").isNull().cast("int").alias("is_oov")
     )

@@ -349,7 +349,7 @@ MAD_K = 3.0  # |x - median| > K * MAD flags an outlier
     f"100 TB is the one genuinely hard op here — the approx path is q_agg_approx's "
     f"percentile sketch; this row is the exact small-keyspace form)",
     tags=("timeseries", "bench"),
-    # Proxy-bench formulation (fair-baseline policy, see BASELINE.md):
+    # Proxy-bench formulation (fair-baseline policy, see registry.QuerySpec):
     # the window-median in the ANSI oracle re-sorts each partition per
     # row group and grew x9 on x5 data in DuckDB; the keyed GROUP BY
     # median + join is the plan DuckDB would want (2.4 s vs 5.6 s at

@@ -12,7 +12,7 @@ tables (region/nation/customer/supplier/part) are ``.cache()``d at
 first load per (session, sf_dir, file-mtime): they are constant-size
 by the star schema's design, every join head re-reads them, and on a
 real cluster pinning the dims in executor memory is the standard
-pattern — the q9 warm-latency decomposition (BASELINE.md) measured
+pattern — the q9 warm-latency decomposition (32 cores, sf0.1) measured
 ~0.15-0.2 s/query of repeated dim scan + broadcast-build cost that
 this removes. Caching swaps the parquet scan for an InMemoryTableScan
 (still column-pruned + filtered; pushdown to parquet no longer

@@ -85,13 +85,16 @@ def _norm_options(options: dict) -> dict:
 
 
 def _pagination_from_options(options: dict) -> Pagination:
+    """The reader's Pagination; an option left unset keeps the config
+    default, except ``endPage``, whose absence means open-ended."""
     o = _norm_options(options)
+    d = Pagination()
     return Pagination(
-        start_page=int(o.get("startpage", 1)),
+        start_page=int(o.get("startpage", d.start_page)),
         end_page=int(o["endpage"]) if o.get("endpage") is not None else None,
-        page_size=int(o.get("pagesize", 10)),
-        page_param=o.get("pageparam", "page"),
-        page_size_param=o.get("pagesizeparam", "limit"),
+        page_size=int(o.get("pagesize", d.page_size)),
+        page_param=o.get("pageparam", d.page_param),
+        page_size_param=o.get("pagesizeparam", d.page_size_param),
     )
 
 
@@ -226,7 +229,7 @@ class HttpJsonReader(DataSourceReader):
             if max_rows is not None:
                 # Limit pushdown (SURVEY §4.2): fetch only the pages that
                 # can contribute to the first max_rows rows.
-                size = _pagination_from_options(opts).page_size or 10
+                size = _pagination_from_options(opts).effective_page_size
                 need = -(-max_rows // size)  # ceil
                 end = min(end, start + need - 1)
             n = int(opts["numpartitions"]) if opts.get("numpartitions") is not None else None

@@ -186,7 +186,7 @@ def build_page_url(url: str, pagination: Pagination, page: int) -> str:
     (src/model.rs:48-59).
     """
     sep = "&" if "?" in url else "?"
-    size = pagination.page_size or pagination.page_size_default
+    size = pagination.effective_page_size
     return f"{url}{sep}{pagination.page_param}={page}&{pagination.page_size_param}={size}"
 
 
@@ -443,7 +443,6 @@ def register_http_table(
     table_name: str = "http_table",
     paging: Paging | None = None,
     schema_mode: str = "full",
-    cache: bool = True,
     max_rows: int | None = None,
     headers: dict[str, str] | None = None,
     json_body: Any | None = None,
@@ -457,14 +456,14 @@ def register_http_table(
     columnar form. ``paging`` and ``max_rows`` go to fetch_rows.
     """
     rows = fetch_rows(url, method, paging, max_rows=max_rows, headers=headers, json_body=json_body)
-    return _register_rows(spark, rows, table_name, schema_mode, cache)
+    return _register_rows(spark, rows, table_name, schema_mode)
 
 
 def _register_rows(
-    spark: SparkSession, rows: list[Any], table_name: str, schema_mode: str, cache: bool
+    spark: SparkSession, rows: list[Any], table_name: str, schema_mode: str
 ) -> DataFrame:
     df = json_rows_to_df(spark, rows, schema_mode=schema_mode)
-    if cache and rows:
+    if rows:
         df = df.cache()
     df.createOrReplaceTempView(table_name)
     return df
@@ -522,7 +521,6 @@ def refresh_http_table(
     last_modified: str | None = None,
     method: str = "GET",
     schema_mode: str = "full",
-    cache: bool = True,
     headers: dict[str, str] | None = None,
 ) -> tuple[str | None, str | None, bool]:
     """One periodic-refresh cycle for a conditionally-fetched table:
@@ -547,7 +545,7 @@ def refresh_http_table(
     )
     if not_modified:
         return new_etag, new_lm, False
-    _register_rows(spark, page_rows(body), table_name, schema_mode, cache)
+    _register_rows(spark, page_rows(body), table_name, schema_mode)
     return new_etag, new_lm, True
 
 

@@ -1,4 +1,4 @@
-"""Round-4 curation operators — properties and plan shapes beyond the
+"""Curation operators — properties and plan shapes beyond the
 oracle-parity sweep: sketch error bounds, the winnowing guarantee,
 blocking-join plan shape, broadcast deletion cascade, and the
 incremental store's consistency with the batch pair computation.
@@ -115,10 +115,9 @@ def test_fuzzy_join_is_blocked_not_cartesian(spark, sf_dir):
 
 
 def test_deletion_cascade_keys_hint_free_but_aqe_broadcasts(spark, sf_dir):
-    """Round 7 removed the forced F.broadcast of the deletion key sets
-    (the demo predicate selects ~9% of customers — a linear fraction;
-    del_orders is fact-derived). The contract now: NO baked-in hint in
-    the logical plan, and AQE still broadcast-converts at runtime when
+    """The deletion key sets carry no forced F.broadcast (the demo
+    predicate selects ~9% of customers — a linear fraction; del_orders
+    is fact-derived): NO baked-in hint in the logical plan, and AQE still broadcast-converts at runtime when
     the key set is genuinely small (it is at test scale)."""
     df = deletion_propagate(spark, sf_dir)
     analyzed = df._jdf.queryExecution().analyzed().toString()

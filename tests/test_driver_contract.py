@@ -86,10 +86,11 @@ def test_bench_headline_line_stays_inside_tail_capture():
 
 
 def test_bench_set_is_oracle_checked_and_stable():
-    # BASELINE.md's headline pair is a 27-query set; bench_proxy.py runs
-    # each query's oracle, so every bench row must have one. Changing
-    # the set deliberately means re-recording the pair in BASELINE.md —
-    # this pin makes that an explicit step, not an accident.
+    # The headline set is 27 queries (BASELINE.md's bench trajectory
+    # counts them); bench_proxy.py runs each query's oracle, so every
+    # bench row must have one. Changing the set breaks comparison with
+    # every earlier bench number — this pin makes that an explicit
+    # step, not an accident.
     from http_datafusion_spark.plans.registry import all_queries
 
     qs = all_queries()

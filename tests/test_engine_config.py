@@ -129,11 +129,28 @@ def test_config_validation_errors(tmp_path):
         Config.from_yaml("no_sources: []")
     with pytest.raises(ConfigError):
         Config.from_yaml("sources: [{name: a, url: u, pagination: {bogus_key: 1}}]")
+    # wrongly typed values fail at load time, naming the source and the key
+    for source, key in [
+        ("{name: a, url: u, method: 5}", "'method'"),
+        ("{name: a, url: u, pagination: 5}", "pagination"),
+        ("{name: 5, url: u}", "'name'"),
+        ("{name: a, url: [1]}", "'url'"),
+        ("{name: a, url: u, sql: 5}", "'sql'"),
+        ("{name: a, url: u, pagination: {start_page: x}}", "pagination.start_page"),
+        ("{name: a, url: u, cursor_pagination: {max_pages: [1]}}", "cursor_pagination.max_pages"),
+        ("{name: a, url: u, cursor_pagination: {cursor_field: [1]}}", "cursor_pagination.cursor_field"),
+        ("{name: a, url: u, bogus: 1}", "bogus"),
+    ]:
+        with pytest.raises(ConfigError, match=key) as err:
+            Config.from_yaml(f"sources: [{source}]")
+        assert "source " in str(err.value)
+    # numeric strings still parse
+    [src] = Config.from_yaml('sources: [{name: a, url: u, pagination: {start_page: "2"}}]').sources
+    assert src.pagination.start_page == 2
 
 
 def test_configured_auth_header_reaches_every_paged_request(spark, monkeypatch):
-    """Product-path header pass-through (r12 verdict task 7 e2e
-    criterion): a YAML-configured Authorization header — secret via
+    """Product-path header pass-through: a YAML-configured Authorization header — secret via
     ${ENV} indirection only — must reach EVERY page request on BOTH
     execution paths (driver-loop and page-per-partition DataSource).
     The reference sends bare requests (src/datasources.rs:212-268), so

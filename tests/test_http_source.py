@@ -90,7 +90,7 @@ class _Handler(BaseHTTPRequestHandler):
         if u.path == "/flaky_etag":
             # 503s on the first two hits, then behaves like
             # /etag_resource — exercises the shared retry loop under
-            # the conditional-fetch path (r11 ADVICE item 2).
+            # the conditional-fetch path.
             if _Handler.hit_counts[u.path] <= 2:
                 self._send({"err": "unavailable"}, code=503)
                 return
@@ -385,7 +385,7 @@ def test_kafka_source_gated(spark):
         read_events_kafka(spark, "localhost:9092", "events")
 
 
-# ------------------------- cursor pagination + Retry-After (r10)
+# ------------------------- cursor pagination + Retry-After
 
 
 def test_cursor_pagination_drains_endpoint(base_url):
@@ -499,7 +499,7 @@ def test_conditional_fetch_304_reuses_validators(base_url):
 
 def test_conditional_fetch_retries_transient_503(base_url):
     """A transient 503 during a conditional refresh retries through the
-    shared backoff loop instead of raising (r11 ADVICE item 2), and the
+    shared backoff loop instead of raising, and the
     304 short-circuit still works once the server recovers."""
     from http_datafusion_spark.sources.http_json import fetch_json_conditional
 
@@ -512,7 +512,7 @@ def test_conditional_fetch_retries_transient_503(base_url):
 
 
 def test_refresh_http_table_cycle(spark, base_url):
-    """Full re-ingest cycle (r11 verdict task 7): register -> 304
+    """Full re-ingest cycle: register -> 304
     refresh leaves the staged table byte-identical (same validators,
     refreshed=False) -> changed resource (200) replaces the view and
     rotates the validators."""
@@ -608,13 +608,13 @@ def test_parse_link_next_forms():
     assert parse_link_next('<d>; relation="next", <e>; rel="next"') == "e"
     # a ';' inside a quoted param value is not a param delimiter: a
     # bare split tears '"x;rel=next"' into a fragment that reads as a
-    # rel param and returns the WRONG (rel=prev) link (r13 verdict)
+    # rel param and returns the WRONG (rel=prev) link
     assert (
         parse_link_next('<u1>; title="x;rel=next"; rel="prev", <u2>; rel="next"')
         == "u2"
     )
     # an unterminated '<' must not absorb a later well-formed link-value
-    # into a garbage target (ADVICE r13)
+    # into a garbage target
     assert parse_link_next('<broken, <b>; rel="next"') == "b"
     assert parse_link_next("<never-closed, nothing-else") is None
 

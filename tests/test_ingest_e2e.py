@@ -1,10 +1,10 @@
-"""Adversarial end-to-end ingest (VERDICT r7, task 3): the HTTP/JSON
+"""Adversarial end-to-end ingest: the HTTP/JSON
 staging path gets the same depth as the relational surface — one
 config-driven pass (mock server -> run() -> SQL -> show) exercising
 every documented reference quirk from SURVEY §1:
 
-1. empty-object placeholders vs typed scalars at the same key — the r7
-   data-loss bug (Spark's schema merge cancels the column without
+1. empty-object placeholders vs typed scalars at the same key — a
+   data-loss case (Spark's schema merge cancels the column without
    staging normalization);
 2. late-appearing fields (absent from record 1 — the reference's
    first-record inference drops them, src/datasources.rs:318-343; we

@@ -1,7 +1,6 @@
 """Real pure-Python PPM/WAV codec tests + data-quality-audit
-robustness (round-4 items: the last rows-only registry entry becomes
-value-checked, and the fused FK/range audit must survive PK
-violations)."""
+robustness (the codec query is value-checked, not rows-only, and the
+fused FK/range audit must survive PK violations)."""
 
 from __future__ import annotations
 
@@ -96,7 +95,7 @@ def test_media_codec_table_payloads_decode_on_executors(spark, sf_dir):
 
 
 def test_data_quality_audit_range_count_survives_pk_violation(spark, tmp_path):
-    """ADVICE r3 (medium): with duplicate o_orderkey rows the fused
+    """With duplicate o_orderkey rows the fused
     FK/range scan must still count out-of-range quantities against RAW
     lineitem rows (the checks stay independent)."""
     import os

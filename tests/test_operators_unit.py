@@ -133,7 +133,7 @@ def test_dedup_embedding_cosine_no_driver_table_materialization(spark, sf_dir, m
 
 
 def test_ivf_tile_composition_matches_bruteforce(spark):
-    """The r16 tile verification path — assign fn x tile fn x distinct —
+    """The IVF tile verification path — assign fn x tile fn x distinct —
     must emit EXACTLY the pairs that share a probed bucket and clear
     the threshold, each once, with the fold-exact cosine. Checked
     against an independent brute-force numpy reference on a corpus
@@ -263,10 +263,10 @@ def test_asof_join_no_preceding_right_row_yields_nulls(spark):
 def test_dedup_embedding_cosine_default_is_candidate_gated(spark, sf_dir):
     """The DEFAULT embedding near-dup path must be candidate-gated: the
     plan scores WITHIN-BUCKET tiles keyed by the multi-probe IVF
-    assignment (r16: a (bucket, bi, bj) FlatMapGroupsInPandas over the
-    fold-exact numpy kernel — the r15 pair-hydration-join shape scored
-    the same candidates through the interpreted JVM fold, 363 s vs
-    ~12 s at sf1 for identical output). It must never be the exact
+    assignment (a (bucket, bi, bj) FlatMapGroupsInPandas over the
+    fold-exact numpy kernel; a pair-hydration join scoring the same
+    candidates through the interpreted JVM fold took 363 s vs ~12 s at
+    sf1 on 32 cores, for identical output). It must never be the exact
     tier's ALL-pairs block grid (whose grouping has no bucket key) and
     never a cartesian product."""
     from http_datafusion_spark.operators.dedup import (
@@ -330,7 +330,7 @@ def test_dedup_embedding_cosine_default_is_candidate_gated(spark, sf_dir):
     assert n_cand < n * (n - 1) / 2
 
 
-# ---------------------------------------- round-6 operator invariants
+# ---------------------------------------- operator invariants
 
 
 def test_debounce_invariants(spark, sf_dir):
@@ -472,7 +472,7 @@ def test_token_count_equals_materialized_split(spark, sf_dir):
         assert bad == 0
 
 
-# ---------------------------------------- r12 stats-family invariants
+# ---------------------------------------- stats-family invariants
 
 
 def test_brier_decomposition_identity_is_exact(spark, sf_dir):
@@ -564,7 +564,7 @@ def test_hits_scores_positive_and_role_split(spark, sf_dir):
         assert sum(r.score for r in rows if r.role == role) <= 1.0 + 1e-9
 
 
-# ---------------------------------------- r13 additions: invariants
+# ---------------------------------------- sketch, drift, survival and graph invariants
 
 
 def test_quantile_sketch_error_within_guarantee(spark, sf_dir):
@@ -738,7 +738,7 @@ def test_km_survival_monotone_and_censoring_matters(spark, sf_dir):
 
 
 def test_km_survival_total_churn_month_drops_to_zero(spark, tmp_path):
-    """ADVICE r13: a maximal month where EVERY remaining at-risk
+    """A maximal month where EVERY remaining at-risk
     customer churns (d == n_risk, zero censored) is ln(0) unguarded —
     DuckDB raises out-of-range while Spark's F.log yields NULL that the
     window sum silently skips (survival stuck at the prior level).

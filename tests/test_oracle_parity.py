@@ -1,7 +1,7 @@
 """Every registered query must match its DuckDB oracle exactly —
 this mirrors the driver's t2 correctness gate (row count + schema +
 order-insensitive value hash) at sf0.001 so regressions surface
-locally before a round runs.
+locally.
 """
 
 from __future__ import annotations

@@ -123,6 +123,28 @@ sources:
 
 
 @pytest.mark.parametrize("via_datasource", [False, True], ids=["driver", "httpjson"])
+def test_page_size_default_on_both_paths(via_datasource, base_url, spark):
+    """``page_size: 0`` falls back to ``page_size_default`` on both ingest
+    paths: every page request asks for 25 rows, and a pushed-down
+    ``LIMIT 30`` needs two such pages."""
+    name = f"size_default_{'ds' if via_datasource else 'driver'}"
+    source = Source.from_dict(
+        {
+            "name": name,
+            "url": f"{base_url}/pages/5",
+            "pagination": {"end_page": 5, "page_size": 0, "page_size_default": 25},
+            "sql": f"SELECT id FROM {name} LIMIT 30",
+        }
+    )
+    _Handler.requests.clear()
+    result = run_source(spark, source, via_datasource=via_datasource).result
+    assert len(result.collect()) == 30
+    queries = [parse_qs(urlparse(r).query) for r in _Handler.requests]
+    assert {q["limit"][0] for q in queries} == {"25"}
+    assert {q["page"][0] for q in queries} == {"1", "2"}
+
+
+@pytest.mark.parametrize("via_datasource", [False, True], ids=["driver", "httpjson"])
 def test_limit_zero_fetches_one_page_and_keeps_columns(via_datasource, base_url, spark):
     """``LIMIT 0`` still fetches the first page, so the table has its
     columns; the engine applies the exact limit."""

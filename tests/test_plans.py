@@ -265,7 +265,7 @@ def test_bm25_single_pass_topk_fused(spark, sf_dir):
 
 def test_shuffle_shards_single_exchange(spark, sf_dir):
     s = plan_of(QS["train_shuffle_shards"].spark(spark, sf_dir))
-    # two-phase rank (r9): ONE corpus-scale exchange — the (shard, hb)
+    # two-phase rank: ONE corpus-scale exchange — the (shard, hb)
     # hashpartitioning feeding the bucket-local window, whose output the
     # final per-shard aggregate consumes via map-side partials. The
     # remaining exchanges carry key-domain-bounded relations only
@@ -596,59 +596,36 @@ def test_ordstats_rank_search_never_single_partition(spark, sf_dir):
 
 # --------------------------------------------------------------------------
 # Broadcast-hint guard: no F.broadcast of a data-growing relation anywhere
-# in the registry (the round-6 verdict's "What's wrong #2" anti-pattern).
-# A baked-in hint AQE cannot demote is an executor/driver OOM at 100 TB.
-# plans/broadcast_guard.py walks each query's ANALYZED plan and flags every
-# broadcast-hinted subtree that scans a fact-scale table (documents /
-# lineitem / orders / events / embeddings / part) without a bounding
-# zero-key aggregate or limit. Flags are allowed ONLY for subtrees whose
-# output is bounded by something the plan text can't show — a
-# low-cardinality group key or a benchmark probe set that is a constant of
-# the pipeline, not a function of corpus size. Each exemption documents why.
+# in the registry. A baked-in hint AQE cannot demote is an executor/driver
+# OOM at 100 TB. tests/plan_guards.py walks each query's ANALYZED plan and
+# flags every broadcast-hinted subtree that scans a fact-scale table
+# (documents / lineitem / orders / events / embeddings / part) without a
+# bounding zero-key aggregate or limit. Flags are allowed ONLY for
+# subtrees whose output is bounded by something the plan text can't
+# show — a low-cardinality group key or a benchmark probe set that is a
+# constant of the pipeline, not a function of corpus size. Each
+# exemption documents why. A pinned or checkpointed frame under a hint
+# reads an RDD leaf, so the guard sees no fact lineage there.
 
 BROADCAST_GUARD_ALLOWED = {
     # per-segment / per-priority marginals: group key has <= ~5 values
     "feature_target_encode": "per-o_orderpriority aggregate (bounded key)",
-    # segment_chisquare dropped r15: the seg x pri cell table is now
-    # eagerly checkpointed, so the marginal broadcasts read RDD leaves.
     # per-event_type statistics: event_type is a small closed enum
     "ts_cusum_changepoints": "per-event_type mean/chunk offsets (bounded key)",
-    # events_cusum_drift dropped r15: the r14 single-scan rewrite
-    # (commit c749f9b) replaced the broadcast-join-back with unbounded
-    # windows, so the site this entry explained no longer exists.
     "quantile_sketch_audit": "len(QS_TARGETS)=7 probe rows (q, t_rank, n, est_value) — a constant of the audit, not of corpus size",
-    # text_burrows_delta dropped r15: the (source, tok) count table is
-    # now eagerly checkpointed, cutting the corpus lineage under the
-    # top_words/wstats broadcasts.
     "ts_zscore_outliers": "per-event_type moments (bounded key)",
-    # ts_mad_outliers dropped r15: the per-type med/mad tables are now
-    # eagerly checkpointed (scan-audit remediation), so the broadcasts
-    # read RDD leaves and the guard sees no fact-derived hint.
     "markov_next_event_eval": "event_type transition matrix (bounded key pairs)",
     "events_transition_coverage": "event_type pair coverage (bounded key pairs)",
     # calendar-bounded group keys
     "customer_survival_curve": "per-lifetime-month counts (months bounded)",
-    # orders_cohort_matrix dropped r17: the customer-grain first-order
-    # frame is now pinned (3x-class fix), so the cohort-size broadcast
-    # reads an RDD leaf — same mechanism as the r15 drops.
     # sketch/config-bounded structures
     "cms_heavy_hitters": "d x w CMS cell table (constant by construction)",
     "cms_error_audit": "d x w CMS cell table (constant by construction — same sketch as cms_heavy_hitters)",
     "dedup_minhash_threshold_sweep": "group by n_match in 0..k (bounded)",
     "supplier_concentration_hhi": "per-p_type totals (p_type is a closed enum)",
     "weighted_median_price": "ordstats per-__bkt offsets (ORD_BUCKETS=32 constant)",
-    # parts_abc_xyz dropped r17: the part-grain profile is now pinned
-    # (3x-class fix), so the ordstats offsets broadcast reads an RDD
-    # leaf and the guard sees no fact lineage.
-    # visible since r8's localCheckpoint drop exposed the sample lineage
     "histogram_equi_depth": "ordstats per-__bkt offsets (ORD_BUCKETS=32 constant)",
-    # curriculum_stage_plan dropped r9: its localCheckpoint (one token
-    # pass, VERDICT r8 task 6) cuts the lineage the guard used to see,
-    # so the ordstats broadcast there now reads an ExistingRDD
     "events_mannwhitney_u": "ordstats per-__bkt offsets (ORD_BUCKETS=32 constant)",
-    # privacy_tcloseness_audit dropped r17: the enum-cell grid is now
-    # pinned (4x-class fix), so the priority-marginal broadcasts read
-    # RDD leaves.
     # benchmark probe sets: the bench suite is a constant of the pipeline
     # (decontamination checks corpus AGAINST a fixed eval set), not a
     # function of corpus size — formally doc-derived, hence flagged
@@ -656,42 +633,18 @@ BROADCAST_GUARD_ALLOWED = {
     "decontaminate_threshold_sweep": "benchmark shingle probe set (pipeline constant)",
     "corpus_filter_pipeline": "benchmark shingle probe set (pipeline constant)",
     "dedup_bloom_prefilter": "bloom probe of benchmark positions (pipeline constant)",
-    # r8: sites newly visible after the embeddings-marker fix (ADVICE r7 —
-    # the old guard never matched embeddings relations). Each verified
-    # bounded by construction; the bound is a group-key cardinality or a
-    # rank filter the plan text can't show.
+    # embeddings relations (schema vec_id, embedding, label): the bound is
+    # a group-key cardinality the plan text can't show
     "embedding_pq_train": "per-(subspace, cluster) codebook (M x K constant)",
-    # mix_sources_temperature dropped r17: the |sources| count table is
-    # now pinned (3x-class fix), so the rate broadcast reads an RDD
-    # leaf.
-    # embedding_centroid_shift dropped r16: the label x dim centroid
-    # table is now pinned (4x-class fix), cutting the lineage the
-    # guard walked — same mechanism as the r15 drops below.
-    # embedding_pca_power_iteration + text_prf_query_expansion dropped
-    # r15: dims/iterates and the tf index are now eagerly checkpointed
-    # (scan-audit remediation), cutting the lineage the guard walked.
-    # r10 additions, each bounded by construction:
-    # rag_rerank_cross_encoder dropped r15: the fused candidate frame
-    # fr is now eagerly checkpointed (scan-audit remediation).
-    # shard_mix_audit's per-source/per-shard broadcasts were exempted
-    # here briefly in r10; its cell grid is now localCheckpointed (one
-    # corpus scan — the .explain audit fix), which cuts the lineage the
-    # guard walks, so the exemption went stale and was removed (the
-    # curriculum_stage_plan r9 precedent).
-    # r12 additions, each bounded by construction:
     "embedding_whitening_audit": (
         "per-dim mu/sd stats broadcast back at the dim grain — the "
         "Aggregate's group key is dim <= EMB_DIM=64 (dimension constant, "
         "the embedding_pca_power_iteration bound)"
     ),
-    # events_retention_halflife dropped r17: the day-offset table is
-    # now pinned (4x-class fix), so the t=0 base broadcast reads an
-    # RDD leaf.
 }
 
-# The eight operators the round-6 verdict called out by file:line — their
-# repaired plans must stay hint-clean forever (plus the round-7 sweep's
-# additional de-hinted sites).
+# Operators whose forced broadcasts of data-growing relations were
+# removed; their plans must stay hint-clean.
 BROADCAST_GUARD_REPAIRED = (
     "text_tfidf_topterm",
     "text_unigram_logprob",
@@ -722,9 +675,9 @@ def guard_sweep(spark, sf_dir) -> dict[str, tuple[list, list, list]]:
     would then see its in-memory leaf instead of the scan beneath it,
     so the flagged set would depend on test order."""
     from http_datafusion_spark.functions.pinning import pin_scope
-    from http_datafusion_spark.plans.broadcast_guard import broadcast_hint_violations
-    from http_datafusion_spark.plans.pandas_guard import grouped_pandas_key_signatures
-    from http_datafusion_spark.plans.window_guard import ranking_window_violations
+    from plan_guards import broadcast_hint_violations
+    from plan_guards import grouped_pandas_key_signatures
+    from plan_guards import ranking_window_violations
 
     spark.catalog.clearCache()
     results = {}
@@ -759,17 +712,17 @@ def test_no_forced_broadcast_of_fact_derived_relations(guard_sweep):
 
 
 def test_broadcast_guard_unit_embeddings_and_branch_attribution(spark, sf_dir):
-    """ADVICE r7 fixes, pinned:
+    """The guard's structural decisions, pinned:
     (a) a broadcast-hinted embeddings scan is flagged — the schema is
-        (vec_id, embedding, label), no doc_id, so the old marker never
-        matched and embeddings broadcasts were invisible to the guard;
+        (vec_id, embedding, label), no doc_id, so a doc_id-based marker
+        would never match and embeddings broadcasts would be invisible;
     (b) bounds attribute per branch — a Limit on one join branch must
         not exempt a fact scan on the sibling branch;
     (c) a grouped aggregate whose key contains '[' (array element) is
         NOT misread as a zero-key bound."""
     from pyspark.sql import functions as F
 
-    from http_datafusion_spark.plans.broadcast_guard import (
+    from plan_guards import (
         _is_zero_key_aggregate,
         broadcast_hint_violations,
     )
@@ -810,7 +763,7 @@ def test_broadcast_guard_unit_embeddings_and_branch_attribution(spark, sf_dir):
 
 
 def test_r8_operators_plan_invariants(spark, sf_dir):
-    """Scale-shape pins for the round-8 additions: no cartesian
+    """Scale-shape pins for eight curation/retrieval operators: no cartesian
     products, no data-sized single-partition exchanges beyond the
     documented constant-sized ones, and the phash near-dup keeps its
     stop-band cap (the fix for the sf1 quadratic — an aggregate-filter
@@ -839,14 +792,14 @@ def test_r8_operators_plan_invariants(spark, sf_dir):
 
     assert _re.search(r"Filter .*bn#\d+L? <= 64", p), (
         "stop-band cap disappeared from the phash plan — the sf1 "
-        "quadratic (BASELINE.md r8 spot-check) comes back without it"
+        "quadratic comes back without it"
     )
 
 
 def test_local_checkpoint_inventory_is_pinned():
-    """Grep-able invariant (VERDICT r7 task 5): every pinned frame is
-    a deliberate, documented reuse materialization — no new fact-scale
-    eager materialization can appear without updating this inventory.
+    """Grep-able invariant: every pinned frame is a deliberate,
+    documented reuse materialization — no new fact-scale eager
+    materialization can appear without updating this inventory.
 
     The idiom is centralized: every site calls
     ``functions/pinning.py::pin`` (``.transform(pin)``), which for a
@@ -854,137 +807,106 @@ def test_local_checkpoint_inventory_is_pinned():
     the pin policy in ONE place. Raw ``localCheckpoint`` calls outside
     pinning.py are banned outright (asserted below).
 
-    Audit of the pinned sites (what each checkpoints and why it is
-    bounded or a sound trade):
-    - components.py (9): iterative lineage cuts — connected-components
-      star rounds (edges shrink monotonically), minhash-filtered
-      shingles computed once and reused per round, triangle edge set
-      reused by three join branches (post-threshold candidate edges),
-      k-core base edge set + per-round peeled edges (degree-capped and
-      monotonically shrinking; without the cut each round re-derives
-      every earlier round — exponential recompute), LPA's symmetrized
-      LSH candidate edge set (r11 — 3 unrolled vote rounds read it;
-      unshared, each round re-derived the shingle->minhash->band
-      lineage: 16 document scans counted by the .explain audit), and
-      HITS' distinct customer->supplier edge set (r12 — four
-      half-steps read it; |edges| <= |custkey x suppkey| pairs that
-      co-purchase, dimension-bounded under replication).
-    - curation.py (4): per-customer RFM / revenue aggregates reused by
-      3 bucketed-rank passes + sketches — customer-scale (|customers|
-      << |facts|), recompute-3x vs store-once trade; MEMORY_AND_DISK
-      so it degrades to spill, never OOM. r11 adds the Markov
-      |types|^2 transition table (three consumers; measured 1.28 ->
-      1.03 s at sf5). KN-bigram and keyness checkpoints were TRIED and
-      REVERTED: their repeated subtrees are identical, so runtime
-      exchange reuse already dedupes them — the eager store measured
-      slower (KN 12.1 -> 18.5 s at sf5) or flat (keyness).
-    - dedup.py (2): minhash signature table (1 row/doc, 64 ints)
-      reused by probe + budget passes — the signature reuse IS the
-      minhash algorithm's point; r18 adds dedup_minhash_pairs' banded
-      signature table (fact_scale persist — 4 rows/doc): the band
-      self-join's two signature subtrees both EXECUTED above the
-      AQE-reused scan exchange (window+minhash+banding twice, ~200 s
-      of 300 s sf5 CPU in the task histogram); the pin runs them once
-      (sf5 13.2 -> 3.5 s with the shingles_of repartition fix, sf0.1
-      1.35 -> 0.80 s).
-    - similarity.py (3): TOP_K-row candidate set (bounded by literal
-      k); one mapInPandas scoring pass feeding every sweep width;
-      salted_bucket_groups' N_CENTROIDS-row bucket-size frame (r11 —
-      the broadcast split-factor table, one tiny eager job instead of
-      re-deriving the assignment lineage).
-    - text.py (2): BPE vocab seqs — vocabulary-scale (distinct words,
-      sublinear in corpus), re-checkpointed per merge step to keep
-      plan depth flat across BPE_TRAIN_MERGES iterations.
-    - streaming/queries.py (3): per-micro-batch probe results and
-      bounded batch aggregates — batch-scoped, not corpus-scoped.
-    - stats.py (1, r12): feature_mutual_info's joint-domain cell table
-      (<= |X||Y| rows, 115 here — closed categorical enums) read by
-      four consumers (totals + three entropy branches) that would each
-      re-run the two-table union scan.
-    - pipeline.py (3, r9): curriculum_stage_plan's per-doc NLL table
-      (doc-level, 3 columns; the count + ordstats passes would each
-      re-derive the token-explode + vocab-join aggregation),
-      sequence_packing_audit's |sources|-row strategy partial (three
-      zero-key branches read it), and corpus_dsir_importance's
-      <=DSIR_BUCKETS-row feature-count grid (totals + lambda derive
-      from it instead of re-running the bigram explode).
-    - r15 scan-audit remediation (VERDICT r14 What's-wrong #2: the
-      >=6x fact-rescan class): every addition checkpoints a BOUNDED
-      shared frame so multi-consumer plans stop re-deriving the fact
-      scan — token/tf/shingle index tables (corpus-aggregate grain:
-      burrows/prf/jsd/kmv/rag toks), LSH candidate-pair lists and
-      candidate-restricted shingle frames (recall audit, estimator
+    What the pinned sites hold, and why each is bounded or a sound
+    trade (timings taken on 32 cores):
+    - Iterative lineage cuts: connected-components star rounds (edges
+      shrink monotonically), minhash-filtered shingles computed once
+      and reused per round, the triangle edge set reused by three join
+      branches (post-threshold candidate edges), the k-core base edge
+      set + per-round peeled edges (degree-capped and monotonically
+      shrinking; without the cut each round re-derives every earlier
+      round — exponential recompute), LPA's symmetrized LSH candidate
+      edge set (three unrolled vote rounds read it; unshared, each
+      re-derived the shingle->minhash->band lineage: 16 document scans
+      counted by the .explain audit), HITS' distinct
+      customer->supplier edge set (four half-steps read it; |edges| <=
+      |custkey x suppkey| pairs that co-purchase, dimension-bounded
+      under replication), and BPE vocab seqs, re-pinned per merge step
+      to keep plan depth flat across BPE_TRAIN_MERGES iterations.
+    - Customer-, part- and calendar-grain aggregates with several
+      consumers: per-customer RFM / revenue aggregates reused by 3
+      bucketed-rank passes + sketches (|customers| << |facts|;
+      MEMORY_AND_DISK, so it degrades to spill, never OOM), the Markov
+      |types|^2 transition table (three consumers; 1.28 -> 1.03 s at
+      sf5), the KM customer aggregate, the first-order frame of
+      orders_cohort_ltv and orders_cohort_matrix, parts_abc_xyz's
+      per-part profile, ts_sax_motifs' daily and
+      orders_holt_backtest's nation x month series,
+      orders_theil_sen_trend's months-bounded revenue series,
+      events_dau_wau's days-grain DAU table (the day list and the
+      final join read it), events_retention_halflife's day offsets
+      (base + regression consumers), and the |hours|-bounded count
+      series of ts_autocorrelation / events_crosscorrelation (five
+      consumers each).
+    - Cell grids and small scalar tables: feature_mutual_info's
+      joint-domain cells (<= |X||Y| rows, 115 here — closed
+      categorical enums; four consumers would each re-run the
+      two-table union scan), enum/QI cell grids
+      (privacy_tcloseness_audit, privacy_kanonymity_joint — coarser
+      lattice levels roll up from the pinned finest cells),
+      dedup_lexical_semantic_ari's contingency cells (three marginal
+      consumers), corpus_language_skew_audit's |sources|x|langs|
+      cells, quality_drift_psi's (source, bin) cells (the total is
+      derived from the cells, not a fourth corpus pass), score-grain
+      tables (ml_pr_auc, ml_brier_decomposition, feature_woe_iv),
+      per-type scalar tables (mad med/mad, ks bins, chisquare cells,
+      funnel v/c/p both variants, phash hashes/sel, semantic-calib
+      pred), embedding_centroid_shift's |labels|x64 centroid table, PCA
+      dims + iterates, |sources|-row tables (mix_sources_temperature
+      counts; sequence_packing_audit's strategy partial, read by three
+      zero-key branches), corpus_dsir_importance's <=DSIR_BUCKETS-row
+      feature-count grid, and 1-row wide-agg frames
+      (table_stats_profile, whose six union branches re-scanned
+      lineitem with zero exchange reuse; table_zonemap_audit).
+    - Corpus-aggregate and k-bounded frames: token/tf/shingle index
+      tables (burrows/prf/jsd/kmv/rag toks; rag_chunk_retrieval_eval's
+      query tokens, |RAG_QUERY_DOCS| docs' distinct words, three
+      consumers), curriculum_stage_plan's per-doc NLL table (doc-level,
+      3 columns; the count + ordstats passes would each re-derive the
+      token-explode + vocab-join aggregation), LSH candidate-pair lists
+      and candidate-restricted shingle frames (recall audit, estimator
       calibration, containment, keep_best, cluster_ari cells), graph
       edge/degree frames (assortativity, pagerank, link prediction,
-      CC's e0 nodes fix, golden members), k-bounded rankings
-      (rag lr/sr/fr, spearman exact/proj, ivf qrow, kappa j), per-type
-      scalar tables (mad med/mad, ks bins, chisquare cells, funnel
-      v/c/p both variants, phash hashes/sel, semantic-calib pred,
-      substring gk — the one 2-scan floor, full gram stream NOT
-      materialized), PCA dims + iterates, KM customer aggregate, and
-      BPE first-merge vocab frames.
-    - r15 addition: dedup_lexical_semantic_ari's contingency cells
-      (one row per (lexical, semantic) label pair; three marginal
-      consumers).
-    - r16 5x-scan-class triage (VERDICT r15 task 3, all four members):
-      ts_autocorrelation / events_crosscorrelation pin the
-      |hours|-bounded count series (five consumers each);
-      rag_chunk_retrieval_eval pins the query-token frame
-      (|RAG_QUERY_DOCS| docs' distinct words, three consumers);
-      sim_srp_lsh_recall pins the bucket-bounded multi-probe candidate
-      set (count + rerank consumers) and takes its query row from the
-      driver-held memoized vector. events_ks_two_sample's (value, ga)
-      sample frame is the one FACT-SCALE pin — fact_scale=True, a
-      lineage-recoverable persist, never an executor-local checkpoint
-      (r15 ADVICE).
-    - r16 4x-scan-class fixes (the four crispest bounded-frame cases;
-      the rest of the class carries dispositions in BASELINE r16):
-      corpus_language_skew_audit's |sources|x|langs| cells,
-      embedding_centroid_shift's |labels|x64 centroid table,
-      orders_theil_sen_trend's months-bounded revenue series,
-      quality_drift_psi's (source, bin) cells (total now derived from
-      the cells, not a fourth corpus pass), table_stats_profile's 1-row
-      wide-agg stats frame (six union branches re-scanned lineitem;
-      zero exchange reuse measured before fixing).
-    - r17 scan-triage remediation (OPTIMIZATION_r17.md; the named
-      3x/4x-class pin backlog from BASELINE r16, all bounded frames):
-      score-grain tables (ml_pr_auc, ml_brier_decomposition,
-      feature_woe_iv), enum/QI cell grids (privacy_tcloseness_audit,
-      privacy_kanonymity_joint — coarser lattice levels now roll up
-      from the pinned finest cells), calendar-grain series
-      (ts_sax_motifs daily, orders_holt_backtest nation x month,
-      events_retention_halflife day-offsets), customer/part-grain
-      frames (orders_cohort_ltv + orders_cohort_matrix first-order,
-      parts_abc_xyz per-part profile), LSH pair lists
-      (graph_degree_powerlaw, dedup_cross_source_matrix — r18: both
-      switched to fact_scale=True lineage-recoverable persists per the
-      r17 ADVICE, since the candidate list grows with the corpus and
-      is worst-case superlinear in skewed band buckets), k/sample-
-      bounded frames (sim_matryoshka_recall rankings,
-      embedding_jl_projection components, sim_contrastive_pair_mining
-      IVF assignments), |sources| counts (mix_sources_temperature),
-      1-row wide aggs (table_zonemap_audit), and vocabulary count
-      tables (ngram_pmi_bigrams uc/bc — n1/n2 now derived as sum(c)
-      over them instead of two extra corpus-sized count actions; r18:
-      bc moved to a fact_scale persist per the r17 ADVICE — distinct
-      bigrams are near-linear in the corpus, uc stays a bounded pin
-      per Heaps' law).
-      events_dau_wau pins its days-grain DAU table (the day list and
-      the final join read it); events_retention_halflife pins its
-      days-grain offset table (base + regression consumers). The ONE
-      fact-scale r17 pin (fact_scale=True, lineage-recoverable
-      persist): train_shuffle_autocorr's doc-grain hash frame —
-      measured -9% at sf1 because three window/agg phases reuse it.
-      Fact-scale persists of the user-day/click frames in
-      events_dau_wau / events_retention_halflife /
-      attribution_window_sweep were TRIED and A/B-measured SLOWER at
-      sf0.1 and sf1 (cache build/read overhead vs pushed narrow
-      re-scans); those carry measured-negative dispositions in their
-      comments instead.
+      CC's e0 nodes, golden members), k-bounded rankings (rag
+      lr/sr/fr, spearman exact/proj, ivf qrow, kappa j,
+      sim_matryoshka_recall), the TOP_K-row candidate set, one
+      mapInPandas scoring pass feeding every sweep width,
+      salted_bucket_groups' N_CENTROIDS-row bucket-size frame (one tiny
+      eager job instead of re-deriving the assignment lineage),
+      sim_srp_lsh_recall's bucket-bounded multi-probe candidate set
+      (count + rerank consumers), embedding_jl_projection components,
+      sim_contrastive_pair_mining's IVF assignments, the minhash
+      signature table (1 row/doc, 64 ints) reused by probe + budget
+      passes, ngram_pmi_bigrams' unigram counts uc (vocabulary-bounded
+      per Heaps' law; n1/n2 are sum(c) over the pinned counts instead
+      of two extra corpus-sized count actions), BPE first-merge vocab
+      frames, and the substring gk frame (the one 2-scan floor; the
+      full gram stream is NOT materialized).
+    - streaming/queries.py: per-micro-batch probe results and bounded
+      batch aggregates — batch-scoped, not corpus-scoped.
+    - Fact-scale pins (fact_scale=True: a lineage-recoverable persist,
+      never an executor-local checkpoint): events_ks_two_sample's
+      (value, ga) sample frame; dedup_minhash_pairs' banded signature
+      table (4 rows/doc; the band self-join's two signature subtrees
+      both executed above the AQE-reused scan exchange, ~200 s of
+      300 s sf5 CPU; pinned, with the shingles_of repartition, sf5
+      13.2 -> 3.5 s and sf0.1 1.35 -> 0.80 s); train_shuffle_autocorr's
+      doc-grain hash frame (-9% at sf1: three window/agg phases reuse
+      it); the LSH pair lists of graph_degree_powerlaw and
+      dedup_cross_source_matrix (the candidate list grows with the
+      corpus and is worst-case superlinear in skewed band buckets);
+      and ngram_pmi_bigrams' bigram counts bc (distinct bigrams are
+      near-linear in the corpus).
+    Measured not to pay, so NOT pinned: the KN-bigram and keyness
+    frames (their repeated subtrees are identical, so runtime exchange
+    reuse already dedupes them; the eager store measured slower, KN
+    12.1 -> 18.5 s at sf5, or flat for keyness), and fact-scale
+    persists of the user-day/click frames in events_dau_wau /
+    events_retention_halflife / attribution_window_sweep (slower at
+    sf0.1 and sf1: cache build/read overhead vs pushed narrow
+    re-scans; their comments carry the measurement).
     histogram_equi_depth / weighted_median_price deliberately carry NO
-    checkpoint (deterministic hash-gate re-scan; see their comments);
-    text_kneser_ney_bigram / text_keyness_g2 keep their MEASURED
-    no-checkpoint disposition (runtime exchange reuse wins there).
+    checkpoint (deterministic hash-gate re-scan; see their comments).
     """
     import pathlib
     import re as _re
@@ -1009,11 +931,6 @@ def test_local_checkpoint_inventory_is_pinned():
         "raw .localCheckpoint() call outside functions/pinning.py — use "
         f"pin() (df.transform(pin)) so the pin policy stays central: {raw}"
     )
-    # pipeline.py gained 2 vs the r15 raw-call inventory: two pre-r15
-    # sites spelled the idiom `.localCheckpoint()` (bare, eager by
-    # default) and were invisible to the old eager=True grep; the
-    # mechanical r16 adoption normalized them. streaming/queries.py
-    # gained 1 the same way (a multiline call).
     assert sites == {
         "operators/components.py": 20,
         "operators/curation.py": 21,
@@ -1031,7 +948,7 @@ def test_local_checkpoint_inventory_is_pinned():
 
 
 def test_bucketed_global_rank_guards_empty_input(spark):
-    """ADVICE r7: bucketed_global_rank must raise a clear ValueError on
+    """bucketed_global_rank must raise a clear ValueError on
     an empty/all-null input (percentile bounds NULL), same as its
     sibling exact_rank_values."""
     import pytest as _pytest
@@ -1044,10 +961,10 @@ def test_bucketed_global_rank_guards_empty_input(spark):
 
 
 def test_ordstats_guards_empty_and_out_of_range(spark):
-    """ADVICE r6: exact_rank_values must fail loudly — a clear ValueError
+    """exact_rank_values must fail loudly — a clear ValueError
     — on an empty input (percentile bounds come back NULL) and on ranks
-    beyond the row count (previously a silent dict omission surfacing as
-    an opaque KeyError in feature_winsorize/corpus_datacard)."""
+    beyond the row count (not a silent dict omission surfacing as an
+    opaque KeyError in feature_winsorize/corpus_datacard)."""
     import pytest as _pytest
 
     from http_datafusion_spark.functions.ordstats import exact_rank_values
@@ -1063,7 +980,7 @@ def test_ordstats_guards_empty_and_out_of_range(spark):
 
 
 def test_calibration_operators_candidate_gated_no_cartesian(spark, sf_dir):
-    """Both r7 calibration artifacts must stay candidate-then-verify:
+    """Both calibration operators must stay candidate-then-verify:
     every join equi-keyed (no cartesian/nested-loop fallback), and the
     threshold sweep an exploded constant array (map-side), never a join
     against a thresholds relation."""
@@ -1080,8 +997,8 @@ def test_calibration_operators_candidate_gated_no_cartesian(spark, sf_dir):
 
 
 def test_r8_late_operators_plan_invariants(spark, sf_dir):
-    """Scale-shape pins for the late-round-8 additions (the named r9
-    window head): no cartesian products; the only nested-loop joins are
+    """Scale-shape pins for fifteen retrieval, audit, stats and text
+    operators: no cartesian products; the only nested-loop joins are
     constant-side broadcasts (dims grids, 1-row totals); the two
     corpus-scan audits keep their aggregation keyed (no data-sized
     single-partition exchange)."""
@@ -1097,7 +1014,6 @@ def test_r8_late_operators_plan_invariants(spark, sf_dir):
         "graph_kcore_rounds",
         "multimodal_vad_segments",
         "feature_hashing_vectorizer",
-        # the 4 late-r8 additions the original list missed (ADVICE r8)
         "vocab_chao1_unseen",
         "curriculum_stage_plan",
         "orders_theil_sen_trend",
@@ -1120,9 +1036,9 @@ def test_r8_late_operators_plan_invariants(spark, sf_dir):
         assert "HashAggregate" in p, name
 
     # matryoshka ranking must stay a keyed window — a global sort of
-    # the scored candidates would be the 100x scale bug (assertions
-    # strengthened per ADVICE r8: the old `or "Window" in p` tail
-    # matched ANY window, including a global one)
+    # the scored candidates would be the 100x scale bug (every window
+    # must be keyed on qid: a bare "Window" check would also pass a
+    # global one)
     p = plan_of(QS["sim_matryoshka_recall"].spark(spark, sf_dir))
     assert "Exchange SinglePartition" not in p, "matryoshka window went global"
     for w in (ln for ln in p.splitlines() if "Window [" in ln):
@@ -1130,25 +1046,18 @@ def test_r8_late_operators_plan_invariants(spark, sf_dir):
 
 
 def test_retrieval_eval_windows_prune_map_side(spark, sf_dir):
-    """VERDICT r8 task 1, pinned: the three retrieval-eval operators'
-    probe-keyed rankings carry a LITERAL rank bound, so Spark inserts
+    """The three retrieval-eval operators' probe-keyed rankings carry a LITERAL rank bound, so Spark inserts
     Partial+Final WindowGroupLimit — each map task forwards at most K
     rows per probe key and the keyed sort handles #map_partitions x K
     rows, never a corpus-sized partition. Without the Partial stage the
-    3-20 probe reducers would each sort ~corpus/|probes| rows (the one
-    scale-killer class the r8 verdict found)."""
-    # rag_rrf_fusion_eval dropped from 6 windows to 1 in r15: the
-    # lexical/semantic rankings (lr/sr) are now eagerly checkpointed
-    # (scan-audit remediation — their triple re-derivation was 6
-    # embeddings scans), so only the fusion ranking remains in the
-    # final plan; lr/sr keep their literal bounds and WindowGroupLimit
-    # at materialization time.
-    # sim_matryoshka_recall dropped from 2 windows to 0 in r17: the
-    # k-bounded ranking table rk is now pinned (4x-class scan fix), so
-    # the truth/approx slices read an RDD leaf; the ranking windows —
-    # which keep their literal rank bounds and therefore their Partial
-    # WindowGroupLimit pruning — run once at materialization time (the
-    # rag_rrf_fusion_eval lr/sr r15 precedent).
+    3-20 probe reducers would each sort ~corpus/|probes| rows."""
+    # Pinned rankings run once, when the pin materializes, and keep
+    # their literal bounds and WindowGroupLimit there; the final plan
+    # reads an RDD leaf instead. rag_rrf_fusion_eval pins its
+    # lexical/semantic rankings (lr/sr; re-deriving them three times
+    # cost 6 embeddings scans), so only the fusion ranking remains;
+    # sim_matryoshka_recall pins its k-bounded ranking table rk, so
+    # none remains.
     for name, n_windows in (
         ("sim_matryoshka_recall", 0),
         ("rag_chunk_retrieval_eval", 2),
@@ -1172,10 +1081,8 @@ def test_retrieval_eval_windows_prune_map_side(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Ranking-window guard (VERDICT r8 task 5): the same structural-guard
-# treatment forced broadcasts got in r7, applied to the r8 verdict's one
-# remaining scale-killer class — ranking windows whose reducers sort
-# corpus-sized partitions. Every exemption documents why the partition
+# Ranking-window guard: the broadcast guard's treatment applied to
+# ranking windows whose reducers sort corpus-sized partitions. Every exemption documents why the partition
 # CONTENTS are bounded by construction (the guard cannot see key
 # cardinality, only plan structure).
 
@@ -1183,9 +1090,6 @@ WINDOW_GUARD_ALLOWED = {
     "multimodal_vad_segments": "per-doc frame index: doc_id keys are corpus-scale, contents bounded by one audio payload",
     "dedup_segments": "segment-fingerprint keys are corpus-scale; contents = one duplicate group",
     "train_shuffle_shards": "two-phase rank: (shard, hb) = 16x64 constant keys, contents corpus/1024, N_SHARD_SUBBUCKETS is the knob; the per-key external sort IS the design's parallelism unit",
-    # golden_record_merge dropped r15: members is now eagerly
-    # checkpointed, so the survivorship windows read an RDD leaf and
-    # the guard sees no fact scan beneath them.
     "dedup_cluster_representatives": "connected-component keys are corpus-scale; contents = one duplicate cluster",
     "histogram_equi_depth": "ordstats-style two-phase rank over the literal-mod sample slice; __bkt buckets are equi-depth by quantile construction (balanced contents)",
     "bootstrap_mean_ci": "global window over the B-row replicate-mean table (B a literal grid; per-replicate keyed agg upstream bounds the input)",
@@ -1200,8 +1104,8 @@ WINDOW_GUARD_ALLOWED = {
     "quantile_sketch_audit": "per-shard local sort IS the sketch's parallelism unit (train_shuffle_shards pattern): contents = corpus/QS_SHARDS, QS_SHARDS the cluster-scaling knob; downstream merge is a window over the constant QS_SHARDS*QS_K summary",
 }
 
-# The r8 verdict's scale-killer class, repaired in r9 — these must stay
-# WindowGroupLimit-pruned forever (train_shuffle_shards' repair moved it
+# Probe-keyed rankings that carry a literal rank bound — these must stay
+# WindowGroupLimit-pruned (train_shuffle_shards' repair moved it
 # to the two-phase shape, which stays allowlisted above by design).
 WINDOW_GUARD_REPAIRED = (
     "rag_chunk_retrieval_eval",
@@ -1242,7 +1146,7 @@ def test_window_guard_unit(spark, sf_dir):
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window as W
 
-    from http_datafusion_spark.plans.window_guard import (
+    from plan_guards import (
         _partition_keys,
         ranking_window_violations,
     )
@@ -1284,7 +1188,7 @@ def test_window_guard_unit(spark, sf_dir):
 
 
 def test_r9_additions_plan_invariants(spark, sf_dir):
-    """Scale-shape pins for the round-9 additions:
+    """Scale-shape pins:
     - sequence_packing_audit: no cartesian products; the stream prefix
       sum must be keyed (source, hb), never a single-partition window;
       exactly one corpus token scan feeds the per-source partial (the
@@ -1308,7 +1212,7 @@ def test_r9_additions_plan_invariants(spark, sf_dir):
 
 
 def test_r9_late_additions_plan_invariants(spark, sf_dir):
-    """Scale-shape pins for the later r9 additions:
+    """Scale-shape pins:
     - corpus_dsir_importance: no cartesian; the lambda join is equi-keyed
       on the hashed feature (never a nested loop over doc-features).
     - sim_contrastive_pair_mining: candidate-bounded equi-joins only.
@@ -1352,7 +1256,7 @@ def test_r9_lake_ops_plan_invariants(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Grouped-pandas bound guard (r10 verdict task 6): every
+# Grouped-pandas bound guard: every
 # groupBy(...).applyInPandas / cogrouped-pandas group must be argued
 # bounded — a group materializes as ONE pandas DataFrame on one
 # executor, so an unbounded key is an OOM at scale, not a slow shuffle.
@@ -1410,7 +1314,7 @@ def test_every_grouped_pandas_key_is_argued_bounded(guard_sweep):
 def test_pandas_guard_unit(spark, sf_dir):
     """Parser pins: grouped and cogrouped nodes are both seen, keys are
     normalized, and a plan with no grouped-pandas nodes yields []."""
-    from http_datafusion_spark.plans.pandas_guard import (
+    from plan_guards import (
         grouped_pandas_key_signatures,
     )
 
@@ -1430,10 +1334,9 @@ def test_pandas_guard_unit(spark, sf_dir):
 
 def test_collect_inventory_is_pinned():
     """Every driver-side `.collect()` in the package must have a
-    documented bound — the 'all collect sites bounded' claim has been a
-    per-round manual grep since r6; this pin makes it structural (the
-    localCheckpoint-inventory pattern), so an unbounded collect cannot
-    land silently.
+    documented bound. This pin makes the 'all collect sites bounded'
+    claim structural (the localCheckpoint-inventory pattern), so an
+    unbounded collect cannot land silently.
 
     Audit of the pinned sites (what bounds each):
     - engine.py (1): show-all-rows parity renderer — the PRODUCT-path
@@ -1485,7 +1388,7 @@ def test_spread_docs_is_scale_adaptive(spark, sf_dir):
     both the cluster's parallelism (the single-file bench-SF case) and
     its shuffle-width target, and be a strict no-op on already-wide
     inputs (it never narrows a scan): the property that makes the
-    r18 tokenize-spread adoptions safe at the many-file 100 TB layout
+    tokenize-spread call sites safe at the many-file 100 TB layout
     (guide §2.5: fix input skew without pessimizing parallel scans)."""
     from http_datafusion_spark.operators.text import spread_docs
 

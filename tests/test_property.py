@@ -274,8 +274,8 @@ def test_json_staging_survives_ragged_rows(spark):
 
 
 def test_json_staging_empty_object_vs_typed_scalar_pinned(spark):
-    # Deterministic pin of the falsifying example Hypothesis found in r7
-    # (VERDICT r7, What's wrong #1): a key carrying an empty object in
+    # Deterministic pin of a falsifying example Hypothesis found: a key
+    # carrying an empty object in
     # one row and a typed scalar in another must survive as a column.
     # Without staging normalization, Spark's JSON schema merge cancels
     # k3 entirely and the '' value is silently lost.
@@ -444,7 +444,7 @@ def test_two_level_agg_exact_at_overflow_scale(spark):
 
 
 def test_two_phase_rank_equals_single_window(spark):
-    """The r9 two-phase within-shard rank (per-(shard, hb) counts ->
+    """The two-phase within-shard rank (per-(shard, hb) counts ->
     exclusive offsets -> bucket-local row_number) must be bit-identical
     to the single per-shard window it replaced, for ANY hash values —
     including collisions and empty sub-buckets. Property-checked on
@@ -501,7 +501,7 @@ def test_two_phase_rank_equals_single_window(spark):
     check()
 
 
-# --------------------- cursor pagination (r10) ---------------------
+# --------------------- cursor pagination ---------------------
 
 
 @settings(max_examples=200, deadline=None)
@@ -594,7 +594,7 @@ def test_cursor_walk_drains_exactly_and_never_loops(n_rows, page_size, reserve_a
     seed=st.integers(min_value=0, max_value=2**31 - 1),
 )
 def test_fold_dot_tiling_is_bit_identical(n, m, d, seed):
-    """fold_dot was tiled over B-columns in r10 (cache-resident
+    """fold_dot is tiled over B-columns (cache-resident
     accumulator). Tiling partitions independent OUTPUT elements; each
     element's dim-by-dim accumulation order must be unchanged, so the
     result must equal the untiled sequential fold BIT-FOR-BIT — this is
@@ -643,8 +643,7 @@ def test_parse_link_next_finds_planted_target(
     """Whatever non-next link-values surround it, in any order, the
     planted rel=next target is recovered verbatim — and absent a next
     link the parser returns None. ``poison_titles`` plants a quoted
-    ``;rel=next`` inside the NON-next links' title params (the r13
-    verdict edge): a bare ';' split tears that quote open and misreads
+    ``;rel=next`` inside the NON-next links' title params: a bare ';' split tears that quote open and misreads
     the fragment as a rel param, returning the wrong link."""
     from http_datafusion_spark.sources.http_json import parse_link_next
 
@@ -662,7 +661,7 @@ def test_parse_link_next_finds_planted_target(
     assert parse_link_next(", ".join(others)) is None
 
 
-# --------------------------- r13 closed-form kernels (pure integer/decimal)
+# --------------------------- closed-form kernels (pure integer/decimal)
 
 
 @given(

@@ -1,5 +1,5 @@
 """Bucket-kNN salted-split kernel: the group-size bound and the
-order-preserving cross-slice merge (r10 verdict, What's wrong #1).
+order-preserving cross-slice merge.
 
 Three pins:
 - the split path (row_cap forcing S > 1) is bit-identical to the
@@ -273,7 +273,7 @@ def singleton_bucket_dir(tmp_path_factory):
 
 
 def test_semdedup_sweep_emits_full_grid_on_degenerate_input(spark, singleton_bucket_dir):
-    """r11 ADVICE item 1: when no vector has an earlier cluster-mate
+    """When no vector has an earlier cluster-mate
     the sweep must still emit every tau row with n_pruned=0 /
     keep_rate=1.0 — and stay oracle-exact on that input."""
     from http_datafusion_spark.operators.similarity import SEMDEDUP_TAU_GRID
@@ -293,8 +293,7 @@ def test_semdedup_sweep_emits_full_grid_on_degenerate_input(spark, singleton_buc
 
 
 # ---------------------------------------------------------------------
-# Late-r11 exact-int64 helper properties (r11 verdict task 5): the
-# helpers shared by centroid_assignments / sim_ood_detection /
+# Exact-int64 helper properties: the helpers shared by centroid_assignments / sim_ood_detection /
 # sim_centroid_classifier_eval / sim_kmeans_refit.
 
 from hypothesis import given, settings

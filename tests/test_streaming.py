@@ -251,10 +251,10 @@ def test_late_drop_twin_actually_drops_rows(spark, sf_dir):
     """The oracle-checked stream_watermark_late_drop models Spark 4.1's
     two-watermark drop semantics (late filter = watermarkForLateEvents,
     one batch behind eviction; SPARK-40925). That model is vacuous if
-    the staged replay never produces a drop — the r9 geometry (±6h
-    jitter vs ~5-day arrival buckets) dropped NOTHING in any batch, so
-    the oracle could not distinguish eager from lagged semantics (r9
-    VERDICT "What's wrong" #1). Pin that with the ±5d jitter at least
+    the staged replay never produces a drop — a ±6h jitter against
+    ~5-day arrival buckets drops NOTHING in any batch, so the oracle
+    could not distinguish eager from lagged semantics. Pin that with
+    the ±5d jitter at least
     one micro-batch reports numRowsDroppedByWatermark > 0, so the
     operator demonstrably exercises the drop path it claims to model."""
     import http_datafusion_spark.streaming.queries as sq
@@ -272,9 +272,9 @@ def test_late_drop_twin_actually_drops_rows(spark, sf_dir):
 def test_wm_conformance_matrix_drop_accounting(spark, sf_dir):
     """Per-config drop accounting for the conformance matrix — the
     evidence the SQL oracle cannot see: the drops-fire geometry drops
-    rows in at least one batch, the exact r9 zero-drop geometry drops
-    NOTHING (under the eager-drop misreading it would — this pin is the
-    r9-bug regression), and widening the slack cannot increase drops."""
+    rows in at least one batch, the ±6h zero-drop geometry drops
+    NOTHING (under the eager-drop misreading it would), and widening
+    the slack cannot increase drops."""
     import http_datafusion_spark.streaming.queries as sq
 
     sq.stream_wm_conformance_matrix(spark, sf_dir).collect()
@@ -288,7 +288,7 @@ def test_wm_conformance_matrix_drop_accounting(spark, sf_dir):
     }
     assert set(drops) == {c[0] for c in sq.WM_CONFORMANCE_CONFIGS}
     assert drops["drop_j5d_s30m"] > 0, drops
-    assert drops["nodrop_j6h_s30m"] == 0, drops  # the r9 geometry never drops
+    assert drops["nodrop_j6h_s30m"] == 0, drops  # the ±6h geometry never drops
     assert 0 < drops["drop_j5d_s4h"] <= drops["drop_j5d_s30m"], drops
 
 
@@ -338,7 +338,7 @@ def test_outer_join_emits_null_rows_only_after_watermark(spark, sf_dir):
     n_clicks = clicks.count()
     # n_matched counts join PAIRS — a click matching 2+ purchases inside
     # its 30-min window legitimately yields more pairs than clicks, so
-    # `m + nn <= n_clicks` is NOT an invariant (r10 ADVICE item 3). The
+    # `m + nn <= n_clicks` is NOT an invariant. The
     # per-click invariant: every click is matched (>=1 pair), null-emitted
     # (exactly one row), or held back — so distinct MATCHED clicks plus
     # null-emitted rows never exceed the click count.
@@ -455,7 +455,7 @@ def test_tws_session_processor_logic():
 
 
 def test_tws_processor_timestamp_resolutions_and_empty_batch():
-    """r11 ADVICE item 3: the processor must fold identically whether
+    """The processor must fold identically whether
     the Arrow path hands it datetime64[ns] or datetime64[us] (pandas
     2.x preserves resolution), and an all-empty batch iterator for a
     fresh key must be a clean no-op (no state write, no timer)."""

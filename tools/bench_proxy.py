@@ -2,9 +2,9 @@
 """DuckDB proxy bench — runs the registry's ORACLE SQL for the
 bench-tagged queries on a parquet directory and prints one JSON line,
 mirroring bench.py's protocol (median of BENCH_RUNS warm runs after one
-cold run). This is the BASELINE.md comparison bar: the reference
-publishes no numbers, so DuckDB on identical SQL + identical parquet is
-the stand-in.
+cold run). It is the bench's comparison bar: the reference publishes
+no numbers (BASELINE.md), so DuckDB on identical SQL + identical
+parquet is the stand-in.
 
 Usage: python tools/bench_proxy.py [sf_dir] (default $SPARK_GRAFT_SF_DIR or /root/testdata/sf0.1)
 """

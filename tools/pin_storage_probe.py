@@ -1,14 +1,14 @@
 #!/usr/bin/env python
-"""Executor-storage growth over a long-lived session (r17 verdict,
-pin lifecycle): execute pin-bearing queries N times in ONE warm session
+"""Executor-storage growth over a long-lived session (pin lifecycle):
+execute pin-bearing queries N times in ONE warm session
 and record cached-RDD storage after every execution.
 
 Two regimes, selected by --scoped / --unscoped:
-  unscoped   pre-r18 behavior — nothing releases a pin's blocks except
+  unscoped   no pin_scope — nothing releases a pin's blocks except
              driver GC + ContextCleaner (periodicGC default: 30 min),
              so storage grows with every execution until a GC happens.
   scoped     each execution wrapped in functions/pinning.pin_scope() —
-             the r18 release path; storage must stay flat.
+             the release path; storage must stay flat.
 
 Prints one JSON line: storage curve (bytes after each execution,
 subsampled), peak/final bytes, cached-RDD count curve, and per-exec

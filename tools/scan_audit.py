@@ -2,8 +2,8 @@
 """Fact-scan-count audit: how many times does each registry plan scan
 the SAME fact parquet?
 
-The r14 CUSUM rewrite (one scan instead of two) came from reading one
-plan by hand; this tool makes that reading mechanical. It builds every
+Reading one plan by hand once turned a two-scan CUSUM into a one-scan
+one; this tool makes that reading mechanical. It builds every
 registry query at sf0.001 (plan SHAPE is scale-independent), walks the
 formatted physical plan, and counts scan nodes per parquet file. A
 repeated fact scan is NOT automatically a defect — truth-vs-estimate
@@ -48,7 +48,7 @@ def scan_counts(df) -> tuple[Counter, int, int]:
     count of non-fact/other leaves (LocalTableScan, OneRowRelation,
     Range, non-fact parquet such as temp/stream sink reads).
 
-    The second number closes the r14 blind spot: a localCheckpoint (or
+    The second number closes a blind spot: a localCheckpoint (or
     memory sink) severs the parquet lineage, so a remediated plan would
     otherwise report 0 sources and drop out of the very audit that
     motivated its repair. A plan with parquet==0 AND rdd==0 is a real

@@ -1,6 +1,6 @@
 #!/usr/bin/env python
-"""Service-mode floor measurement (BASELINE.md: what a long-running
-service amortizes of the per-query scheduling floor).
+"""Service-mode floor measurement: what a long-running service
+amortizes of the per-query scheduling floor.
 
 Three passes over the bench-tagged queries at $SPARK_GRAFT_SF_DIR, one
 warm session (the service), full materialization via the noop sink
@@ -73,7 +73,7 @@ def main() -> None:
         # pin_scope is thread-local, so concurrent submitters each
         # release exactly their own query's pins when it completes —
         # the service's steady-state storage stays flat instead of
-        # growing until a periodic JVM GC (r17 verdict, pin lifecycle).
+        # growing until a periodic JVM GC.
         # The release (an async unpersist) is inside the timed region:
         # it IS part of what one service request costs.
         t0 = time.perf_counter()

@@ -8,7 +8,7 @@ Differences, on purpose:
 - pagination declared in config is honored (the reference binary
   hard-wires it off at src/main.rs:41);
 - DataFusion's ``show()`` prints ALL rows; Spark's defaults to 20, so
-  ``show_all=True`` collects the count first for print parity.
+  ``show_all`` collects the result once and renders every row locally.
 """
 
 from __future__ import annotations

@@ -32,15 +32,10 @@ from pyspark.sql.window import Window
 from http_datafusion_spark.functions.hashing import md5_int, md5_int_sql, salted_hash, salted_hash_sql
 from http_datafusion_spark.operators.components import connected_components
 from http_datafusion_spark.operators.dedup import _minhash_pairs_sql, dedup_minhash_pairs
-from http_datafusion_spark.operators.text import (
-    partitioned_docs,
-    spread_docs,
-    token_count,
-    whitespace_tokens,
-)
+from http_datafusion_spark.operators.text import token_count, whitespace_tokens
 from http_datafusion_spark.functions.pinning import pin
 from http_datafusion_spark.plans.registry import query
-from http_datafusion_spark.plans.tables import load_tables
+from http_datafusion_spark.plans.tables import load_tables, spread
 
 # --------------------------------------------------------------- split
 
@@ -169,7 +164,7 @@ def _cms_bucket_sql(d: int) -> str:
 )
 def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    toks = spread_docs(d.select("doc_id", "text")).select(
+    toks = spread(d.select("doc_id", "text"), "doc_id").select(
         F.explode(whitespace_tokens(F.col("text"))).alias("tok")
     )
     cells = toks.select(
@@ -782,13 +777,13 @@ def ngram_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    # One text exchange feeds BOTH token streams (partitioned_docs:
-    # the bigram window needs the doc_id exchange anyway; carrying raw
+    # One text exchange feeds BOTH token streams (spread: the bigram
+    # window needs the doc_id exchange anyway; carrying raw
     # text across it and exploding after runs tokenize at full width).
     # Measured on 32 cores: sf5 13.12 -> 2.68 s; sf0.1 1.05 -> 1.65 s
     # (32-task floor cost at the smallest SF — the sax-motifs
     # fixed-cost-vs-linear-win trade).
-    dp = partitioned_docs(d)
+    dp = spread(d.select("doc_id", "text"), "doc_id")
     dw = dp.select("doc_id", F.posexplode(whitespace_tokens(F.col("text"))).alias("pos", "w1"))
     wdoc = W.partitionBy("doc_id").orderBy("pos")
     bi = (
@@ -1373,7 +1368,7 @@ def embedding_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame
     # checkpointed exploded frame; every 64-row / per-vec iterate is
     # checkpointed so no shuffle runs twice (_lpa_label_frame pattern).
     dims = (
-        spread_docs(e.select("vec_id", "embedding"), "vec_id")
+        spread(e.select("vec_id", "embedding"), "vec_id")
         .select(
             "vec_id",
             F.posexplode(F.col("embedding")).alias("j0", "xf"),
@@ -1589,11 +1584,11 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    # partitioned_docs: one raw-text exchange feeds the bigram
-    # window AND the unigram stream; tokenize runs at full width.
+    # spread: one raw-text exchange feeds the bigram window AND the
+    # unigram stream; tokenize runs at full width.
     # Measured on 32 cores: sf5 12.14 -> 4.83 s; sf0.1 1.18 -> 1.51 s
     # (floor cost).
-    dp = partitioned_docs(d)
+    dp = spread(d.select("doc_id", "text"), "doc_id")
     dw = dp.select("doc_id", F.posexplode(whitespace_tokens(F.col("text"))).alias("pos", "w1"))
     wdoc = W.partitionBy("doc_id").orderBy("pos")
     bi = (
@@ -1930,7 +1925,7 @@ def embedding_norm_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the codegen'd explode+decimal-agg recompute is cheaper than the
     # columnar cache build+read.
     norms = (
-        spread_docs(e.select("vec_id", "label", "embedding"), "vec_id")
+        spread(e.select("vec_id", "label", "embedding"), "vec_id")
         .select("vec_id", "label", F.explode("embedding").alias("x"))
         .groupBy("vec_id", "label")
         .agg(
@@ -2171,7 +2166,7 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    uni = spread_docs(d.select("doc_id", "text")).select(
+    uni = spread(d.select("doc_id", "text"), "doc_id").select(
         F.explode(whitespace_tokens(F.col("text"))).alias("word")
     )
     topv = (
@@ -3326,9 +3321,6 @@ def orders_price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ----------------------------------------------- bot / automation detection
 
-BOT_TYPES_REF = 5  # alphabet size for max-entropy normalization
-
-
 @query(
     "events_bot_detection",
     oracle="""
@@ -4462,10 +4454,10 @@ def text_heldout_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    # partitioned_docs: text crosses the window's exchange raw;
-    # tokenize runs post-exchange at full width. Measured on 32 cores:
+    # spread: text crosses the window's exchange raw; tokenize runs
+    # post-exchange at full width. Measured on 32 cores:
     # sf5 6.89 -> 3.35 s; sf0.1 0.98 -> 1.62 s (floor cost).
-    dw = partitioned_docs(d, "source").select(
+    dw = spread(d.select("doc_id", "source", "text"), "doc_id").select(
         "doc_id", "source", F.posexplode(whitespace_tokens(F.col("text"))).alias("pos", "w1")
     )
     wdoc = W.partitionBy("doc_id").orderBy("pos")
@@ -4764,11 +4756,11 @@ def text_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    # partitioned_docs: one raw-text exchange feeds the bigram
-    # window AND the unigram stream; tokenize runs at full width.
+    # spread: one raw-text exchange feeds the bigram window AND the
+    # unigram stream; tokenize runs at full width.
     # Measured on 32 cores: sf5 9.83 -> 5.00 s; sf0.1 1.13 -> 2.21 s
     # (floor cost).
-    dp = partitioned_docs(d, "source")
+    dp = spread(d.select("doc_id", "source", "text"), "doc_id")
     dw = dp.select(
         "doc_id", "source", F.posexplode(whitespace_tokens(F.col("text"))).alias("pos", "w1")
     )
@@ -4886,7 +4878,7 @@ def text_keyness_g2(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    w = spread_docs(d.select("doc_id", "source", "text")).select(
+    w = spread(d.select("doc_id", "source", "text"), "doc_id").select(
         "source", F.explode(whitespace_tokens(F.col("text"))).alias("word")
     )
     # (source, word) counts — all three marginals derive from sc by
@@ -5094,7 +5086,7 @@ def events_markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def cms_error_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    toks = spread_docs(d.select("doc_id", "text")).select(
+    toks = spread(d.select("doc_id", "text"), "doc_id").select(
         F.explode(whitespace_tokens(F.col("text"))).alias("tok")
     )
     cells = toks.select(
@@ -5644,10 +5636,10 @@ def _fh_bucket_sql(k: int) -> str:
 def feature_hash_collision_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_tables(spark, sf_dir, "documents")["documents"]
     wdoc = Window.partitionBy("doc_id").orderBy("pos")
-    # partitioned_docs: text crosses the window's exchange raw;
-    # tokenize runs post-exchange at full width (sf5 7.01 -> 1.69 s).
+    # spread: text crosses the window's exchange raw; tokenize runs
+    # post-exchange at full width (sf5 7.01 -> 1.69 s).
     toks = (
-        partitioned_docs(d)
+        spread(d.select("doc_id", "text"), "doc_id")
         .select("doc_id", F.posexplode(whitespace_tokens(F.col("text"))).alias("pos", "w"))
         .withColumn("w1", F.lead("w", 1).over(wdoc))
         .filter(F.col("w1").isNotNull())

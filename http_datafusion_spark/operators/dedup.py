@@ -41,7 +41,7 @@ from http_datafusion_spark.functions.hashing import (
 )
 from http_datafusion_spark.functions.pinning import pin
 from http_datafusion_spark.plans.registry import query
-from http_datafusion_spark.plans.tables import load_tables
+from http_datafusion_spark.plans.tables import load_tables, spread
 
 N_MINHASH = 8  # permutations
 N_BANDS = 4  # bands of 2 -> candidate recall ~J^2 per band
@@ -77,31 +77,18 @@ def shingles_of(docs: DataFrame) -> DataFrame:
     hash-partitioned on doc_id, so a following groupBy(doc_id) adds NO
     exchange.
 
-    The doc_id repartition happens BEFORE the explode ("shuffle the
-    payload once, small rows decide"): the window needs
-    hashpartitioning(doc_id) either way, so the exchange count is
-    unchanged, but exploding first makes the ONE exchange carry the
-    exploded token stream (sf5: 154 MB, vs 35 MB of raw text) AND runs
-    the whole tokenize+explode inside the scan task — a single task
-    when the input is one parquet file (6.6 s serial of a 16 s sf5
-    wall, task-histogram-measured). Repartitioning the (doc_id, text)
-    rows first moves tokenize+explode AFTER the exchange, where it runs
-    at full shuffle-partition parallelism regardless of input file
-    count.
+    The (doc_id, text) rows are spread (``plans.tables.spread``) BEFORE
+    the explode: the window needs hashpartitioning(doc_id) either way,
+    so the exchange count is unchanged, but the one exchange carries raw
+    text instead of the exploded tokens, and tokenize+explode runs at
+    full shuffle width instead of in the scan task (6.6 s in one task of
+    a 16 s sf5 wall, 32 cores).
     """
     from pyspark.sql import Window as W
 
     w = W.partitionBy("doc_id").orderBy("pos")
-    # Explicit partition count (the session's shuffle-partition conf, so
-    # it scales with the deployment, not a local[32] constant): without
-    # it AQE coalesces the sub-advisory-size text exchange to ONE
-    # partition at small SF and the relocated tokenize+explode runs
-    # serially — the explicit N keeps tokenization at full width, which
-    # is the point of moving it.
-    n_part = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return (
-        docs.select("doc_id", "text")
-        .repartition(n_part, "doc_id")
+        spread(docs.select("doc_id", "text"), "doc_id")
         .select("doc_id", F.posexplode(_words(F.col("text"))).alias("pos", "w"))
         .withColumn("w1", F.lead("w", 1).over(w))
         .withColumn("w2", F.lead("w", 2).over(w))
@@ -423,7 +410,7 @@ def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """60-bit SimHash per doc: per-bit majority vote over token hashes
     (all token occurrences — natural TF weighting)."""
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    d = d.repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    d = spread(d.select("doc_id", "text"), "doc_id")
     toks = d.select("doc_id", F.explode(_words(F.col("text"))).alias("w")).select(
         "doc_id", md5_int(F.col("w")).alias("h")
     )
@@ -1083,14 +1070,11 @@ def dedup_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
     w = W.partitionBy("doc_id").orderBy("pos")
-    # The shingles_of pattern: raw text across the window's exchange,
-    # tokenize post-exchange at full width; explicit N so AQE can't
-    # coalesce the small text exchange to one partition. Measured sf5
-    # 15.49 -> 4.97 s; sf0.1 1.18 -> 0.94 s.
-    _n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    # spread: raw text across the window's exchange, tokenize
+    # post-exchange at full width. Measured sf5 15.49 -> 4.97 s; sf0.1
+    # 1.18 -> 0.94 s.
     grams = (
-        d.select("doc_id", "text")
-        .repartition(_n_part, "doc_id")
+        spread(d.select("doc_id", "text"), "doc_id")
         .select("doc_id", F.posexplode(_words(F.col("text"))).alias("pos", "w"))
         .withColumn("w1", F.lead("w", 1).over(w))
         .withColumn("w2", F.lead("w", 2).over(w))
@@ -1809,13 +1793,11 @@ def dedup_substring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
     w = W.partitionBy("doc_id").orderBy("pos")
-    # The shingles_of pattern: raw text across the window's exchange,
-    # tokenize post-exchange at full width (sf5 55.4 -> 54.3 s — the
-    # gram self-join dominates here; sf0.1 1.55 -> 1.40 s).
-    _n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    # spread: raw text across the window's exchange, tokenize
+    # post-exchange at full width (sf5 55.4 -> 54.3 s — the gram
+    # self-join dominates here; sf0.1 1.55 -> 1.40 s).
     grams = (
-        d.select("doc_id", "text")
-        .repartition(_n_part, "doc_id")
+        spread(d.select("doc_id", "text"), "doc_id")
         .select("doc_id", F.posexplode(_words(F.col("text"))).alias("pos", "wd"))
         .withColumn("w1", F.lead("wd", 1).over(w))
         .withColumn("w2", F.lead("wd", 2).over(w))

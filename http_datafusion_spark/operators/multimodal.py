@@ -43,12 +43,6 @@ from http_datafusion_spark.functions.pinning import pin
 from http_datafusion_spark.plans.registry import query
 from http_datafusion_spark.plans.tables import load_tables
 
-MEDIA_SCHEMA = (
-    "doc_id bigint, media_type string, payload binary, "
-    "meta struct<n_bytes: bigint, declared_kind: string, source: string>"
-)
-
-
 def media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synthesize the multimodal table: binary payload + typed metadata.
 

@@ -39,7 +39,7 @@ from http_datafusion_spark.functions.hashing import (
 )
 from http_datafusion_spark.functions.pinning import pin
 from http_datafusion_spark.plans.registry import REGISTRY, query
-from http_datafusion_spark.plans.tables import load_tables
+from http_datafusion_spark.plans.tables import load_tables, spread
 
 CHUNK_WORDS = 50
 CHUNK_STRIDE = 40  # 10-word overlap between consecutive chunks
@@ -632,12 +632,11 @@ def pq_codes(spark: SparkSession, e: DataFrame) -> DataFrame:
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
-    from http_datafusion_spark.operators.text import spread_docs
 
-    # spread: the 256-fold ADC distance grid per vector would run inside
-    # the single-row-group scan task at bench SFs; no-op on wide layouts.
+    # spread: the 256-fold ADC distance grid per vector runs at full
+    # width, not inside the one-row-group scan task.
     return (
-        spread_docs(e.select("vec_id", emb.alias("x")), "vec_id")
+        spread(e.select("vec_id", emb.alias("x")), "vec_id")
         .crossJoin(F.broadcast(ms))
         .crossJoin(F.broadcast(cb))
         .select("vec_id", "m", "k", dist.alias("dist"))
@@ -836,10 +835,8 @@ def embedding_pq_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     # feeds both the refit and the before-counts — cache them so each
     # Lloyd stage is computed once (the standard iterative-algorithm
     # pattern; at cluster scale this is the per-iteration checkpoint).
-    from http_datafusion_spark.operators.text import spread_docs
-
     sub = (
-        spread_docs(e.select("vec_id", emb.alias("x")), "vec_id")
+        spread(e.select("vec_id", emb.alias("x")), "vec_id")
         .crossJoin(ms)
         .select("vec_id", "m", F.slice("x", F.col("m") * PQ_SUB + 1, PQ_SUB).alias("sx"))
         .cache()
@@ -2705,10 +2702,10 @@ def curriculum_stage_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucketed_global_rank,
         ntile_from_rank,
     )
-    from http_datafusion_spark.operators.text import spread_docs, whitespace_tokens
+    from http_datafusion_spark.operators.text import whitespace_tokens
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    dw = spread_docs(d.select("doc_id", "text")).select(
+    dw = spread(d.select("doc_id", "text"), "doc_id").select(
         "doc_id", F.explode(whitespace_tokens(F.col("text"))).alias("word")
     )
     counts = dw.groupBy("word").agg(F.count(F.lit(1)).cast("bigint").alias("c"))

@@ -38,9 +38,11 @@ from pyspark.sql import functions as F
 
 from http_datafusion_spark.functions.veclib import fold_norms, fold_sqdist
 from http_datafusion_spark.functions.pinning import pin
-from http_datafusion_spark.operators.text import spread_docs
+# Imported for its registrations only: text's queries register before
+# this module's, an order the registry (and its hash) depends on.
+import http_datafusion_spark.operators.text  # noqa: F401
 from http_datafusion_spark.plans.registry import query
-from http_datafusion_spark.plans.tables import fingerprint_tables, load_tables
+from http_datafusion_spark.plans.tables import fingerprint_tables, load_tables, spread
 
 QUERY_VEC_ID = 0  # the "query" is the embedding of vec_id 0
 N_CENTROIDS = 8
@@ -165,21 +167,25 @@ def ivf_assignments(spark: SparkSession, sf_dir: str, spread: bool = True) -> Da
     written partitioned by ``bucket`` so probes become partition-pruned
     scans.
 
-    ``spread``: the single-row-group bench-SF scan feeds this
-    Python kernel ONE input partition — one Arrow worker assigned every
-    vector; the scale-adaptive repartition parallelizes it (no-op on
-    file-parallel layouts). sim_contrastive_pair_mining opts OUT: it
-    pins the (vec_id, bucket) projection with a fact-scale persist, and
-    the pre-assignment exchange measured SLOWER through that persist at
-    sf5 (11.7 s vs 7.3 s) while every unpinned consumer measured faster
-    (silhouette −77%, ivf_buckets −54%, semdedup_prune −26%)."""
+    ``spread``: a one-row-group ``embeddings`` scan feeds this Python
+    kernel ONE input partition — one Arrow worker assigns every vector;
+    ``plans.tables.spread`` repartitions the vectors to the shuffle width
+    first (sf5, 4 cores: ``sim_ivf_buckets`` 1.78 -> 1.15 s).
+    sim_contrastive_pair_mining opts OUT: it pins the (vec_id, bucket)
+    projection with a fact-scale persist, and the pre-assignment
+    exchange measured SLOWER through that persist at sf5 (11.7 s vs
+    7.3 s) while every unpinned consumer measured faster (silhouette
+    −77%, ivf_buckets −54%, semdedup_prune −26%)."""
     cents = _fetch_vectors(spark, sf_dir, CENTROID_VEC_IDS)
     cids = sorted(cents)
     C = np.stack([cents[c] for c in cids])
     e = load_tables(spark, sf_dir, "embeddings")["embeddings"]
     pts = e.select("vec_id", "label", "embedding")
     if spread:
-        pts = spread_docs(pts, "vec_id")
+        # The parameter shadows the module-level helper's name.
+        from http_datafusion_spark.plans.tables import spread as spread_rows
+
+        pts = spread_rows(pts, "vec_id")
     return pts.mapInPandas(
         _assign_score_fn(cids, C, None),
         schema="vec_id bigint, label bigint, embedding array<float>, bucket bigint",
@@ -384,7 +390,7 @@ def sim_kmeans_refit(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_tables(spark, sf_dir, "embeddings")["embeddings"]
     emb = F.col("embedding").cast("array<double>")
     # spread: both Lloyd passes inherit base's partitioning.
-    base = spread_docs(e.select("vec_id", emb.alias("x")), "vec_id")
+    base = spread(e.select("vec_id", emb.alias("x")), "vec_id")
 
     def assign_kernel(points: DataFrame, cids: np.ndarray, C: np.ndarray) -> DataFrame:
         def fn(batches):
@@ -845,7 +851,7 @@ def embedding_centroid_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (norms + both dot-join sides); unpinned, each re-derived the
     # embeddings scan — pin it: one corpus pass.
     cent = (
-        spread_docs(e.select("vec_id", "label", "embedding"), "vec_id")
+        spread(e.select("vec_id", "label", "embedding"), "vec_id")
         .crossJoin(dims)
         .select(
             "label",
@@ -1223,7 +1229,7 @@ def _label_centroids_micro(e: DataFrame) -> tuple[np.ndarray, np.ndarray]:
     dims) index-time constant (the codebook-on-the-driver pattern of
     _fetch_vectors). Every rounding happens in Spark; the micro ints
     are exact."""
-    comp = spread_docs(e.select("vec_id", "label", "embedding"), "vec_id").select(
+    comp = spread(e.select("vec_id", "label", "embedding"), "vec_id").select(
         "vec_id", "label", F.posexplode(F.col("embedding")).alias("p", "xf")
     ).select(
         "label",
@@ -1262,7 +1268,7 @@ def _scaled_components(e: DataFrame) -> DataFrame:
         lambda v: (F.round(v.cast("double"), 6).cast("decimal(18,6)") * 1_000_000)
         .cast("long"),
     )
-    return spread_docs(e.select("vec_id", "label", "embedding"), "vec_id").select(
+    return spread(e.select("vec_id", "label", "embedding"), "vec_id").select(
         "vec_id", "label", xi.alias("xi")
     )
 
@@ -1599,7 +1605,7 @@ def sim_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     b_p = F.slice(F.col("qv"), F.lit(1), F.col("dim"))
     cos = _dot(a_p, b_p) / (_norm(a_p) * _norm(b_p))
     sc = (
-        spread_docs(base, "vec_id")  # base stays narrow for q's pushed lookup
+        spread(base, "vec_id")  # base stays narrow for q's pushed lookup
         .crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("qid"))
         .crossJoin(F.broadcast(dims))
@@ -2917,7 +2923,7 @@ def embedding_isotropy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     x = F.col("embedding").cast("array<double>")
     ed = (
-        spread_docs(e.select("vec_id", "embedding"), "vec_id")
+        spread(e.select("vec_id", "embedding"), "vec_id")
         .select(
             "vec_id",
             x.alias("x"),
@@ -3199,7 +3205,7 @@ def sim_srp_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     code = bits[0]
     for b in bits[1:]:
         code = code + b
-    coded = spread_docs(e.select("vec_id", "embedding"), "vec_id").select(
+    coded = spread(e.select("vec_id", "embedding"), "vec_id").select(
         "vec_id", emb.alias("emb"), _norm(emb).alias("nrm"), code.alias("code")
     )
     # Pin the bucket-bounded multi-probe candidate set: its two
@@ -3560,7 +3566,7 @@ def embedding_mmd_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     def q6(c: Column) -> Column:
         return F.round(c, 6).cast("decimal(18,6)")
 
-    ed = spread_docs(e.select("vec_id", "label", "embedding"), "vec_id").select(
+    ed = spread(e.select("vec_id", "label", "embedding"), "vec_id").select(
         F.when(F.col("label") < MMD_SPLIT_LABEL, 1).otherwise(0).alias("gx"),
         F.posexplode(F.col("embedding").cast("array<double>")).alias("dim", "v"),
     ).select(

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from http_datafusion_spark.functions.hashing import md5_int_sql
 from http_datafusion_spark.functions.pinning import pin
 from http_datafusion_spark.plans.registry import query
-from http_datafusion_spark.plans.tables import load_tables
+from http_datafusion_spark.plans.tables import load_tables, spread
 
 # Stopword lists for the n-gram/stopword language heuristic. The
 # documents fixture has synthetic vocab, so the heuristic is defined on
@@ -45,45 +45,6 @@ def bpe_ish_token_estimate(col: Column) -> Column:
     return F.size(F.regexp_extract_all(col, F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"), F.lit(0)))
 
 
-def partitioned_docs(df: DataFrame, *cols: str) -> DataFrame:
-    """(doc_id[, cols...], text) hash-partitioned by doc_id at the
-    session's shuffle width — for the posexplode + window(doc_id) token
-    shapes (bigram/shingle streams). The window forces this exchange
-    anyway; taking it BEFORE the explode makes it carry raw text
-    instead of the exploded token stream (strictly fewer bytes at every
-    scale) and runs tokenize at full width instead of inside the scan
-    task (one 6.6 s serial map task at sf5 became 32-way on 32
-    cores, the ``shingles_of`` pattern). Explicit N because AQE would coalesce the small
-    text exchange back to one partition at bench SFs. Sibling token
-    streams in the same query should derive from THIS frame so the one
-    exchange feeds them all."""
-    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return df.select("doc_id", *cols, "text").repartition(n_part, "doc_id")
-
-
-def spread_docs(df: DataFrame, key: str = "doc_id") -> DataFrame:
-    """Scale-ADAPTIVE spread for CPU-heavy per-row map work (tokenize /
-    regex / explode): when the source scan yields fewer partitions than
-    the session's parallelism — one small parquet file at bench SFs, or
-    one unsplittable file in production (guide §2.5 "input skew") — the
-    whole tokenize pass runs in that handful of scan tasks while the
-    rest of the cluster idles (task-histogram measured: a single 6.6 s
-    map task for text_token_stats at sf5). A deterministic hash
-    repartition on ``key`` spreads it; the explicit width (the
-    session's shuffle-partition conf) stops AQE coalescing the small
-    text exchange straight back to one partition. When the scan is
-    already at least core-wide (the many-file 100 TB layout), or at
-    least as wide as that target, this is a NO-OP — no exchange is
-    added, so it never pessimizes a parallel scan and never narrows one.
-    Pass only the columns the map work needs before calling (the
-    exchange carries every column given to it)."""
-    width = df.rdd.getNumPartitions()
-    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    if width >= df.sparkSession.sparkContext.defaultParallelism or width >= n_part:
-        return df
-    return df.repartition(n_part, key)
-
-
 @query(
     "text_token_stats",
     oracle="""
@@ -103,10 +64,10 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Tokenize once in its own projection — Catalyst does not
     # subexpression-eliminate the split across select-list items
     # (measured on bm25: 2.46 s vs 1.59 s at sf1 for a 4-use list).
-    # spread_docs: this is a pure map query, so a narrow scan runs the
-    # whole regex pass serially (sf5: one 6.6 s task). Measured on 32
-    # cores: sf5 6.60 -> 2.64 s, sf0.1 0.48 -> 0.34 s.
-    pre = spread_docs(d.select("doc_id", "text")).select(
+    # spread: this is a pure map query, so an unspread one-row-group
+    # scan runs the whole regex pass in one task (sf5: one 6.6 s task).
+    # Measured on 32 cores: sf5 6.60 -> 2.64 s, sf0.1 0.48 -> 0.34 s.
+    pre = spread(d.select("doc_id", "text"), "doc_id").select(
         "doc_id",
         "text",
         token_count(F.col("text")).alias("n_toks"),
@@ -292,10 +253,10 @@ def text_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_tables(spark, sf_dir, "documents")["documents"]
     w = W.partitionBy("doc_id").orderBy("pos")
     words = F.filter(F.split(F.trim("text"), r"\s+"), lambda x: x != "")
-    # partitioned_docs: text crosses the window's exchange raw;
-    # tokenize runs post-exchange at full width (sf5 6.67 -> 1.27 s).
+    # spread: text crosses the window's exchange raw; tokenize runs
+    # post-exchange at full width (sf5 6.67 -> 1.27 s).
     return (
-        partitioned_docs(d)
+        spread(d.select("doc_id", "text"), "doc_id")
         .select("doc_id", F.posexplode(words).alias("pos", "w"))
         .withColumn("w1", F.lead("w", 1).over(w))
         .filter(F.col("w1").isNotNull())
@@ -479,7 +440,7 @@ def text_rare_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1.6 s at sf1 when the double pass was first removed — exchange
     # reuse keeps that win without .cache()'s cross-invocation pinning).
     dw = (
-        spread_docs(d.select("doc_id", "text"))
+        spread(d.select("doc_id", "text"), "doc_id")
         .select("doc_id", F.explode(whitespace_tokens(F.col("text"))).alias("word"))
         .distinct()
     )
@@ -530,7 +491,7 @@ def vocab_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    words = spread_docs(d.select("doc_id", "text")).select(
+    words = spread(d.select("doc_id", "text"), "doc_id").select(
         F.explode(whitespace_tokens(F.col("text"))).alias("word")
     )
     f = words.groupBy("word").agg(F.count(F.lit(1)).cast("bigint").alias("freq"))
@@ -588,18 +549,11 @@ def text_tfidf_topterm(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Explicit Exchange (not .cache()) so the exploded token stream is
     # computed once per execution via exchange reuse — zero pinned
     # state, honest re-execution on every run.
-    # The repartition comes BEFORE the explode (the shingles_of
-    # pattern): the exchange needs hashpartitioning(doc_id) either
-    # way, but it carries raw text instead of the exploded token
-    # stream (fewer bytes at every scale) and tokenize+explode runs at
-    # full shuffle width instead of inside the scan task; explicit N
-    # stops AQE coalescing the small text exchange back to one
-    # partition. Measured sf5 8.76 -> 2.58 s, sf0.1 0.94 -> 0.72 s.
-    _n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    dw = (
-        d.select("doc_id", "text")
-        .repartition(_n_part, "doc_id")
-        .select("doc_id", F.explode(whitespace_tokens(F.col("text"))).alias("word"))
+    # spread before the explode: the exchange carries raw text and
+    # tokenize+explode runs at full shuffle width instead of inside the
+    # scan task. Measured sf5 8.76 -> 2.58 s, sf0.1 0.94 -> 0.72 s.
+    dw = spread(d.select("doc_id", "text"), "doc_id").select(
+        "doc_id", F.explode(whitespace_tokens(F.col("text"))).alias("word")
     )
     tf = dw.groupBy("doc_id", "word").agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
     dfreq = dw.groupBy("word").agg(F.count_distinct("doc_id").cast("bigint").alias("df"))
@@ -713,10 +667,10 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Split the text ONCE in its own projection: with the split inlined
     # into all four consumers Catalyst did NOT subexpression-eliminate
     # it across the select list (measured 2.46 s vs 1.59 s at sf1).
-    # spread_docs: the tokenize+tf map work ran in the scan task
-    # (sf5 5.53 -> 1.63 s, sf0.1 0.75 -> 0.65 s); the doc_id exchange
+    # spread: the tokenize+tf map work runs at full width, not in the
+    # scan task (sf5 5.53 -> 1.63 s, sf0.1 0.75 -> 0.65 s); the doc_id exchange
     # below stays narrow (6 ints/doc) at every scale.
-    pre = spread_docs(d.select("doc_id", "text")).select(
+    pre = spread(d.select("doc_id", "text"), "doc_id").select(
         "doc_id", whitespace_tokens(F.col("text")).alias("toks")
     )
     base = pre.select(
@@ -1040,7 +994,7 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     is an executor OOM at web scale. AQE still broadcasts it when
     runtime stats say it's small."""
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    dw = spread_docs(d.select("doc_id", "text")).select(
+    dw = spread(d.select("doc_id", "text"), "doc_id").select(
         "doc_id", F.explode(whitespace_tokens(F.col("text"))).alias("word")
     )
     counts = dw.groupBy("word").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
@@ -1088,7 +1042,7 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    dc = spread_docs(d.select("doc_id", "text")).select(
+    dc = spread(d.select("doc_id", "text"), "doc_id").select(
         "doc_id", F.explode(F.split("text", "")).alias("ch")
     )
     cnt = dc.groupBy("doc_id", "ch").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
@@ -1140,7 +1094,7 @@ OOV_VOCAB_SIZE = 20  # deliberately < corpus vocabulary so OOV is non-trivial
 )
 def vocab_coverage_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    w = spread_docs(d.select("doc_id", "source", "text")).select(
+    w = spread(d.select("doc_id", "source", "text"), "doc_id").select(
         "source", F.explode(whitespace_tokens(F.col("text"))).alias("word")
     )
     vocab = (
@@ -1300,7 +1254,7 @@ def quality_model_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         (((md5_int(F.concat(F.lit("qw|"), F.col("id").cast("string"))) % 2001) - 1000)
          / 1000.0).cast("decimal(18,3)").alias("w"),
     )
-    toks = spread_docs(d.select("doc_id", "text")).select(
+    toks = spread(d.select("doc_id", "text"), "doc_id").select(
         "doc_id",
         F.explode(whitespace_tokens(F.lower(F.col("text")))).alias("tok"),
     )
@@ -1502,7 +1456,7 @@ def quality_model_gradient(spark: SparkSession, sf_dir: str) -> DataFrame:
         (((md5_int(F.concat(F.lit("qw|"), F.col("id").cast("string"))) % 2001) - 1000)
          / 1000.0).cast("decimal(18,3)").alias("w"),
     )
-    toks = spread_docs(d.select("doc_id", "text")).select(
+    toks = spread(d.select("doc_id", "text"), "doc_id").select(
         "doc_id", F.explode(whitespace_tokens(F.lower(F.col("text")))).alias("tok")
     )
     feats = (
@@ -1627,7 +1581,7 @@ def _bpe_pairs_sql(src: str) -> str:
 def bpe_first_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_tables(spark, sf_dir, "documents")["documents"]
     vocab = (
-        spread_docs(d.select("doc_id", "text"))
+        spread(d.select("doc_id", "text"), "doc_id")
         .select(F.explode(whitespace_tokens(F.lower(F.col("text")))).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("bigint").alias("wf"))
@@ -1737,7 +1691,7 @@ def _bpe_train_oracle(k: int = BPE_TRAIN_MERGES) -> str:
 def bpe_merge_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_tables(spark, sf_dir, "documents")["documents"]
     vocab = (
-        spread_docs(d.select("doc_id", "text"))
+        spread(d.select("doc_id", "text"), "doc_id")
         .select(F.explode(whitespace_tokens(F.lower(F.col("text")))).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("bigint").alias("wf"))
@@ -1838,7 +1792,7 @@ def _bpe_apply_oracle(k: int = BPE_TRAIN_MERGES) -> str:
 def tokenize_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges = [r.merge_pair for r in bpe_merge_train(spark, sf_dir).orderBy("step").collect()]
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    toks = spread_docs(d.select("doc_id", "source", "text")).select(
+    toks = spread(d.select("doc_id", "source", "text"), "doc_id").select(
         "doc_id",
         "source",
         F.explode(whitespace_tokens(F.lower(F.col("text")))).alias("tok"),
@@ -1918,7 +1872,7 @@ JSD_VOCAB = 50  # top-V corpus words define the comparison support
 )
 def vocab_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    toks = spread_docs(d.select("doc_id", "source", "text")).select(
+    toks = spread(d.select("doc_id", "source", "text"), "doc_id").select(
         "source", F.explode(whitespace_tokens(F.lower(F.col("text")))).alias("word")
     )
     # One checkpointed (source, word) count table feeds BOTH the
@@ -2018,7 +1972,7 @@ BURST_VOCAB = 30  # top-V corpus words profiled
 )
 def text_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    toks = spread_docs(d.select("doc_id", "text")).select(
+    toks = spread(d.select("doc_id", "text"), "doc_id").select(
         "doc_id", F.explode(whitespace_tokens(F.lower(F.col("text")))).alias("word")
     )
     vocab = (
@@ -2162,7 +2116,7 @@ def text_prf_query_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    toks = spread_docs(d.select("doc_id", "text")).select(
+    toks = spread(d.select("doc_id", "text"), "doc_id").select(
         "doc_id", F.explode(whitespace_tokens(F.lower(F.col("text")))).alias("word")
     )
     # The (doc, word, tf) table IS the BM25 index, and both scoring
@@ -2314,11 +2268,11 @@ HEAPS_CHECKPOINTS = 10
 )
 def text_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    # spread_docs: the lower+tokenize+explode pass ran serially
+    # spread: the lower+tokenize+explode pass runs at full width, not
     # in the scan task (sf5 11.11 -> 1.56 s, sf0.1 flat); the
     # (word, doc_id) partial agg still collapses map-side before the
     # word exchange.
-    toks = spread_docs(d.select("doc_id", "text")).select(
+    toks = spread(d.select("doc_id", "text"), "doc_id").select(
         "doc_id", F.explode(whitespace_tokens(F.lower(F.col("text")))).alias("word")
     )
     nd = d.agg(F.max("doc_id").cast("bigint").alias("mx"))
@@ -2423,7 +2377,7 @@ STOPWORD_MAX_VMR = 2.0  # and spreads evenly (low burstiness)
 )
 def text_stopword_induction(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    toks = spread_docs(d.select("doc_id", "text")).select(
+    toks = spread(d.select("doc_id", "text"), "doc_id").select(
         "doc_id", F.explode(whitespace_tokens(F.lower(F.col("text")))).alias("word")
     )
     nd = d.agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
@@ -2598,9 +2552,9 @@ def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    # partitioned_docs: text crosses the segment window's exchange
-    # raw; tokenize runs post-exchange at full width (sf5 33 -> 13 s).
-    toks = partitioned_docs(d).select(
+    # spread: text crosses the segment window's exchange raw;
+    # tokenize runs post-exchange at full width (sf5 33 -> 13 s).
+    toks = spread(d.select("doc_id", "text"), "doc_id").select(
         "doc_id",
         F.posexplode(whitespace_tokens(F.lower(F.col("text")))).alias("pos", "word"),
     )
@@ -2832,7 +2786,7 @@ def feature_hashing_vectorizer(spark: SparkSession, sf_dir: str) -> DataFrame:
     from http_datafusion_spark.functions.hashing import md5_int
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    toks = spread_docs(d.select("doc_id", "source", "text")).select(
+    toks = spread(d.select("doc_id", "source", "text"), "doc_id").select(
         "source",
         "doc_id",
         F.explode(whitespace_tokens(F.lower(F.col("text")))).alias("word"),
@@ -2910,7 +2864,7 @@ def feature_hashing_vectorizer(spark: SparkSession, sf_dir: str) -> DataFrame:
 def vocab_chao1_unseen(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_tables(spark, sf_dir, "documents")["documents"]
     f = (
-        spread_docs(d.select("doc_id", "source", "text"))
+        spread(d.select("doc_id", "source", "text"), "doc_id")
         .select("source", F.explode(whitespace_tokens(F.col("text"))).alias("word"))
         .groupBy("source", "word")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -3223,7 +3177,7 @@ def text_readability_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    toks = spread_docs(d.select("doc_id", "source", "text")).select(
+    toks = spread(d.select("doc_id", "source", "text"), "doc_id").select(
         "source", F.explode(whitespace_tokens(F.col("text"))).alias("tok")
     )
     wc = toks.groupBy("source", "tok").agg(
@@ -3335,7 +3289,7 @@ _Q9BD = "CAST(round({x}, 9) AS DECIMAL(18,9))"
 )
 def text_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    toks = spread_docs(d.select("doc_id", "source", "text")).select(
+    toks = spread(d.select("doc_id", "source", "text"), "doc_id").select(
         "source", F.explode(whitespace_tokens(F.col("text"))).alias("tok")
     )
     # ONE corpus token pass — physically, not just logically: the

@@ -691,9 +691,6 @@ def order_fulfillment_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------- difference-in-differences
 
-DID_SPLIT_FRAC = 0.5  # event-time midpoint splits pre/post
-
-
 @query(
     "events_impact_did",
     oracle="""

@@ -149,3 +149,24 @@ def load_tables(
         df.createOrReplaceTempView(name)
         out[name] = df
     return out
+
+
+def spread(df: DataFrame, key: str) -> DataFrame:
+    """Hash-repartition ``df`` on ``key`` to the session's shuffle width
+    (``spark.sql.shuffle.partitions``), for CPU-heavy per-row work over
+    a projection of a loaded ``documents`` or ``embeddings`` table.
+
+    Those files are written once by other tools, often as one row group,
+    so the scan can hand every row to one task: at a local sf5 (4 cores)
+    the 26 MB ``embeddings`` file plans as 4 splits of which 1 holds
+    rows, and spreading it took ``sim_matryoshka_recall`` from 20.3 s to
+    6.8 s. The width is explicit because AQE merges a small exchange
+    partitioned by key alone into one partition, which undoes the
+    spread: ``documents`` repartitioned by ``doc_id`` alone runs as 1
+    task at sf0.1 and at sf5 (4 cores). Spread before an explode, so
+    the exchange carries raw text, not the exploded stream: at sf5 35 MB
+    of text vs 154 MB of shingle tokens (32 cores). Project only the
+    columns the map work needs first; the exchange carries every column
+    given to it. Nothing here plans ``df`` on the driver."""
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return df.repartition(n, key)

@@ -53,6 +53,7 @@ on the driver.
 from __future__ import annotations
 
 import json
+import math
 from collections.abc import Callable, Mapping
 from typing import Any
 
@@ -125,7 +126,7 @@ def _request_with_retries(
     """The shared retry/Retry-After loop behind fetch_json and
     fetch_json_conditional: returns the Response on 2xx (or 304 when
     ``accept_304``), retries connection errors / 429 / 5xx with
-    exponential backoff (a numeric Retry-After, capped at
+    exponential backoff (a finite, non-negative Retry-After, capped at
     ``_RETRY_AFTER_CAP``, overrides that attempt's delay), and raises
     HttpError on other statuses or when retries are exhausted."""
     import time
@@ -149,12 +150,14 @@ def _request_with_retries(
         if accept_304 and resp.status_code == 304:
             return resp
         if resp.status_code == 429 or 500 <= resp.status_code < 600:
-            ra = resp.headers.get("Retry-After")
-            if ra is not None:
-                try:
-                    retry_after = min(float(ra), _RETRY_AFTER_CAP)
-                except ValueError:
-                    retry_after = None  # HTTP-date form: fall back to backoff
+            try:
+                ra = float(resp.headers.get("Retry-After", "nan"))
+            except ValueError:  # HTTP-date form
+                ra = math.nan
+            # Only a finite, non-negative delay is honoured; anything else
+            # (absent, an HTTP date, -1, nan, inf) falls back to backoff.
+            if math.isfinite(ra) and ra >= 0:
+                retry_after = min(ra, _RETRY_AFTER_CAP)
             last_err = HttpError(
                 f"HTTP request failed with status code: {resp.status_code} ({url})"
             )

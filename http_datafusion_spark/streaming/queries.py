@@ -1120,10 +1120,6 @@ WM_JITTER_SEC = 432_000  # +-5d arrival jitter: rows land >=2 batches late
 WM_LAST_PROGRESS: list = []
 
 
-def _arrival_us(ts_us, jitter_sec):  # noqa: ANN001 - Column math helper
-    return ts_us + jitter_sec * 1_000_000
-
-
 def staged_arrival_dir(
     spark: SparkSession, sf_dir: str, jitter_sec: int = WM_JITTER_SEC, echo: bool = False
 ) -> str:

@@ -52,7 +52,7 @@ class _Handler(BaseHTTPRequestHandler):
                 body = json.dumps({"err": "rate limited"}).encode()
                 self.send_response(429)
                 self.send_header("Content-Type", "application/json")
-                self.send_header("Retry-After", "0")
+                self.send_header("Retry-After", parse_qs(u.query).get("ra", ["0"])[0])
                 self.end_headers()
                 self.wfile.write(body)
             else:
@@ -419,16 +419,19 @@ def test_cursor_pagination_stops_on_reserved_token(base_url):
     assert _Handler.hit_counts["/cursor_loop"] == 2
 
 
-def test_retry_after_header_is_honored(base_url):
+@pytest.mark.parametrize("retry_after", ["0", "-1", "nan"])
+def test_retry_after_header_is_honored(base_url, retry_after):
     import time
 
     from http_datafusion_spark.sources.http_json import fetch_json
 
     _Handler.hit_counts.pop("/retry_after", None)
     t0 = time.time()
-    # backoff=5.0 would sleep 5+10 s if the Retry-After: 0 header were
-    # ignored; honoring it makes the two retries immediate.
-    body = fetch_json(f"{base_url}/retry_after", retries=3, backoff=5.0)
+    # backoff=5.0 would sleep 5+10 s if Retry-After: 0 were ignored;
+    # honoring it makes the two retries immediate. -1 and nan are not
+    # delays: those retries fall back to the (small) backoff.
+    backoff = 5.0 if retry_after == "0" else 0.05
+    body = fetch_json(f"{base_url}/retry_after?ra={retry_after}", retries=3, backoff=backoff)
     assert body == {"ok": True}
     assert _Handler.hit_counts["/retry_after"] == 3
     assert time.time() - t0 < 4.0

@@ -1383,37 +1383,59 @@ def test_collect_inventory_is_pinned():
     }, f"collect() inventory drifted — audit the new/removed site: {sites}"
 
 
-def test_spread_docs_is_scale_adaptive(spark, sf_dir):
-    """spread_docs must repartition ONLY when the scan is narrower than
-    both the cluster's parallelism (the single-file bench-SF case) and
-    its shuffle-width target, and be a strict no-op on already-wide
-    inputs (it never narrows a scan): the property that makes the
-    tokenize-spread call sites safe at the many-file 100 TB layout
-    (guide §2.5: fix input skew without pessimizing parallel scans)."""
-    from http_datafusion_spark.operators.text import spread_docs
+def test_spread_gives_the_shuffle_width_and_keys_the_next_group(spark, sf_dir):
+    """spread(df, key) hash-partitions to spark.sql.shuffle.partitions
+    whatever the input's width, narrower or wider, and leaves the rows
+    partitioned on key, so a following groupBy(key) plans no exchange."""
+    from http_datafusion_spark.plans.tables import spread
 
-    parallelism = spark.sparkContext.defaultParallelism
-    shuffle_key = "spark.sql.shuffle.partitions"
-    n_shuffle = int(spark.conf.get(shuffle_key))
+    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
     d = load_tables(spark, sf_dir, "documents")["documents"].select("doc_id", "text")
-    narrow = d.coalesce(1)
-    spread = spread_docs(narrow)
-    if 1 < min(parallelism, n_shuffle):
-        assert spread.rdd.getNumPartitions() == n_shuffle
-    else:
-        assert spread is narrow, "a one-task session has nothing to spread to"
-    wide = d.repartition(parallelism * 2, "doc_id")
-    assert spread_docs(wide) is wide, "no-op expected on core-wide inputs"
+    for src in (d.coalesce(1), d.repartition(2 * spark.sparkContext.defaultParallelism, "doc_id")):
+        assert spread(src, "doc_id").rdd.getNumPartitions() == n_shuffle
+        # The spread's exchange replaces the input's and serves the group.
+        assert plan_of(spread(src, "doc_id").groupBy("doc_id").count()).count("Exchange") == 1
 
-    # shuffle.partitions < scan width < defaultParallelism: the spread's
-    # target is narrower than the scan, so it must not narrow it.
-    if parallelism >= 3:
-        mid = d.repartition(parallelism - 1, "doc_id")
-        spark.conf.set(shuffle_key, str(parallelism - 2))
-        try:
-            assert spread_docs(mid) is mid, "spread_docs narrowed a wider scan"
-        finally:
-            spark.conf.set(shuffle_key, str(n_shuffle))
+
+def test_spread_does_no_driver_side_planning(spark, sf_dir, monkeypatch):
+    """spread() only adds a repartition to the logical plan: it never
+    reaches DataFrame.rdd, which plans the frame on the driver."""
+    from http_datafusion_spark.plans.tables import spread
+
+    d = load_tables(spark, sf_dir, "embeddings")["embeddings"].select("vec_id", "embedding")
+
+    def planned(self):
+        raise AssertionError("spread() planned its input on the driver")
+
+    monkeypatch.setattr(type(d), "rdd", property(planned))
+    spread(d, "vec_id")
+
+
+def test_spread_width_is_read_in_one_place():
+    """Scan width is one rule: no package code asks a frame for its
+    partition count, spark.sql.shuffle.partitions is read only where
+    the session sets it and in plans.tables.spread, and
+    defaultParallelism only for the two ingest widths."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).parent.parent / "http_datafusion_spark"
+    shuffle_conf, parallelism, num_partitions = set(), set(), []
+    for f in sorted(pkg.rglob("*.py")):
+        rel, src = str(f.relative_to(pkg)), f.read_text()
+        if "getNumPartitions" in src:
+            num_partitions.append(rel)
+        for fn in ast.walk(ast.parse(src)):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            for node in ast.walk(fn):
+                if isinstance(node, ast.Constant) and node.value == "spark.sql.shuffle.partitions":
+                    shuffle_conf.add((rel, fn.name))
+                if isinstance(node, ast.Attribute) and node.attr == "defaultParallelism":
+                    parallelism.add(rel)
+    assert num_partitions == []
+    assert shuffle_conf == {("session.py", "get_spark"), ("plans/tables.py", "spread")}
+    assert parallelism == {"engine.py", "sources/http_json.py"}
 
 
 def test_refused_session_conf_is_logged_and_the_rest_are_set(caplog):

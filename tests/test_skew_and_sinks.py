@@ -1,31 +1,11 @@
-"""Skew-salting correctness + streaming foreachBatch exactly-once-style
-parquet sink.
-"""
+"""Streaming foreachBatch exactly-once-style parquet sink."""
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import functions as F
-
-from http_datafusion_spark.functions.skew import salted_count_sum
 from http_datafusion_spark.plans.tables import load_tables
 from http_datafusion_spark.streaming.queries import read_events_stream
-
-
-def test_salted_aggregate_matches_plain(spark, sf_dir):
-    li = load_tables(spark, sf_dir, "lineitem")["lineitem"]
-    plain = {
-        r.l_returnflag: (r.n, round(r.total, 2))
-        for r in li.groupBy("l_returnflag")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("l_quantity").alias("total"))
-        .collect()
-    }
-    salted = {
-        r.l_returnflag: (r.n, round(r.total, 2))
-        for r in salted_count_sum(li, "l_returnflag", "l_quantity").collect()
-    }
-    assert salted == plain
 
 
 def test_foreachbatch_parquet_sink(spark, sf_dir, tmp_path):

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from http_datafusion_spark.operators.dedup import _minhash_pairs_sql, dedup_minhash_pairs
+from http_datafusion_spark.functions.fixedpoint import quantize
 from http_datafusion_spark.functions.pinning import pin
 from http_datafusion_spark.plans.registry import query
 
@@ -280,7 +281,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = edges.select("src").distinct().count()  # scalar: one number, not node state
     p = deg.select("src", (F.lit(1.0) / n).alias("p")).withColumnRenamed("src", "node")
     for _ in range(PR_ITERS):
-        contrib = F.round(F.col("p") / F.col("d") * F.lit(PR_DAMP), 15).cast("decimal(28,15)")
+        contrib = quantize(F.col("p") / F.col("d") * F.lit(PR_DAMP), 15, 28)
         p = (
             edges.join(p, edges["src"] == p["node"])
             .join(deg, "src")
@@ -1081,14 +1082,12 @@ def graph_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_nodes",
             F.coalesce(F.col("m_within"), F.lit(0)).cast("bigint").alias("m_within"),
             "d_sum",
-            F.round(
+            quantize(
                 F.coalesce(F.col("m_within"), F.lit(0)) * F.lit(1.0) / F.col("m")
                 - (F.col("d_sum") * F.lit(1.0) / (2 * F.col("m")))
                 * (F.col("d_sum") * F.lit(1.0) / (2 * F.col("m"))),
                 12,
-            )
-            .cast("decimal(18,12)")
-            .alias("qc"),
+            ).alias("qc"),
         )
     )
     wall = W.orderBy(F.lit(1)).rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
@@ -1400,11 +1399,7 @@ def graph_degree_powerlaw(spark: SparkSession, sf_dir: str) -> DataFrame:
         "d",
         "cnt",
         (
-            F.round(
-                F.col("cnt")
-                * F.round(F.log(F.col("d") / F.lit(PL_DMIN - 0.5)), 6),
-                6,
-            ).cast("decimal(18,6)")
+            quantize(F.col("cnt") * F.round(F.log(F.col("d") / F.lit(PL_DMIN - 0.5)), 6), 6)
         ).alias("lterm"),
     )
     return tail.agg(

@@ -29,11 +29,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from http_datafusion_spark.functions.fixedpoint import i100, quantize, unscale
 from http_datafusion_spark.functions.hashing import md5_int, md5_int_sql, salted_hash, salted_hash_sql
 from http_datafusion_spark.operators.components import connected_components
 from http_datafusion_spark.operators.dedup import _minhash_pairs_sql, dedup_minhash_pairs
-from http_datafusion_spark.operators.text import token_count, whitespace_tokens
+from http_datafusion_spark.operators.text import _EN_STOPWORDS
 from http_datafusion_spark.functions.pinning import pin
+from http_datafusion_spark.functions.tokens import token_count, whitespace_tokens
 from http_datafusion_spark.plans.registry import query
 from http_datafusion_spark.plans.tables import load_tables, spread
 
@@ -937,10 +939,8 @@ def dedup_minhash_estimator_calibration(spark: SparkSession, sf_dir: str) -> Dat
         .join(zb, "doc_b")
         .select(
             "est_jaccard",
-            F.round(exact, 6).cast("decimal(18,6)").alias("ej"),
-            F.round(F.abs(F.col("est_jaccard") - F.round(exact, 6)), 6)
-            .cast("decimal(18,6)")
-            .alias("err"),
+            quantize(exact, 6).alias("ej"),
+            quantize(F.abs(F.col("est_jaccard") - F.round(exact, 6)), 6).alias("err"),
         )
     )
     return scored.groupBy("est_jaccard").agg(
@@ -1354,12 +1354,6 @@ def _pca_oracle() -> str:
 def embedding_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_tables(spark, sf_dir, "embeddings")["embeddings"]
 
-    def q8(c):
-        return F.round(c, 8).cast("decimal(28,8)")
-
-    def q6(c):
-        return F.round(c, 6).cast("decimal(28,6)")
-
     # Unrolled-iteration-without-checkpoint was the scan audit's
     # 12x-embeddings-scans finding: s1/u2/s2 each re-derived the
     # posexplode lineage, and the chained iterates compounded it. The
@@ -1384,24 +1378,24 @@ def embedding_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame
     s1 = (
         dims.join(u1, "vec_id")
         .groupBy("j")
-        .agg(F.sum(q8(F.col("x") * F.col("u"))).cast("double").alias("s"))
+        .agg(F.sum(quantize(F.col("x") * F.col("u"), 8, 28)).cast("double").alias("s"))
         .transform(pin)  # 64 rows
     )
-    n1 = s1.agg(F.sqrt(F.sum(q6(F.col("s") * F.col("s"))).cast("double")).alias("nrm"))
+    n1 = s1.agg(F.sqrt(F.sum(quantize(F.col("s") * F.col("s"), 6, 28)).cast("double")).alias("nrm"))
     v1 = s1.crossJoin(F.broadcast(n1)).select("j", (F.col("s") / F.col("nrm")).alias("v"))
     u2 = (
         dims.join(F.broadcast(v1), "j")
         .groupBy("vec_id")
-        .agg(F.sum(q8(F.col("x") * F.col("v"))).cast("double").alias("u"))
+        .agg(F.sum(quantize(F.col("x") * F.col("v"), 8, 28)).cast("double").alias("u"))
         .transform(pin)  # one scalar per vector
     )
     s2 = (
         dims.join(u2, "vec_id")
         .groupBy("j")
-        .agg(F.sum(q8(F.col("x") * F.col("u"))).cast("double").alias("s"))
+        .agg(F.sum(quantize(F.col("x") * F.col("u"), 8, 28)).cast("double").alias("s"))
         .transform(pin)  # 64 rows; final select + n2 both read it
     )
-    n2 = s2.agg(F.sqrt(F.sum(q6(F.col("s") * F.col("s"))).cast("double")).alias("nrm"))
+    n2 = s2.agg(F.sqrt(F.sum(quantize(F.col("s") * F.col("s"), 6, 28)).cast("double")).alias("nrm"))
     return s2.crossJoin(F.broadcast(n2)).select(
         F.col("j").cast("int").alias("j"),
         F.round(F.col("s") / F.col("nrm"), 6).alias("pc1"),
@@ -1601,12 +1595,9 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     vsize = uc.count()
     bc = bi.groupBy("w1", "w2").agg(F.count(F.lit(1)).cast("bigint").alias("cb"))
     ucb = uc.select(F.col("word").alias("w1"), F.col("c").alias("cu"))
-    nll = F.round(
-        -F.log(
-            (F.col("cb") + BIGRAM_ADD_K) / (F.col("cu") + BIGRAM_ADD_K * F.lit(vsize))
-        ),
-        6,
-    ).cast("decimal(18,6)")
+    nll = quantize(
+        -F.log((F.col("cb") + BIGRAM_ADD_K) / (F.col("cu") + BIGRAM_ADD_K * F.lit(vsize))), 6
+    )
     # bc (bigram counts) and ucb (unigram counts) are corpus-growing —
     # bigram vocab is strictly larger than unigram vocab. No baked-in
     # broadcast hints: AQE broadcasts when small, shuffle-joins at scale.
@@ -1930,7 +1921,7 @@ def embedding_norm_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("vec_id", "label")
         .agg(
             F.sqrt(
-                F.sum(F.round(x * x, 8).cast("decimal(28,8)")).cast("double")
+                F.sum(quantize(x * x, 8, 28)).cast("double")
             ).alias("nrm")
         )
     )
@@ -2000,11 +1991,7 @@ def orders_pareto_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_tables(spark, sf_dir, "orders")["orders"]
     per_cust = (
         o.groupBy("o_custkey")
-        .agg(
-            F.sum(F.round("o_totalprice", 2).cast("decimal(18,2)"))
-            .cast("decimal(18,2)")
-            .alias("rev")
-        )
+        .agg(unscale(F.sum(i100("o_totalprice")), 2).cast("decimal(18,2)").alias("rev"))
         .withColumn("rev_d", F.col("rev").cast("double"))
         .transform(pin)  # sketch + rank pass reuse it
     )
@@ -2180,15 +2167,12 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.log(F.col("freq").cast("double")).alias("y"),
     )
 
-    def q6(c):
-        return F.round(c, 6).cast("decimal(28,6)")
-
     s = pts.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(q6(F.col("x"))).cast("double").alias("sx"),
-        F.sum(q6(F.col("y"))).cast("double").alias("sy"),
-        F.sum(q6(F.col("x") * F.col("x"))).cast("double").alias("sxx"),
-        F.sum(q6(F.col("x") * F.col("y"))).cast("double").alias("sxy"),
+        F.sum(quantize(F.col("x"), 6, 28)).cast("double").alias("sx"),
+        F.sum(quantize(F.col("y"), 6, 28)).cast("double").alias("sy"),
+        F.sum(quantize(F.col("x") * F.col("x"), 6, 28)).cast("double").alias("sxx"),
+        F.sum(quantize(F.col("x") * F.col("y"), 6, 28)).cast("double").alias("sxy"),
     )
     n, sx, sy, sxx, sxy = (F.col(c) for c in ("n", "sx", "sy", "sxx", "sxy"))
     slope = (n * sxy - sx * sy) / (n * sxx - sx * sx)
@@ -2396,9 +2380,6 @@ def privacy_kanonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------- language-ID evaluation
-
-from http_datafusion_spark.operators.text import _EN_STOPWORDS  # noqa: E402
-
 
 @query(
     "text_langid_confusion",
@@ -2756,8 +2737,6 @@ _BOOT_U_SQL = f"(({md5_int_sql(_BOOT_KEY_SQL)} % 1000000) + 0.5) / 1000000.0"
 def bootstrap_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
-    from http_datafusion_spark.functions.fixedpoint import i100
-
     o = load_tables(spark, sf_dir, "orders")["orders"]
     reps = spark.range(BOOT_B).select(F.col("id").cast("bigint").alias("b"))
     u = (
@@ -2845,17 +2824,17 @@ def feature_target_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "o_orderkey",
             F.col("c_mktsegment").alias("segment"),
-            F.col("o_totalprice").cast("decimal(18,2)").alias("v"),
+            i100("o_totalprice").alias("c"),
         )
     )
     seg = o.groupBy("segment").agg(
-        F.sum("v").cast("decimal(38,2)").alias("s"),
+        F.sum("c").alias("s"),
         F.count(F.lit(1)).cast("bigint").alias("n"),
     )
     return o.join(F.broadcast(seg), "segment").select(
         F.col("o_orderkey").alias("orderkey"),
         "segment",
-        F.round((F.col("s") - F.col("v")).cast("double") / (F.col("n") - 1), TENC_ROUND)
+        F.round(unscale(F.col("s") - F.col("c"), 2).cast("double") / (F.col("n") - 1), TENC_ROUND)
         .alias("loo_segment_mean"),
     )
 
@@ -2920,9 +2899,7 @@ def segment_chisquare(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(colt), "pri")
         .crossJoin(F.broadcast(tot))
         .select(
-            F.round((F.col("o") - e) * (F.col("o") - e) / e, 6)
-            .cast("decimal(18,6)")
-            .alias("term")
+            quantize((F.col("o") - e) * (F.col("o") - e) / e, 6).alias("term")
         )
     )
     nr = rowt.agg(F.count(F.lit(1)).cast("bigint").alias("n_rows_cat"))
@@ -3048,7 +3025,7 @@ def feature_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum((F.col("v") < p01).cast("int")).cast("bigint").alias("n_clipped_lo"),
         F.sum((F.col("v") > p99).cast("int")).cast("bigint").alias("n_clipped_hi"),
         F.round(
-            F.sum(clipped.cast("decimal(18,2)")).cast("double") / F.count(F.lit(1)), 4
+            unscale(F.sum(i100(clipped)), 2).cast("double") / F.count(F.lit(1)), 4
         ).alias("winsorized_mean"),
         F.lit(p01).alias("p01"),
         F.lit(p99).alias("p99"),
@@ -3148,7 +3125,7 @@ def feature_trailing_90d(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         "o_custkey",
         (F.unix_timestamp("o_orderdate") / 86400).cast("bigint").alias("day"),
-        F.col("o_totalprice").cast("decimal(18,2)").alias("v"),
+        i100("o_totalprice").alias("c"),
     )
     w = (
         W.partitionBy("o_custkey")
@@ -3158,7 +3135,7 @@ def feature_trailing_90d(spark: SparkSession, sf_dir: str) -> DataFrame:
     return base.select(
         F.col("o_orderkey").alias("orderkey"),
         (F.count(F.lit(1)).over(w) - 1).cast("bigint").alias("n_prior_orders_90d"),
-        F.round((F.sum("v").over(w) - F.col("v")).cast("double"), 2).alias(
+        F.round(unscale(F.sum("c").over(w) - F.col("c"), 2).cast("double"), 2).alias(
             "prior_spend_90d"
         ),
     )
@@ -3280,18 +3257,14 @@ def orders_price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             "l_partkey", F.year("l_shipdate").cast("bigint").alias("yr")
         )
         .agg(
-            F.sum(F.col("l_quantity").cast("decimal(18,2)"))
-            .cast("decimal(38,2)")
-            .alias("qty"),
+            unscale(F.sum(i100("l_quantity")), 2).cast("decimal(38,2)").alias("qty"),
             F.sum(
                 F.col("l_quantity").cast("decimal(18,2)")
                 * (F.col("l_extendedprice") / F.col("l_quantity")).cast("decimal(18,6)")
             ).cast("decimal(38,8)").alias("spend"),
         )
     )
-    unit_price = F.round(
-        F.col("spend").cast("double") / F.col("qty").cast("double"), 10
-    ).cast("decimal(38,10)")
+    unit_price = quantize(F.col("spend").cast("double") / F.col("qty").cast("double"), 10, 38)
     base = li.filter(
         (F.col("yr") == PRICE_INDEX_BASE_YEAR) & (F.col("qty") > 0)
     ).select(
@@ -3398,7 +3371,7 @@ def events_bot_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = tc.select(
         "user_id",
         "c",
-        F.round(-p * F.log2(p), 6).cast("decimal(18,6)").alias("term"),
+        quantize(-p * F.log2(p), 6).alias("term"),
     )
     entropy = terms.groupBy("user_id").agg(
         F.sum("c").cast("bigint").alias("n_events"),
@@ -3452,11 +3425,7 @@ def orders_gini_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_tables(spark, sf_dir, "orders")["orders"]
     per_cust = (
         o.groupBy("o_custkey")
-        .agg(
-            F.sum(F.round("o_totalprice", 2).cast("decimal(18,2)"))
-            .cast("decimal(38,2)")
-            .alias("rev")
-        )
+        .agg(unscale(F.sum(i100("o_totalprice")), 2).cast("decimal(38,2)").alias("rev"))
         .withColumn("rev_d", F.col("rev").cast("double"))
         .transform(pin)
     )
@@ -3560,7 +3529,7 @@ def attribution_models_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum((F.col("rk_first") == 1).cast("int")).cast("bigint").alias("first_touch"),
         F.sum((F.col("rk_last") == 1).cast("int")).cast("bigint").alias("last_touch"),
         F.round(
-            F.sum(F.round(1.0 / F.col("n_touches"), 6).cast("decimal(18,6)")).cast("double"),
+            F.sum(quantize(1.0 / F.col("n_touches"), 6)).cast("double"),
             4,
         ).alias("linear_credit"),
     )
@@ -3609,7 +3578,7 @@ def orders_duplicate_invoice_detect(spark: SparkSession, sf_dir: str) -> DataFra
     o = load_tables(spark, sf_dir, "orders")["orders"].select(
         "o_orderkey",
         "o_custkey",
-        F.round("o_totalprice", 2).cast("decimal(18,2)").alias("amt"),
+        quantize("o_totalprice", 2).alias("amt"),
         F.floor(F.col("o_totalprice") / DUPINV_BAND).cast("bigint").alias("band"),
         F.floor(F.unix_timestamp("o_orderdate") / 86400).cast("bigint").alias("day"),
     )
@@ -3677,17 +3646,13 @@ def supplier_concentration_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(t["part"].select("p_partkey", "p_type"),
               F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("p_type", "l_suppkey")
-        .agg(
-            F.sum(F.round("l_extendedprice", 2).cast("decimal(18,2)"))
-            .cast("decimal(38,2)")
-            .alias("s")
-        )
+        .agg(unscale(F.sum(i100("l_extendedprice")), 2).cast("decimal(38,2)").alias("s"))
     )
     tot = spend.groupBy("p_type").agg(F.sum("s").cast("decimal(38,2)").alias("t"))
     share = F.col("s").cast("double") / F.col("t").cast("double")
     shares = spend.join(F.broadcast(tot), "p_type").select(
         "p_type",
-        F.round(10000.0 * share * share, 8).cast("decimal(18,8)").alias("term"),
+        quantize(10000.0 * share * share, 8).alias("term"),
     )
     return shares.groupBy("p_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_suppliers"),
@@ -3811,15 +3776,15 @@ def discount_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_tables(spark, sf_dir, "lineitem")["lineitem"]
     banded = li.select(
         F.floor(F.col("l_discount") / DISC_BAND).cast("bigint").alias("band"),
-        F.round("l_quantity", 2).cast("decimal(18,2)").alias("q"),
+        i100("l_quantity").alias("q"),
     )
     cells = banded.groupBy("band").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.round(F.sum("q").cast("double") / F.count(F.lit(1)), 6).alias("avg_qty"),
+        F.round(unscale(F.sum("q"), 2).cast("double") / F.count(F.lit(1)), 6).alias("avg_qty"),
     )
     k = F.count(F.lit(1))
-    sxy = F.sum(F.round(F.col("band") * F.col("avg_qty"), 6).cast("decimal(28,6)"))
-    sy = F.sum(F.round(F.col("avg_qty"), 6).cast("decimal(28,6)"))
+    sxy = F.sum(quantize(F.col("band") * F.col("avg_qty"), 6, 28))
+    sy = F.sum(quantize(F.col("avg_qty"), 6, 28))
     sx = F.sum("band")
     sxx = F.sum((F.col("band") * F.col("band")).cast("decimal(28,0)"))
     fit = cells.agg(
@@ -3888,10 +3853,8 @@ def revenue_bridge_pvm(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("p_type", F.year("l_shipdate").cast("bigint").alias("yr"))
         .agg(
-            F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("decimal(38,2)").alias("qty"),
-            F.sum(F.round("l_extendedprice", 2).cast("decimal(18,2)"))
-            .cast("decimal(38,2)")
-            .alias("rev"),
+            unscale(F.sum(i100("l_quantity")), 2).cast("decimal(38,2)").alias("qty"),
+            unscale(F.sum(i100("l_extendedprice")), 2).cast("decimal(38,2)").alias("rev"),
         )
     )
     pick = lambda yr, c: F.max(F.when(F.col("yr") == yr, F.col(c)))  # noqa: E731
@@ -4068,8 +4031,7 @@ def part_price_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n_lines"),
             F.sum("up").cast("double").alias("s"),
             F.sum(
-                F.round(F.col("up").cast("double") * F.col("up").cast("double"), 4)
-                .cast("decimal(28,4)")
+                quantize(F.col("up").cast("double") * F.col("up").cast("double"), 4, 28)
             ).cast("double").alias("ss"),
         )
         .filter(F.col("n_lines") >= DISPERSION_MIN_LINES)
@@ -4236,21 +4198,18 @@ def parts_abc_xyz(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_partkey",
         (F.year("l_shipdate") * 12 + F.month("l_shipdate")).cast("bigint").alias("midx"),
     ).agg(
-        F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("decimal(38,2)").alias("q"),
-        F.sum(F.round("l_extendedprice", 2).cast("decimal(18,2)"))
-        .cast("decimal(38,2)")
-        .alias("rev"),
+        F.sum(i100("l_quantity")).alias("q"),
+        F.sum(i100("l_extendedprice")).alias("rev"),
     )
+    # Quantities and revenue stay in cents through every level. q*q is
+    # exact in 1e-4 units, which is what round(q*q, 4) gives the oracle.
     per_part = (
         monthly.groupBy("l_partkey")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_months"),
-            F.sum("rev").cast("decimal(38,2)").alias("total_rev"),
-            (F.sum("q").cast("double") / F.count(F.lit(1))).alias("mean_q"),
-            F.sum(
-                F.round(F.col("q").cast("double") * F.col("q").cast("double"), 4)
-                .cast("decimal(28,4)")
-            ).cast("double").alias("ssq"),
+            F.sum("rev").alias("total_rev"),
+            (unscale(F.sum("q"), 2).cast("double") / F.count(F.lit(1))).alias("mean_q"),
+            unscale(F.sum(F.col("q") * F.col("q")), 4).cast("double").alias("ssq"),
         )
         .filter(F.col("n_months") >= 6)
         # part-grain profile: the two-phase global rank (bucket sketch
@@ -4264,7 +4223,7 @@ def parts_abc_xyz(spark: SparkSession, sf_dir: str) -> DataFrame:
     # through one task — fine for a dim-sized part table, wrong at 100x.
     # functions/ordstats' two-phase rank (bucket sketch + per-bucket
     # window + 32-row offset broadcast) computes the identical exact
-    # DECIMAL prefix sums distributed; all_rev is a 1-row broadcast agg.
+    # prefix sums (int64 cents) distributed; all_rev is a 1-row broadcast agg.
     from http_datafusion_spark.functions.ordstats import bucketed_global_rank
 
     ranked_d = bucketed_global_rank(
@@ -4276,17 +4235,15 @@ def parts_abc_xyz(spark: SparkSession, sf_dir: str) -> DataFrame:
         cumsum_of="total_rev",
         cumsum_name="cum_rev_dec",
     )
-    all_row = per_part.agg(
-        F.sum("total_rev").cast("decimal(38,2)").alias("all_rev_dec")
-    )
+    all_row = per_part.agg(F.sum("total_rev").alias("all_rev_dec"))
     ranked = ranked_d.crossJoin(F.broadcast(all_row)).select(
         "l_partkey",
         "n_months",
         "total_rev",
         "mean_q",
         "ssq",
-        F.col("cum_rev_dec").cast("double").alias("cum_rev"),
-        F.col("all_rev_dec").cast("double").alias("all_rev"),
+        unscale(F.col("cum_rev_dec"), 2).cast("double").alias("cum_rev"),
+        unscale(F.col("all_rev_dec"), 2).cast("double").alias("all_rev"),
     )
     # greatest(..., 0): quantized ssq minus unquantized mean^2 can go
     # slightly negative for constant-demand parts -> NaN (see
@@ -4312,7 +4269,7 @@ def parts_abc_xyz(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return classed.groupBy("abc", "xyz").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_parts"),
-        F.sum("total_rev").cast("double").alias("class_revenue"),
+        unscale(F.sum("total_rev"), 2).cast("double").alias("class_revenue"),
     )
 
 
@@ -4478,13 +4435,13 @@ def text_heldout_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     vsize = train_uc.count()
     ev = bi.filter(F.col("doc_id") % 2 == 1)
-    nll = F.round(
+    nll = quantize(
         -F.log(
             (F.coalesce(F.col("cb"), F.lit(0)) + BIGRAM_ADD_K)
             / (F.coalesce(F.col("cu"), F.lit(0)) + BIGRAM_ADD_K * F.lit(vsize))
         ),
         6,
-    ).cast("decimal(18,6)")
+    )
     # train_bi/train_uc are train-corpus n-gram count tables — they grow
     # with the data, so no forced broadcast. Plain left joins: AQE
     # broadcasts at small scale, shuffle-joins co-keyed at 100 TB.
@@ -4554,17 +4511,17 @@ def weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     lines = li.select(
         F.col("l_extendedprice").alias("v"),
         (F.col("l_orderkey") * 8 + F.col("l_linenumber")).alias("tb"),
-        F.col("l_quantity").cast("decimal(18,2)").alias("wt"),
+        i100("l_quantity").alias("wt"),
     )
-    tot = lines.agg(F.sum("wt").cast("decimal(38,2)").alias("t"))
+    tot = lines.agg(F.sum("wt").alias("t"))
     ranked = bucketed_global_rank(
         lines, "v", ["tb"], "rk", cumsum_of="wt", cumsum_name="cum"
     ).crossJoin(F.broadcast(tot))
-    cum_d = F.col("cum").cast("double")
-    t_d = F.col("t").cast("double")
+    cum_d = unscale(F.col("cum"), 2).cast("double")
+    t_d = unscale(F.col("t"), 2).cast("double")
     return ranked.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_lines"),
-        F.max("t").cast("double").alias("total_weight"),
+        F.max(t_d).alias("total_weight"),
         F.round(F.min(F.when(cum_d * 2 >= t_d, F.col("v"))), 2).alias("weighted_median"),
         F.round(F.min(F.when(cum_d * 10 >= t_d * 9, F.col("v"))), 2).alias("weighted_p90"),
     )
@@ -4790,7 +4747,7 @@ def text_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.greatest(F.col("cb") - D, F.lit(0.0))
         + D * F.col("n1f") * (F.col("n1p") * 1.0 / F.col("t"))
     ) / F.col("cu")
-    nll = F.round(-F.log(p_kn), 6).cast("decimal(18,6)")
+    nll = quantize(-F.log(p_kn), 6)
     return (
         bi.join(bc, ["w1", "w2"])
         .join(uc.select(F.col("word").alias("w1"), "cu"), "w1")
@@ -5002,9 +4959,9 @@ def events_markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("cur").cast("bigint").alias("n_states"),
     )
     rowsums = trans.groupBy("cur").agg(F.sum("c").cast("bigint").alias("rc"))
-    term = F.round(
+    term = quantize(
         -(F.col("c") * 1.0 / F.col("n")) * F.log(F.col("c") * 1.0 / F.col("rc")), 6
-    ).cast("decimal(18,6)")
+    )
     terms = (
         trans.join(rowsums, "cur").crossJoin(F.broadcast(tot)).select(
             term.alias("term"), "n", "n_states"
@@ -5544,12 +5501,12 @@ def customer_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     # at the prior level instead of 0. Both engines take
     # the same finite sentinel instead; exp(-1e6 + bounded terms)
     # underflows to exactly 0.0, so survival lands at 0 on both.
-    ln_f = F.round(
+    ln_f = quantize(
         F.when(F.col("d") == F.col("n_risk"), F.lit(KM_LN_ZERO)).otherwise(
             F.log(F.lit(1.0) - F.col("d").cast("double") / F.col("n_risk"))
         ),
         9,
-    ).cast("decimal(18,9)")
+    )
     surv = risk.select(
         "m", "d", "c", "n_risk", F.sum(ln_f).over(w_fwd).alias("cum_ln")
     )

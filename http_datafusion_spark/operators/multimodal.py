@@ -39,6 +39,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from http_datafusion_spark.functions.fixedpoint import quantize
 from http_datafusion_spark.functions.pinning import pin
 from http_datafusion_spark.plans.registry import query
 from http_datafusion_spark.plans.tables import load_tables
@@ -1191,10 +1192,9 @@ def multimodal_aspect_bucketing(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("s.idx", "s.bw", "s.bh", "s.w", "s.h")
     )
     scale = F.least(F.col("bw") / F.col("w"), F.col("bh") / F.col("h"))
-    pad = F.round(
-        1.0 - (F.col("w") * scale) * (F.col("h") * scale) / (F.col("bw") * F.col("bh")),
-        6,
-    ).cast("decimal(18,6)")
+    pad = quantize(
+        1.0 - (F.col("w") * scale) * (F.col("h") * scale) / (F.col("bw") * F.col("bh")), 6
+    )
     return (
         best.select("idx", "bw", "bh", pad.alias("pad"))
         .groupBy("idx", "bw", "bh")
@@ -1435,7 +1435,7 @@ def multimodal_audio_snr(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n_audio_docs"),
             n_scored.cast("bigint").alias("n_scored"),
             F.round(
-                F.sum(F.round(F.col("snr_db"), 6).cast("decimal(18,6)"))
+                F.sum(quantize(F.col("snr_db"), 6))
                 .cast("double")
                 / F.nullif(n_scored, F.lit(0)),
                 6,

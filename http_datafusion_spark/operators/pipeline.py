@@ -31,6 +31,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from http_datafusion_spark.functions.fixedpoint import dsum, i100, quantize, unscale
 from http_datafusion_spark.functions.hashing import (
     md5_int,
     md5_int_sql,
@@ -38,6 +39,7 @@ from http_datafusion_spark.functions.hashing import (
     salted_hash_sql,
 )
 from http_datafusion_spark.functions.pinning import pin
+from http_datafusion_spark.functions.tokens import token_count, whitespace_tokens
 from http_datafusion_spark.plans.registry import REGISTRY, query
 from http_datafusion_spark.plans.tables import load_tables, spread
 
@@ -67,7 +69,7 @@ _WORDS_SQL = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
 )
 def doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    words = F.filter(F.split(F.trim("text"), r"\s+"), lambda w: w != "")
+    words = whitespace_tokens("text")
     base = d.select("doc_id", words.alias("words")).filter(F.size("words") > 0)
     starts = base.select(
         "doc_id",
@@ -605,7 +607,7 @@ def embedding_quantize_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         code_m(1).alias("code_1"),
         code_m(2).alias("code_2"),
         code_m(3).alias("code_3"),
-        F.round(F.sum(F.round("dist", 6).cast("decimal(18,6)")), 6).cast("double").alias("q_err"),
+        F.round(F.sum(quantize("dist", 6)), 6).cast("double").alias("q_err"),
     )
 
 
@@ -687,7 +689,7 @@ def dedup_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    words = F.filter(F.split(F.trim("text"), r"\s+"), lambda w: w != "")
+    words = whitespace_tokens("text")
     base = d.select("doc_id", words.alias("words")).filter(F.size("words") > 0)
     segs = base.select(
         "doc_id",
@@ -748,7 +750,7 @@ def doc_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    words = F.filter(F.split(F.trim("text"), r"\s+"), lambda w: w != "")
+    words = whitespace_tokens("text")
     t = d.select("source", "doc_id", F.size(words).cast("bigint").alias("n_tokens"))
     w = W.partitionBy("source").orderBy("doc_id").rowsBetween(W.unboundedPreceding, 0)
     bin_id = F.floor((F.sum("n_tokens").over(w) - F.col("n_tokens")) / PACK_BUDGET)
@@ -870,7 +872,7 @@ def embedding_pq_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             "m",
             "cluster",
             "dim",
-            F.round(F.element_at("sx", F.col("dim")), 6).cast("decimal(18,6)").alias("v6"),
+            quantize(F.element_at("sx", F.col("dim")), 6).alias("v6"),
         )
         .groupBy("m", "cluster", "dim")
         .agg((F.sum("v6").cast("double") / F.count(F.lit(1))).alias("cval"))
@@ -964,7 +966,7 @@ def corpus_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from http_datafusion_spark.operators.dedup import shingled_docs
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    words = F.filter(F.split(F.trim("text"), r"\s+"), lambda w: w != "")
+    words = whitespace_tokens("text")
     fp = F.md5(F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " "))
     base = d.select(
         "doc_id",
@@ -1270,8 +1272,6 @@ SEQ_BUCKET_W = 64  # length-bucket width (tokens): bucket cap = ceil(len/W)*W
     tags=("pipeline", "text", "bench"),
 )
 def sequence_length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from http_datafusion_spark.operators.text import token_count
-
     d = load_tables(spark, sf_dir, "documents")["documents"]
     n_tok = token_count(F.col("text")).cast("bigint")
     cap = (F.ceil(n_tok.cast("double") / SEQ_BUCKET_W) * SEQ_BUCKET_W).cast("bigint")
@@ -1372,8 +1372,6 @@ _PACK_TOKS_SQL = (
 )
 def sequence_packing_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
-
-    from http_datafusion_spark.operators.text import token_count
 
     L, Wd = PACK_SEQ_LEN, SEQ_BUCKET_W
     d = load_tables(spark, sf_dir, "documents")["documents"]
@@ -1624,7 +1622,7 @@ def quality_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = sb.agg(F.sum("c").cast("bigint").alias("total"))
     p = F.col("c") * 1.0 / F.col("ns")
     q = F.col("cb") * 1.0 / F.col("total")
-    term = F.round((p - q) * F.log(p / q), 6).cast("decimal(18,6)")
+    term = quantize((p - q) * F.log(p / q), 6)
     return (
         sb.join(st, "source")
         .join(qb, "bin")
@@ -1690,7 +1688,7 @@ def corpus_build_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    words = F.filter(F.split(F.trim("text"), r"\s+"), lambda w: w != "")
+    words = whitespace_tokens("text")
     fp = F.md5(F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " "))
     base = d.select(
         "doc_id",
@@ -1755,8 +1753,6 @@ AGG_MERGE_CUTOFF = "1998-01-01"  # base snapshot < cutoff <= delta batch
     tags=("pipeline", "agg"),
 )
 def incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from http_datafusion_spark.functions.fixedpoint import dsum, i100, unscale
-
     o = load_tables(spark, sf_dir, "orders")["orders"]
     month_idx = (F.year("o_orderdate") * 12 + F.month("o_orderdate")).cast("bigint")
 
@@ -1927,8 +1923,6 @@ def table_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 def corpus_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
-    from http_datafusion_spark.operators.text import token_count, whitespace_tokens
-
     d = load_tables(spark, sf_dir, "documents")["documents"]
     norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
     t = d.select(
@@ -2016,8 +2010,6 @@ MIX_TOKEN_BUDGET = 20_000  # target training-token budget
 )
 def mixture_budget_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
-
-    from http_datafusion_spark.operators.text import token_count, whitespace_tokens
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
     n_toks = token_count(F.col("text"))
@@ -2362,8 +2354,6 @@ REL_MIN_SOURCES = 10
 def release_readiness_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     import functools
 
-    from http_datafusion_spark.operators.text import token_count, whitespace_tokens
-
     d = load_tables(spark, sf_dir, "documents")["documents"]
     norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
     dup_rate = 1.0 - F.countDistinct(F.md5(norm)) * 1.0 / F.count(F.lit(1))
@@ -2437,11 +2427,7 @@ DECON_SWEEP = (1, 2, 3, 5)  # candidate shared-shingle thresholds
     tags=("pipeline", "dedup", "agg", "bench_extra"),
 )
 def decontaminate_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from http_datafusion_spark.operators.dedup import (
-        SHINGLE_WIDTH,
-        _words,
-        shingled_docs,
-    )
+    from http_datafusion_spark.operators.dedup import SHINGLE_WIDTH, shingled_docs
 
     sh = shingled_docs(spark, sf_dir)
     is_bench = F.col("doc_id") % DECON_MOD == 0
@@ -2460,7 +2446,7 @@ def decontaminate_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame
     # explode, no doc_id-window shuffle.
     ncorpus = (
         load_tables(spark, sf_dir, "documents")["documents"]
-        .filter(~is_bench & (F.size(_words(F.col("text"))) >= SHINGLE_WIDTH))
+        .filter(~is_bench & (F.size(whitespace_tokens(F.col("text"))) >= SHINGLE_WIDTH))
         .agg(F.countDistinct("doc_id").cast("bigint").alias("n"))
     )
     thresholds = spark.createDataFrame([(t,) for t in DECON_SWEEP], "thr bigint")
@@ -2553,8 +2539,6 @@ _LWORDS_SQL = "list_filter(string_split_regex(trim(lower(text)), '\\s+'), x -> x
 )
 def rag_chunk_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
-
-    from http_datafusion_spark.operators.text import whitespace_tokens
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
     lwords = whitespace_tokens(F.lower(F.col("text")))
@@ -2702,7 +2686,6 @@ def curriculum_stage_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucketed_global_rank,
         ntile_from_rank,
     )
-    from http_datafusion_spark.operators.text import whitespace_tokens
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
     dw = spread(d.select("doc_id", "text"), "doc_id").select(
@@ -2710,7 +2693,7 @@ def curriculum_stage_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     counts = dw.groupBy("word").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     n = counts.agg(F.sum("c").cast("bigint").alias("total"))
-    nll = F.round(-F.log(F.col("c") * 1.0 / F.col("total")), 6).cast("decimal(18,6)")
+    nll = quantize(-F.log(F.col("c") * 1.0 / F.col("total")), 6)
     perdoc = (
         dw.join(counts, "word")
         .crossJoin(F.broadcast(n))
@@ -2986,7 +2969,6 @@ def rag_rrf_fusion_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
     from http_datafusion_spark.operators.similarity import _dot, _norm
-    from http_datafusion_spark.operators.text import whitespace_tokens
 
     t = load_tables(spark, sf_dir, "documents", "embeddings")
     d, e = t["documents"], t["embeddings"]
@@ -3166,8 +3148,6 @@ _DSIR_WORDS_SQL = "list_filter(string_split_regex(trim(lower(text)), '\\s+'), w 
     tags=("pipeline", "text"),
 )
 def corpus_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from http_datafusion_spark.operators.text import whitespace_tokens
-
     d = load_tables(spark, sf_dir, "documents")["documents"]
     words = whitespace_tokens(F.lower(F.col("text")))
     n = F.size("words")
@@ -3212,11 +3192,11 @@ def corpus_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = rf.agg(
         F.sum("t").cast("bigint").alias("tt"), F.sum("r").cast("bigint").alias("rt")
     )
-    lam_expr = F.round(
+    lam_expr = quantize(
         F.log((F.coalesce(F.col("t"), F.lit(0)) + 1.0) / (F.col("tt") + DSIR_BUCKETS))
         - F.log((F.coalesce(F.col("r"), F.lit(0)) + 1.0) / (F.col("rt") + DSIR_BUCKETS)),
         6,
-    ).cast("decimal(18,6)")
+    )
     lam = (
         grid.join(rf, "f", "left")
         .crossJoin(F.broadcast(tot))
@@ -3653,7 +3633,6 @@ def rag_rerank_cross_encoder(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
     from http_datafusion_spark.operators.similarity import _dot, _norm
-    from http_datafusion_spark.operators.text import whitespace_tokens
 
     t = load_tables(spark, sf_dir, "documents", "embeddings")
     d, e = t["documents"], t["embeddings"]

@@ -36,6 +36,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from http_datafusion_spark.functions.fixedpoint import quantize
 from http_datafusion_spark.functions.veclib import fold_norms, fold_sqdist
 from http_datafusion_spark.functions.pinning import pin
 # Imported for its registrations only: text's queries register before
@@ -419,7 +420,7 @@ def sim_kmeans_refit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "cluster",
             "dim",
-            F.round(F.element_at("x", F.col("dim")), 6).cast("decimal(18,6)").alias("v6"),
+            quantize(F.element_at("x", F.col("dim")), 6).alias("v6"),
         )
         .groupBy("cluster", "dim")
         .agg((F.sum("v6").cast("double") / F.count(F.lit(1))).alias("cval"))
@@ -764,17 +765,14 @@ def _moment_oracle() -> str:
 def embedding_moment_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_tables(spark, sf_dir, "embeddings")["embeddings"]
 
-    def q6(c: Column) -> Column:
-        return F.round(c, 6).cast("decimal(18,6)")
-
     aggs = [F.count(F.lit(1)).alias("n")]
     for i, j in MOMENT_PAIRS:
         xi = F.element_at("embedding", i).cast("double")
         xj = F.element_at("embedding", j).cast("double")
         aggs += [
-            F.sum(q6(xi)).cast("double").alias(f"sx_{i}_{j}"),
-            F.sum(q6(xj)).cast("double").alias(f"sy_{i}_{j}"),
-            F.sum(q6(xi * xj)).cast("double").alias(f"sxy_{i}_{j}"),
+            F.sum(quantize(xi, 6)).cast("double").alias(f"sx_{i}_{j}"),
+            F.sum(quantize(xj, 6)).cast("double").alias(f"sy_{i}_{j}"),
+            F.sum(quantize(xi * xj, 6)).cast("double").alias(f"sxy_{i}_{j}"),
         ]
     one = e.agg(*aggs)
     rows = F.array(
@@ -856,8 +854,7 @@ def embedding_centroid_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "label",
             "dim",
-            F.round(F.element_at(F.col("embedding").cast("array<double>"), F.col("dim")), 6)
-            .cast("decimal(18,6)")
+            quantize(F.element_at(F.col("embedding").cast("array<double>"), F.col("dim")), 6)
             .alias("v6"),
         )
         .groupBy("label", "dim")
@@ -963,7 +960,7 @@ def embedding_jl_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "vec_id",
         (F.col("p") + 1).alias("i"),
-        F.round(F.col("xf").cast("double"), 6).cast("decimal(18,6)").alias("x"),
+        quantize(F.col("xf").cast("double"), 6).alias("x"),
     ).transform(pin)
     dims = spark.range(1, JL_OUT_DIM + 1).select(F.col("id").alias("j"))
     sign = (
@@ -1234,14 +1231,13 @@ def _label_centroids_micro(e: DataFrame) -> tuple[np.ndarray, np.ndarray]:
     ).select(
         "label",
         (F.col("p") + 1).alias("i"),
-        F.round(F.col("xf").cast("double"), 6).cast("decimal(18,6)").alias("x"),
+        quantize(F.col("xf").cast("double"), 6).alias("x"),
     )
     cent_rows = (
         comp.groupBy(F.col("label").alias("clabel"), "i")
         .agg(
             (
-                F.round(F.sum("x").cast("double") / F.count(F.lit(1)), 6)
-                .cast("decimal(18,6)")
+                quantize(F.sum("x").cast("double") / F.count(F.lit(1)), 6)
                 * 1_000_000
             )
             .cast("long")
@@ -1265,7 +1261,7 @@ def _scaled_components(e: DataFrame) -> DataFrame:
     distance kernels."""
     xi = F.transform(
         F.col("embedding"),
-        lambda v: (F.round(v.cast("double"), 6).cast("decimal(18,6)") * 1_000_000)
+        lambda v: (quantize(v.cast("double"), 6) * 1_000_000)
         .cast("long"),
     )
     return spread(e.select("vec_id", "label", "embedding"), "vec_id").select(
@@ -2712,7 +2708,7 @@ def sim_spearman_rank_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "vec_id",
         (F.col("p") + 1).alias("i"),
-        F.round(F.col("xf").cast("double"), 6).cast("decimal(18,6)").alias("x"),
+        quantize(F.col("xf").cast("double"), 6).alias("x"),
     )
     dims = spark.range(1, JL_OUT_DIM + 1).select(F.col("id").alias("j"))
     sign = (
@@ -2918,9 +2914,6 @@ _Q6_SQL = "CAST(round({x}, 6) AS DECIMAL(18,6))"
 def embedding_isotropy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_tables(spark, sf_dir, "embeddings")["embeddings"]
 
-    def q6(c: Column) -> Column:
-        return F.round(c, 6).cast("decimal(18,6)")
-
     x = F.col("embedding").cast("array<double>")
     ed = (
         spread(e.select("vec_id", "embedding"), "vec_id")
@@ -2934,10 +2927,10 @@ def embedding_isotropy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "nrm", F.posexplode("x").alias("dim", "v"))
         .select(
             "dim",
-            q6(F.col("v") / F.col("nrm")).alias("uq"),
-            q6((F.col("v") / F.col("nrm")) * (F.col("v") / F.col("nrm"))).alias("usq"),
-            q6(F.col("v")).alias("xq"),
-            q6(F.col("v") * F.col("v")).alias("xsq"),
+            quantize(F.col("v") / F.col("nrm"), 6).alias("uq"),
+            quantize((F.col("v") / F.col("nrm")) * (F.col("v") / F.col("nrm")), 6).alias("usq"),
+            quantize(F.col("v"), 6).alias("xq"),
+            quantize(F.col("v") * F.col("v"), 6).alias("xsq"),
         )
     )
     per_dim = ed.groupBy("dim").agg(
@@ -2949,7 +2942,7 @@ def embedding_isotropy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     vd = per_dim.select(
         "n",
-        q6(F.col("s_u").cast("double") * F.col("s_u").cast("double")).alias("s_u_sq"),
+        quantize(F.col("s_u").cast("double") * F.col("s_u").cast("double"), 6).alias("s_u_sq"),
         "t_u",
         F.round(
             F.col("t_x").cast("double") / F.col("n")
@@ -2964,7 +2957,7 @@ def embedding_isotropy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("t_u").cast("double").alias("sumsq_u"),
         F.max("var_k").alias("max_var"),
         F.sum(F.col("var_k").cast("decimal(18,6)")).cast("double").alias("sum_var"),
-        F.sum(q6(F.col("var_k") * F.col("var_k"))).cast("double").alias("sum_var_sq"),
+        F.sum(quantize(F.col("var_k") * F.col("var_k"), 6)).cast("double").alias("sum_var_sq"),
     )
     n = F.col("n").cast("double")
     return fin.select(
@@ -3033,9 +3026,6 @@ _EUCLID_SQL = (
     tags=("similarity",),
 )
 def sim_silhouette_simplified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def q6(c: Column) -> Column:
-        return F.round(c, 6).cast("decimal(18,6)")
-
     asg = ivf_assignments(spark, sf_dir).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("x"), "bucket"
     )
@@ -3069,7 +3059,7 @@ def sim_silhouette_simplified(spark: SparkSession, sf_dir: str) -> DataFrame:
         s.groupBy("bucket")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_vectors"),
-            F.round(F.sum(q6(F.col("sil"))).cast("double") / F.count(F.lit(1)), 6).alias(
+            F.round(F.sum(quantize(F.col("sil"), 6)).cast("double") / F.count(F.lit(1)), 6).alias(
                 "mean_silhouette"
             ),
             F.round(F.min("sil"), 6).alias("min_silhouette"),
@@ -3301,16 +3291,13 @@ DRIFT_Z_BAR = 3.0  # standardized mean-shift alert threshold
 def embedding_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_tables(spark, sf_dir, "embeddings")["embeddings"]
 
-    def q6(c: Column) -> Column:
-        return F.round(c, 6).cast("decimal(18,6)")
-
     x = e.select(
         (F.col("vec_id") % 2).cast("bigint").alias("batch"),
         F.posexplode("embedding").alias("pos", "raw"),
     ).select(
         "batch",
         (F.col("pos") + 1).cast("int").alias("dim"),
-        q6(F.col("raw").cast("double")).alias("v"),
+        quantize(F.col("raw").cast("double"), 6).alias("v"),
     )
     vd = F.col("v").cast("double")
     m = x.groupBy("dim").agg(
@@ -3318,8 +3305,8 @@ def embedding_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("batch") == 1, 1).otherwise(0)).cast("bigint").alias("n1"),
         F.sum(F.when(F.col("batch") == 0, F.col("v"))).cast("double").alias("s0"),
         F.sum(F.when(F.col("batch") == 1, F.col("v"))).cast("double").alias("s1"),
-        F.sum(F.when(F.col("batch") == 0, q6(vd * vd))).cast("double").alias("t0"),
-        F.sum(F.when(F.col("batch") == 1, q6(vd * vd))).cast("double").alias("t1"),
+        F.sum(F.when(F.col("batch") == 0, quantize(vd * vd, 6))).cast("double").alias("t0"),
+        F.sum(F.when(F.col("batch") == 1, quantize(vd * vd, 6))).cast("double").alias("t1"),
     )
     mean0 = F.col("s0") / F.col("n0")
     mean1 = F.col("s1") / F.col("n1")
@@ -3429,18 +3416,15 @@ def embedding_whitening_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # form's shuffle is linear, co-partitioned on vec_id, and AQE-sized.
     e = load_tables(spark, sf_dir, "embeddings")["embeddings"]
 
-    def q6(c: Column) -> Column:
-        return F.round(c, 6).cast("decimal(18,6)")
-
     raw = e.select(
         "vec_id", F.posexplode(F.col("embedding").cast("array<double>")).alias("pos", "x")
     ).select("vec_id", (F.col("pos") + 1).alias("dim"), "x")
-    xq = q6(F.col("x"))
+    xq = quantize(F.col("x"), 6)
     st = raw.groupBy("dim").agg(
         F.round(F.sum(xq).cast("double") / F.count(F.lit(1)), 6).alias("mu"),
         F.round(
             F.sqrt(
-                F.sum(q6(F.col("x") * F.col("x"))).cast("double")
+                F.sum(quantize(F.col("x") * F.col("x"), 6)).cast("double")
                 / F.count(F.lit(1))
                 - (F.sum(xq).cast("double") / F.count(F.lit(1)))
                 * (F.sum(xq).cast("double") / F.count(F.lit(1)))
@@ -3455,15 +3439,15 @@ def embedding_whitening_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("x"), 6).alias("xr"),
     )
     nrm = zf.groupBy("vec_id").agg(
-        F.sqrt(F.sum(q6(F.col("z") * F.col("z"))).cast("double")).alias("nz"),
-        F.sqrt(F.sum(q6(F.col("xr") * F.col("xr"))).cast("double")).alias("nx"),
+        F.sqrt(F.sum(quantize(F.col("z") * F.col("z"), 6)).cast("double")).alias("nz"),
+        F.sqrt(F.sum(quantize(F.col("xr") * F.col("xr"), 6)).cast("double")).alias("nx"),
     )
     ud = zf.join(nrm, "vec_id").select(
         "dim",
-        q6(F.col("z") / F.col("nz")).alias("uz"),
-        q6((F.col("z") / F.col("nz")) * (F.col("z") / F.col("nz"))).alias("uzsq"),
-        q6(F.col("xr") / F.col("nx")).alias("ux"),
-        q6((F.col("xr") / F.col("nx")) * (F.col("xr") / F.col("nx"))).alias("uxsq"),
+        quantize(F.col("z") / F.col("nz"), 6).alias("uz"),
+        quantize((F.col("z") / F.col("nz")) * (F.col("z") / F.col("nz")), 6).alias("uzsq"),
+        quantize(F.col("xr") / F.col("nx"), 6).alias("ux"),
+        quantize((F.col("xr") / F.col("nx")) * (F.col("xr") / F.col("nx")), 6).alias("uxsq"),
     )
     per_dim = ud.groupBy("dim").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -3474,11 +3458,11 @@ def embedding_whitening_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fin = per_dim.agg(
         F.max("n").alias("n"),
-        F.sum(q6(F.col("s_z").cast("double") * F.col("s_z").cast("double")))
+        F.sum(quantize(F.col("s_z").cast("double") * F.col("s_z").cast("double"), 6))
         .cast("double")
         .alias("ssq_z"),
         F.sum("t_z").cast("double").alias("tsum_z"),
-        F.sum(q6(F.col("s_x").cast("double") * F.col("s_x").cast("double")))
+        F.sum(quantize(F.col("s_x").cast("double") * F.col("s_x").cast("double"), 6))
         .cast("double")
         .alias("ssq_x"),
         F.sum("t_x").cast("double").alias("tsum_x"),
@@ -3563,17 +3547,14 @@ MMD_SPLIT_LABEL = 5  # groups: label < 5 ("x") vs label >= 5 ("y")
 def embedding_mmd_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_tables(spark, sf_dir, "embeddings")["embeddings"]
 
-    def q6(c: Column) -> Column:
-        return F.round(c, 6).cast("decimal(18,6)")
-
     ed = spread(e.select("vec_id", "label", "embedding"), "vec_id").select(
         F.when(F.col("label") < MMD_SPLIT_LABEL, 1).otherwise(0).alias("gx"),
         F.posexplode(F.col("embedding").cast("array<double>")).alias("dim", "v"),
     ).select(
         "dim",
         "gx",
-        q6(F.col("v")).alias("xq"),
-        q6(F.col("v") * F.col("v")).alias("xsq"),
+        quantize(F.col("v"), 6).alias("xq"),
+        quantize(F.col("v") * F.col("v"), 6).alias("xsq"),
     )
     gx1 = F.col("gx") == 1
     per_dim = ed.groupBy("dim").agg(
@@ -3589,17 +3570,15 @@ def embedding_mmd_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     md = per_dim.select(
         "n_x",
         "n_y",
-        q6((mx - my) * (mx - my)).alias("d2q"),
-        q6(mx * my).alias("xyq"),
-        q6(mx * mx).alias("xxq"),
-        q6(my * my).alias("yyq"),
-        q6(
-            (
+        quantize((mx - my) * (mx - my), 6).alias("d2q"),
+        quantize(mx * my, 6).alias("xyq"),
+        quantize(mx * mx, 6).alias("xxq"),
+        quantize(my * my, 6).alias("yyq"),
+        quantize((
                 (F.col("t_x") - F.col("s_x") * F.col("s_x") / F.col("n_x"))
                 + (F.col("t_y") - F.col("s_y") * F.col("s_y") / F.col("n_y"))
             )
-            / (F.col("n_x") + F.col("n_y") - 2)
-        ).alias("vwq"),
+            / (F.col("n_x") + F.col("n_y") - 2), 6).alias("vwq"),
     )
     fin = md.agg(
         F.max("n_x").alias("n_x"),

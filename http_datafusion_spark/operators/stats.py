@@ -44,6 +44,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from http_datafusion_spark.functions.fixedpoint import quantize
 from http_datafusion_spark.functions.pinning import pin
 from http_datafusion_spark.plans.registry import query
 from http_datafusion_spark.plans.tables import load_tables
@@ -87,9 +88,6 @@ def _phi_tail(z: Column) -> Column:
     ) * t
     return F.lit(_INV_SQRT_2PI) * F.exp(-z * z / F.lit(2.0)) * horner
 
-
-def _q6(c: Column) -> Column:
-    return F.round(c, 6).cast("decimal(18,6)")
 
 
 _Q6 = "CAST(round({x}, 6) AS DECIMAL(18,6))"
@@ -255,10 +253,10 @@ def stats_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.sum(F.when(a0, 1).otherwise(0)).cast("bigint").alias("n0"),
             F.sum(F.when(a1, 1).otherwise(0)).cast("bigint").alias("n1"),
-            F.sum(F.when(a0, _q6(F.col("x")))).cast("double").alias("s0"),
-            F.sum(F.when(a1, _q6(F.col("x")))).cast("double").alias("s1"),
-            F.sum(F.when(a0, _q6(F.col("x") * F.col("x")))).cast("double").alias("t0"),
-            F.sum(F.when(a1, _q6(F.col("x") * F.col("x")))).cast("double").alias("t1"),
+            F.sum(F.when(a0, quantize(F.col("x"), 6))).cast("double").alias("s0"),
+            F.sum(F.when(a1, quantize(F.col("x"), 6))).cast("double").alias("s1"),
+            F.sum(F.when(a0, quantize(F.col("x") * F.col("x"), 6))).cast("double").alias("t0"),
+            F.sum(F.when(a1, quantize(F.col("x") * F.col("x"), 6))).cast("double").alias("t1"),
         )
         .filter((F.col("n0") >= 2) & (F.col("n1") >= 2))
     )
@@ -361,8 +359,8 @@ def ml_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_tables(spark, sf_dir, "documents")["documents"]
     x = F.col("n_chars").cast("double")
     stats = d.agg(
-        (F.sum(_q6(x)).cast("double") / F.count(F.lit(1))).alias("mu"),
-        (F.sum(_q6(x * x)).cast("double") / F.count(F.lit(1))).alias("m2"),
+        (F.sum(quantize(x, 6)).cast("double") / F.count(F.lit(1))).alias("mu"),
+        (F.sum(quantize(x * x, 6)).cast("double") / F.count(F.lit(1))).alias("m2"),
     )
     scored = d.crossJoin(F.broadcast(stats)).select(
         F.round(
@@ -392,16 +390,16 @@ def ml_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
         binned.groupBy("bin")
         .agg(
             n.cast("bigint").alias("n_docs"),
-            F.round(F.sum(_q6(F.col("p_hat"))).cast("double") / n, 6).alias("mean_p"),
+            F.round(F.sum(quantize(F.col("p_hat"), 6)).cast("double") / n, 6).alias("mean_p"),
             F.round(F.sum("y").cast("double") / n, 6).alias("frac_pos"),
             F.round(
-                F.sum(_q6(F.col("p_hat"))).cast("double") / n
+                F.sum(quantize(F.col("p_hat"), 6)).cast("double") / n
                 - F.sum("y").cast("double") / n,
                 6,
             ).alias("calib_gap"),
             F.round(
                 F.sum(
-                    _q6((F.col("p_hat") - F.col("y")) * (F.col("p_hat") - F.col("y")))
+                    quantize((F.col("p_hat") - F.col("y")) * (F.col("p_hat") - F.col("y")), 6)
                 ).cast("double")
                 / n,
                 6,
@@ -481,7 +479,7 @@ def ml_conformal_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     pred = (
         li.filter((F.col("l_orderkey") % 4).isin(0, 1))
         .groupBy("l_partkey")
-        .agg((F.sum(_q6(x)).cast("double") / F.count(F.lit(1))).alias("yhat"))
+        .agg((F.sum(quantize(x, 6)).cast("double") / F.count(F.lit(1))).alias("yhat"))
     )
     resid = li.join(pred, "l_partkey").select(
         "l_orderkey",
@@ -589,7 +587,7 @@ def events_att_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(0)
         .alias("treated"),
         (
-            F.sum(F.when(~err, _q6(F.col("value")))).cast("double")
+            F.sum(F.when(~err, quantize(F.col("value"), 6))).cast("double")
             / F.nullif(F.sum(F.when(~err, 1).otherwise(0)), F.lit(0))
         ).alias("y"),
     )
@@ -603,10 +601,10 @@ def events_att_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.sum("treated").cast("bigint").alias("n1"),
             F.sum(F.lit(1) - F.col("treated")).cast("bigint").alias("n0"),
-            F.sum(F.when(F.col("treated") == 1, _q6(F.col("y"))))
+            F.sum(F.when(F.col("treated") == 1, quantize(F.col("y"), 6)))
             .cast("double")
             .alias("s1"),
-            F.sum(F.when(F.col("treated") == 0, _q6(F.col("y"))))
+            F.sum(F.when(F.col("treated") == 0, quantize(F.col("y"), 6)))
             .cast("double")
             .alias("s0"),
         )
@@ -618,10 +616,8 @@ def events_att_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n0").cast("bigint").alias("n_control"),
         F.round(
             F.sum(
-                _q6(
-                    (F.col("s1") / F.col("n1") - F.col("s0") / F.col("n0"))
-                    * F.col("n1")
-                )
+                quantize((F.col("s1") / F.col("n1") - F.col("s0") / F.col("n0"))
+                    * F.col("n1"), 6)
             ).cast("double")
             / F.sum("n1"),
             6,
@@ -782,7 +778,7 @@ def ml_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         "score",
         "n_pos",
         "n_neg",
-        _q6(F.col("pos") * (F.col("tp") * 1.0 / (F.col("tp") + F.col("fp")))).alias(
+        quantize(F.col("pos") * (F.col("tp") * 1.0 / (F.col("tp") + F.col("fp"))), 6).alias(
             "ap_term"
         ),
         F.round(
@@ -901,7 +897,7 @@ def feature_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
         p = F.col(cnt) * 1.0 / F.col("n")
         return (
             df.join(F.broadcast(tot), "feature_pair")
-            .select("feature_pair", _q6(-p * F.log(p)).alias("term"))
+            .select("feature_pair", quantize(-p * F.log(p), 6).alias("term"))
             .groupBy("feature_pair")
             .agg(F.sum("term").cast("double").alias(out))
         )
@@ -1049,10 +1045,10 @@ def msprt_daily_aggregate(df: DataFrame) -> DataFrame:
         .agg(
             F.sum(F.when(a0, 1).otherwise(0)).cast("bigint").alias("n0"),
             F.sum(F.when(a1, 1).otherwise(0)).cast("bigint").alias("n1"),
-            F.sum(F.when(a0, _q6(v))).cast("double").alias("s0"),
-            F.sum(F.when(a1, _q6(v))).cast("double").alias("s1"),
-            F.sum(F.when(a0, _q6(v * v))).cast("double").alias("t0"),
-            F.sum(F.when(a1, _q6(v * v))).cast("double").alias("t1"),
+            F.sum(F.when(a0, quantize(v, 6))).cast("double").alias("s0"),
+            F.sum(F.when(a1, quantize(v, 6))).cast("double").alias("s1"),
+            F.sum(F.when(a0, quantize(v * v, 6))).cast("double").alias("t0"),
+            F.sum(F.when(a1, quantize(v * v, 6))).cast("double").alias("t1"),
         )
     )
 
@@ -1492,8 +1488,8 @@ def ml_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_tables(spark, sf_dir, "documents")["documents"]
     x = F.col("n_chars").cast("double")
     stats = d.agg(
-        (F.sum(_q6(x)).cast("double") / F.count(F.lit(1))).alias("mu"),
-        (F.sum(_q6(x * x)).cast("double") / F.count(F.lit(1))).alias("m2"),
+        (F.sum(quantize(x, 6)).cast("double") / F.count(F.lit(1))).alias("mu"),
+        (F.sum(quantize(x * x, 6)).cast("double") / F.count(F.lit(1))).alias("m2"),
     )
     scored = d.crossJoin(F.broadcast(stats)).select(
         F.round(
@@ -1529,17 +1525,13 @@ def ml_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = g.crossJoin(F.broadcast(tot)).select(
         "n",
         "obar",
-        _q6(F.col("n_k") * (F.col("p_hat") - o_k) * (F.col("p_hat") - o_k)).alias(
+        quantize(F.col("n_k") * (F.col("p_hat") - o_k) * (F.col("p_hat") - o_k), 6).alias(
             "rel_term"
         ),
-        _q6(
-            F.col("n_k") * (o_k - F.col("obar")) * (o_k - F.col("obar"))
-        ).alias("res_term"),
-        _q6(
-            F.col("n_k") * F.col("p_hat") * F.col("p_hat")
+        quantize(F.col("n_k") * (o_k - F.col("obar")) * (o_k - F.col("obar")), 6).alias("res_term"),
+        quantize(F.col("n_k") * F.col("p_hat") * F.col("p_hat")
             - F.lit(2.0) * F.col("p_hat") * F.col("s_k")
-            + F.col("s_k")
-        ).alias("brier_term"),
+            + F.col("s_k"), 6).alias("brier_term"),
     )
     rel = F.sum("rel_term").cast("double") / F.col("n")
     res = F.sum("res_term").cast("double") / F.col("n")
@@ -1637,7 +1629,7 @@ def events_ab_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_tables(spark, sf_dir, "events")["events"]
     u = e.groupBy(
         "event_type", "user_id", (F.col("user_id") % 2).alias("arm")
-    ).agg(F.sum(_q6(F.col("value"))).cast("double").alias("x"))
+    ).agg(F.sum(quantize(F.col("value"), 6)).cast("double").alias("x"))
     x = F.col("x")
     m = u.groupBy("event_type").agg(
         F.sum(F.when(F.col("arm") == 0, 1).otherwise(0))
@@ -1646,10 +1638,10 @@ def events_ab_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("arm") == 1, 1).otherwise(0))
         .cast("bigint")
         .alias("n1"),
-        F.sum(F.when(F.col("arm") == 0, _q6(x))).cast("double").alias("s0"),
-        F.sum(F.when(F.col("arm") == 1, _q6(x))).cast("double").alias("s1"),
-        F.sum(F.when(F.col("arm") == 0, _q6(x * x))).cast("double").alias("t0"),
-        F.sum(F.when(F.col("arm") == 1, _q6(x * x))).cast("double").alias("t1"),
+        F.sum(F.when(F.col("arm") == 0, quantize(x, 6))).cast("double").alias("s0"),
+        F.sum(F.when(F.col("arm") == 1, quantize(x, 6))).cast("double").alias("s1"),
+        F.sum(F.when(F.col("arm") == 0, quantize(x * x, 6))).cast("double").alias("t0"),
+        F.sum(F.when(F.col("arm") == 1, quantize(x * x, 6))).cast("double").alias("t1"),
     )
     mean0 = F.col("s0") / F.col("n0")
     mean1 = F.col("s1") / F.col("n1")
@@ -1760,11 +1752,11 @@ def stats_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_tables(spark, sf_dir, "events")["events"]
     u = e.groupBy("user_id").agg(
-        F.sum(_q6(F.col("value"))).cast("double").alias("x")
+        F.sum(quantize(F.col("value"), 6)).cast("double").alias("x")
     ).select(
         "user_id", (F.col("user_id") % 2).cast("bigint").alias("arm"), "x"
     )
-    x6 = _q6(F.col("x"))
+    x6 = quantize(F.col("x"), 6)
     mean_of = lambda arm_col, a: (  # noqa: E731
         F.sum(F.when(arm_col == a, x6)).cast("double")
         / F.sum(F.when(arm_col == a, 1).otherwise(0))
@@ -1985,7 +1977,7 @@ def events_ate_ipw(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(0)
         .alias("treated"),
         (
-            F.sum(F.when(~err, _q6(F.col("value")))).cast("double")
+            F.sum(F.when(~err, quantize(F.col("value"), 6))).cast("double")
             / F.nullif(F.sum(F.when(~err, 1).otherwise(0)), F.lit(0))
         ).alias("y"),
     )
@@ -2001,10 +1993,10 @@ def events_ate_ipw(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.sum("treated").cast("bigint").alias("n1"),
             F.sum(F.lit(1) - F.col("treated")).cast("bigint").alias("n0"),
-            F.sum(F.when(F.col("treated") == 1, _q6(F.col("y"))))
+            F.sum(F.when(F.col("treated") == 1, quantize(F.col("y"), 6)))
             .cast("double")
             .alias("s1"),
-            F.sum(F.when(F.col("treated") == 0, _q6(F.col("y"))))
+            F.sum(F.when(F.col("treated") == 0, quantize(F.col("y"), 6)))
             .cast("double")
             .alias("s0"),
         )
@@ -2015,32 +2007,32 @@ def events_ate_ipw(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = cells.select(
         "n1", "n0", "s1", "s0", inv_e.alias("inv_e"), inv_ce.alias("inv_ce")
     )
-    sw1 = F.sum(_q6(F.col("n1") * F.col("inv_e"))).cast("double")
-    sw0 = F.sum(_q6(F.col("n0") * F.col("inv_ce"))).cast("double")
+    sw1 = F.sum(quantize(F.col("n1") * F.col("inv_e"), 6)).cast("double")
+    sw0 = F.sum(quantize(F.col("n0") * F.col("inv_ce"), 6)).cast("double")
     return w.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_strata_used"),
         F.sum("n1").cast("bigint").alias("n_treated"),
         F.sum("n0").cast("bigint").alias("n_control"),
         F.round(
-            F.sum(_q6(F.col("s1"))).cast("double") / F.sum("n1")
-            - F.sum(_q6(F.col("s0"))).cast("double") / F.sum("n0"),
+            F.sum(quantize(F.col("s1"), 6)).cast("double") / F.sum("n1")
+            - F.sum(quantize(F.col("s0"), 6)).cast("double") / F.sum("n0"),
             6,
         ).alias("naive_diff"),
         F.round(
-            F.sum(_q6(F.col("s1") * F.col("inv_e"))).cast("double") / sw1
-            - F.sum(_q6(F.col("s0") * F.col("inv_ce"))).cast("double") / sw0,
+            F.sum(quantize(F.col("s1") * F.col("inv_e"), 6)).cast("double") / sw1
+            - F.sum(quantize(F.col("s0") * F.col("inv_ce"), 6)).cast("double") / sw0,
             6,
         ).alias("ate_ipw"),
         F.round(
             sw1 * sw1
-            / F.sum(_q6(F.col("n1") * F.col("inv_e") * F.col("inv_e"))).cast(
+            / F.sum(quantize(F.col("n1") * F.col("inv_e") * F.col("inv_e"), 6)).cast(
                 "double"
             ),
             6,
         ).alias("ess_treated"),
         F.round(
             sw0 * sw0
-            / F.sum(_q6(F.col("n0") * F.col("inv_ce") * F.col("inv_ce"))).cast(
+            / F.sum(quantize(F.col("n0") * F.col("inv_ce") * F.col("inv_ce"), 6)).cast(
                 "double"
             ),
             6,
@@ -2110,15 +2102,15 @@ def events_anova_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = F.col("v")
     g = x.groupBy("hr").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_h"),
-        F.sum(_q6(v)).cast("double").alias("s_h"),
-        F.sum(_q6(v * v)).cast("double").alias("t_h"),
+        F.sum(quantize(v, 6)).cast("double").alias("s_h"),
+        F.sum(quantize(v * v, 6)).cast("double").alias("t_h"),
     )
     tot = g.agg(
         F.sum("n_h").cast("bigint").alias("n"),
         F.count(F.lit(1)).cast("bigint").alias("k"),
-        F.sum(_q6(F.col("s_h"))).cast("double").alias("s"),
-        F.sum(_q6(F.col("t_h"))).cast("double").alias("t"),
-        F.sum(_q6(F.col("s_h") * F.col("s_h") / F.col("n_h")))
+        F.sum(quantize(F.col("s_h"), 6)).cast("double").alias("s"),
+        F.sum(quantize(F.col("t_h"), 6)).cast("double").alias("t"),
+        F.sum(quantize(F.col("s_h") * F.col("s_h") / F.col("n_h"), 6))
         .cast("double")
         .alias("bsum"),
     )
@@ -2268,9 +2260,7 @@ def feature_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pos_b",
         "neg_b",
         F.round(F.log(F.col("odds_ratio")), 6).alias("woe"),
-        _q6(
-            F.col("rate_gap") * F.round(F.log(F.col("odds_ratio")), 6)
-        ).alias("iv_term"),
+        quantize(F.col("rate_gap") * F.round(F.log(F.col("odds_ratio")), 6), 6).alias("iv_term"),
     )
     iv = t.agg(F.round(F.sum("iv_term").cast("double"), 6).alias("iv_total"))
     return (
@@ -2486,11 +2476,11 @@ def events_retention_halflife(spark: SparkSession, sf_dir: str) -> DataFrame:
     x, y = F.col("x"), F.col("y")
     m = pts.agg(
         F.count(F.lit(1)).cast("bigint").alias("k"),
-        F.sum(_q6(x)).cast("double").alias("sx"),
-        F.sum(_q6(y)).cast("double").alias("sy"),
-        F.sum(_q6(x * y)).cast("double").alias("sxy"),
-        F.sum(_q6(x * x)).cast("double").alias("sxx"),
-        F.sum(_q6(y * y)).cast("double").alias("syy"),
+        F.sum(quantize(x, 6)).cast("double").alias("sx"),
+        F.sum(quantize(y, 6)).cast("double").alias("sy"),
+        F.sum(quantize(x * y, 6)).cast("double").alias("sxy"),
+        F.sum(quantize(x * x, 6)).cast("double").alias("sxx"),
+        F.sum(quantize(y * y, 6)).cast("double").alias("syy"),
     )
     cov = F.col("sxy") - F.col("sx") * F.col("sy") / F.col("k")
     varx = F.col("sxx") - F.col("sx") * F.col("sx") / F.col("k")
@@ -2685,7 +2675,7 @@ def ml_regression_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     pred = (
         li.filter((F.col("l_orderkey") % 4).isin(0, 1))
         .groupBy("l_partkey")
-        .agg((F.sum(_q6(x)).cast("double") / F.count(F.lit(1))).alias("yhat"))
+        .agg((F.sum(quantize(x, 6)).cast("double") / F.count(F.lit(1))).alias("yhat"))
     )
     tst = (
         li.filter(F.col("l_orderkey") % 4 == 3)
@@ -2695,12 +2685,12 @@ def ml_regression_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     err = F.col("yhat") - F.col("y")
     m = tst.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(_q6(F.col("y"))).cast("double").alias("sy"),
-        F.sum(_q6(F.col("y") * F.col("y"))).cast("double").alias("syy"),
-        F.sum(_q6(err)).cast("double").alias("sbias"),
-        F.sum(_q6(F.abs(err))).cast("double").alias("sae"),
-        F.sum(_q6(err * err)).cast("double").alias("sse"),
-        F.sum(_q6(F.abs(err) / F.col("y"))).cast("double").alias("sape"),
+        F.sum(quantize(F.col("y"), 6)).cast("double").alias("sy"),
+        F.sum(quantize(F.col("y") * F.col("y"), 6)).cast("double").alias("syy"),
+        F.sum(quantize(err, 6)).cast("double").alias("sbias"),
+        F.sum(quantize(F.abs(err), 6)).cast("double").alias("sae"),
+        F.sum(quantize(err * err, 6)).cast("double").alias("sse"),
+        F.sum(quantize(F.abs(err) / F.col("y"), 6)).cast("double").alias("sape"),
     )
     return m.select(
         "n",
@@ -2820,18 +2810,17 @@ def ml_auc_delong_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         v10.alias("v10"), v01.alias("v01"), auc.alias("auc"),
     )
 
-    def q12(col):
-        return F.round(col, 12).cast("decimal(38,12)")
-
     vt = pl.agg(
         F.max("m").alias("m"),
         F.max("n").alias("n"),
         F.max("auc").alias("auc"),
         F.sum(
-            F.col("pos") * q12((F.col("v10") - F.col("auc")) * (F.col("v10") - F.col("auc")))
+            F.col("pos")
+            * quantize((F.col("v10") - F.col("auc")) * (F.col("v10") - F.col("auc")), 12, 38)
         ).cast("double").alias("ss10"),
         F.sum(
-            F.col("neg") * q12((F.col("v01") - F.col("auc")) * (F.col("v01") - F.col("auc")))
+            F.col("neg")
+            * quantize((F.col("v01") - F.col("auc")) * (F.col("v01") - F.col("auc")), 12, 38)
         ).cast("double").alias("ss01"),
     )
     se = F.sqrt(

@@ -12,8 +12,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from http_datafusion_spark.functions.fixedpoint import quantize
 from http_datafusion_spark.functions.hashing import md5_int_sql
 from http_datafusion_spark.functions.pinning import pin
+from http_datafusion_spark.functions.tokens import token_count, whitespace_tokens
 from http_datafusion_spark.plans.registry import query
 from http_datafusion_spark.plans.tables import load_tables, spread
 
@@ -21,22 +23,6 @@ from http_datafusion_spark.plans.tables import load_tables, spread
 # documents fixture has synthetic vocab, so the heuristic is defined on
 # function-word frequency *ratios* and remains fully deterministic.
 _EN_STOPWORDS = ("the", "a", "and", "of", "to")
-
-
-def whitespace_tokens(col: Column) -> Column:
-    """Split on whitespace runs; empty string -> empty array."""
-    return F.filter(F.split(F.trim(col), r"\s+"), lambda w: w != "")
-
-
-def token_count(col: Column) -> Column:
-    """Whitespace-token COUNT without materializing the token array:
-    count of maximal non-whitespace runs == size(whitespace_tokens(col))
-    (equivalence asserted in tests/test_operators_unit.py). regexp_count
-    is a single codegen'd scan — no array allocation and no interpreted
-    higher-order filter, which matters in-suite where GC pressure is the
-    multiplier on explode-adjacent stages (measured 5.18 -> 4.55 s for
-    a corpus-wide count at sf25, and less garbage besides)."""
-    return F.regexp_count(col, F.lit(r"\S+"))
 
 
 def bpe_ish_token_estimate(col: Column) -> Column:
@@ -252,7 +238,7 @@ def text_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
     w = W.partitionBy("doc_id").orderBy("pos")
-    words = F.filter(F.split(F.trim("text"), r"\s+"), lambda x: x != "")
+    words = whitespace_tokens("text")
     # spread: text crosses the window's exchange raw; tokenize runs
     # post-exchange at full width (sf5 6.67 -> 1.27 s).
     return (
@@ -999,7 +985,7 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     counts = dw.groupBy("word").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     n = counts.agg(F.sum("c").cast("bigint").alias("total"))
-    nll = F.round(-F.log(F.col("c") * 1.0 / F.col("total")), 6).cast("decimal(18,6)")
+    nll = quantize(-F.log(F.col("c") * 1.0 / F.col("total")), 6)
     return (
         dw.join(counts, "word")
         .crossJoin(F.broadcast(n))
@@ -1048,7 +1034,7 @@ def text_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     cnt = dc.groupBy("doc_id", "ch").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     tot = cnt.groupBy("doc_id").agg(F.sum("c").cast("bigint").alias("n"))
     p = F.col("c") * 1.0 / F.col("n")
-    term = F.round(-p * F.log2(p), 6).cast("decimal(18,6)")
+    term = quantize(-p * F.log2(p), 6)
     return (
         cnt.join(tot, "doc_id")
         .select("doc_id", term.alias("term"), "n")
@@ -1907,10 +1893,9 @@ def vocab_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     m = (F.col("p") + F.col("q")) / 2
-    term = F.round(
-        0.5 * F.col("p") * F.log2(F.col("p") / m) + 0.5 * F.col("q") * F.log2(F.col("q") / m),
-        8,
-    ).cast("decimal(18,8)")
+    term = quantize(
+        0.5 * F.col("p") * F.log2(F.col("p") / m) + 0.5 * F.col("q") * F.log2(F.col("q") / m), 8
+    )
     return (
         cells.select("source", term.alias("t"))
         .groupBy("source")
@@ -2142,10 +2127,8 @@ def text_prf_query_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     dfreq = tf.groupBy("word").agg(F.count(F.lit(1)).cast("double").alias("df"))
 
     def score(termset: DataFrame) -> DataFrame:
-        contrib = F.round(
-            F.log(
-                (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
-            )
+        contrib = quantize(
+            F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
             * F.col("tf")
             * (BM25_K1 + 1.0)
             / (
@@ -2153,7 +2136,7 @@ def text_prf_query_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
                 + BM25_K1 * (1.0 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))
             ),
             6,
-        ).cast("decimal(18,6)")
+        )
         return (
             tf.join(F.broadcast(termset), "word")
             .join(dfreq, "word")
@@ -2304,16 +2287,16 @@ def text_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "thr",
             "tokens",
             "vocab",
-            F.round(F.log("tokens"), 6).cast("decimal(18,6)").alias("lx"),
-            F.round(F.log("vocab"), 6).cast("decimal(18,6)").alias("ly"),
+            quantize(F.log("tokens"), 6).alias("lx"),
+            quantize(F.log("vocab"), 6).alias("ly"),
         )
     )
     k = F.count(F.lit(1))
     sxy = F.sum(
-        F.round(F.col("lx").cast("double") * F.col("ly").cast("double"), 6).cast("decimal(18,6)")
+        quantize(F.col("lx").cast("double") * F.col("ly").cast("double"), 6)
     ).cast("double")
     sxx = F.sum(
-        F.round(F.col("lx").cast("double") * F.col("lx").cast("double"), 6).cast("decimal(18,6)")
+        quantize(F.col("lx").cast("double") * F.col("lx").cast("double"), 6)
     ).cast("double")
     sx = F.sum("lx").cast("double")
     sy = F.sum("ly").cast("double")
@@ -2961,9 +2944,7 @@ def text_mattr_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    lwords = F.filter(
-        F.split(F.trim(F.lower(F.col("text"))), r"\s+"), lambda w: w != ""
-    )
+    lwords = whitespace_tokens(F.lower(F.col("text")))
     toks = d.select(
         "doc_id", "source", F.posexplode(lwords).alias("pos0", "word")
     ).select("doc_id", "source", (F.col("pos0") + 1).alias("pos"), "word")
@@ -3069,12 +3050,7 @@ ARI_HARD_GRADE = 10.0  # 'hard' = above 10th-grade level
 def text_readability_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_tables(spark, sf_dir, "documents")["documents"]
     words = F.greatest(
-        F.size(
-            F.filter(
-                F.split(F.trim(F.col("text")), r"\s+"),
-                lambda x: x != F.lit(""),
-            )
-        ).cast("bigint"),
+        F.size(whitespace_tokens(F.col("text"))).cast("bigint"),
         F.lit(1),
     )
     letters = F.length(
@@ -3104,8 +3080,8 @@ def text_readability_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     graded = counts.select(
         "source",
-        F.round(ari, 6).cast("decimal(18,6)").alias("ari"),
-        F.round(cli, 6).cast("decimal(18,6)").alias("cli"),
+        quantize(ari, 6).alias("ari"),
+        quantize(cli, 6).alias("cli"),
     )
     n = F.count(F.lit(1))
     return (
@@ -3326,13 +3302,10 @@ def text_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
 
-    def q9(c):
-        return F.round(c, 9).cast("decimal(18,9)")
-
     wstats = rels.groupBy("tok").agg(
         F.count(F.lit(1)).cast("bigint").alias("k"),
-        F.sum(q9(F.col("rel"))).cast("double").alias("s"),
-        F.sum(q9(F.col("rel") * F.col("rel"))).cast("double").alias("t"),
+        F.sum(quantize(F.col("rel"), 9)).cast("double").alias("s"),
+        F.sum(quantize(F.col("rel") * F.col("rel"), 9)).cast("double").alias("t"),
     )
     mean = F.col("s") / F.col("k")
     var = F.col("t") / F.col("k") - mean * mean
@@ -3352,7 +3325,7 @@ def text_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source_a", "source_b")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_words"),
-            F.sum(q9(F.abs(F.col("za") - F.col("zb")))).cast("double").alias("sd"),
+            F.sum(quantize(F.abs(F.col("za") - F.col("zb")), 9)).cast("double").alias("sd"),
         )
     )
     return pairs.select(

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from http_datafusion_spark.functions.fixedpoint import i100, quantize, unscale
 from http_datafusion_spark.functions.pinning import pin
 from http_datafusion_spark.plans.registry import query
 from http_datafusion_spark.plans.tables import load_tables
@@ -121,7 +122,7 @@ def ts_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle aggregates raw events straight to days in one pass; a
     value-hash match proves the three-level cascade loses nothing."""
     e = load_tables(spark, sf_dir, "events")["events"]
-    v6 = F.round("value", 6).cast("decimal(18,6)")  # per-row quantize: all sums exact
+    v6 = quantize("value", 6)  # per-row quantize: all sums exact
     minute = (
         e.withColumn("m", F.date_trunc("minute", "ts"))
         .groupBy("m", "event_type")
@@ -180,7 +181,7 @@ Z_OUTLIER = 3.0  # |z| above this = anomalous reading
 )
 def ts_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_tables(spark, sf_dir, "events")["events"]
-    v = F.round("value", 6).cast("decimal(18,6)")
+    v = quantize("value", 6)
     q = e.select("event_type", v.alias("v"))
     stats = q.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
@@ -461,7 +462,7 @@ def ts_cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-type mean: ordinary partial-agg shuffle (types-bounded), broadcast back
     means = e.groupBy("event_type").agg(
         F.round(
-            F.sum(F.round("value", 6).cast("decimal(18,6)")).cast("double")
+            F.sum(quantize("value", 6)).cast("double")
             / F.count(F.lit(1)),
             6,
         ).alias("mean_v"),
@@ -473,7 +474,7 @@ def ts_cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "ts",
         chunk.alias("chunk"),
-        F.round(F.col("value") - F.col("mean_v"), 6).cast("decimal(18,6)").alias("d"),
+        quantize(F.col("value") - F.col("mean_v"), 6).alias("d"),
         "n_events",
     )
     # phase 1: local cumsum within (type, month) — parallel across months
@@ -606,8 +607,6 @@ BACKTEST_LAG_MONTHS = 12
     tags=("events", "window", "agg"),
 )
 def orders_seasonal_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from http_datafusion_spark.functions.fixedpoint import i100
-
     o = load_tables(spark, sf_dir, "orders")["orders"]
     m = (
         o.groupBy(
@@ -629,8 +628,8 @@ def orders_seasonal_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     fc = F.col("forecast").cast("double")
     scored = f.select(
         "priority",
-        F.round(F.abs(act - fc) / act, 6).cast("decimal(18,6)").alias("ape"),
-        F.round((fc - act) / act, 6).cast("decimal(18,6)").alias("pe"),
+        quantize(F.abs(act - fc) / act, 6).alias("ape"),
+        quantize((fc - act) / act, 6).alias("pe"),
     )
     return scored.groupBy("priority").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_months"),
@@ -746,7 +745,7 @@ def events_impact_did(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(
             F.unix_timestamp("ts").cast("bigint") * 2 >= F.col("lo") + F.col("hi"), "post"
         ).otherwise("pre").alias("period"),
-        F.round("value", 6).cast("decimal(18,6)").alias("v"),
+        quantize("value", 6).alias("v"),
     )
     cells = labeled.groupBy("grp", "period").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -840,15 +839,14 @@ def ts_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(stats))
         .select(
             "lag",
-            F.round(
-                (F.col("a.n") - F.col("mean_n")) * (F.col("b.n") - F.col("mean_n")), 6
-            ).cast("decimal(28,6)").alias("p"),
+            quantize(
+                (F.col("a.n") - F.col("mean_n")) * (F.col("b.n") - F.col("mean_n")), 6, 28
+            ).alias("p"),
         )
     )
     denom = hourly.crossJoin(F.broadcast(stats)).agg(
         F.sum(
-            F.round((F.col("n") - F.col("mean_n")) * (F.col("n") - F.col("mean_n")), 6)
-            .cast("decimal(28,6)")
+            quantize((F.col("n") - F.col("mean_n")) * (F.col("n") - F.col("mean_n")), 6, 28)
         ).cast("double").alias("d")
     )
     return (
@@ -998,7 +996,7 @@ def orders_seasonality_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     detrended = trended.filter(F.col("w") == 13).select(
         "month_of_year",
-        F.round(F.col("n") - F.col("trend"), 6).cast("decimal(18,6)").alias("resid"),
+        quantize(F.col("n") - F.col("trend"), 6).alias("resid"),
     )
     return detrended.groupBy("month_of_year").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_months"),
@@ -1523,20 +1521,16 @@ def events_crosscorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(stats))
         .select(
             "lag",
-            F.round((F.col("a.x") - F.col("mx")) * (F.col("b.y") - F.col("my")), 6)
-            .cast("decimal(28,6)")
-            .alias("p"),
+            quantize((F.col("a.x") - F.col("mx")) * (F.col("b.y") - F.col("my")), 6, 28).alias("p"),
         )
     )
     denoms = hourly.crossJoin(F.broadcast(stats)).agg(
         F.sqrt(
             F.sum(
-                F.round((F.col("x") - F.col("mx")) * (F.col("x") - F.col("mx")), 6)
-                .cast("decimal(28,6)")
+                quantize((F.col("x") - F.col("mx")) * (F.col("x") - F.col("mx")), 6, 28)
             ).cast("double")
             * F.sum(
-                F.round((F.col("y") - F.col("my")) * (F.col("y") - F.col("my")), 6)
-                .cast("decimal(28,6)")
+                quantize((F.col("y") - F.col("my")) * (F.col("y") - F.col("my")), 6, 28)
             ).cast("double")
         ).alias("d")
     )
@@ -1982,7 +1976,7 @@ def events_uplift_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min(F.unix_timestamp("ts")).cast("bigint").alias("lo"),
         F.max(F.unix_timestamp("ts")).cast("bigint").alias("hi"),
     )
-    v = F.round("value", 6).cast("decimal(18,6)")
+    v = quantize("value", 6)
     zero = F.lit(0).cast("decimal(18,6)")
     pre = F.unix_timestamp("ts").cast("bigint") * 2 < F.col("lo") + F.col("hi")
     per_user = (
@@ -2221,11 +2215,7 @@ def orders_holt_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("mi"),
         )
-        .agg(
-            F.sum(F.round(F.col("o_totalprice").cast("double"), 6).cast("decimal(18,6)"))
-            .cast("double")
-            .alias("y")
-        )
+        .agg(unscale(F.sum(i100("o_totalprice")), 2).cast("double").alias("y"))
         # nation x month cells: the bounds agg, the zero-fill grid's
         # nation list, and the series left join all consumed it;
         # unpinned each re-derived the 2-join orders aggregation
@@ -2274,14 +2264,14 @@ def orders_holt_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sequence(F.lit(1), F.lit(HOLT_HOLDOUT)),
         lambda h: F.when(
             F.element_at(F.col("actual"), h.cast("int")) != 0.0,
-            F.round(
+            quantize(
                 F.abs(
                     (F.col("st.l") + h * F.col("st.b"))
                     - F.element_at(F.col("actual"), h.cast("int"))
                 )
                 / F.abs(F.element_at(F.col("actual"), h.cast("int"))),
                 6,
-            ).cast("decimal(18,6)"),
+            ),
         ),
     )
     scored = fitted.select(
@@ -2384,11 +2374,7 @@ def orders_croston_intermittent(spark: SparkSession, sf_dir: str) -> DataFrame:
     wk = li.groupBy(
         "l_partkey",
         F.floor(F.unix_timestamp("l_shipdate") / 604800).cast("bigint").alias("w"),
-    ).agg(
-        F.sum(F.round(F.col("l_quantity").cast("double"), 6).cast("decimal(18,6)"))
-        .cast("double")
-        .alias("d")
-    )
+    ).agg(unscale(F.sum(i100("l_quantity")), 2).cast("double").alias("d"))
     mn = wk.agg(F.min("w").alias("w0"))
     nz = wk.crossJoin(F.broadcast(mn)).filter(F.col("d") > 0).select(
         "l_partkey", (F.col("w") - F.col("w0") + 1).alias("pos"), "d"
@@ -2516,13 +2502,12 @@ SAX_BP = (-0.6745, 0.0, 0.6745)
 )
 def ts_sax_motifs(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_tables(spark, sf_dir, "orders")["orders"]
-    q6 = lambda c: F.round(c, 6).cast("decimal(18,6)")  # noqa: E731
     # days-grain series: the min-day agg and the PAA segmenting both
     # consumed it, and paa's two consumers (moments + symbolization)
     # compounded the re-derivation to 4 executed orders scans. One
     # pass after the pin.
     daily = o.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        F.sum(q6(F.col("o_totalprice").cast("double"))).cast("double").alias("rev")
+        unscale(F.sum(i100("o_totalprice")), 2).cast("double").alias("rev")
     ).transform(pin)
     mn = daily.agg(F.min("day").alias("d0"))
     paa = (
@@ -2532,14 +2517,13 @@ def ts_sax_motifs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("seg")
         )
-        .agg((F.sum(q6(F.col("rev"))).cast("double") / F.count(F.lit(1))).alias("v"))
+        .agg((F.sum(quantize(F.col("rev"), 6)).cast("double") / F.count(F.lit(1))).alias("v"))
     )
     # v*v overflows decimal(18,6) (segment-mean revenue squared), so
     # the moment sums quantize at (38,6) — same note in the oracle
-    q38 = lambda c: F.round(c, 6).cast("decimal(38,6)")  # noqa: E731
     mom = paa.agg(
-        (F.sum(q38(F.col("v"))).cast("double") / F.count(F.lit(1))).alias("mu"),
-        (F.sum(q38(F.col("v") * F.col("v"))).cast("double") / F.count(F.lit(1))).alias(
+        (F.sum(quantize(F.col("v"), 6, 38)).cast("double") / F.count(F.lit(1))).alias("mu"),
+        (F.sum(quantize(F.col("v") * F.col("v"), 6, 38)).cast("double") / F.count(F.lit(1))).alias(
             "m2"
         ),
     )
@@ -2630,9 +2614,6 @@ _Q6LTV = "CAST(round({x}, 6) AS DECIMAL(18,6))"
 def orders_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, "orders")["orders"]
 
-    def q6(c):
-        return F.round(c, 6).cast("decimal(18,6)")
-
     o = t.select(
         "o_custkey",
         (F.year("o_orderdate") * 12 + F.month("o_orderdate"))
@@ -2654,10 +2635,10 @@ def orders_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell = (
         o.join(first, "o_custkey")
         .groupBy("mi0", (F.col("mi") - F.col("mi0")).alias("offs"))
-        .agg(F.sum(q6(F.col("rev"))).cast("double").alias("rev"))
+        .agg(F.sum(quantize(F.col("rev"), 6)).cast("double").alias("rev"))
     )
     w = W.partitionBy("mi0").orderBy("offs").rowsBetween(W.unboundedPreceding, 0)
-    cum = cell.select("mi0", "offs", F.sum(q6(F.col("rev"))).over(w).alias("cum_rev"))
+    cum = cell.select("mi0", "offs", F.sum(quantize(F.col("rev"), 6)).over(w).alias("cum_rev"))
     yr = F.floor((F.col("mi0") - 1) / 12)
     return (
         cum.join(sizes, "mi0")
@@ -2747,10 +2728,10 @@ def events_burstiness_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     gaps = seq.filter(F.col("g").isNotNull())
     pu = gaps.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(F.round(F.col("g"), 6).cast("decimal(18,6)"))
+        F.sum(quantize(F.col("g"), 6))
         .cast("double")
         .alias("s"),
-        F.sum(F.round(F.col("g") * F.col("g"), 6).cast("decimal(38,6)"))
+        F.sum(quantize(F.col("g") * F.col("g"), 6, 38))
         .cast("double")
         .alias("t"),
     )
@@ -2762,7 +2743,7 @@ def events_burstiness_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scored.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_users_scored"),
         F.round(
-            F.sum(F.round(F.col("b"), 6).cast("decimal(18,6)")).cast("double")
+            F.sum(quantize(F.col("b"), 6)).cast("double")
             / F.count(F.lit(1)),
             6,
         ).alias("mean_burstiness"),

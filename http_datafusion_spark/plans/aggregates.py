@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from http_datafusion_spark.functions.fixedpoint import i100, unscale
 from http_datafusion_spark.plans.registry import query
 from http_datafusion_spark.plans.tables import load_tables
 
@@ -44,7 +45,7 @@ def q_agg_basic(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_orders"),
         F.countDistinct("o_custkey").alias("n_customers"),
         F.round(F.sum("o_totalprice"), 2).alias("total"),
-        F.round(F.sum(F.col("o_totalprice").cast("decimal(18,6)")).cast("double") / F.count(F.lit(1)), 4).alias("avg_price"),
+        F.round(unscale(F.sum(i100("o_totalprice")), 2).cast("double") / F.count(F.lit(1)), 4).alias("avg_price"),
         F.round(F.min("o_totalprice"), 2).alias("min_price"),
         F.round(F.max("o_totalprice"), 2).alias("max_price"),
     )

@@ -126,20 +126,17 @@ def _fetch_page_rows(opts: dict, url: str, page: int | None) -> list:
     return page_rows(body)
 
 
-def _record(row) -> dict:
-    """A row as a record: a non-object JSON value becomes ``{"value": v}``."""
-    return row if isinstance(row, dict) else {"value": row}
-
-
 def _infer_schema_from_rows(rows: Sequence) -> StructType:
     """Plan-time schema inference without a SparkSession: build a tiny
     Arrow table from the staged rows and map its schema to Spark types."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import from_arrow_schema
 
+    from http_datafusion_spark.sources.http_json import as_record
+
     if not rows:
         return StructType([])
-    arrow = pa.Table.from_pylist([_record(r) for r in rows])
+    arrow = pa.Table.from_pylist([as_record(r) for r in rows])
     return from_arrow_schema(arrow.schema)
 
 
@@ -381,10 +378,12 @@ def _coercer_for(dt):
 def _tuple_converter(schema: StructType):
     """Row -> the schema-ordered tuple the reader yields, each field
     through its type's coercer, if it has one (built once per read)."""
+    from http_datafusion_spark.sources.http_json import as_record
+
     convs = [(f.name, _coercer_for(f.dataType)) for f in schema.fields]
 
     def to_tuple(row) -> tuple:
-        r = _record(row)
+        r = as_record(row)
         return tuple(r.get(name) if conv is None else conv(r.get(name)) for name, conv in convs)
 
     return to_tuple

@@ -19,10 +19,11 @@ Reference behavior being re-created (for parity, with the bugs fixed):
 - empty first fetch panics in the reference
   (``data.first().unwrap()``, src/datasources.rs:195); here it yields
   an empty DataFrame;
+- a row that is not a JSON object becomes ``{"value": v}``
+  (``as_record``), on both ingest paths;
 - schema: the reference infers from the FIRST record only
-  (src/datasources.rs:318-343); Spark's full-scan inference is
-  strictly more robust, so the default is full-scan with an opt-in
-  ``schema_mode="first_record"`` for bit-parity experiments.
+  (src/datasources.rs:318-343); Spark infers over every row instead,
+  so a field that first appears on a later row keeps its column.
 
 One walker, ``fetch_rows``, serves all three pagination modes. The loop
 owns every stop rule (``max_rows`` reached, a null or empty page, no
@@ -60,7 +61,6 @@ from typing import Any
 import requests
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from http_datafusion_spark.config import CursorPagination, LinkPagination, Pagination, Paging
 from http_datafusion_spark.errors import HttpError
@@ -177,6 +177,11 @@ def page_rows(body: Any) -> list[Any]:
     if body is None:
         return []
     return body if isinstance(body, list) else [body]
+
+
+def as_record(row: Any) -> dict:
+    """A row as a record: a non-object JSON value becomes ``{"value": v}``."""
+    return row if isinstance(row, dict) else {"value": row}
 
 
 def build_page_url(url: str, pagination: Pagination, page: int) -> str:
@@ -373,21 +378,14 @@ def _normalize_untyped(v: Any) -> Any:
     return v
 
 
-def json_rows_to_df(
-    spark: SparkSession,
-    rows: list[Any],
-    schema_mode: str = "full",
-) -> DataFrame:
+def json_rows_to_df(spark: SparkSession, rows: list[Any]) -> DataFrame:
     """Stage JSON rows as a DataFrame.
 
-    ``schema_mode="full"`` (default): Spark infers over all rows —
-    strictly more robust than the reference — with untyped-empty
-    containers normalized to null first (see ``_normalize_untyped``)
-    so a ``{}`` placeholder in one row cannot cancel a typed column
-    from another. ``"first_record"``: infer from row 1 only verbatim,
-    dropping later-only fields, mirroring reference
-    src/datasources.rs:195-196 + 318-343 (no normalization — parity
-    mode reproduces the reference byte-for-byte).
+    Each row becomes a record (``as_record``, the rule the ``httpjson``
+    reader applies too). Spark infers the schema over all rows — the
+    reference infers from row 1 alone — with untyped-empty containers
+    normalized to null first (see ``_normalize_untyped``) so a ``{}``
+    placeholder in one row cannot cancel a typed column from another.
 
     Each row becomes one JSON line that Spark's own JSON reader parses
     in the JVM (``_read_json_lines``), so inference, parsing and the
@@ -401,23 +399,12 @@ def json_rows_to_df(
     """
     if not rows:
         return spark.createDataFrame([], schema="struct<>")
-    if schema_mode == "full":
-        rows = [
-            {k: _normalize_untyped(v) for k, v in r.items()} if isinstance(r, dict) else r
-            for r in rows
-        ]
-    elif schema_mode != "first_record":
-        raise ValueError(f"unknown schema_mode {schema_mode!r}")
-    lines = [json.dumps(r) for r in rows]
-    if schema_mode == "first_record":
-        schema = _read_json_lines(spark, lines[:1]).schema
-        return _read_json_lines(spark, lines, schema)
+    records = (as_record(r) for r in rows)
+    lines = [json.dumps({k: _normalize_untyped(v) for k, v in r.items()}) for r in records]
     return _read_json_lines(spark, lines)
 
 
-def _read_json_lines(
-    spark: SparkSession, lines: list[str], schema: StructType | None = None
-) -> DataFrame:
+def _read_json_lines(spark: SparkSession, lines: list[str]) -> DataFrame:
     """Parse JSON lines with Spark's JSON reader over a ``Dataset[String]``
     built in the JVM, so no Python RDD sits under the result.
 
@@ -435,7 +422,7 @@ def _read_json_lines(
         F.explode(F.split("value", "\n")).alias("value")
     )
     encoder = spark._jvm.org.apache.spark.sql.Encoders.STRING()
-    reader = spark.read if schema is None else spark.read.schema(schema)
+    reader = spark.read
     return reader._df(reader._jreader.json(getattr(strings._jdf, "as")(encoder)))
 
 
@@ -445,7 +432,6 @@ def register_http_table(
     method: str = "GET",
     table_name: str = "http_table",
     paging: Paging | None = None,
-    schema_mode: str = "full",
     max_rows: int | None = None,
     headers: dict[str, str] | None = None,
     json_body: Any | None = None,
@@ -459,13 +445,11 @@ def register_http_table(
     columnar form. ``paging`` and ``max_rows`` go to fetch_rows.
     """
     rows = fetch_rows(url, method, paging, max_rows=max_rows, headers=headers, json_body=json_body)
-    return _register_rows(spark, rows, table_name, schema_mode)
+    return _register_rows(spark, rows, table_name)
 
 
-def _register_rows(
-    spark: SparkSession, rows: list[Any], table_name: str, schema_mode: str
-) -> DataFrame:
-    df = json_rows_to_df(spark, rows, schema_mode=schema_mode)
+def _register_rows(spark: SparkSession, rows: list[Any], table_name: str) -> DataFrame:
+    df = json_rows_to_df(spark, rows)
     if rows:
         df = df.cache()
     df.createOrReplaceTempView(table_name)
@@ -523,7 +507,6 @@ def refresh_http_table(
     etag: str | None = None,
     last_modified: str | None = None,
     method: str = "GET",
-    schema_mode: str = "full",
     headers: dict[str, str] | None = None,
 ) -> tuple[str | None, str | None, bool]:
     """One periodic-refresh cycle for a conditionally-fetched table:
@@ -548,7 +531,7 @@ def refresh_http_table(
     )
     if not_modified:
         return new_etag, new_lm, False
-    _register_rows(spark, page_rows(body), table_name, schema_mode)
+    _register_rows(spark, page_rows(body), table_name)
     return new_etag, new_lm, True
 
 

@@ -27,7 +27,9 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from http_datafusion_spark.functions.fixedpoint import quantize
 from http_datafusion_spark.functions.pinning import pin
+from http_datafusion_spark.functions.tokens import whitespace_tokens
 from http_datafusion_spark.plans.registry import query
 from http_datafusion_spark.plans.tables import _ensure_session_confs
 
@@ -1025,7 +1027,7 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from http_datafusion_spark.functions.hashing import md5_int
-    from http_datafusion_spark.operators.text import QMODEL_DIM, whitespace_tokens
+    from http_datafusion_spark.operators.text import QMODEL_DIM
     from http_datafusion_spark.plans.tables import scratch_path
 
     run_id = uuid.uuid4().hex[:8]
@@ -1741,7 +1743,7 @@ def _ab_effect_oracle_sql() -> str:
     tags=("streaming", "stats"),
 )
 def stream_ab_effect_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from http_datafusion_spark.operators.stats import _phi_tail, _q6
+    from http_datafusion_spark.operators.stats import _phi_tail
 
     stream = read_events_stream(spark, sf_dir)
     arm = (F.col("user_id") % 2).alias("arm")
@@ -1751,12 +1753,12 @@ def stream_ab_effect_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(
         F.sum(F.when(F.col("arm") == 0, 1).otherwise(0)).cast("bigint").alias("n0"),
         F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).cast("bigint").alias("n1"),
-        F.sum(F.when(F.col("arm") == 0, _q6(F.col("value")))).cast("double").alias("s0"),
-        F.sum(F.when(F.col("arm") == 1, _q6(F.col("value")))).cast("double").alias("s1"),
-        F.sum(F.when(F.col("arm") == 0, _q6(F.col("value") * F.col("value"))))
+        F.sum(F.when(F.col("arm") == 0, quantize(F.col("value"), 6))).cast("double").alias("s0"),
+        F.sum(F.when(F.col("arm") == 1, quantize(F.col("value"), 6))).cast("double").alias("s1"),
+        F.sum(F.when(F.col("arm") == 0, quantize(F.col("value") * F.col("value"), 6)))
         .cast("double")
         .alias("t0"),
-        F.sum(F.when(F.col("arm") == 1, _q6(F.col("value") * F.col("value"))))
+        F.sum(F.when(F.col("arm") == 1, quantize(F.col("value") * F.col("value"), 6)))
         .cast("double")
         .alias("t1"),
     )

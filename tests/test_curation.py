@@ -23,7 +23,7 @@ from http_datafusion_spark.operators.curation import (
     split_leakage_safe,
 )
 from http_datafusion_spark.operators.dedup import dedup_minhash_pairs
-from http_datafusion_spark.operators.text import whitespace_tokens
+from http_datafusion_spark.functions.tokens import whitespace_tokens
 from http_datafusion_spark.plans.tables import load_tables
 
 

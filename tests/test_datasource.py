@@ -491,3 +491,43 @@ def test_nested_object_and_string_list_round_trip(spark, nested_url):
         1: ("api", ["a", "b"]),
         2: ("feed", []),
     }
+
+
+NON_OBJECT_PAGES = {"scalars": [1, 2, 3], "strings": ["a", "b"], "arrays": [[1, 2], [3]]}
+
+
+class _NonObjectHandler(BaseHTTPRequestHandler):
+    def log_message(self, *args):
+        pass
+
+    def do_GET(self):  # noqa: N802
+        u = urlparse(self.path)
+        first = parse_qs(u.query).get("page", ["1"])[0] == "1"
+        body = json.dumps(NON_OBJECT_PAGES[u.path.strip("/")] if first else []).encode()
+        self.send_response(200)
+        self.end_headers()
+        self.wfile.write(body)
+
+
+@pytest.fixture(scope="module")
+def non_object_url(spark):
+    from http_datafusion_spark.sources.datasource import register
+
+    register(spark)
+    srv = HTTPServer(("127.0.0.1", 0), _NonObjectHandler)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    yield f"http://127.0.0.1:{srv.server_port}"
+    srv.shutdown()
+
+
+@pytest.mark.parametrize("kind", sorted(NON_OBJECT_PAGES))
+def test_json_rows_stage_non_object_rows_like_the_reader(spark, non_object_url, kind):
+    """A page of non-object rows stages as one ``value`` column on both
+    ingest paths, with the same type and the same values."""
+    from http_datafusion_spark.sources.http_json import json_rows_to_df
+
+    rows = NON_OBJECT_PAGES[kind]
+    reader = _read(spark, f"{non_object_url}/{kind}", startPage=1, endPage=1, pageSize=len(rows))
+    staged = json_rows_to_df(spark, rows)
+    assert staged.schema.simpleString() == reader.schema.simpleString()
+    assert staged.collect() == reader.collect()

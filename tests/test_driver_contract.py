@@ -1,6 +1,6 @@
-"""Guards on the two artifacts an outside harness consumes directly:
-``__spark_entry__`` (entry/queries/oracle_sql shape) and ``bench.py``
-(one parseable JSON line on stdout).
+"""Guards on the artifacts an outside harness consumes directly:
+``__spark_entry__`` (entry/queries/oracle_sql shape), ``bench.py``
+(one parseable JSON line on stdout) and the query registry itself.
 """
 
 from __future__ import annotations
@@ -98,3 +98,27 @@ def test_bench_set_is_oracle_checked_and_stable():
     assert len(bench) == 27, f"bench set changed: {sorted(bench)}"
     assert all(qs[n].oracle for n in bench)
 
+
+
+# The registry's names, order, oracles, docs, tags and bench oracles.
+# A deliberate contract change updates this pin and says so in
+# CHANGES.md; an accidental one (an import that reorders module
+# registration, a doc edit) fails here.
+REGISTRY_SHA256 = "61318b88283837dd03aec8d81321cac68fbaa607c03437209b05cc242f0a99a8"
+
+
+def test_registry_contract_is_pinned():
+    # A fresh interpreter, as an outside harness has: registration
+    # follows module import order, and test modules import operator
+    # modules before the registry does.
+    code = (
+        "import hashlib, json\n"
+        "from http_datafusion_spark.plans.registry import all_queries\n"
+        "qs = all_queries()\n"
+        "c = [list(qs), [[s.oracle, s.doc, list(s.tags), s.bench_oracle] for s in qs.values()]]\n"
+        "print(hashlib.sha256(json.dumps(c).encode()).hexdigest())\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=REPO, capture_output=True, text=True, timeout=120, check=True
+    )
+    assert out.stdout.strip() == REGISTRY_SHA256

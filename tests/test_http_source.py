@@ -253,14 +253,6 @@ def test_post_supported(base_url):
     assert fetch_rows(f"{base_url}/rows", method="POST") == ROWS
 
 
-def test_schema_mode_first_record_drops_late_fields(base_url, spark):
-    rows = fetch_rows(f"{base_url}/ragged")
-    first = json_rows_to_df(spark, rows, schema_mode="first_record")
-    full = json_rows_to_df(spark, rows, schema_mode="full")
-    assert first.columns == ["a"]  # reference first-record inference behavior
-    assert sorted(full.columns) == ["a", "b"]  # Spark full-scan default
-
-
 def test_lone_surrogate_escape_stages(base_url, spark):
     # JSON allows a lone surrogate escape; UTF-8 cannot carry the decoded
     # character, so staging must not hand it to the JVM verbatim.
@@ -275,9 +267,11 @@ def test_staged_table_runs_no_python_worker(base_url, spark):
     df = register_http_table(spark, f"{base_url}/rows", table_name="t_jvm_lineage")
     lineage = df._jdf.queryExecution().toRdd().toDebugString()
     assert "PythonRDD" not in lineage, lineage
-    first = json_rows_to_df(spark, ROWS, schema_mode="first_record")
-    assert "PythonRDD" not in first._jdf.queryExecution().toRdd().toDebugString()
-    assert df.count() == first.count() == len(ROWS)
+    assert df.count() == len(ROWS)
+    # Inference scans every row: a field first seen on row 2 keeps its
+    # column (the reference infers from row 1 alone).
+    ragged = json_rows_to_df(spark, fetch_rows(f"{base_url}/ragged"))
+    assert sorted(ragged.columns) == ["a", "b"]
 
 
 def test_register_and_query(base_url, spark):

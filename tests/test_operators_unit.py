@@ -458,7 +458,7 @@ def test_token_count_equals_materialized_split(spark, sf_dir):
     whitespace-only and empty edge cases."""
     from pyspark.sql import functions as F
 
-    from http_datafusion_spark.operators.text import token_count, whitespace_tokens
+    from http_datafusion_spark.functions.tokens import token_count, whitespace_tokens
     from http_datafusion_spark.plans.tables import load_tables
 
     d = load_tables(spark, sf_dir, "documents")["documents"]

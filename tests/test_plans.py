@@ -1275,7 +1275,7 @@ PANDAS_GUARD_BOUNDED: dict[tuple[str, ...], str] = {
         "is the scale knob (~sqrt parallelism at 100 TB)"
     ),
     ("bucket", "bi", "bj"): (
-        "IVF within-bucket tiles (dedup.embedding_pairs_ivf, r16): a "
+        "IVF within-bucket tiles (dedup.embedding_pairs_ivf): a "
         "group holds two vec_id % IVF_SUBBLOCKS sub-blocks of ONE "
         "probe bucket (<= 2 x bucket/nb rows), and the tile fn scores "
         "A-side rows in _TILE_ROW_CHUNK chunks, so task memory is "
@@ -1436,6 +1436,55 @@ def test_spread_width_is_read_in_one_place():
     assert num_partitions == []
     assert shuffle_conf == {("session.py", "get_spark"), ("plans/tables.py", "spread")}
     assert parallelism == {"engine.py", "sources/http_json.py"}
+
+
+def test_quantize_is_written_in_one_place():
+    """The per-row rule behind an engine-independent sum (round to d
+    places as a decimal) is fixedpoint.quantize: no other package code
+    spells ``F.round(x, d).cast("decimal(p,d)")``, inline or as the
+    body of a local function or lambda."""
+    import ast
+    import pathlib
+
+    def round_then_decimal(node) -> bool:
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "cast"
+            and bool(node.args)
+            and isinstance(node.args[0], ast.Constant)
+            and str(node.args[0].value).startswith("decimal")
+            and isinstance(node.func.value, ast.Call)
+            and isinstance(node.func.value.func, ast.Attribute)
+            and node.func.value.func.attr == "round"
+        )
+
+    pkg = pathlib.Path(__file__).parent.parent / "http_datafusion_spark"
+    files = {str(f.relative_to(pkg)): f for f in sorted(pkg.rglob("*.py"))}
+    assert "functions/fixedpoint.py" in files
+    inline, helpers = [], []
+    for rel, f in files.items():
+        if rel == "functions/fixedpoint.py":
+            continue
+        tree = ast.parse(f.read_text())
+        bodies = set()
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Lambda):
+                body = node.body
+            elif isinstance(node, ast.FunctionDef) and isinstance(node.body[-1], ast.Return):
+                body = node.body[-1].value
+            else:
+                continue
+            if round_then_decimal(body):
+                bodies.add(id(body))
+                helpers.append((rel, node.lineno))
+        inline += [
+            (rel, node.lineno)
+            for node in ast.walk(tree)
+            if round_then_decimal(node) and id(node) not in bodies
+        ]
+    assert helpers == [], f"local quantizers, call fixedpoint.quantize: {helpers}"
+    assert inline == [], f"inline round-then-decimal, call fixedpoint.quantize: {inline}"
 
 
 def test_refused_session_conf_is_logged_and_the_rest_are_set(caplog):

@@ -316,33 +316,6 @@ def test_json_staging_keeps_values_and_order_across_line_chunks(spark):
     assert got == [(r["id"], r["s"]) for r in rows]
 
 
-def test_first_record_mode_drops_late_only_fields(spark):
-    # Parity quirk mode: schema comes from row 1 alone (reference
-    # src/datasources.rs:318-343). Columns must be exactly row 1's
-    # typed keys — late-only fields never appear — and later rows
-    # that don't fit the schema are coerced, never dropped.
-    from hypothesis import HealthCheck, given, settings
-    from hypothesis import strategies as st
-
-    from http_datafusion_spark.sources.http_json import json_rows_to_df
-
-    scalars = st.booleans() | st.integers(-10**6, 10**6) | st.text(max_size=8)
-    rows_strategy = st.lists(
-        st.dictionaries(st.sampled_from(["k1", "k2", "k3"]), scalars, min_size=1, max_size=3),
-        min_size=2,
-        max_size=6,
-    )
-
-    @settings(max_examples=15, deadline=None, suppress_health_check=[HealthCheck.too_slow])
-    @given(rows=rows_strategy)
-    def run(rows):
-        df = json_rows_to_df(spark, rows, schema_mode="first_record")
-        assert df.count() == len(rows)
-        assert set(df.columns) == set(rows[0].keys())
-
-    run()
-
-
 def test_connected_components_long_path_converges_logarithmically(spark, caplog):
     """Adversarial shape for label propagation: a pure path graph whose
     diameter (n-1) vastly exceeds log n. Plain propagation needs

@@ -10,9 +10,7 @@ One policy, chosen by the frame's size class:
 - A BOUNDED frame (an aggregate, a vocabulary, a small lookup) gets an
   eager ``localCheckpoint``: it is fully materialized before ``pin``
   returns and its lineage is severed, so deep iterative plans (the
-  connected-components and label-propagation loops) do not grow. Callers
-  may read a source, pin it and delete the source files (the streaming
-  scratch-dir reclaims rely on this).
+  connected-components and label-propagation loops) do not grow.
 - A FACT-SCALE frame (``fact_scale=True``: proportional to a fact
   table) gets a lazy, lineage-recoverable ``MEMORY_AND_DISK`` persist:
   a fact-sized frame never sits solely in unreplicated executor

@@ -32,12 +32,18 @@ from pyspark.sql.window import Window
 from http_datafusion_spark.functions.fixedpoint import i100, quantize, unscale
 from http_datafusion_spark.functions.hashing import md5_int, md5_int_sql, salted_hash, salted_hash_sql
 from http_datafusion_spark.operators.components import connected_components
-from http_datafusion_spark.operators.dedup import _minhash_pairs_sql, dedup_minhash_pairs
+from http_datafusion_spark.operators.dedup import (
+    _minhash_pairs_sql,
+    banded_signature,
+    dedup_minhash_pairs,
+    minhash_signature,
+    probe_band_store,
+)
 from http_datafusion_spark.operators.text import _EN_STOPWORDS
 from http_datafusion_spark.functions.pinning import pin
 from http_datafusion_spark.functions.tokens import token_count, whitespace_tokens
 from http_datafusion_spark.plans.registry import query
-from http_datafusion_spark.plans.tables import load_tables, spread
+from http_datafusion_spark.plans.tables import derived_dir, load_tables, spread
 
 # --------------------------------------------------------------- split
 
@@ -1072,12 +1078,24 @@ def _incremental_pairs_sql() -> str:
     """
 
 
+def signature_store_dir(spark: SparkSession, sf_dir: str) -> str:
+    """The band-partitioned MinHash signature store of the "existing"
+    corpus (even doc_ids), written once per session and source
+    fingerprint (plans/tables.derived_dir)."""
+
+    def build(path: str) -> None:
+        base = minhash_signature(spark, sf_dir).filter(F.col("doc_id") % 2 == 0)
+        banded_signature(base).write.mode("overwrite").partitionBy("band").parquet(path)
+
+    return derived_dir(spark, "sigstore", sf_dir, ("documents",), build)
+
+
 @query(
     "dedup_incremental_minhash",
     oracle=_incremental_pairs_sql(),
     doc="INCREMENTAL dedup against a materialized signature store: the existing corpus's "
-    "MinHash signatures + LSH band keys are WRITTEN once, partitioned by band "
-    "(scratch_path — stale-proof, concurrency-safe); a new batch then computes "
+    "MinHash signatures + LSH band keys are WRITTEN once per session and source "
+    "fingerprint, partitioned by band; a new batch then computes "
     "signatures only for ITS documents and probes the store with a band-key equi-join, "
     "verifying agreement against the STORED h-columns — the old corpus is never "
     "re-shingled. This is the arriving-batch shape at 100 TB: per-batch cost is "
@@ -1086,22 +1104,8 @@ def _incremental_pairs_sql() -> str:
     tags=("dedup", "pipeline"),
 )
 def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from http_datafusion_spark.operators.dedup import (
-        banded_signature,
-        minhash_signature,
-        probe_band_store,
-    )
-    from http_datafusion_spark.plans.tables import scratch_path
-
     sig = minhash_signature(spark, sf_dir)
-
-    store_path = scratch_path("sigstore", sf_dir, "documents")
-    # one-time store build for the "existing" corpus (even doc_ids)
-    banded_signature(sig.filter(F.col("doc_id") % 2 == 0)).write.mode(
-        "overwrite"
-    ).partitionBy("band").parquet(store_path)
-
-    store = spark.read.parquet(store_path)
+    store = spark.read.parquet(signature_store_dir(spark, sf_dir))
     new_bands = banded_signature(sig.filter(F.col("doc_id") % 2 == 1))
     return probe_band_store(new_bands, store)
 
@@ -1342,7 +1346,7 @@ def _pca_oracle() -> str:
     "8dp-quantized into exact decimal sums, so every engine sums in ANY order to "
     "the same bits and the oracle matches exactly despite two chained "
     "normalizations. The exploded (vec, dim, x) frame and every iterate are "
-    "eagerly checkpointed (r15), pinning the physical plan to ONE embeddings "
+    "eagerly checkpointed, pinning the physical plan to ONE embeddings "
     "scan + three passes over the checkpointed frame — the unpinned plan "
     "re-derived the parquet scan 12x. At 100 TB: per-iteration cost is two "
     "shuffles whose reduce "

@@ -1536,7 +1536,7 @@ def _lexical_semantic_ari_oracle() -> str:
     "until the final division (the dedup_cluster_ari algebra). Both pair "
     "pipelines are sub-quadratic (banded LSH / IVF-gated); components "
     "run the checkpointed star contraction; the contingency and its "
-    "marginals read ONE checkpointed cell table (r15 scan discipline) "
+    "marginals read ONE checkpointed cell table (one scan per source) "
     "(north-star dedup / eval)",
     tags=("dedup", "similarity", "graph"),
 )
@@ -1949,11 +1949,10 @@ SHRA_SAMPLE_MOD = 16  # judge 1/16 of the candidate union (fixed hash gate)
     f"dedup_minhash_estimator_calibration pattern — and the verify runs on "
     f"a FIXED 1/{SHRA_SAMPLE_MOD} hash sample of the union (judged pairs), "
     f"so the expensive step is budget-bounded the way Henzinger's own "
-    f"sampled judgments were. Two earlier drafts are documented failures: "
-    f"the full inverted-index truth join OOMed the sf5 box (quadratic "
-    f"under the 50x-replication bench data), and verifying the UNSAMPLED "
-    f"union still dragged 8.7M simhash candidates through the shingle "
-    f"join at sf1 (96 s). Absolute truth is unknowable at scale, so each "
+    f"sampled judgments were: a full inverted-index truth join is "
+    f"quadratic under replicated data, and verifying the UNSAMPLED union "
+    f"drags every simhash candidate through the shingle join. Absolute "
+    f"truth is unknowable at scale, so each "
     f"method is judged by precision and RELATIVE recall — its share of "
     f"the true pairs either method surfaced — on the judged sample; full "
     f"candidate counts stay exact. The decision readout for which "

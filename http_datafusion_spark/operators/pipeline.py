@@ -41,7 +41,7 @@ from http_datafusion_spark.functions.hashing import (
 from http_datafusion_spark.functions.pinning import pin
 from http_datafusion_spark.functions.tokens import token_count, whitespace_tokens
 from http_datafusion_spark.plans.registry import REGISTRY, query
-from http_datafusion_spark.plans.tables import load_tables, spread
+from http_datafusion_spark.plans.tables import derived_dir, load_tables, spread
 
 CHUNK_WORDS = 50
 CHUNK_STRIDE = 40  # 10-word overlap between consecutive chunks
@@ -1055,16 +1055,6 @@ def embedding_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def index_store_path(sf_dir: str) -> str:
-    """Materialization dir for the IVF-PQ index of one sf_dir (under
-    /tmp — the repo never writes into the read-only testdata tree);
-    fingerprint+pid-suffixed so it is stale-proof and concurrency-safe
-    (see plans/tables.scratch_path)."""
-    from http_datafusion_spark.plans.tables import scratch_path
-
-    return scratch_path("index", sf_dir, "embeddings")
-
-
 def write_embedding_index(spark: SparkSession, sf_dir: str, path: str) -> None:
     """Materialize the IVF-PQ index PARTITIONED BY bucket — the serving
     layout: a probe of nprobe buckets becomes a partition-pruned scan
@@ -1076,6 +1066,14 @@ def write_embedding_index(spark: SparkSession, sf_dir: str, path: str) -> None:
     ivf = ivf_assignments(spark, sf_dir).select("vec_id", "bucket")
     codes = embedding_quantize_pq(spark, sf_dir)
     ivf.join(codes, "vec_id").write.mode("overwrite").partitionBy("bucket").parquet(path)
+
+
+def embedding_index_dir(spark: SparkSession, sf_dir: str) -> str:
+    """The IVF-PQ index of ``sf_dir``'s embeddings, written once per
+    session and source fingerprint (plans/tables.derived_dir)."""
+    return derived_dir(
+        spark, "index", sf_dir, ("embeddings",), lambda p: write_embedding_index(spark, sf_dir, p)
+    )
 
 
 def _index_roundtrip_oracle() -> str:
@@ -1130,8 +1128,7 @@ def embedding_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         fold_sqdist,
     )
 
-    path = index_store_path(sf_dir)
-    write_embedding_index(spark, sf_dir, path)
+    path = embedding_index_dir(spark, sf_dir)
     # Probe selection: driver arithmetic over the K cached centroids
     # (an ANN client holds its codebook) — same rule as sim_ivf_topk.
     vecs = _fetch_vectors(spark, sf_dir, (QUERY_VEC_ID, *CENTROID_VEC_IDS))
@@ -1193,7 +1190,7 @@ _SUBBUCKET_SHIFT = 54
     """,
     doc=f"deterministic global shuffle for training epochs: md5('{SHUFFLE_EPOCH_SEED}|'||doc_id) "
     f"orders the corpus, docs land in {N_SHARDS} hash shards, and within-shard position is a "
-    f"TWO-PHASE rank (window guard r9): per-(shard, h>>{_SUBBUCKET_SHIFT}) counts telescope "
+    f"TWO-PHASE rank: per-(shard, h>>{_SUBBUCKET_SHIFT}) counts telescope "
     f"into exclusive offsets over the {N_SHARDS}x{N_SHARD_SUBBUCKETS}-row count table, and "
     f"pos = offset + bucket-local row_number — bit-identical to the single per-shard window "
     f"the oracle runs, but the sort parallelism is {N_SHARDS}x{N_SHARD_SUBBUCKETS} keys "
@@ -1361,7 +1358,7 @@ _PACK_TOKS_SQL = (
     f"proxy), bucket_pad (pad to the {SEQ_BUCKET_W}-token length bucket, "
     f"the sequence_length_buckets arc) — emitting sequences, padded slots, "
     f"waste and fill-rate per strategy; completes the curriculum -> mixture "
-    f"-> packing arc (VERDICT r8 task 7a). ONE corpus pass: the stream "
+    f"-> packing arc. ONE corpus pass: the stream "
     f"offsets use the train_shuffle_shards two-phase shape (per-(source, "
     f"h>>{_SUBBUCKET_SHIFT}) sums telescope into exclusive offsets, then a "
     f"bucket-local cumsum), so no per-source reducer ever sorts more than "
@@ -1639,12 +1636,6 @@ def quality_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
 CORPUS_SHARDS = 8
 
 
-def corpus_store_path(sf_dir: str) -> str:
-    from http_datafusion_spark.plans.tables import scratch_path
-
-    return scratch_path("corpus", sf_dir, "documents")
-
-
 @query(
     "corpus_build_roundtrip",
     oracle=f"""
@@ -1708,8 +1699,13 @@ def corpus_build_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("doc_id") % DECON_MOD != 0) & (F.col("doc_id") == F.col("keep_id")) & quality)
         .select("doc_id", "source", "n_chars", shard.alias("shard"))
     )
-    path = corpus_store_path(sf_dir)
-    surv.write.mode("overwrite").partitionBy("shard").parquet(path)
+    path = derived_dir(
+        spark,
+        "corpus",
+        sf_dir,
+        ("documents",),
+        lambda p: surv.write.mode("overwrite").partitionBy("shard").parquet(p),
+    )
     back = spark.read.parquet(path).filter(F.col("shard").isin(0, 1))
     return back.groupBy(F.col("shard").cast("bigint").alias("shard")).agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -2156,42 +2152,36 @@ SNAPVER_APPEND_MOD = 5  # docs with doc_id % 5 == 0 arrive in version 2
 
 
 def _snapver_store(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per sf_dir+mtime+pid) a two-version manifest store:
-    version 1 = documents with doc_id % SNAPVER_APPEND_MOD != 0,
-    version 2 = v1 plus the remaining docs as an APPENDED file set —
-    files are immutable, versions are manifest JSON files listing their
-    member data files (the core mechanic of Delta/Iceberg-style table
-    formats, minimally: append-only + manifest = snapshot isolation +
-    time travel)."""
+    """A two-version manifest store, built once per session and source
+    fingerprint (plans/tables.derived_dir): version 1 = documents with
+    doc_id % SNAPVER_APPEND_MOD != 0, version 2 = v1 plus the remaining
+    docs as an APPENDED file set — files are immutable, versions are
+    manifest JSON files listing their member data files (the core
+    mechanic of Delta/Iceberg-style table formats, minimally:
+    append-only + manifest = snapshot isolation + time travel)."""
     import json
 
-    from http_datafusion_spark.plans.tables import scratch_path
+    def build(root: str) -> None:
+        d = load_tables(spark, sf_dir, "documents")["documents"]
+        base = d.filter(F.col("doc_id") % SNAPVER_APPEND_MOD != 0)
+        delta = d.filter(F.col("doc_id") % SNAPVER_APPEND_MOD == 0)
+        base.write.mode("overwrite").parquet(os.path.join(root, "base"))
+        delta.write.mode("overwrite").parquet(os.path.join(root, "delta"))
 
-    root = scratch_path("snapver", sf_dir, "documents")
-    done = os.path.join(root, "_DONE")
-    if os.path.exists(done):
-        return root
-    d = load_tables(spark, sf_dir, "documents")["documents"]
-    base = d.filter(F.col("doc_id") % SNAPVER_APPEND_MOD != 0)
-    delta = d.filter(F.col("doc_id") % SNAPVER_APPEND_MOD == 0)
-    base.write.mode("overwrite").parquet(os.path.join(root, "base"))
-    delta.write.mode("overwrite").parquet(os.path.join(root, "delta"))
+        def files_of(sub: str) -> list[str]:
+            p = os.path.join(root, sub)
+            return sorted(
+                os.path.join(p, f) for f in os.listdir(p) if f.endswith(".parquet")
+            )
 
-    def files_of(sub: str) -> list[str]:
-        p = os.path.join(root, sub)
-        return sorted(
-            os.path.join(p, f) for f in os.listdir(p) if f.endswith(".parquet")
-        )
+        os.makedirs(os.path.join(root, "_manifests"))
+        v1 = files_of("base")
+        v2 = v1 + files_of("delta")
+        for ver, files in ((1, v1), (2, v2)):
+            with open(os.path.join(root, "_manifests", f"v{ver}.json"), "w") as fh:
+                json.dump({"version": ver, "files": files}, fh)
 
-    os.makedirs(os.path.join(root, "_manifests"), exist_ok=True)
-    v1 = files_of("base")
-    v2 = v1 + files_of("delta")
-    for ver, files in ((1, v1), (2, v2)):
-        with open(os.path.join(root, "_manifests", f"v{ver}.json"), "w") as fh:
-            json.dump({"version": ver, "files": files}, fh)
-    with open(done, "w") as fh:
-        fh.write("ok")
-    return root
+    return derived_dir(spark, "snapver", sf_dir, ("documents",), build)
 
 
 def read_snapshot(spark: SparkSession, sf_dir: str, version: int) -> DataFrame:

@@ -39,11 +39,8 @@ from pyspark.sql import functions as F
 from http_datafusion_spark.functions.fixedpoint import quantize
 from http_datafusion_spark.functions.veclib import fold_norms, fold_sqdist
 from http_datafusion_spark.functions.pinning import pin
-# Imported for its registrations only: text's queries register before
-# this module's, an order the registry (and its hash) depends on.
-import http_datafusion_spark.operators.text  # noqa: F401
 from http_datafusion_spark.plans.registry import query
-from http_datafusion_spark.plans.tables import fingerprint_tables, load_tables, spread
+from http_datafusion_spark.plans.tables import derived_dir, fingerprint_tables, load_tables, spread
 
 QUERY_VEC_ID = 0  # the "query" is the embedding of vec_id 0
 N_CENTROIDS = 8
@@ -1700,10 +1697,10 @@ def sim_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
            round((ha.n - hb.n) * 1.0 / {TOP_K}, 6) AS recall_drift
     FROM cnts, share, ha, hb
     """,
-    doc=f"INCREMENTAL ANN index maintenance (VERDICT r8 task 7b, mirroring "
+    doc=f"INCREMENTAL ANN index maintenance (mirroring "
     f"dedup_incremental_minhash's store): the base corpus (even vec_ids) is "
     f"assigned to the {N_CENTROIDS} fixed centroids and WRITTEN partitioned "
-    f"by bucket (scratch_path — stale-proof, concurrency-safe); the arriving "
+    f"by bucket, once per session and source fingerprint; the arriving "
     f"batch (odd vec_ids) then computes assignments only for ITS vectors "
     f"against the now-STALE centroids and APPENDS — per-batch cost is "
     f"O(batch), the base is never re-scored. The merged store is read back "
@@ -1716,25 +1713,25 @@ def sim_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("similarity", "pipeline"),
 )
 def sim_ivf_incremental_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from http_datafusion_spark.plans.tables import scratch_path
-
     cents = _fetch_vectors(spark, sf_dir, CENTROID_VEC_IDS)
     cids = sorted(cents)
     C = np.stack([cents[c] for c in cids])
     e = load_tables(spark, sf_dir, "embeddings")["embeddings"]
     asg_schema = "vec_id bigint, label bigint, embedding array<float>, bucket bigint"
 
-    store_path = scratch_path("ivfstore", sf_dir, "embeddings")
-    # one-time index build for the base corpus (even vec_ids)
-    e.filter(F.col("vec_id") % 2 == 0).select("vec_id", "label", "embedding").mapInPandas(
-        _assign_score_fn(cids, C, None), schema=asg_schema
-    ).write.mode("overwrite").partitionBy("bucket").parquet(store_path)
-    # O(batch) upsert: only the arriving odd vec_ids are scored, against
-    # the SAME (now stale) centroids, and appended bucket-partitioned
-    e.filter(F.col("vec_id") % 2 == 1).select("vec_id", "label", "embedding").mapInPandas(
-        _assign_score_fn(cids, C, None), schema=asg_schema
-    ).write.mode("append").partitionBy("bucket").parquet(store_path)
-    store = spark.read.parquet(store_path)
+    def build(path: str) -> None:
+        # index build for the base corpus (even vec_ids)
+        e.filter(F.col("vec_id") % 2 == 0).select("vec_id", "label", "embedding").mapInPandas(
+            _assign_score_fn(cids, C, None), schema=asg_schema
+        ).write.mode("overwrite").partitionBy("bucket").parquet(path)
+        # O(batch) upsert: only the arriving odd vec_ids are scored,
+        # against the SAME (now stale) centroids, and appended
+        # bucket-partitioned
+        e.filter(F.col("vec_id") % 2 == 1).select("vec_id", "label", "embedding").mapInPandas(
+            _assign_score_fn(cids, C, None), schema=asg_schema
+        ).write.mode("append").partitionBy("bucket").parquet(path)
+
+    store = spark.read.parquet(derived_dir(spark, "ivfstore", sf_dir, ("embeddings",), build))
 
     # probe selection: driver arithmetic over the 8 centroids (no job)
     vecs = _fetch_vectors(spark, sf_dir, (QUERY_VEC_ID, *CENTROID_VEC_IDS))

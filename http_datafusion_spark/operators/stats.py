@@ -1265,8 +1265,7 @@ def group_sequential_from_daily(g: DataFrame) -> DataFrame:
     f"map-side-combinable day-grain aggregate over the fact scan (the "
     f"look schedule derives from window maxima plus the exact counting "
     f"identity floor(rn*K/nd) - floor((rn-1)*K/nd) >= 1, so there is no "
-    f"second sizing pass — the shape the CUSUM twins adopted in the "
-    f"same round, retiring their two-scan params branch); "
+    f"second sizing pass — the same one-scan shape as the CUSUM twins); "
     f"every window after runs on the |days|-bounded grain and the looks "
     f"table is <= {GS_LOOKS} rows. The boundary is 6dp-rounded before "
     f"the shared A&S Horner tail (the stats-module transcendental "

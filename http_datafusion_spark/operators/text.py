@@ -17,7 +17,7 @@ from http_datafusion_spark.functions.hashing import md5_int_sql
 from http_datafusion_spark.functions.pinning import pin
 from http_datafusion_spark.functions.tokens import token_count, whitespace_tokens
 from http_datafusion_spark.plans.registry import query
-from http_datafusion_spark.plans.tables import load_tables, spread
+from http_datafusion_spark.plans.tables import derived_dir, load_tables, spread
 
 # Stopword lists for the n-gram/stopword language heuristic. The
 # documents fixture has synthetic vocab, so the heuristic is defined on
@@ -1277,14 +1277,6 @@ def quality_model_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 TINDEX_BUCKETS = 16  # term-hash partition dirs of the postings store
 
 
-def tindex_store_path(sf_dir: str) -> str:
-    """Materialization dir for the inverted index of one sf_dir (under
-    /tmp; fingerprint+pid-suffixed — see plans/tables.scratch_path)."""
-    from http_datafusion_spark.plans.tables import scratch_path
-
-    return scratch_path("tindex", sf_dir, "documents")
-
-
 def write_inverted_index(spark: SparkSession, sf_dir: str, path: str) -> None:
     """Materialize the postings store PARTITIONED BY term-hash bucket —
     the text-retrieval serving layout (the lexical twin of
@@ -1310,6 +1302,14 @@ def write_inverted_index(spark: SparkSession, sf_dir: str, path: str) -> None:
         .withColumn("bucket", md5_int(F.concat(F.lit("ti|"), F.col("term"))) % TINDEX_BUCKETS)
     )
     postings.write.mode("overwrite").partitionBy("bucket").parquet(path)
+
+
+def inverted_index_dir(spark: SparkSession, sf_dir: str) -> str:
+    """The inverted index of ``sf_dir``'s documents, written once per
+    session and source fingerprint (plans/tables.derived_dir)."""
+    return derived_dir(
+        spark, "tindex", sf_dir, ("documents",), lambda p: write_inverted_index(spark, sf_dir, p)
+    )
 
 
 @query(
@@ -1344,8 +1344,7 @@ def write_inverted_index(spark: SparkSession, sf_dir: str, path: str) -> None:
 def text_inverted_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
 
-    path = tindex_store_path(sf_dir)
-    write_inverted_index(spark, sf_dir, path)
+    path = inverted_index_dir(spark, sf_dir)
     # A retrieval client hashes its own query terms — driver-side
     # constants, the same md5 rule the store was partitioned by.
     buckets = sorted(
@@ -2092,8 +2091,8 @@ def _prf_oracle() -> str:
     "cannot; per-(doc, term) contributions quantize then decimal-sum so "
     "scores are order-independent. Everything data-dependent stays in-plan: "
     "no driver round-trip between rounds. At 100 TB: ONE physical corpus "
-    "pass — the (doc, word, tf) index is eagerly checkpointed (r15; the "
-    "unpinned plan re-derived the corpus scan 15x) and both rounds read "
+    "pass — the (doc, word, tf) index is eagerly checkpointed (the "
+    "unpinned plan re-derives the corpus scan 15x) and both rounds read "
     "it — + vocab-/k-bounded joins (north-star text / retrieval capstone)",
     tags=("text", "pipeline", "similarity"),
 )
@@ -3255,7 +3254,7 @@ _Q9BD = "CAST(round({x}, 9) AS DECIMAL(18,9))"
     f"Grain discipline: one token scan feeds the top-word list, per-source "
     f"totals, and the (source x {BURROWS_TOP_WORDS}) count grid — enforced "
     f"physically by an eager localCheckpoint of the (source, tok) count "
-    f"aggregate (r15; the unpinned plan re-derived the corpus scan 16x); every "
+    f"aggregate (the unpinned plan re-derives the corpus scan 16x); every "
     f"downstream table is |sources|-bounded (pairs = |sources| choose 2), "
     f"never corpus-sized. Relative frequencies are exact ratios; "
     f"cross-source moments and the pair sums are 9dp-decimal quantized "

@@ -1791,7 +1791,7 @@ MW_GROUP_B = "click"
     doc=f"Mann-Whitney U rank-sum test ({MW_GROUP_A!r} vs {MW_GROUP_B!r}): "
     "tie-corrected U with normal-approximation z and alpha=0.05 reject flag — "
     "the robust location test next to the mean-based events_ab_lift and the "
-    "shape-based events_ks_two_sample. CONVENTION (ADVICE r8): u_stat is "
+    "shape-based events_ks_two_sample. CONVENTION: u_stat is "
     "U2 = n1*n2 + n1*(n1+1)/2 - R1 and z is signed accordingly; "
     "scipy.stats.mannwhitneyu reports U1 = n1*n2 - U2, so a scipy "
     "cross-check sees a mirrored U and a flipped z sign — same |z|, same "

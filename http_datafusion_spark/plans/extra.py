@@ -6,13 +6,15 @@ two more TPC-H-shaped bench heads (Q7/Q10 analogues).
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from http_datafusion_spark.functions.fixedpoint import dsum, money_x_rate6, two_level_agg, unscale
 from http_datafusion_spark.plans.registry import query
-from http_datafusion_spark.plans.tables import load_tables
+from http_datafusion_spark.plans.tables import derived_dir, load_tables
 
 
 @query(
@@ -578,51 +580,40 @@ def ensure_bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     repeated fact-fact joins at 100 TB: both sides land in the same
     hash buckets at write time, so every later join/aggregation on the
     bucket key reads co-located files and plans NO Exchange. Tables are
-    external (explicit /tmp paths — never the repo CWD warehouse) and
-    written once per (session, sf_dir, source fingerprint). The table
-    name and path carry (a) the source-parquet mtime fingerprint, so a
-    regenerated sf_dir can never serve a stale bucketed copy, and (b)
-    the process id, so two concurrent sessions on one machine (driver
-    gate + a stray pytest) can't clobber each other's files mid-read."""
-    import os
+    external, written once per session and source fingerprint into a
+    plans/tables.derived_dir directory (never the repo CWD warehouse);
+    the table names carry that directory's unique name, so catalog
+    entry and files share one memo."""
 
-    from http_datafusion_spark.plans.tables import fingerprint_tables
+    def names(path: str) -> tuple[str, str]:
+        tag = os.path.basename(path)
+        return f"bkt_orders_{tag}", f"bkt_lineitem_{tag}"
 
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_").replace("-", "_")
-    # md5 fingerprint (not builtin hash): deterministic across processes,
-    # so identical data always maps to the same table name and the tag is
-    # debuggable by inspection; the pid suffix still isolates concurrent
-    # sessions' files.
-    fp = fingerprint_tables(sf_dir, "orders", "lineitem")
-    tag = f"{tag}_{fp}_{os.getpid()}"
-    to, tl = f"bkt_orders_{tag}", f"bkt_lineitem_{tag}"
-    done = spark.__dict__.setdefault("_hds_bucketed", set())
-    if (sf_dir, to) in done:
-        return to, tl
-    t = load_tables(spark, sf_dir, "orders", "lineitem")
-    base = f"/tmp/http_datafusion_spark_bucketed/{tag}"
-    (
-        t["orders"]
-        .select("o_orderkey", "o_orderpriority")
-        .write.bucketBy(N_BUCKETS, "o_orderkey")
-        .sortBy("o_orderkey")
-        .option("path", f"{base}/orders")
-        .mode("overwrite")
-        .format("parquet")
-        .saveAsTable(to)
-    )
-    (
-        t["lineitem"]
-        .select("l_orderkey", "l_returnflag", "l_extendedprice", "l_discount")
-        .write.bucketBy(N_BUCKETS, "l_orderkey")
-        .sortBy("l_orderkey")
-        .option("path", f"{base}/lineitem")
-        .mode("overwrite")
-        .format("parquet")
-        .saveAsTable(tl)
-    )
-    done.add((sf_dir, to))
-    return to, tl
+    def build(path: str) -> None:
+        t = load_tables(spark, sf_dir, "orders", "lineitem")
+        to, tl = names(path)
+        (
+            t["orders"]
+            .select("o_orderkey", "o_orderpriority")
+            .write.bucketBy(N_BUCKETS, "o_orderkey")
+            .sortBy("o_orderkey")
+            .option("path", os.path.join(path, "orders"))
+            .mode("overwrite")
+            .format("parquet")
+            .saveAsTable(to)
+        )
+        (
+            t["lineitem"]
+            .select("l_orderkey", "l_returnflag", "l_extendedprice", "l_discount")
+            .write.bucketBy(N_BUCKETS, "l_orderkey")
+            .sortBy("l_orderkey")
+            .option("path", os.path.join(path, "lineitem"))
+            .mode("overwrite")
+            .format("parquet")
+            .saveAsTable(tl)
+        )
+
+    return names(derived_dir(spark, "bucketed", sf_dir, ("orders", "lineitem"), build))
 
 
 @query(

@@ -117,36 +117,52 @@ def query(
     return deco
 
 
-def all_queries() -> dict[str, QuerySpec]:
-    """Import every module that registers queries, then return the registry."""
-    import http_datafusion_spark.operators.asof  # noqa: F401
-    import http_datafusion_spark.operators.components  # noqa: F401
-    import http_datafusion_spark.operators.curation  # noqa: F401
-    import http_datafusion_spark.operators.dedup  # noqa: F401
-    import http_datafusion_spark.operators.multimodal  # noqa: F401
-    import http_datafusion_spark.operators.pipeline  # noqa: F401
-    import http_datafusion_spark.operators.privacy  # noqa: F401
-    import http_datafusion_spark.operators.range_join  # noqa: F401
-    import http_datafusion_spark.operators.similarity  # noqa: F401
-    import http_datafusion_spark.operators.stats  # noqa: F401
-    import http_datafusion_spark.operators.text  # noqa: F401
-    import http_datafusion_spark.operators.timeseries  # noqa: F401
-    import http_datafusion_spark.plans.aggregates  # noqa: F401
-    import http_datafusion_spark.plans.events  # noqa: F401
-    import http_datafusion_spark.plans.extra  # noqa: F401
-    import http_datafusion_spark.plans.relational  # noqa: F401
-    import http_datafusion_spark.plans.reshape  # noqa: F401
-    import http_datafusion_spark.plans.scalar_funcs  # noqa: F401
-    import http_datafusion_spark.plans.subqueries  # noqa: F401
-    import http_datafusion_spark.plans.tpch_more  # noqa: F401
-    import http_datafusion_spark.plans.tpch_tail  # noqa: F401
-    import http_datafusion_spark.plans.windows  # noqa: F401
-    import http_datafusion_spark.sources.ingest_queries  # noqa: F401
-    import http_datafusion_spark.streaming.queries  # noqa: F401
+# Every module that registers queries. Outside the PRIORITY head, the
+# registry lists queries by their module's position here, then in
+# registration (source) order within the module — never by the order
+# in which the modules happened to be imported.
+_MODULES: tuple[str, ...] = (
+    "http_datafusion_spark.operators.asof",
+    "http_datafusion_spark.operators.components",
+    "http_datafusion_spark.operators.curation",
+    "http_datafusion_spark.operators.dedup",
+    "http_datafusion_spark.operators.multimodal",
+    "http_datafusion_spark.operators.pipeline",
+    "http_datafusion_spark.operators.privacy",
+    "http_datafusion_spark.operators.range_join",
+    "http_datafusion_spark.operators.similarity",
+    "http_datafusion_spark.operators.stats",
+    "http_datafusion_spark.operators.text",
+    "http_datafusion_spark.operators.timeseries",
+    "http_datafusion_spark.plans.aggregates",
+    "http_datafusion_spark.plans.events",
+    "http_datafusion_spark.plans.extra",
+    "http_datafusion_spark.plans.relational",
+    "http_datafusion_spark.plans.reshape",
+    "http_datafusion_spark.plans.scalar_funcs",
+    "http_datafusion_spark.plans.subqueries",
+    "http_datafusion_spark.plans.tpch_more",
+    "http_datafusion_spark.plans.tpch_tail",
+    "http_datafusion_spark.plans.windows",
+    "http_datafusion_spark.sources.ingest_queries",
+    "http_datafusion_spark.streaming.queries",
+)
 
+
+def all_queries() -> dict[str, QuerySpec]:
+    """Import every module that registers queries, then return the
+    registry: the PRIORITY head, then every other query by
+    (``_MODULES`` position, registration order)."""
+    import importlib
+
+    for m in _MODULES:
+        importlib.import_module(m)
     missing = [n for n in PRIORITY if n not in REGISTRY]
     if missing:
         raise RuntimeError(f"PRIORITY names not registered: {missing}")
-    ordered = {n: REGISTRY[n] for n in PRIORITY}
-    ordered.update((n, s) for n, s in REGISTRY.items() if n not in ordered)
-    return ordered
+    rank = {m: i for i, m in enumerate(_MODULES)}
+    rest = sorted(
+        (s for n, s in REGISTRY.items() if n not in PRIORITY),
+        key=lambda s: rank[s.spark.__module__],
+    )
+    return {**{n: REGISTRY[n] for n in PRIORITY}, **{s.name: s for s in rest}}

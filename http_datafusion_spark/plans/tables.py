@@ -1,4 +1,4 @@
-"""Test-data table loader.
+"""Test-data table loader, and the one rule for derived on-disk layouts.
 
 Loads the driver-generated parquet star schema (TESTDATA.md) and
 registers each table as a temp view, so queries can use either the
@@ -17,12 +17,25 @@ pattern — the q9 warm-latency decomposition (32 cores, sf0.1) measured
 this removes. Caching swaps the parquet scan for an InMemoryTableScan
 (still column-pruned + filtered; pushdown to parquet no longer
 applies, which is fine — the relation is resident).
+
+Scratch storage has two rules. A layout DERIVED from source tables (a
+bucketed copy, an index, a staged stream source) comes from
+``derived_dir``: built once per (session, kind, sf_dir, source
+fingerprint) into a fresh directory under one per-process root, which
+is removed at interpreter exit. Storage that lives for one run (a
+stream checkpoint, a foreachBatch sink) is a
+``tempfile.TemporaryDirectory`` block in the code that runs it.
 """
 
 from __future__ import annotations
 
+import atexit
 import logging
 import os
+import shutil
+import tempfile
+import threading
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -87,26 +100,62 @@ def fingerprint_tables(sf_dir: str, *tables: str) -> str:
     """8-hex-char md5 fingerprint of the named source tables' mtimes —
     DETERMINISTIC across processes (unlike builtin ``hash``, which is
     salted per-process by PYTHONHASHSEED), so two runs over identical
-    data produce the same tag and a derived-layout path is debuggable
-    by inspection."""
+    data produce the same tag."""
     import hashlib
 
     toks = tuple(_mtime_token(os.path.join(sf_dir, f"{t}.parquet")) for t in tables)
     return hashlib.md5(repr(toks).encode()).hexdigest()[:8]
 
 
-def scratch_path(kind: str, sf_dir: str, *tables: str) -> str:
-    """Session-safe /tmp materialization dir for derived layouts
-    (bucketed tables, IVF-PQ index, corpus store). The leaf dir name
-    carries (a) an md5 mtime fingerprint of the source parquet, so
-    regenerated data can never be served a stale derived copy, and
-    (b) the pid, so concurrent sessions (driver gate + a stray pytest)
-    never overwrite each other's files mid-read."""
-    fp = fingerprint_tables(sf_dir, *tables)
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(
-        "/tmp", f"http_datafusion_spark_{kind}", f"{tag}_{fp}_{os.getpid()}"
-    )
+# One scratch root per process, made on first use and removed at exit.
+_SCRATCH_LOCK = threading.Lock()
+_scratch_root: str | None = None
+
+
+def _fresh_scratch_dir(kind: str) -> str:
+    global _scratch_root
+    with _SCRATCH_LOCK:
+        if _scratch_root is None:
+            _scratch_root = tempfile.mkdtemp(prefix="hds_scratch_")
+            atexit.register(shutil.rmtree, _scratch_root, True)
+    return tempfile.mkdtemp(prefix=f"{kind}_", dir=_scratch_root)
+
+
+def derived_dir(
+    spark: SparkSession,
+    kind: str,
+    sf_dir: str,
+    tables: tuple[str, ...],
+    build: Callable[[str], None],
+) -> str:
+    """Directory holding the layout ``build(path)`` derives from the
+    named source ``tables`` of ``sf_dir``; ``kind`` names the layout and
+    every build parameter that shapes it.
+
+    Built once per (session, kind, sf_dir, source fingerprint): a
+    regenerated source table gets a new build, never a stale copy.
+    Concurrent callers of one key wait for a single build; different
+    keys build in parallel. ``build`` writes into a fresh empty
+    directory (so Spark writes use ``mode("overwrite")``) under this
+    process's scratch root; a failed build's directory is removed.
+    The memo is per session, not shared across processes by
+    fingerprint: a layout published that way would outlive a change
+    to the code that wrote it."""
+    _ensure_session_confs(spark)
+    key = (kind, sf_dir, fingerprint_tables(sf_dir, *tables))
+    with _SCRATCH_LOCK:
+        memo = spark.__dict__.setdefault("_hds_derived", {})
+        slot = memo.setdefault(key, {"lock": threading.Lock()})
+    with slot["lock"]:
+        if "path" not in slot:
+            path = _fresh_scratch_dir(kind)
+            try:
+                build(path)
+            except BaseException:
+                shutil.rmtree(path, ignore_errors=True)
+                raise
+            slot["path"] = path
+        return slot["path"]
 
 
 def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

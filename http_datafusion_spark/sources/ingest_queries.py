@@ -18,9 +18,7 @@ endpoint would use.
 from __future__ import annotations
 
 import json
-import tempfile
 import threading
-import uuid
 from http.server import BaseHTTPRequestHandler, HTTPServer
 from urllib.parse import parse_qs, urlparse
 
@@ -28,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from http_datafusion_spark.plans.registry import query
 from http_datafusion_spark.plans.tables import load_tables
+from http_datafusion_spark.streaming.queries import run_to_memory
 
 PAGE_SIZE = 10
 PAGES_PER_TRIGGER = 2
@@ -77,19 +76,6 @@ def http_ingest_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxPagesPerTrigger", str(PAGES_PER_TRIGGER))
             .load()
         )
-        name = f"http_ingest_{uuid.uuid4().hex[:8]}"
-        q = (
-            stream.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="hds_ingest_ckpt_"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            q.awaitTermination(30)
+        return run_to_memory(stream, "append")
     finally:
         srv.shutdown()
-    return spark.table(name)

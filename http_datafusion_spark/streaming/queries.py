@@ -31,19 +31,20 @@ from http_datafusion_spark.functions.fixedpoint import quantize
 from http_datafusion_spark.functions.pinning import pin
 from http_datafusion_spark.functions.tokens import whitespace_tokens
 from http_datafusion_spark.plans.registry import query
-from http_datafusion_spark.plans.tables import _ensure_session_confs
+from http_datafusion_spark.plans.tables import _ensure_session_confs, derived_dir, load_tables
 
 
-def _stream_dir(sf_dir: str) -> str:
-    """The file stream source requires a *directory*; stage one holding a
+def _stream_dir(spark: SparkSession, sf_dir: str) -> str:
+    """The file stream source requires a *directory*: one holding a
     symlink to the (read-only) events parquet."""
-    name = sf_dir.strip("/").replace("/", "_")
-    d = os.path.join(tempfile.gettempdir(), f"hds_stream_{name}")
-    os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(os.path.join(sf_dir, "events.parquet"), link)
-    return d
+    src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
+    return derived_dir(
+        spark,
+        "stream_events",
+        sf_dir,
+        ("events",),
+        lambda d: os.symlink(src, os.path.join(d, "events.parquet")),
+    )
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -57,7 +58,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = (
         spark.readStream.schema(raw_schema)
         .option("maxFilesPerTrigger", "1")
-        .parquet(_stream_dir(sf_dir))
+        .parquet(_stream_dir(spark, sf_dir))
     )
     if dict(stream.dtypes)["ts"] == "bigint":
         # `div` (integer division) — see plans/tables.py: /1000 via double
@@ -74,29 +75,44 @@ def run_to_memory(
     When ``progress_out`` is given, the per-micro-batch progress dicts
     (numInputRows etc.) are appended to it before the query stops — the
     observable evidence for rate-limit/backpressure behavior.
-    """
-    import shutil
 
+    The returned frame reads the sink's rows. The checkpoint lives only
+    for the run, and the sink's temp view is dropped before returning:
+    the frame is already resolved, so it keeps reading the sink, and a
+    long-lived session does not collect one view per run.
+    """
+    spark = agg.sparkSession
     name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="hds_ckpt_")
-    q = (
-        agg.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
+    try:
+        with tempfile.TemporaryDirectory(prefix="hds_ckpt_") as ckpt:
+            q = (
+                agg.writeStream.outputMode(output_mode)
+                .format("memory")
+                .queryName(name)
+                .option("checkpointLocation", ckpt)
+                .start()
+            )
+            try:
+                q.processAllAvailable()
+                if progress_out is not None:
+                    progress_out.extend(q.recentProgress)
+            finally:
+                q.stop()
+                q.awaitTermination(30)
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
+
+
+def _drain(writer, ckpt: str) -> None:
+    """Start a ``foreachBatch`` stream ``writer`` checkpointed at ``ckpt``
+    and run it until its source is drained."""
+    q = writer.option("checkpointLocation", ckpt).start()
     try:
         q.processAllAvailable()
-        if progress_out is not None:
-            progress_out.extend(q.recentProgress)
     finally:
         q.stop()
         q.awaitTermination(30)
-        # the memory sink holds the results; the checkpoint has no
-        # further use — repeated gate/test runs must not grow /tmp
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return agg.sparkSession.table(name)
 
 
 RATE_LIMIT_FILES = 8  # events staged as N files; maxFilesPerTrigger=1 -> N bounded micro-batches
@@ -105,21 +121,17 @@ RATE_LIMIT_FILES = 8  # events staged as N files; maxFilesPerTrigger=1 -> N boun
 def staged_multifile_dir(spark: SparkSession, sf_dir: str) -> str:
     """Stage the events table as RATE_LIMIT_FILES parquet files so the
     file source's ``maxFilesPerTrigger`` cap is observable (a single
-    file is always one trigger). Written once per sf_dir."""
-    _ensure_session_confs(spark)  # nanosAsLong etc. on a foreign (driver) session
-    name = sf_dir.strip("/").replace("/", "_")
-    d = os.path.join(tempfile.gettempdir(), f"hds_stream_rl_{name}")
-    marker = os.path.join(d, "_STAGED")
-    if not os.path.exists(marker):
+    file is always one trigger)."""
+
+    def build(d: str) -> None:
         (
             spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
             .repartition(RATE_LIMIT_FILES)
             .write.mode("overwrite")
             .parquet(d)
         )
-        with open(marker, "w") as fh:
-            fh.write("ok")
-    return d
+
+    return derived_dir(spark, "stream_rl", sf_dir, ("events",), build)
 
 
 def rate_limited_stream(
@@ -378,8 +390,6 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimensions live as a slowly-refreshed table. A stream-static inner
     join keeps NO state store (unlike stream-stream), so executor
     memory stays flat regardless of stream length."""
-    from http_datafusion_spark.plans.tables import load_tables
-
     stream = read_events_stream(spark, sf_dir)
     dim = (
         load_tables(spark, sf_dir, "customer")["customer"]
@@ -541,27 +551,17 @@ DOC_STREAM_FILES = 4  # documents staged as N files -> N probe micro-batches
 
 def staged_docs_dir(spark: SparkSession, sf_dir: str) -> str:
     """Stage the documents table as DOC_STREAM_FILES parquet files so a
-    document stream replays as multiple micro-batches. Written once per
-    (sf_dir, source-mtime) — the dir name carries an mtime fingerprint
-    of documents.parquet (same guard as plans/tables.scratch_path), so a
-    regenerated source can never silently serve a stale staged copy."""
-    from http_datafusion_spark.plans.tables import fingerprint_tables
+    document stream replays as multiple micro-batches."""
 
-    _ensure_session_confs(spark)
-    name = sf_dir.strip("/").replace("/", "_")
-    fp = fingerprint_tables(sf_dir, "documents")
-    d = os.path.join(tempfile.gettempdir(), f"hds_stream_docs_{name}_{fp}")
-    marker = os.path.join(d, "_STAGED")
-    if not os.path.exists(marker):
+    def build(d: str) -> None:
         (
             spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
             .repartition(DOC_STREAM_FILES)
             .write.mode("overwrite")
             .parquet(d)
         )
-        with open(marker, "w") as fh:
-            fh.write("ok")
-    return d
+
+    return derived_dir(spark, "stream_docs", sf_dir, ("documents",), build)
 
 
 def _stream_incremental_oracle() -> str:
@@ -592,73 +592,55 @@ def _stream_incremental_oracle() -> str:
 def stream_incremental_minhash(
     spark: SparkSession, sf_dir: str, audit_out: list | None = None
 ) -> DataFrame:
-    import shutil
-
     from http_datafusion_spark.operators.dedup import (
         banded_signature,
         minhash_signature_of,
         probe_band_store,
     )
-    from http_datafusion_spark.plans.tables import load_tables, scratch_path
 
-    run_id = uuid.uuid4().hex[:8]
-    store_path = scratch_path("sigstore_stream", sf_dir, "documents") + f"_{run_id}"
-    matches_path = scratch_path("sigmatches_stream", sf_dir, "documents") + f"_{run_id}"
-    ckpt_path = tempfile.mkdtemp(prefix="hds_ckpt_")
-
-    # one-time base-store build for the "existing" corpus (even doc_ids)
     docs = load_tables(spark, sf_dir, "documents")["documents"]
-    base = banded_signature(minhash_signature_of(docs.filter(F.col("doc_id") % 2 == 0)))
-    base.withColumn("origin", F.lit("base")).write.mode("overwrite").partitionBy(
-        "band"
-    ).parquet(store_path)
-
     schema = spark.read.parquet(staged_docs_dir(spark, sf_dir)).schema
-
-    def probe_and_append(batch: DataFrame, batch_id: int) -> None:
-        sess = batch.sparkSession
-        new_bands = banded_signature(
-            minhash_signature_of(batch.filter(F.col("doc_id") % 2 == 1))
-        ).transform(pin)  # cut the lineage: probe + append re-use it
-        store_before = sess.read.parquet(store_path).count() if audit_out is not None else None
-        store_base = sess.read.parquet(store_path).filter(F.col("origin") == "base")
-        probe_band_store(new_bands, store_base).write.mode("append").parquet(matches_path)
-        new_bands.withColumn("origin", F.lit("stream")).write.mode("append").partitionBy(
+    with tempfile.TemporaryDirectory(prefix="hds_sigstream_") as run:
+        store_path, matches_path = os.path.join(run, "store"), os.path.join(run, "matches")
+        # base-store build for the "existing" corpus (even doc_ids)
+        base = banded_signature(minhash_signature_of(docs.filter(F.col("doc_id") % 2 == 0)))
+        base.withColumn("origin", F.lit("base")).write.mode("overwrite").partitionBy(
             "band"
         ).parquet(store_path)
-        if audit_out is not None:
-            # evidence for the O(new docs) growth claim: the store gains
-            # exactly this batch's band rows, never a function of corpus size
-            audit_out.append(
-                {
-                    "batch_id": batch_id,
-                    "batch_band_rows": new_bands.count(),
-                    "store_rows_before": store_before,
-                    "store_rows_after": sess.read.parquet(store_path).count(),
-                }
-            )
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged_docs_dir(spark, sf_dir))
-    )
-    q = (
-        stream.writeStream.foreachBatch(probe_and_append)
-        .option("checkpointLocation", ckpt_path)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination(30)
-    # materialize the result, then reclaim the run-scoped scratch dirs —
-    # repeated gate/test runs must not grow /tmp unboundedly
-    out = spark.read.parquet(matches_path).transform(pin)
-    for d in (store_path, matches_path, ckpt_path):
-        shutil.rmtree(d, ignore_errors=True)
-    return out
+        def probe_and_append(batch: DataFrame, batch_id: int) -> None:
+            sess = batch.sparkSession
+            new_bands = banded_signature(
+                minhash_signature_of(batch.filter(F.col("doc_id") % 2 == 1))
+            ).transform(pin)  # cut the lineage: probe + append re-use it
+            store_before = (
+                sess.read.parquet(store_path).count() if audit_out is not None else None
+            )
+            store_base = sess.read.parquet(store_path).filter(F.col("origin") == "base")
+            probe_band_store(new_bands, store_base).write.mode("append").parquet(matches_path)
+            new_bands.withColumn("origin", F.lit("stream")).write.mode("append").partitionBy(
+                "band"
+            ).parquet(store_path)
+            if audit_out is not None:
+                # evidence for the O(new docs) growth claim: the store gains
+                # exactly this batch's band rows, never a function of corpus size
+                audit_out.append(
+                    {
+                        "batch_id": batch_id,
+                        "batch_band_rows": new_bands.count(),
+                        "store_rows_before": store_before,
+                        "store_rows_after": sess.read.parquet(store_path).count(),
+                    }
+                )
+
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(staged_docs_dir(spark, sf_dir))
+        )
+        _drain(stream.writeStream.foreachBatch(probe_and_append), os.path.join(run, "ckpt"))
+        # pinned (materialized) before the run's files go
+        return spark.read.parquet(matches_path).transform(pin)
 
 
 TIMEORDER_FILES = 6  # time-range files -> in-order micro-batches
@@ -670,35 +652,29 @@ def staged_timeordered_dir(spark: SparkSession, sf_dir: str) -> str:
     source (which orders files by modification time) replays the table
     in event-time order, one range per micro-batch — the staging for
     operators whose semantics depend on cross-batch time order
-    (debounce, as-of state machines). Same fingerprint guard as
-    staged_docs_dir."""
-    from http_datafusion_spark.plans.tables import fingerprint_tables
+    (debounce, as-of state machines)."""
 
-    _ensure_session_confs(spark)
-    name = sf_dir.strip("/").replace("/", "_")
-    fp = fingerprint_tables(sf_dir, "events")
-    d = os.path.join(tempfile.gettempdir(), f"hds_stream_to_{name}_{fp}")
-    marker = os.path.join(d, "_STAGED")
-    if not os.path.exists(marker):
-        (
-            spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-            .repartitionByRange(TIMEORDER_FILES, "ts")
-            .sortWithinPartitions("ts")
-            .write.mode("overwrite")
-            .parquet(d)
-        )
-        # part-0000i is the i-th ts range (repartitionByRange orders
-        # partitions by range); stamp increasing mtimes so the source's
-        # modTime ordering equals time order.
-        parts = sorted(
-            f for f in os.listdir(d) if f.startswith("part-") and f.endswith(".parquet")
-        )
-        base = int(os.path.getmtime(os.path.join(d, parts[0])))
-        for i, f in enumerate(parts):
-            os.utime(os.path.join(d, f), (base + i, base + i))
-        with open(marker, "w") as fh:
-            fh.write("ok")
-    return d
+    def build(d: str) -> None:
+        events = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+        _write_time_ordered(events, TIMEORDER_FILES, "ts", d)
+
+    return derived_dir(spark, "stream_to", sf_dir, ("events",), build)
+
+
+def _write_time_ordered(df: DataFrame, n_files: int, col: str, d: str) -> None:
+    """Write ``df`` into ``d`` as ``n_files`` ranges of ``col``, sorted
+    within each file, with mtimes increasing in range order — so the
+    file stream source, which serves files oldest-mtime first, replays
+    ``df`` in ``col`` order, one range per micro-batch."""
+    df.repartitionByRange(n_files, col).sortWithinPartitions(col).write.mode(
+        "overwrite"
+    ).parquet(d)
+    # part-0000i is the i-th range (repartitionByRange orders partitions
+    # by range)
+    parts = sorted(f for f in os.listdir(d) if f.startswith("part-") and f.endswith(".parquet"))
+    base = int(os.path.getmtime(os.path.join(d, parts[0])))
+    for i, f in enumerate(parts):
+        os.utime(os.path.join(d, f), (base + i, base + i))
 
 
 def _debounce_oracle() -> str:
@@ -755,34 +731,32 @@ def staged_docs_mod_dir(spark: SparkSession, sf_dir: str) -> str:
     (batch k == residue class k), unlike a repartition() staging whose
     file contents depend on scan parallelism. SQL-expressible membership
     is what lets a commit-log replay be oracle-checked per version."""
+
+    def build(d: str) -> None:
+        docs = load_tables(spark, sf_dir, "documents")["documents"]
+        residue = F.col("doc_id") % DOCS_MOD_FILES
+        _write_batch_files((docs.filter(residue == i) for i in range(DOCS_MOD_FILES)), d, "residue")
+
+    return derived_dir(spark, "stream_docmod", sf_dir, ("documents",), build)
+
+
+def _write_batch_files(batches, d: str, stem: str) -> None:
+    """Write the i-th frame of ``batches`` into ``d`` as the single file
+    ``{stem}-{i}.parquet``, with mtimes increasing in i — so a
+    maxFilesPerTrigger=1 replay serves frame i as micro-batch i."""
     import shutil
 
-    from http_datafusion_spark.plans.tables import fingerprint_tables, load_tables
-
-    _ensure_session_confs(spark)
-    name = sf_dir.strip("/").replace("/", "_")
-    fp = fingerprint_tables(sf_dir, "documents")
-    d = os.path.join(tempfile.gettempdir(), f"hds_stream_docmod_{name}_{fp}")
-    marker = os.path.join(d, "_STAGED")
-    if not os.path.exists(marker):
-        os.makedirs(d, exist_ok=True)
-        docs = load_tables(spark, sf_dir, "documents")["documents"]
-        base = None
-        for i in range(DOCS_MOD_FILES):
-            tmp = os.path.join(d, f"_tmp_{i}")
-            docs.filter(F.col("doc_id") % DOCS_MOD_FILES == i).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            src = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-            dst = os.path.join(d, f"residue-{i}.parquet")
-            shutil.move(os.path.join(tmp, src), dst)
-            shutil.rmtree(tmp, ignore_errors=True)
-            if base is None:
-                base = int(os.path.getmtime(dst))
-            os.utime(dst, (base + i, base + i))
-        with open(marker, "w") as fh:
-            fh.write("ok")
-    return d
+    base = None
+    for i, batch in enumerate(batches):
+        tmp = os.path.join(d, f"_tmp_{i}")
+        batch.coalesce(1).write.mode("overwrite").parquet(tmp)
+        src = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
+        dst = os.path.join(d, f"{stem}-{i}.parquet")
+        shutil.move(os.path.join(tmp, src), dst)
+        shutil.rmtree(tmp, ignore_errors=True)
+        if base is None:
+            base = int(os.path.getmtime(dst))
+        os.utime(dst, (base + i, base + i))
 
 
 def _snapshot_append_oracle() -> str:
@@ -814,74 +788,53 @@ def _snapshot_append_oracle() -> str:
     tags=("streaming", "pipeline"),
 )
 def stream_snapshot_append(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import functools
     import json
-    import shutil
-
-    from http_datafusion_spark.plans.tables import scratch_path
-
-    run_id = uuid.uuid4().hex[:8]
-    root = scratch_path("snapstream", sf_dir, "documents") + f"_{run_id}"
-    man_dir = os.path.join(root, "_manifests")
-    os.makedirs(man_dir, exist_ok=True)
-    ckpt = tempfile.mkdtemp(prefix="hds_ckpt_")
 
     d = staged_docs_mod_dir(spark, sf_dir)
     schema = spark.read.parquet(d).schema
+    with tempfile.TemporaryDirectory(prefix="hds_snapstream_") as root:
+        man_dir = os.path.join(root, "_manifests")
+        os.makedirs(man_dir)
 
-    def commit_batch(batch: DataFrame, batch_id: int) -> None:
-        data_dir = os.path.join(root, f"batch_{batch_id}")
-        batch.write.mode("overwrite").parquet(data_dir)
-        new_files = sorted(
-            os.path.join(data_dir, f)
-            for f in os.listdir(data_dir)
-            if f.endswith(".parquet")
-        )
-        versions = sorted(
-            int(f[1:-5]) for f in os.listdir(man_dir) if f.endswith(".json")
-        )
-        prev_files: list[str] = []
-        if versions:
-            with open(os.path.join(man_dir, f"v{versions[-1]}.json")) as fh:
-                prev_files = json.load(fh)["files"]
-        ver = (versions[-1] if versions else 0) + 1
-        # data files are durable before the manifest pointer appears —
-        # the atomic-commit ordering of every table format
-        with open(os.path.join(man_dir, f"v{ver}.json"), "w") as fh:
-            json.dump({"version": ver, "files": prev_files + new_files}, fh)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(d)
-    )
-    q = stream.writeStream.foreachBatch(commit_batch).option(
-        "checkpointLocation", ckpt
-    ).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination(30)
-
-    import functools
-
-    outs = []
-    for f in sorted(os.listdir(man_dir)):
-        with open(os.path.join(man_dir, f)) as fh:
-            m = json.load(fh)
-        outs.append(
-            spark.read.parquet(*m["files"]).agg(
-                F.lit(m["version"]).cast("bigint").alias("version"),
-                F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-                F.sum("doc_id").cast("bigint").alias("id_checksum"),
-                F.sum("n_chars").cast("bigint").alias("char_checksum"),
+        def commit_batch(batch: DataFrame, batch_id: int) -> None:
+            data_dir = os.path.join(root, f"batch_{batch_id}")
+            batch.write.mode("overwrite").parquet(data_dir)
+            new_files = sorted(
+                os.path.join(data_dir, f)
+                for f in os.listdir(data_dir)
+                if f.endswith(".parquet")
             )
-        )
-    merged = functools.reduce(lambda a, b: a.unionByName(b), outs)
-    result = merged.transform(pin)
-    shutil.rmtree(root, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return result
+            versions = sorted(
+                int(f[1:-5]) for f in os.listdir(man_dir) if f.endswith(".json")
+            )
+            prev_files: list[str] = []
+            if versions:
+                with open(os.path.join(man_dir, f"v{versions[-1]}.json")) as fh:
+                    prev_files = json.load(fh)["files"]
+            ver = (versions[-1] if versions else 0) + 1
+            # data files are durable before the manifest pointer appears —
+            # the atomic-commit ordering of every table format
+            with open(os.path.join(man_dir, f"v{ver}.json"), "w") as fh:
+                json.dump({"version": ver, "files": prev_files + new_files}, fh)
+
+        stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(d)
+        _drain(stream.writeStream.foreachBatch(commit_batch), os.path.join(root, "_ckpt"))
+
+        outs = []
+        for f in sorted(os.listdir(man_dir)):
+            with open(os.path.join(man_dir, f)) as fh:
+                m = json.load(fh)
+            outs.append(
+                spark.read.parquet(*m["files"]).agg(
+                    F.lit(m["version"]).cast("bigint").alias("version"),
+                    F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+                    F.sum("doc_id").cast("bigint").alias("id_checksum"),
+                    F.sum("n_chars").cast("bigint").alias("char_checksum"),
+                )
+            )
+        # pinned (materialized) before the run's files go
+        return functools.reduce(lambda a, b: a.unionByName(b), outs).transform(pin)
 
 
 UNION_TO_FILES = 6  # time-range files of the union replay
@@ -894,14 +847,8 @@ def staged_union_timeordered_dir(spark: SparkSession, sf_dir: str) -> str:
     mechanics as staged_timeordered_dir, applied to the two-sided
     union: side 0 = orders carrying (orderkey, price), side 1 = events
     carrying event_id)."""
-    from http_datafusion_spark.plans.tables import fingerprint_tables, load_tables
 
-    _ensure_session_confs(spark)
-    name = sf_dir.strip("/").replace("/", "_")
-    fp = fingerprint_tables(sf_dir, "events", "orders", "customer")
-    d = os.path.join(tempfile.gettempdir(), f"hds_stream_union_{name}_{fp}")
-    marker = os.path.join(d, "_STAGED")
-    if not os.path.exists(marker):
+    def build(d: str) -> None:
         t = load_tables(spark, sf_dir, "events", "orders", "customer")
         max_ck = t["customer"].agg(F.max("c_custkey").alias("m"))
         o = t["orders"].select(
@@ -922,22 +869,9 @@ def staged_union_timeordered_dir(spark: SparkSession, sf_dir: str) -> str:
                 F.lit(0.0).alias("val"),
             )
         )
-        (
-            o.unionByName(e)
-            .repartitionByRange(UNION_TO_FILES, "t_sec")
-            .sortWithinPartitions("t_sec")
-            .write.mode("overwrite")
-            .parquet(d)
-        )
-        parts = sorted(
-            f for f in os.listdir(d) if f.startswith("part-") and f.endswith(".parquet")
-        )
-        base = int(os.path.getmtime(os.path.join(d, parts[0])))
-        for i, f in enumerate(parts):
-            os.utime(os.path.join(d, f), (base + i, base + i))
-        with open(marker, "w") as fh:
-            fh.write("ok")
-    return d
+        _write_time_ordered(o.unionByName(e), UNION_TO_FILES, "t_sec", d)
+
+    return derived_dir(spark, "stream_union", sf_dir, ("events", "orders", "customer"), build)
 
 
 def _temporal_join_oracle() -> str:
@@ -974,8 +908,6 @@ def stream_temporal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _stream_quality_oracle() -> str:
-    import http_datafusion_spark.operators.text as _text  # noqa: F401
-
     from http_datafusion_spark.operators.text import QMODEL_DIM, _qmodel_weights_sql
 
     return f"""
@@ -1024,67 +956,54 @@ def _stream_quality_oracle() -> str:
     tags=("streaming", "text", "pipeline"),
 )
 def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from http_datafusion_spark.functions.hashing import md5_int
     from http_datafusion_spark.operators.text import QMODEL_DIM
-    from http_datafusion_spark.plans.tables import scratch_path
 
-    run_id = uuid.uuid4().hex[:8]
-    out_path = scratch_path("qgate_stream", sf_dir, "documents") + f"_{run_id}"
-    ckpt = tempfile.mkdtemp(prefix="hds_ckpt_")
     d = staged_docs_dir(spark, sf_dir)
     schema = spark.read.parquet(d).schema
     stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(d)
+    with tempfile.TemporaryDirectory(prefix="hds_qgate_") as run:
+        out_path = os.path.join(run, "decisions")
 
-    def score_batch(batch: DataFrame, _bid: int) -> None:
-        # per-doc scoring is batch-local (a doc arrives whole), so the
-        # gate decides inside the micro-batch — no cross-batch state
-        sess = batch.sparkSession
-        weights = sess.range(QMODEL_DIM).select(
-            F.col("id").alias("j"),
-            (((md5_int(F.concat(F.lit("qw|"), F.col("id").cast("string"))) % 2001) - 1000)
-             / 1000.0).cast("decimal(18,3)").alias("w"),
-        )
-        feats = batch.select(
-            "doc_id", "source",
-            F.explode(whitespace_tokens(F.lower(F.col("text")))).alias("tok"),
-        ).select(
-            "doc_id", "source",
-            (md5_int(F.concat(F.lit("qb|"), F.col("tok"))) % QMODEL_DIM).alias("j"),
-        )
-        (
-            feats.join(F.broadcast(weights), "j")
-            .groupBy("doc_id", "source")
-            .agg((F.sum("w").cast("double") / F.count(F.lit(1))).alias("score"))
-            .select("source", (F.col("score") > 0).alias("keep"))
-            .write.mode("append")
-            .parquet(out_path)
-        )
+        def score_batch(batch: DataFrame, _bid: int) -> None:
+            # per-doc scoring is batch-local (a doc arrives whole), so the
+            # gate decides inside the micro-batch — no cross-batch state
+            sess = batch.sparkSession
+            weights = sess.range(QMODEL_DIM).select(
+                F.col("id").alias("j"),
+                (((md5_int(F.concat(F.lit("qw|"), F.col("id").cast("string"))) % 2001) - 1000)
+                 / 1000.0).cast("decimal(18,3)").alias("w"),
+            )
+            feats = batch.select(
+                "doc_id", "source",
+                F.explode(whitespace_tokens(F.lower(F.col("text")))).alias("tok"),
+            ).select(
+                "doc_id", "source",
+                (md5_int(F.concat(F.lit("qb|"), F.col("tok"))) % QMODEL_DIM).alias("j"),
+            )
+            (
+                feats.join(F.broadcast(weights), "j")
+                .groupBy("doc_id", "source")
+                .agg((F.sum("w").cast("double") / F.count(F.lit(1))).alias("score"))
+                .select("source", (F.col("score") > 0).alias("keep"))
+                .write.mode("append")
+                .parquet(out_path)
+            )
 
-    q = stream.writeStream.foreachBatch(score_batch).option(
-        "checkpointLocation", ckpt
-    ).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination(30)
-    decisions = spark.read.parquet(out_path)
-    out = (
-        decisions.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.sum(F.col("keep").cast("int")).cast("bigint").alias("n_kept"),
-            F.round(
-                F.sum(F.col("keep").cast("int")) * 1.0 / F.count(F.lit(1)), 6
-            ).alias("keep_rate"),
+        _drain(stream.writeStream.foreachBatch(score_batch), os.path.join(run, "ckpt"))
+        # pinned (materialized) before the run's files go
+        return (
+            spark.read.parquet(out_path)
+            .groupBy("source")
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+                F.sum(F.col("keep").cast("int")).cast("bigint").alias("n_kept"),
+                F.round(
+                    F.sum(F.col("keep").cast("int")) * 1.0 / F.count(F.lit(1)), 6
+                ).alias("keep_rate"),
+            )
+            .transform(pin)
         )
-        .transform(pin)
-    )
-    shutil.rmtree(out_path, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return out
 
 
 # ------------------------------------------ watermark late-drop twin
@@ -1130,8 +1049,8 @@ def staged_arrival_dir(
     is a closed-form function of (event_id, ts), so the watermark
     machinery's per-batch drops are oracle-computable. ``jitter_sec``
     parameterizes the disorder magnitude (the conformance matrix replays
-    the same table under several geometries; dirs are cached per
-    (sf_dir, fingerprint, jitter[, echo])).
+    the same table under several geometries; each (jitter, echo) pair is
+    its own derived layout).
 
     With ``echo=True``, file k additionally carries a RETRANSMISSION of
     every bucket-(k-1) row — an exact duplicate (same event_id, same
@@ -1143,21 +1062,9 @@ def staged_arrival_dir(
     includes orig_max(k-1) from batch k-1 — so the chained-dedup oracle
     (stream_dedup_windowed_chain) reuses the plain two-watermark model
     over originals only."""
-    import shutil
-
     from http_datafusion_spark.functions.hashing import md5_int
-    from http_datafusion_spark.plans.tables import fingerprint_tables, load_tables
 
-    _ensure_session_confs(spark)
-    name = sf_dir.strip("/").replace("/", "_")
-    fp = fingerprint_tables(sf_dir, "events")
-    suffix = "_echo" if echo else ""
-    d = os.path.join(
-        tempfile.gettempdir(), f"hds_stream_wm_{name}_{fp}_j{jitter_sec}{suffix}"
-    )
-    marker = os.path.join(d, "_STAGED")
-    if not os.path.exists(marker):
-        os.makedirs(d, exist_ok=True)
+    def build(d: str) -> None:
         ev = load_tables(spark, sf_dir, "events")["events"]
         j = md5_int(F.concat(F.lit("wmj|"), F.col("event_id").cast("string"))) % (2 * jitter_sec) - jitter_sec
         a = F.unix_micros(F.col("ts")) + j.cast("bigint") * 1_000_000
@@ -1169,23 +1076,17 @@ def staged_arrival_dir(
             F.floor((F.col("__a") - ext["amin"]) * WM_ARRIVAL_FILES / span),
         ).cast("bigint")
         ev = ev.withColumn("__b", bcol)
-        base = None
-        for i in range(WM_ARRIVAL_FILES):
-            batch = ev.filter(F.col("__b") == i)
+
+        def batch(i: int) -> DataFrame:
+            b = ev.filter(F.col("__b") == i)
             if echo and i > 0:
-                batch = batch.unionAll(ev.filter(F.col("__b") == i - 1))
-            tmp = os.path.join(d, f"_tmp_{i}")
-            batch.drop("__a", "__b").coalesce(1).write.mode("overwrite").parquet(tmp)
-            src = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-            dst = os.path.join(d, f"arrival-{i}.parquet")
-            shutil.move(os.path.join(tmp, src), dst)
-            shutil.rmtree(tmp, ignore_errors=True)
-            if base is None:
-                base = int(os.path.getmtime(dst))
-            os.utime(dst, (base + i, base + i))
-        with open(marker, "w") as fh:
-            fh.write("ok")
-    return d
+                b = b.unionAll(ev.filter(F.col("__b") == i - 1))
+            return b.drop("__a", "__b")
+
+        _write_batch_files((batch(i) for i in range(WM_ARRIVAL_FILES)), d, "arrival")
+
+    kind = f"stream_wm_j{jitter_sec}" + ("_echo" if echo else "")
+    return derived_dir(spark, kind, sf_dir, ("events",), build)
 
 
 def _wm_model_sql(jitter_sec: int, slack_sec: int, ts_level: bool = False) -> str:
@@ -1331,15 +1232,15 @@ def _wm_matrix_oracle() -> str:
 @query(
     "stream_wm_conformance_matrix",
     oracle=_wm_matrix_oracle(),
-    doc="STREAMING two-watermark conformance suite (r9 VERDICT task 6a): "
+    doc="STREAMING two-watermark conformance suite: "
     "the SAME events table replays under three (slack, jitter) geometries "
-    "— drops-fire, the exact r9 zero-drop geometry, and wide-slack — each "
+    "— drops-fire, a zero-drop geometry, and wide-slack — each "
     "as a real append-mode watermark windowed count, all checked against "
     "one parameterized SQL model of Spark 4.1's two-watermark state "
     "machine (late filter = watermarkForLateEvents = previous batch's "
     "eviction watermark, SPARK-40925; emit iff window end <= final "
-    "eviction watermark). The zero-drop config is the geometry that made "
-    "the r9 oracle red under the naive eager-drop model, kept as a "
+    "eviction watermark). The zero-drop config is a geometry the naive "
+    "eager-drop model gets wrong, kept as a "
     "regression pin; per-config numRowsDroppedByWatermark accounting "
     "(positive / zero / monotone in slack) is asserted in "
     "tests/test_streaming.py. State = open windows only per config "

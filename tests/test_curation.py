@@ -157,10 +157,9 @@ def test_incremental_matches_batch_pairs(spark, sf_dir):
 def test_incremental_store_is_band_partitioned(spark, sf_dir):
     import os
 
-    from http_datafusion_spark.plans.tables import scratch_path
+    from http_datafusion_spark.operators.curation import signature_store_dir
 
-    dedup_incremental_minhash(spark, sf_dir).collect()
-    store = scratch_path("sigstore", sf_dir, "documents")
+    store = signature_store_dir(spark, sf_dir)
     bands = sorted(e for e in os.listdir(store) if e.startswith("band="))
     assert bands == ["band=0", "band=1", "band=2", "band=3"]
 

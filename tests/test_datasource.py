@@ -221,20 +221,21 @@ def _stream_to_memory(spark, url, **opts):
     for k, v in opts.items():
         r = r.option(k, v)
     name = f"http_stream_{uuid.uuid4().hex[:8]}"
-    q = (
-        r.load()
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="hds_http_ckpt_"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        progress = list(q.recentProgress)
-    finally:
-        q.stop()
-        q.awaitTermination(30)
+    with tempfile.TemporaryDirectory(prefix="hds_http_ckpt_") as ckpt:
+        q = (
+            r.load()
+            .writeStream.outputMode("append")
+            .format("memory")
+            .queryName(name)
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+            progress = list(q.recentProgress)
+        finally:
+            q.stop()
+            q.awaitTermination(30)
     return spark.table(name), progress
 
 

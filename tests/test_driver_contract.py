@@ -102,23 +102,28 @@ def test_bench_set_is_oracle_checked_and_stable():
 
 # The registry's names, order, oracles, docs, tags and bench oracles.
 # A deliberate contract change updates this pin and says so in
-# CHANGES.md; an accidental one (an import that reorders module
-# registration, a doc edit) fails here.
-REGISTRY_SHA256 = "61318b88283837dd03aec8d81321cac68fbaa607c03437209b05cc242f0a99a8"
+# CHANGES.md; an accidental one (a reordered module list, a doc edit)
+# fails here.
+REGISTRY_SHA256 = "18986169150cbe149b3e2aa628a1bfaee2cde3ddfb119dc12daca436e186a968"
+
+_CONTRACT = (
+    "import hashlib, json\n"
+    "from http_datafusion_spark.plans.registry import all_queries\n"
+    "qs = all_queries()\n"
+    "c = [list(qs), [[s.oracle, s.doc, list(s.tags), s.bench_oracle] for s in qs.values()]]\n"
+    "contract = hashlib.sha256(json.dumps(c).encode()).hexdigest()\n"
+)
 
 
 def test_registry_contract_is_pinned():
-    # A fresh interpreter, as an outside harness has: registration
-    # follows module import order, and test modules import operator
-    # modules before the registry does.
-    code = (
-        "import hashlib, json\n"
-        "from http_datafusion_spark.plans.registry import all_queries\n"
-        "qs = all_queries()\n"
-        "c = [list(qs), [[s.oracle, s.doc, list(s.tags), s.bench_oracle] for s in qs.values()]]\n"
-        "print(hashlib.sha256(json.dumps(c).encode()).hexdigest())\n"
-    )
+    # A fresh interpreter, as an outside harness has, and this process,
+    # whose test modules imported operator modules before the registry
+    # did: the order must not depend on which came first.
     out = subprocess.run(
-        [sys.executable, "-c", code], cwd=REPO, capture_output=True, text=True, timeout=120, check=True
+        [sys.executable, "-c", _CONTRACT + "print(contract)"],
+        cwd=REPO, capture_output=True, text=True, timeout=120, check=True,
     )
     assert out.stdout.strip() == REGISTRY_SHA256
+    scope: dict = {}
+    exec(_CONTRACT, scope)
+    assert scope["contract"] == REGISTRY_SHA256

@@ -472,14 +472,9 @@ def test_index_roundtrip_reads_partition_pruned(spark, sf_dir):
     only the probed directories."""
     from pyspark.sql import functions as F
 
-    from http_datafusion_spark.operators.pipeline import (
-        index_store_path,
-        write_embedding_index,
-    )
+    from http_datafusion_spark.operators.pipeline import embedding_index_dir
 
-    path = index_store_path(sf_dir)
-    write_embedding_index(spark, sf_dir, path)
-    full = spark.read.parquet(path)
+    full = spark.read.parquet(embedding_index_dir(spark, sf_dir))
     n_buckets = full.select("bucket").distinct().count()
     probe = full.filter(F.col("bucket").isin([1, 2]))
     plan = probe._jdf.queryExecution().executedPlan().toString()
@@ -530,16 +525,13 @@ def test_train_split_temporal_no_join_no_broadcast(spark, sf_dir):
 def test_inverted_index_probe_partition_pruned(spark, sf_dir):
     # The postings store is partitioned by term-hash bucket; reading the
     # BM25 query terms back must prune to those bucket directories.
+    import hashlib
+
     from http_datafusion_spark.operators.text import (
         BM25_TERMS,
+        inverted_index_dir,
         text_inverted_index_roundtrip,
-        tindex_store_path,
-        write_inverted_index,
     )
-
-    path = tindex_store_path(sf_dir)
-    write_inverted_index(spark, sf_dir, path)
-    import hashlib
 
     buckets = sorted(
         {
@@ -547,7 +539,7 @@ def test_inverted_index_probe_partition_pruned(spark, sf_dir):
             for t in BM25_TERMS
         }
     )
-    df = spark.read.parquet(path).filter(F.col("bucket").isin(buckets))
+    df = spark.read.parquet(inverted_index_dir(spark, sf_dir)).filter(F.col("bucket").isin(buckets))
     s = formatted(df)
     assert "PartitionFilters" in s and "bucket" in s
     # and the query itself returns the probe terms

@@ -171,6 +171,21 @@ def test_update_mode_window_state_is_evicted(spark, sf_dir):
     assert state[-1]["numRowsTotal"] < total_keys  # watermark-, not stream-length-bounded
 
 
+def test_run_to_memory_leaves_no_sink_view(spark, sf_dir):
+    """Each run's memory-sink view is dropped once its frame is resolved:
+    repeated runs in one session leave no stream_out_* view behind, and
+    the frames still read the sink's rows."""
+    from http_datafusion_spark.plans.compare import compare_query
+    from http_datafusion_spark.plans.registry import all_queries
+
+    spec = all_queries()["stream_rate_limited"]
+    for _ in range(3):
+        res = compare_query(spark, spec, sf_dir)
+        assert res.ok and res.exact, res.detail
+    views = [t.name for t in spark.catalog.listTables() if t.name.startswith("stream_out_")]
+    assert views == []
+
+
 def test_incremental_minhash_store_grows_by_batch_only(spark, sf_dir):
     """O(new docs) store growth: each foreachBatch appends EXACTLY its
     own band rows to the signature store — the per-batch delta equals

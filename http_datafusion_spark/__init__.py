@@ -19,8 +19,12 @@ This package re-creates both layers Spark-first:
 - beyond-reference LLM-data-pipeline operators (dedup, similarity
   search, text analysis, multimodal) in
   :mod:`~http_datafusion_spark.operators`, designed for 100 TB scale.
+
+Importing the package gates zipimport's per-task archive re-reads in
+Spark's Python workers (:mod:`~http_datafusion_spark.zipcache`).
 """
 
+from http_datafusion_spark import zipcache
 from http_datafusion_spark.config import Config, Pagination, Source, load_config
 from http_datafusion_spark.errors import (
     ConfigError,
@@ -30,6 +34,8 @@ from http_datafusion_spark.errors import (
     QueryError,
 )
 from http_datafusion_spark.session import get_spark
+
+zipcache.install()
 
 __all__ = [
     "Config",

@@ -214,35 +214,24 @@ def test_pushable_limit_extractor():
 
 
 def _stream_to_memory(spark, url, **opts):
-    import tempfile
-    import uuid
+    from http_datafusion_spark.streaming.queries import run_to_memory
 
     r = spark.readStream.format("httpjson").option("url", url)
     for k, v in opts.items():
         r = r.option(k, v)
-    name = f"http_stream_{uuid.uuid4().hex[:8]}"
-    with tempfile.TemporaryDirectory(prefix="hds_http_ckpt_") as ckpt:
-        q = (
-            r.load()
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            progress = list(q.recentProgress)
-        finally:
-            q.stop()
-            q.awaitTermination(30)
-    return spark.table(name), progress
+    progress: list = []
+    return run_to_memory(r.load(), "append", progress_out=progress), progress
 
 
 def test_stream_drains_all_pages_and_matches_batch(spark, url):
+    """The stream reads every page, and its memory-sink view is dropped
+    once the frame is resolved: the frame still reads the sink's rows and
+    the shared session keeps no ``http_stream_*`` or ``stream_out_*`` view."""
     out, _ = _stream_to_memory(spark, url, pageSize=10)
     batch = _read(spark, url, startPage=1, endPage=10, pageSize=10)
     assert sorted(map(tuple, out.collect())) == sorted(map(tuple, batch.collect()))
+    views = [t.name for t in spark.catalog.listTables() if t.name.startswith(("http_stream_", "stream_out_"))]
+    assert views == []
 
 
 def test_stream_max_pages_per_trigger_bounds_batches(spark, url):
